@@ -20,78 +20,20 @@ Scale design notes:
 
 from __future__ import annotations
 
-import threading
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Session-scoped keyed cache for the near-dup PAIRS table and its
-# connected-components cluster map — the same pattern (and the same
-# staleness argument) as the shared graph edge cache in queries/graph.py:
-# five registered queries build the identical jaccard-pairs pipeline
+from hw_kafka_flink_health_spark.cache import LRU, frame_key
+
+# Session caches (the keying and staleness argument is in cache.py): five
+# registered queries build the identical jaccard-pairs pipeline
 # (dedup_ngram_jaccard, dedup_clusters, dedup_cluster_report,
 # mlprep_dedup_aware_split, graph_triangle_neardup), and three of them
-# then run the identical label-propagation fixpoint on it. The key pins
-# the session object AND the exact parquet file list (part names are
-# unique per write, so a changed input can never be served stale) plus
-# every parameter that shapes the result. In-memory only, per process:
-# every bench/oracle run still computes the table from the parquet
-# inputs — the cache only stops the SAME session recomputing the same
-# intermediate five times. Non-file-backed inputs (test/fuzz frames from
-# createDataFrame) have no inputFiles and skip caching entirely.
-#
-# Deployment note (ADVICE r12): cached frames are localCheckpoint-backed,
-# i.e. executor-local non-replicated blocks. On a LOCAL master (this
-# engine's driver contract) the blocks live as long as the session; on a
-# multi-executor deployment with dynamic allocation, an executor loss
-# would make every later cache hit fail on missing blocks rather than
-# recompute — port the cache to reliable checkpoint() (or catch the
-# block-fetch failure and invalidate) before running it off local mode.
-_PAIRS_CACHE: dict = {}
-_PAIRS_CACHE_CAP = 4
-_CC_CACHE: list = []  # [(pairs_df, src, dst, max_iter, labels_df)]
-_CC_CACHE_CAP = 2
-_DEDUP_CACHE_LOCK = threading.Lock()
-
-
-def _pairs_cache_key(df: DataFrame, *params) -> tuple | None:
-    """Cache key = (session, exact file list, per-file size+mtime,
-    CANONICALIZED analyzed plan, params). The canonical plan string
-    (exprIds normalized — identical builds compare equal, review r12)
-    pins every transformation between the scan and the operator, so a
-    filtered or re-projected frame over the same files can never be
-    served another frame's pairs; the size+mtime signature (ADVICE r12)
-    invalidates on an in-session overwrite of a fixed-name input file.
-    The plan is rendered with maxToStringFields raised (ADVICE r12: the
-    default render truncates wide expression lists at 25 fields, so two
-    different wide plans could in principle collide). Non-file-backed
-    frames (createDataFrame fixtures) skip caching: a LocalRelation's
-    canonical form does not pin its rows."""
-    from hw_kafka_flink_health_spark.sources.files import file_stats_signature
-
-    try:
-        files = tuple(sorted(df.inputFiles()))
-        if not files:
-            return None
-        stats = file_stats_signature(files)
-        spark = df.sparkSession
-        conf_key = "spark.sql.debug.maxToStringFields"
-        try:
-            old = spark.conf.get(conf_key)
-        except Exception:  # unset → provider raises in some versions
-            old = None
-        spark.conf.set(conf_key, "2147483647")
-        try:
-            plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
-        finally:
-            if old is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, old)
-    except Exception:
-        return None
-    return (id(df.sparkSession), files, stats, plan, *params)
+# then run the identical label-propagation fixpoint on it.
+_PAIRS = LRU(4)
+_CLUSTERS = LRU(2)
 
 
 def fingerprint_expr(text: Column | str) -> Column:
@@ -213,13 +155,20 @@ def _ngram_pair_counts(
     replay the whole pipeline per consumer — including for
     non-file-backed inputs the cache skips.
     """
-    key = _pairs_cache_key(df, "counts", text_col, id_col, n, max_shingle_freq)
-    if key is not None:
-        with _DEDUP_CACHE_LOCK:
-            if key in _PAIRS_CACHE:
-                hit = _PAIRS_CACHE.pop(key)  # move-to-end: refresh recency
-                _PAIRS_CACHE[key] = hit
-                return hit
+    return _PAIRS.get_or_build(
+        frame_key(df, "counts", text_col, id_col, n, max_shingle_freq),
+        lambda: _count_shared_shingles(df, text_col, id_col, n, max_shingle_freq),
+    )
+
+
+def _count_shared_shingles(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    max_shingle_freq: int | None,
+) -> DataFrame:
+    """The uncached build behind `_ngram_pair_counts`."""
     # shingle_table spreads an under-partitioned scan across the cluster
     # (cached probe in rebalance_if_narrow); no extra probe here — the
     # raw df.rdd.getNumPartitions() this used to call compiles a fresh
@@ -270,17 +219,11 @@ def _ngram_pair_counts(
         ).alias("p")
     ).select("p.doc1", "p.n1", "p.doc2", "p.n2")
 
-    counts = pair.groupBy("doc1", "doc2").agg(
+    return pair.groupBy("doc1", "doc2").agg(
         F.count(F.lit(1)).alias("common"),
         F.first("n1").alias("n1"),
         F.first("n2").alias("n2"),
     ).localCheckpoint()
-    if key is not None:
-        with _DEDUP_CACHE_LOCK:
-            while len(_PAIRS_CACHE) >= _PAIRS_CACHE_CAP:
-                _PAIRS_CACHE.pop(next(iter(_PAIRS_CACHE)))  # evict LRU head
-            _PAIRS_CACHE[key] = counts
-    return counts
 
 
 def ngram_jaccard_pairs(
@@ -302,32 +245,24 @@ def ngram_jaccard_pairs(
     connected-components memo, which keys on frame identity) get the
     same object back.
     """
-    key = _pairs_cache_key(df, "jacc", text_col, id_col, n, threshold,
-                           max_shingle_freq)
-    if key is not None:
-        with _DEDUP_CACHE_LOCK:
-            if key in _PAIRS_CACHE:
-                hit = _PAIRS_CACHE.pop(key)  # move-to-end: refresh recency
-                _PAIRS_CACHE[key] = hit
-                return hit
-    counts = _ngram_pair_counts(
-        df, text_col, id_col, n=n, max_shingle_freq=max_shingle_freq
+    def build() -> DataFrame:
+        counts = _ngram_pair_counts(
+            df, text_col, id_col, n=n, max_shingle_freq=max_shingle_freq
+        )
+        jaccard = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
+        # no second checkpoint: a narrow filter+projection over the
+        # already-checkpointed counts table — each consumer re-reads a
+        # tiny materialized table, never the postings pipeline
+        return (
+            counts.withColumn("jaccard", jaccard)
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc1", "doc2", "jaccard")
+        )
+
+    return _PAIRS.get_or_build(
+        frame_key(df, "jacc", text_col, id_col, n, threshold, max_shingle_freq),
+        build,
     )
-    jaccard = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
-    out = (
-        counts.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc1", "doc2", "jaccard")
-    )
-    # no second checkpoint: `out` is a narrow filter+projection over the
-    # already-checkpointed counts table — each consumer re-reads a tiny
-    # materialized table, never the postings pipeline
-    if key is not None:
-        with _DEDUP_CACHE_LOCK:
-            while len(_PAIRS_CACHE) >= _PAIRS_CACHE_CAP:
-                _PAIRS_CACHE.pop(next(iter(_PAIRS_CACHE)))  # evict LRU head
-            _PAIRS_CACHE[key] = out
-    return out
 
 
 def ngram_containment_pairs(
@@ -737,14 +672,22 @@ def connected_components(
 
     The (pairs-object, src, dst, rounds) result is memoized per session:
     three registered queries run this exact fixpoint on the SAME cached
-    pairs frame (see _PAIRS_CACHE) — identity of the input frame is the
-    key, so a recomputed or differently-parameterized pairs table can
-    never be served a stale cluster map.
+    pairs frame (see _PAIRS) — identity of the input frame is the key
+    (a DataFrame hashes by identity, and the key holds the frame, so its
+    identity cannot be reused while the entry lives), so a recomputed or
+    differently-parameterized pairs table can never be served a stale
+    cluster map.
     """
-    with _DEDUP_CACHE_LOCK:
-        for p, s, d, mi, labels in _CC_CACHE:
-            if p is pairs and (s, d, mi) == (src, dst, max_iterations):
-                return labels
+    return _CLUSTERS.get_or_build(
+        (pairs, src, dst, max_iterations),
+        lambda: _min_label_fixpoint(pairs, src, dst, max_iterations),
+    )
+
+
+def _min_label_fixpoint(
+    pairs: DataFrame, src: str, dst: str, max_iterations: int
+) -> DataFrame:
+    """The uncached build behind `connected_components`."""
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -782,10 +725,6 @@ def connected_components(
         labels = stepped.select("node", "cluster_id")
         if stepped.filter(F.col("__changed")).limit(1).count() == 0:
             break
-    with _DEDUP_CACHE_LOCK:
-        while len(_CC_CACHE) >= _CC_CACHE_CAP:
-            _CC_CACHE.pop(0)
-        _CC_CACHE.append((pairs, src, dst, max_iterations, labels))
     return labels
 
 

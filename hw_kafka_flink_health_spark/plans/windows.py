@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import contextlib
 
+from hw_kafka_flink_health_spark.cache import untruncated_plans
+
 
 @contextlib.contextmanager
 def capture_checkpoints(captured: list, executed: list | None = None):
@@ -108,20 +110,8 @@ def analyzed_str(df) -> str:
     Raise the cap around the render; restore afterwards so PLANS.md
     dumps and log lines keep their readable width.
     """
-    spark = df.sparkSession
-    key = "spark.sql.debug.maxToStringFields"
-    try:
-        old = spark.conf.get(key)
-    except Exception:  # unset → provider raises in some versions
-        old = None
-    spark.conf.set(key, "2147483647")
-    try:
+    with untruncated_plans(df.sparkSession):
         return str(df._jdf.queryExecution().analyzed())
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def unpartitioned_specs(plan: str) -> list[str]:

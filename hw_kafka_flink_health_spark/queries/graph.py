@@ -25,13 +25,12 @@ design choices:
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.cache import LRU, frame_key
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned, load_table
 
 _SCALE = 1_000_000_000
 _ITERS = 3
@@ -198,7 +197,7 @@ def graph_triangle_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The Jaccard pair pipeline is the expensive subtree and feeds the
     # degree agg, the orientation join, AND the wedge-closure join. The
     # pairs table arrives ALREADY materialized (the session-keyed
-    # _PAIRS_CACHE checkpoint inside ngram_jaccard_pairs), so the three
+    # pairs-cache checkpoint inside ngram_jaccard_pairs), so the three
     # consumers re-read a tiny checkpointed table — a second checkpoint
     # of this projection would only add a job (r12 optimization pass).
     e = dedup_ngram_jaccard(spark, sf_dir).select("doc1", "doc2")
@@ -414,82 +413,57 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared by every query over the customer-supplier graph. The build (the
 # orders-lineitem join + distinct) is each graph query's single most
 # expensive subtree and is IDENTICAL across k-core / BFS / LPA /
-# assortativity / harmonic centrality — a session-scoped LRU (cap 4,
-# true recency: hits move to end) keyed by (session identity, sf_dir,
-# exact input file list) returns the same checkpointed table instead of
-# rebuilding it per query. Keying by id(spark) rather than applicationId
-# keeps a sibling `spark.newSession()` (same context, separate catalog/
-# conf) from being served a frame checkpointed under another session;
-# mutation is lock-guarded for concurrent drivers. Parquet writers name
-# part files uniquely, so overwritten data changes the signature and can
-# never serve a stale cache; the cache changes WALL TIME only, never
-# results (each consumer still derives its own projection). At 100 TB
-# this is the "materialize the edge table once" step every production
-# graph pipeline runs at ingest.
+# assortativity / harmonic centrality, so the session cache (see cache.py
+# for its keying and staleness argument) returns the same checkpointed
+# table instead of rebuilding it per query. Each consumer still derives
+# its own projection, so the cache changes wall time and layout only.
 #
-# r13: both tables are checkpointed HASH-PARTITIONED AND SORTED ON `src`
-# (`checkpoint_partitioned`) — the in-session analog of the bucketed
-# edge layout a production graph store keeps on disk. Every iterative
-# consumer keys its per-round join/aggregate on src, so with the layout
-# preserved the edge table never re-shuffles per round; before, each
-# round paid an edge exchange which AQE then "optimized" by broadcasting
-# the 15 MB edge side and coalescing the node-sized probe side to ONE
-# task (the measured 1.3-1.6 s single-task stage inside every LPA/PPR
-# round at sf0.1). The undirected (doubled) list is cached as its own
-# partitioned checkpoint because a union of two partitioned copies has
-# no partitioning. The cache changes wall time and layout only — every
-# consumer's RESULT is partitioning-independent (oracle-hash-pinned).
-_EDGE_CACHE: dict = {}
-_EDGE_CACHE_CAP = 6  # directed + undirected + cp incidence, two SF dirs
-_EDGE_CACHE_LOCK = threading.Lock()
+# r13: every table here is checkpointed HASH-PARTITIONED on its join key
+# (`checkpoint_partitioned`; no sort) — the in-session analog of the
+# bucketed edge layout a production graph store keeps on disk. Every
+# iterative consumer keys its per-round join/aggregate on src, so with the
+# layout preserved the edge table never re-shuffles per round; before,
+# each round paid an edge exchange which AQE then "optimized" by
+# broadcasting the 15 MB edge side and coalescing the node-sized probe
+# side to ONE task (the measured 1.3-1.6 s single-task stage inside every
+# LPA/PPR round at sf0.1). The undirected (doubled) list is cached as its
+# own partitioned checkpoint because a union of two partitioned copies
+# has no partitioning. Every consumer's RESULT is partitioning-independent
+# (oracle-hash-pinned).
+_EDGES = LRU(6)  # directed + undirected + cp incidence, two SF dirs
+
+
+def _orders_lineitem(spark: SparkSession, sf_dir: str, li_col: str, *tags: str):
+    """(cache key, lazy join) for orders ⋈ lineitem projected to
+    (o_custkey, `li_col`). The key pins both scans plus `tags`; the join
+    is built only on a miss, because analyzing it costs more per hit
+    than the key itself."""
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", li_col)
+    li_key = frame_key(li)
+    key = None if li_key is None else frame_key(orders, li_key, *tags)
+
+    def join() -> DataFrame:
+        return orders.join(li, F.col("o_orderkey") == F.col("l_orderkey")).select(
+            "o_custkey", li_col
+        )
+
+    return key, join
 
 
 def _cs_edges_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
+    key, join = _orders_lineitem(spark, sf_dir, "l_suppkey", "directed")
 
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    try:
-        from hw_kafka_flink_health_spark.sources.files import file_stats_signature
-
-        ofiles = tuple(sorted(orders.inputFiles()))
-        lfiles = tuple(sorted(li.inputFiles()))
-        sig = (
-            id(spark),
-            sf_dir,
-            "directed",
-            ofiles,
-            lfiles,
-            # size+mtime per file (ADVICE r12): fixed-name fixture files
-            # overwritten in-session must change the key
-            file_stats_signature(ofiles + lfiles),
-        )
-    except Exception:
-        sig = None
-    if sig is not None:
-        with _EDGE_CACHE_LOCK:
-            if sig in _EDGE_CACHE:
-                hit = _EDGE_CACHE.pop(sig)  # move-to-end: refresh recency
-                _EDGE_CACHE[sig] = hit
-                return hit
-    # distinct over the NUMERIC pair before building node strings (the
-    # measured ~25% exchange-width win recorded at graph_degree_histogram)
-    e0 = checkpoint_partitioned(
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .select(
+    def build() -> DataFrame:
+        # distinct over the NUMERIC pair before building node strings (the
+        # measured ~25% exchange-width win recorded at graph_degree_histogram)
+        edges = join().distinct().select(
             F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
             F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        ),
-        "src",
-    )
-    if sig is not None:
-        with _EDGE_CACHE_LOCK:
-            while len(_EDGE_CACHE) >= _EDGE_CACHE_CAP:
-                _EDGE_CACHE.pop(next(iter(_EDGE_CACHE)))  # evict LRU head
-            _EDGE_CACHE[sig] = e0
-    return e0
+        )
+        return checkpoint_partitioned(edges, "src")
+
+    return _EDGES.get_or_build(key, build)
 
 
 def _cp_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -500,44 +474,13 @@ def _cp_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate/self-join on p — with the layout pinned, the part-degree
     aggregate, the hub cap semi-join and the within-part pair self-join
     all reuse it exchange-free."""
-    from hw_kafka_flink_health_spark.sources.files import (
-        checkpoint_partitioned,
-        file_stats_signature,
-    )
+    key, join = _orders_lineitem(spark, sf_dir, "l_partkey", "cp")
 
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    try:
-        ofiles = tuple(sorted(orders.inputFiles()))
-        lfiles = tuple(sorted(li.inputFiles()))
-        sig = (
-            id(spark),
-            sf_dir,
-            "cp",
-            ofiles,
-            lfiles,
-            file_stats_signature(ofiles + lfiles),
-        )
-    except Exception:
-        sig = None
-    if sig is not None:
-        with _EDGE_CACHE_LOCK:
-            if sig in _EDGE_CACHE:
-                hit = _EDGE_CACHE.pop(sig)
-                _EDGE_CACHE[sig] = hit
-                return hit
-    cp = checkpoint_partitioned(
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct(),
-        "p",
-    )
-    if sig is not None:
-        with _EDGE_CACHE_LOCK:
-            while len(_EDGE_CACHE) >= _EDGE_CACHE_CAP:
-                _EDGE_CACHE.pop(next(iter(_EDGE_CACHE)))
-            _EDGE_CACHE[sig] = cp
-    return cp
+    def build() -> DataFrame:
+        cp = join().select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
+        return checkpoint_partitioned(cp.distinct(), "p")
+
+    return _EDGES.get_or_build(key, build)
 
 
 def _cs_edges_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,27 +489,21 @@ def _cs_edges_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables has no partitioning, so the doubled view must be laid out
     once itself to keep the per-round joins exchange-free). No distinct
     after the union: the c*/s* namespaces are disjoint, so the two
-    directed copies of a distinct set are already globally distinct."""
-    from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
+    directed copies of a distinct set are already globally distinct.
+    Keyed as the directed list plus "undirected", so it misses whenever
+    that does."""
+    key, _ = _orders_lineitem(spark, sf_dir, "l_suppkey", "directed", "undirected")
 
-    e0 = _cs_edges_directed(spark, sf_dir)
-    sig = (id(spark), sf_dir, "undirected", id(e0))
-    with _EDGE_CACHE_LOCK:
-        if sig in _EDGE_CACHE:
-            hit = _EDGE_CACHE.pop(sig)
-            _EDGE_CACHE[sig] = hit
-            return hit
-    ed = checkpoint_partitioned(
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ),
-        "src",
-    )
-    with _EDGE_CACHE_LOCK:
-        while len(_EDGE_CACHE) >= _EDGE_CACHE_CAP:
-            _EDGE_CACHE.pop(next(iter(_EDGE_CACHE)))
-        _EDGE_CACHE[sig] = ed
-    return ed
+    def build() -> DataFrame:
+        e0 = _cs_edges_directed(spark, sf_dir)
+        return checkpoint_partitioned(
+            e0.unionByName(
+                e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            ),
+            "src",
+        )
+
+    return _EDGES.get_or_build(key, build)
 
 
 _KCORE_K = 30

@@ -16,11 +16,11 @@ Scale notes:
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.cache import LRU, conf_override
 from hw_kafka_flink_health_spark.schemas import STAR_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -59,11 +59,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # repartition-invariance fuzz sweep, never reads a stale probe). Narrow
 # transforms (select/filter) never change scan partitioning, so one
 # probe per distinct (files, confs) is exact for this helper's contract
-# (below). OrderedDict + LRU cap keeps a long-lived session bounded:
-# every versioned-table write changes the file set, so an uncapped dict
-# grows forever (round-7 verdict #6).
-_NARROW_PROBE_CACHE: "OrderedDict[tuple, int]" = OrderedDict()
-_NARROW_PROBE_CACHE_MAX = 256
+# (below). No plan is rendered for this key: the probe must stay cheaper
+# than the lineage it saves. The cap keeps a long-lived session bounded:
+# every versioned-table write changes the file set (round-7 verdict #6).
+_NARROW_PROBES = LRU(256)
 
 
 def rebalance_if_narrow(df: DataFrame) -> DataFrame:
@@ -80,7 +79,7 @@ def rebalance_if_narrow(df: DataFrame) -> DataFrame:
 
     Contract: pass a SCAN-ROOTED NARROW plan (projections/filters over one
     file source, no joins/aggregates upstream) — every in-repo caller does.
-    The partition probe is cached per file set (see _NARROW_PROBE_CACHE);
+    The partition probe is cached per file set (see _NARROW_PROBES);
     a plan with no file source falls back to an uncached probe."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
@@ -105,41 +104,10 @@ def rebalance_if_narrow(df: DataFrame) -> DataFrame:
             _conf("spark.sql.files.openCostInBytes"),
             target,
         )
-    n = _NARROW_PROBE_CACHE.get(key) if key else None
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if key:
-            _NARROW_PROBE_CACHE[key] = n
-            if len(_NARROW_PROBE_CACHE) > _NARROW_PROBE_CACHE_MAX:
-                _NARROW_PROBE_CACHE.popitem(last=False)
-    else:
-        _NARROW_PROBE_CACHE.move_to_end(key)
+    n = _NARROW_PROBES.get_or_build(key, lambda: df.rdd.getNumPartitions())
     if n >= target:
         return df
     return df.repartition(target)
-
-
-def file_stats_signature(files: tuple) -> tuple:
-    """(size, mtime_ns) per input file, for session-cache keys (ADVICE
-    r12): part names are unique per Spark/parquet WRITER, but this
-    repo's fixtures are single fixed-name files, so an in-session
-    overwrite at the same path must change the key. Non-local URIs
-    (no os.stat) contribute None — the cache then degrades to
-    name-keyed, its pre-r13 behavior."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    out = []
-    for f in files:
-        p = f
-        if p.startswith("file:"):
-            p = unquote(urlparse(p).path)
-        try:
-            st = os.stat(p)
-            out.append((st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append(None)
-    return tuple(out)
 
 
 def checkpoint_partitioned(df: DataFrame, *cols: str) -> DataFrame:
@@ -177,12 +145,8 @@ def checkpoint_partitioned(df: DataFrame, *cols: str) -> DataFrame:
     # (local scale) or sort node-sized tables, not this one; the sort
     # measured +0.3 s per build for no downstream change (r13)
     staged = df.repartition(n, *cols)
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with conf_override(spark, **{"spark.sql.adaptive.enabled": "false"}):
         return staged.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -27,7 +27,7 @@ SHOWCASE = {
     "q18_large_orders": "agg-filter-join pipeline + TakeOrderedAndProject (top-k never sorts the full table)",
     "join_broadcast_part_revenue": "explicit broadcast hint on the dim side",
     "join_asof": "as-of join via union + window — NO BroadcastNestedLoop/CartesianProduct anywhere",
-    "dedup_ngram_jaccard": "pairs served from the session-keyed _PAIRS_CACHE checkpoint (r12): the visible plan is a projection over the materialized pair table; the build itself is one documents scan -> postings shuffle -> pair agg (pre-checkpoint shape pinned by tests/test_plans.py::test_jaccard_postings_no_inferred_generate_filter via capture_checkpoints)",
+    "dedup_ngram_jaccard": "pairs served from the session-keyed pairs-cache checkpoint (r12; `_PAIRS` LRU in operators/dedup.py, keyed by cache.frame_key): the visible plan is a projection over the materialized pair table; the build itself is one documents scan -> postings shuffle -> pair agg (pre-checkpoint shape pinned by tests/test_plans.py::test_jaccard_postings_no_inferred_generate_filter via capture_checkpoints)",
     "embedding_cosine_topk": "brute-force cosine: query set broadcast, corpus scanned once (round-robin spread when the scan is under-partitioned — the pair fold otherwise runs single-task, r12), per-query top-k via window",
     "timeseries_gapfill": "per-key spine generate + broadcast grid join + single window pass",
     "chunk_documents": "pure narrow chunking: scan -> generate -> project, zero exchanges",

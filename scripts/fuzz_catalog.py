@@ -274,54 +274,45 @@ def sweep_repart(spark) -> list:
     Rows-only queries are exempt from the diff (seeded/approximate tiers
     are layout-dependent by design) but are crash-checked in the other
     scenarios."""
+    from hw_kafka_flink_health_spark.cache import conf_override
     from hw_kafka_flink_health_spark.queries import ORACLES, QUERIES
     from tests.test_oracle import canon
 
     base1, base16 = build_repart(spark)
     bases = (base1, base16)
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.files.maxPartitionBytes",
-            "spark.sql.files.openCostInBytes",
-        )
-    }
     fails = []
     todo = sorted(set(_only()) & set(ORACLES) if _only() else ORACLES)
-    try:
-        for i, name in enumerate(todo):
-            t0 = time.time()
-            outs = []
-            for which, shuf, mpb, ocb in _REPART_RUNS:
-                spark.conf.set("spark.sql.shuffle.partitions", shuf)
-                spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
-                spark.conf.set("spark.sql.files.openCostInBytes", ocb)
-                try:
+    for i, name in enumerate(todo):
+        t0 = time.time()
+        outs = []
+        for which, shuf, mpb, ocb in _REPART_RUNS:
+            try:
+                with conf_override(spark, **{
+                    "spark.sql.shuffle.partitions": shuf,
+                    "spark.sql.files.maxPartitionBytes": mpb,
+                    "spark.sql.files.openCostInBytes": ocb,
+                }):
                     outs.append(QUERIES[name](spark, bases[which]).toPandas())
-                except Exception as e:
-                    fails.append(
-                        ("repart", name, f"spark error (layout {which}): {str(e)[:150]}")
-                    )
-                    print(f"repart {name}: SPARK ERROR", flush=True)
-                    outs = None
-                    break
-            if outs is None:
-                continue
-            a, b = outs
-            ok = (
-                len(a) == len(b)
-                and sorted(map(str.lower, a.columns)) == sorted(map(str.lower, b.columns))
-                and canon(a) == canon(b)
-            )
-            if not ok:
-                fails.append(("repart", name, f"layout-dependent: rows {len(a)}/{len(b)}"))
-                print(f"repart {name}: LAYOUT-DEPENDENT RESULT", flush=True)
-            if i % 40 == 0:
-                print(f"[repart {i}/{len(todo)}] ({time.time()-t0:.1f}s)", flush=True)
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+            except Exception as e:
+                fails.append(
+                    ("repart", name, f"spark error (layout {which}): {str(e)[:150]}")
+                )
+                print(f"repart {name}: SPARK ERROR", flush=True)
+                outs = None
+                break
+        if outs is None:
+            continue
+        a, b = outs
+        ok = (
+            len(a) == len(b)
+            and sorted(map(str.lower, a.columns)) == sorted(map(str.lower, b.columns))
+            and canon(a) == canon(b)
+        )
+        if not ok:
+            fails.append(("repart", name, f"layout-dependent: rows {len(a)}/{len(b)}"))
+            print(f"repart {name}: LAYOUT-DEPENDENT RESULT", flush=True)
+        if i % 40 == 0:
+            print(f"[repart {i}/{len(todo)}] ({time.time()-t0:.1f}s)", flush=True)
     return fails
 
 

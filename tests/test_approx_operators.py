@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.cache import conf_override
 from hw_kafka_flink_health_spark.operators.dedup import (
     minhash_lsh_pairs,
     simhash63,
@@ -141,18 +142,11 @@ def test_arrow_cosine_near_tie_across_batches(spark):
     ).coalesce(1)
     queries = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
 
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
-    try:
+    with conf_override(spark, **{"spark.sql.execution.arrow.maxRecordsPerBatch": "3"}):
         arrow = {
             (r.query_id, r.rank): r.neighbor_id
             for r in cosine_topk_arrow(corpus, queries, k=2).collect()
         }
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     expr = {
         (r.query_id, r.rank): r.neighbor_id
         for r in cosine_topk(corpus, queries, k=2).collect()

@@ -47,11 +47,9 @@ def catalog_sweep(spark):
     from hw_kafka_flink_health_spark.operators import dedup as _dd
     from hw_kafka_flink_health_spark.queries import graph as _g
 
-    with _dd._DEDUP_CACHE_LOCK:
-        _dd._PAIRS_CACHE.clear()
-        _dd._CC_CACHE.clear()
-    with _g._EDGE_CACHE_LOCK:
-        _g._EDGE_CACHE.clear()
+    _dd._PAIRS.clear()
+    _dd._CLUSTERS.clear()
+    _g._EDGES.clear()
 
     captured: list[str] = []
     entries: dict[str, dict] = {}

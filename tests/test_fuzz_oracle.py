@@ -20,6 +20,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from hw_kafka_flink_health_spark.cache import conf_override
 from hw_kafka_flink_health_spark.queries import ORACLES, QUERIES
 from tests.test_oracle import canon
 
@@ -491,24 +492,14 @@ def test_fuzz_repartition_invariance(name, spark, repart_layouts):
     DuckDB oracle."""
     from scripts.fuzz_catalog import _REPART_RUNS
 
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.files.maxPartitionBytes",
-            "spark.sql.files.openCostInBytes",
-        )
-    }
     outs = []
-    try:
-        for which, shuf, mpb, ocb in _REPART_RUNS:
-            spark.conf.set("spark.sql.shuffle.partitions", shuf)
-            spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
-            spark.conf.set("spark.sql.files.openCostInBytes", ocb)
+    for which, shuf, mpb, ocb in _REPART_RUNS:
+        with conf_override(spark, **{
+            "spark.sql.shuffle.partitions": shuf,
+            "spark.sql.files.maxPartitionBytes": mpb,
+            "spark.sql.files.openCostInBytes": ocb,
+        }):
             outs.append(QUERIES[name](spark, repart_layouts[which]).toPandas())
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     a, b = outs
     assert len(a) == len(b), f"{name}: rows {len(a)} vs {len(b)} across layouts"
     assert canon(a) == canon(b), f"{name}: layout-dependent values"

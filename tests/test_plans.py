@@ -12,6 +12,7 @@ import re
 
 import pytest
 
+from hw_kafka_flink_health_spark.cache import conf_override
 from hw_kafka_flink_health_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -117,15 +118,14 @@ def test_jaccard_postings_no_inferred_generate_filter(spark):
     re-runs construction per row — measured 5x on the postings pass.
     explode_outer + isNotNull keeps the scan clean.
 
-    The pairs pipeline is checkpointed into the session-keyed
-    _PAIRS_CACHE (r12), so the visible plan starts at Scan ExistingRDD —
+    The pairs pipeline is checkpointed into the session-keyed pairs
+    cache (r12), so the visible plan starts at Scan ExistingRDD —
     assert on the CAPTURED pre-checkpoint executed subtree instead, the
     same window the catalog sweep uses."""
     from hw_kafka_flink_health_spark.operators import dedup as dd
     from hw_kafka_flink_health_spark.plans import capture_checkpoints
 
-    with dd._DEDUP_CACHE_LOCK:
-        dd._PAIRS_CACHE.clear()
+    dd._PAIRS.clear()
     captured: list = []
     executed: list = []
     with capture_checkpoints(captured, executed):
@@ -740,12 +740,8 @@ def test_bucketed_join_has_no_exchange(spark):
     Broadcast is disabled so the assertion cannot be satisfied by a
     BroadcastExchange instead of by the bucket layout; the only
     exchange allowed in the whole plan is the final 5-row aggregate's."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_override(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         plan = plan_of(spark, "join_bucketed_colocated")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert "SortMergeJoin" in plan, plan
     join_part = plan[: plan.index("HashAggregate")] if "HashAggregate" in plan else plan
     # no exchange may feed the join: the scans' bucket layout satisfies

@@ -5,6 +5,7 @@ session could observe another run's state."""
 
 from __future__ import annotations
 
+from hw_kafka_flink_health_spark.cache import conf_override
 from tests.conftest import SF_DIR
 
 
@@ -33,14 +34,11 @@ def test_recursion_headroom_is_monotonic(spark):
         _ensure_recursion_headroom,
     )
 
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", "500")
-    try:
+    with conf_override(spark, **{"spark.sql.cteRecursionLevelLimit": "500"}):
         _ensure_recursion_headroom(spark, 400)
         assert spark.conf.get("spark.sql.cteRecursionLevelLimit") == "500"
         _ensure_recursion_headroom(spark, 600)
         assert spark.conf.get("spark.sql.cteRecursionLevelLimit") == "600"
-    finally:
-        spark.conf.set("spark.sql.cteRecursionLevelLimit", "400")
 
 
 def test_concurrent_recursive_runs_do_not_cross_talk(spark):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.cache import conf_override
 from hw_kafka_flink_health_spark.operators.storage import (
     write_bucketed,
     write_partitioned,
@@ -45,12 +46,8 @@ def test_bucketed_join_has_no_exchange(spark, warehouse):
     # Bucketing targets big-fact x big-fact joins where neither side can
     # broadcast; at test scale the planner would broadcast instead (and
     # skip bucketed scans), so pin the scenario bucketing exists for.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with conf_override(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         plan = physical(joined)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     assert "Exchange" not in plan, plan  # the whole point of bucketing
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     # same co-located layout also covers the join both tables were bucketed for

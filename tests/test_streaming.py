@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.cache import conf_override
 from hw_kafka_flink_health_spark.functions.parsing import parse_events_df
 from hw_kafka_flink_health_spark.streaming.health_pipeline import (
     build_streaming_job,
@@ -1425,10 +1426,7 @@ def test_streaming_under_rocksdb_state_store(spark, tmp_path):
 
     from hw_kafka_flink_health_spark.session import ROCKSDB_STATE_CONF
 
-    saved = {k: spark.conf.get(k, None) for k in ROCKSDB_STATE_CONF}
-    for k, v in ROCKSDB_STATE_CONF.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, **ROCKSDB_STATE_CONF):
         reader = (
             spark.readStream.schema("raw string")
             .option("maxFilesPerTrigger", 1000)
@@ -1444,12 +1442,6 @@ def test_streaming_under_rocksdb_state_store(spark, tmp_path):
         q.processAllAvailable()
         progress = q.lastProgress
         q.stop()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
     out = {
         (r.patient_id, r.window_start): r
