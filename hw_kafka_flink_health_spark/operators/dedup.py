@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.cache import LRU, frame_key
@@ -655,39 +655,39 @@ def connected_components(
 ) -> DataFrame:
     """Cluster ids for near-dup pairs: each node gets the MIN node id
     reachable in its component — the canonical-representative step that
-    turns pairwise dedup output into keep/drop decisions.
+    turns pairwise dedup output into keep/drop decisions. Returns
+    (node, cluster_id); see `min_label_fixpoint` for the rounds.
 
-    Min-label propagation: labels start as the node id; each round every
-    node takes the min of its own and its neighbors' labels, until a round
-    changes nothing (diameter-bounded, <= max_iterations). Each round is
-    ONE shuffle (edge join + min-agg on the same key); `localCheckpoint`
-    truncates the lineage so round N's plan doesn't replay rounds 1..N-1
-    — the standard Spark posture for iterative algorithms (GraphX CC is
-    this same loop). Near-dup clusters are tiny in practice (dup groups,
-    not a social graph), so convergence is 2-3 rounds; a 100 TB run keeps
-    every round a single hash-partitioned self-join on node id.
-
-    Returns (node, cluster_id). Nodes appearing only on one side of a pair
-    are still labeled (edges are symmetrized).
-
-    The (pairs-object, src, dst, rounds) result is memoized per session:
-    three registered queries run this exact fixpoint on the SAME cached
-    pairs frame (see _PAIRS) — identity of the input frame is the key
-    (a DataFrame hashes by identity, and the key holds the frame, so its
-    identity cannot be reused while the entry lives), so a recomputed or
+    The result is memoized per session on (pairs, src, dst,
+    max_iterations): three registered queries run this exact fixpoint on
+    the SAME cached pairs frame (see _PAIRS). A DataFrame hashes by
+    identity and the key holds the frame, so a recomputed or
     differently-parameterized pairs table can never be served a stale
-    cluster map.
+    cluster map. Callers with their own, unshared edge frame call
+    `min_label_fixpoint` directly, so they do not evict this entry.
     """
     return _CLUSTERS.get_or_build(
         (pairs, src, dst, max_iterations),
-        lambda: _min_label_fixpoint(pairs, src, dst, max_iterations),
+        lambda: min_label_fixpoint(pairs, src, dst, max_iterations),
     )
 
 
-def _min_label_fixpoint(
+def min_label_fixpoint(
     pairs: DataFrame, src: str, dst: str, max_iterations: int
 ) -> DataFrame:
-    """The uncached build behind `connected_components`."""
+    """Min-label propagation over the undirected graph of `pairs`
+    (edges are symmetrized, so a node seen on one side only is still
+    labeled): labels start as the node id; each round every node takes
+    the min of its own and its neighbors' labels, until a round changes
+    nothing or `max_iterations` rounds ran. Returns (node, cluster_id).
+
+    Each round is one edge join + min-agg, and its eager
+    `localCheckpoint` truncates the lineage so round N's plan doesn't
+    replay rounds 1..N-1 — the standard Spark posture for iterative
+    algorithms (GraphX CC is this same loop). Near-dup clusters are tiny
+    in practice (dup groups, not a social graph), so convergence is 2-3
+    rounds; a 100 TB run keeps every round a single hash-partitioned
+    self-join on node id."""
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -704,10 +704,11 @@ def _min_label_fixpoint(
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
         # The convergence flag is computed IN the update select (a label
-        # only changes when a neighbor offers a smaller one), so the
-        # did-anything-change probe is a filter on the checkpointed
-        # result — not the extra labels-vs-new-labels join per round the
-        # naive form pays.
+        # only changes when a neighbor offers a smaller one) and observed
+        # on the round's own eager checkpoint, so the did-anything-change
+        # probe costs no action. `max`, not `sum`, so a retried task
+        # reporting twice cannot change it; empty labels observe NULL,
+        # which also means converged.
         stepped = (
             labels.join(neighbor_min, "node", "left")
             .select(
@@ -720,10 +721,14 @@ def _min_label_fixpoint(
                     & (F.col("nbr_min") < F.col("cluster_id"))
                 ).alias("__changed"),
             )
+        )
+        obs = Observation()
+        labels = (
+            stepped.observe(obs, F.max(F.col("__changed").cast("int")).alias("changed"))
+            .select("node", "cluster_id")
             .localCheckpoint(eager=True)
         )
-        labels = stepped.select("node", "cluster_id")
-        if stepped.filter(F.col("__changed")).limit(1).count() == 0:
+        if not obs.get["changed"]:
             break
     return labels
 

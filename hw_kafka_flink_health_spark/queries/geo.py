@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.operators.dedup import min_label_fixpoint
 from hw_kafka_flink_health_spark.queries._registry import register
 from hw_kafka_flink_health_spark.sources.files import load_table
 
@@ -337,14 +338,18 @@ def geo_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one map-side-combined cell aggregate over the points, a tiny
     dense-cell self-join for adjacency (≤9 candidates per cell by
-    construction), then 5 label-propagation rounds over the cell graph
-    (each one join + one min-agg, localCheckpoint lineage truncation —
-    dedup_clusters' pattern at cell granularity). The density threshold
-    is exact integer arithmetic over N DIV 1296 plus a floor(sqrt) of
-    that integer (one correctly-rounded IEEE op), so both engines pick
-    the identical dense set; coordinates are the module's deterministic
-    md5 draws. Bounded rounds: both engines run the same 5 (grid
-    diameter may exceed it; the twin matches exactly either way)."""
+    construction), then at most 5 rounds of
+    `operators/dedup.py:min_label_fixpoint` over the cell graph (the
+    loop behind connected_components, called uncached so this query's
+    edge frame never evicts the dedup queries' shared cluster map).
+    Dense cells without a dense neighbor keep their own id. The density
+    threshold is exact integer arithmetic over N DIV 1296 plus a
+    floor(sqrt) of that integer (one correctly-rounded IEEE op), so both
+    engines pick the identical dense set; coordinates are the module's
+    deterministic md5 draws. Bounded rounds: the twin runs exactly 5;
+    the loop exits early only at a fixpoint, where further rounds change
+    nothing, so its labels equal the twin's either way (grid diameter
+    may exceed 5)."""
     cust = load_table(spark, sf_dir, "customer")
     pts = cust.select(
         _lat(F.col("c_custkey"), "cust").alias("lat"),
@@ -380,29 +385,15 @@ def geo_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.cid") != F.col("b.cid")),
         )
         .select(F.col("a.cid").alias("src"), F.col("b.cid").alias("dst"))
-        .localCheckpoint()
     )
-    labels = dense.select("cid", F.col("cid").alias("lbl"), "n")
-    for _ in range(_DBSCAN_ROUNDS):
-        m = (
-            edges.join(labels.select(F.col("cid").alias("src"), "lbl"), "src")
-            .groupBy(F.col("dst").alias("cid"))
-            .agg(F.min("lbl").cast("long").alias("mn"))
+    labels = min_label_fixpoint(edges, "src", "dst", _DBSCAN_ROUNDS)
+    return (
+        dense.join(labels.withColumnRenamed("node", "cid"), "cid", "left")
+        .groupBy(F.coalesce("cluster_id", "cid").alias("cluster_id"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_cells"),
+            F.sum("n").cast("long").alias("n_points"),
         )
-        labels = (
-            labels.join(m, "cid", "left")
-            .select(
-                "cid",
-                F.least(F.col("lbl"), F.coalesce(F.col("mn"), F.col("lbl"))).alias(
-                    "lbl"
-                ),
-                "n",
-            )
-            .localCheckpoint()
-        )
-    return labels.groupBy(F.col("lbl").alias("cluster_id")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.sum("n").cast("long").alias("n_points"),
     )
 
 

@@ -3,9 +3,9 @@ purchase graph.
 
 Extension surface (SURVEY.md §2.C): the reference has no joins, let alone
 iterative graph algorithms (SURVEY.md §2.B). Connected components already
-exist (`operators/dedup.py:dedup_clusters`, min-label propagation); this
-adds the other canonical propagation workload, with two scale-bearing
-design choices:
+exist (`operators/dedup.py:connected_components`, min-label propagation,
+behind `queries/text.py:dedup_clusters`); this adds the other canonical
+propagation workload, with two scale-bearing design choices:
 
 * **Fixed-point integer arithmetic.** Ranks are carried in parts-per-
   billion BIGINTs and every operation is integer (`div` truncation,
@@ -25,7 +25,7 @@ design choices:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.cache import LRU, frame_key
@@ -80,10 +80,21 @@ def graph_pagerank_cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+    base = nodes.crossJoin(F.broadcast(nn))
+    ranks = base.select("node", F.expr(f"{_SCALE} div n").cast("long").alias("rank"))
+    tele = F.expr(f"({_SCALE * 15} div 100) div n")
+    return _rank_rounds(edges, outdeg, base, tele, ranks)
 
-    ranks = nodes.crossJoin(F.broadcast(nn)).select(
-        "node", F.expr(f"{_SCALE} div n").cast("long").alias("rank")
-    )
+
+def _rank_rounds(
+    edges: DataFrame, outdeg: DataFrame, base: DataFrame, tele: Column, ranks: DataFrame
+) -> DataFrame:
+    """The `_ITERS` rank-propagation rounds shared by PageRank and PPR:
+    each node's rank splits evenly (`div`) over its out-edges, the
+    per-destination sums are damped to 85%, and every node of `base` (the
+    node universe, carrying whatever columns `tele` reads) adds its
+    teleport share. All integer, so both oracles unroll the same ops."""
+    damped = F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")
     for _ in range(_ITERS):
         contrib = (
             edges.join(ranks.withColumnRenamed("node", "src"), "src")
@@ -91,19 +102,9 @@ def graph_pagerank_cust_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("dst")
             .agg(F.sum(F.expr("rank div d")).cast("long").alias("s"))
         )
-        ranks = (
-            nodes.crossJoin(F.broadcast(nn))
-            .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.expr(f"({_SCALE * 15} div 100) div n")
-                    + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-        )
+        ranks = base.join(
+            contrib.withColumnRenamed("dst", "node"), "node", "left"
+        ).select("node", (tele + damped).cast("long").alias("rank"))
     return ranks
 
 
@@ -276,61 +277,62 @@ def _bfs_oracle() -> str:
 @register("graph_bfs_distance", oracle=_bfs_oracle())
 def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded-round BFS shortest hops from supplier s1 over the
-    UNDIRECTED customer—supplier graph: each round is one join of the
-    reached set against the edge list plus a min-dist aggregate —
-    integer arithmetic throughout, so the unrolled DuckDB twin
-    hash-matches exactly. 4 rounds reach everything in this bipartite
-    graph's connected component (diameter <= 4 hops for any
-    co-purchasing chain). At 100 TB you'd join only the FRONTIER
-    (nodes first reached last round) instead of the full reached set —
-    same answers because min() discards re-discoveries; joining the
-    reached set keeps the plan textually parallel to the oracle. Edges
-    localCheckpoint once (the orders⋈lineitem distinct is the expensive
-    subtree; 2×rounds consumers otherwise re-derive it)."""
+    UNDIRECTED customer—supplier graph, integer arithmetic throughout, so
+    the unrolled DuckDB twin hash-matches exactly. 4 rounds reach
+    everything in this bipartite graph's connected component (diameter
+    <= 4 hops for any co-purchasing chain). The twin joins the whole
+    reached set each round and keeps min(dist); `_frontier_bfs` joins
+    only the frontier — same answers, because min() discards
+    re-discoveries. The shared edge table is checkpointed once (the
+    orders⋈lineitem distinct is the expensive subtree)."""
     ed = _cs_edges_undirected(spark, sf_dir)
-    # True frontier BFS: unit edge weights discover distances in
-    # increasing order, so only LAST round's newly-reached nodes need to
-    # join the edge list (identical min-hop answers to the oracle's
-    # reached-set recursion — extra candidates there only ever produce
-    # larger dists that min() drops). The FRONTIER join broadcasts the
-    # small side (frontiers shrink after the expansion peak), so the
-    # checkpointed edge table is probed in place and NEVER shuffles — at
-    # 100 TB that means one edge materialization total. The anti-join
-    # against the REACHED set is deliberately un-hinted: dist grows
-    # monotonically toward every reached node, and a forced broadcast
-    # there is a driver/executor OOM at real graph cardinalities (round-6
-    # verdict). AQE still picks broadcast while dist is small and falls
-    # back to a shuffled anti-join of two reached-set-bounded tables —
-    # the edge table is not involved either way (plan-asserted in
-    # tests/test_plans.py::test_bfs_edge_table_never_shuffles).
-    dist = spark.createDataFrame(
-        [(_BFS_SOURCE, 0)], "node string, dist int"
-    ).localCheckpoint()
-    frontier = dist
-    for i in range(_BFS_ROUNDS):
-        new = _bfs_round(ed, frontier, dist, i)
-        frontier = new.localCheckpoint()
+    dist0 = spark.createDataFrame([(_BFS_SOURCE, 0)], "node string, dist int")
+    dist = _frontier_bfs(ed, dist0, _BFS_ROUNDS)
+    return dist.select("node", F.col("dist").cast("long").alias("dist"))
+
+
+def _frontier_bfs(ed: DataFrame, dist0: DataFrame, rounds: int) -> DataFrame:
+    """Frontier BFS for `rounds` rounds from the dist-0 rows of `dist0`,
+    keyed on every column except `dist` (`node`, or `(seed, node)` for a
+    multi-source search). Unit edge weights discover distances in
+    increasing order, so only LAST round's newly reached rows need to
+    join the edge list. Returns every reached row with its hop count.
+
+    The FRONTIER join broadcasts the small side (frontiers shrink after
+    the expansion peak), so the checkpointed edge table is probed in
+    place and NEVER shuffles — at 100 TB that means one edge
+    materialization total. The anti-join against the REACHED set is
+    deliberately un-hinted: it grows toward every reached row, and a
+    forced broadcast there is a driver/executor OOM at real graph
+    cardinalities (round-6 verdict). AQE still picks broadcast while it
+    is small and falls back to a shuffled anti-join of two
+    reached-set-bounded tables — the edge table is not involved either
+    way (plan-asserted in tests/test_plans.py::test_bfs_round_plan_shape)."""
+    dist = frontier = dist0.localCheckpoint()
+    for i in range(rounds):
+        frontier = _bfs_round(ed, frontier, dist, i).localCheckpoint()
         # dist needs no checkpoint of its own: it is a union of already-
         # checkpointed frontiers, so its lineage stays 1 level deep
         dist = dist.unionByName(frontier)
-    return dist.select("node", F.col("dist").cast("long").alias("dist"))
+    return dist
 
 
 def _bfs_round(ed: DataFrame, frontier: DataFrame, dist: DataFrame, i: int) -> DataFrame:
     """One BFS round: expand the frontier over the edge list, then keep
-    only nodes not yet reached. The frontier side is hint-broadcast (it
-    is the shrinking side); the reached-set anti-join is UN-hinted by
-    design — see graph_bfs_distance's plan commentary. Factored out so
+    only rows not yet reached. Every frontier row of round i has dist i,
+    so a distinct over the keys is the min-dist aggregate. The frontier
+    side is hint-broadcast; the reached-set anti-join is UN-hinted by
+    design (see `_frontier_bfs`). Factored out so
     tests/test_plans.py::test_bfs_round_plan_shape can assert the round's
     physical plan on the exact production code path."""
+    keys = [c for c in frontier.columns if c != "dist"]
+    carried = [c for c in keys if c != "node"]
     hop = (
         ed.join(F.broadcast(frontier), ed["src"] == frontier["node"])
-        .select(F.col("dst").alias("node"))
+        .select(*carried, F.col("dst").alias("node"))
         .distinct()
     )
-    return hop.join(dist, "node", "left_anti").select(
-        "node", F.lit(i + 1).alias("dist")
-    )
+    return hop.join(dist, keys, "left_anti").select(*keys, F.lit(i + 1).alias("dist"))
 
 
 @register(
@@ -976,27 +978,10 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed absent from the corpus contributes its dist-0 self row and
     zero counts, identically in both engines."""
     ed = _cs_edges_undirected(spark, sf_dir)
-    dist = spark.createDataFrame(
+    dist0 = spark.createDataFrame(
         [(s, s, 0) for s in _HC_SEEDS], "seed string, node string, dist int"
-    ).localCheckpoint()
-    frontier = dist
-    for i in range(_HC_ROUNDS):
-        cand = (
-            frontier.join(ed, frontier.node == ed.src)
-            .select("seed", F.col("dst").alias("n2"), (F.col("dist") + 1).alias("d2"))
-            .groupBy("seed", "n2")
-            .agg(F.min("d2").alias("d2"))
-        )
-        new = (
-            cand.join(
-                dist.select("seed", F.col("node").alias("n2")),
-                ["seed", "n2"],
-                "left_anti",
-            )
-            .select("seed", F.col("n2").alias("node"), F.col("d2").alias("dist"))
-        )
-        frontier = new.localCheckpoint()
-        dist = dist.unionByName(frontier)
+    )
+    dist = _frontier_bfs(ed, dist0, _HC_ROUNDS)
     return dist.groupBy("seed").agg(
         F.count(F.when(F.col("dist") == 1, 1)).cast("long").alias("n_d1"),
         F.count(F.when(F.col("dist") == 2, 1)).cast("long").alias("n_d2"),
@@ -1095,7 +1080,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tele = F.when(
         F.col("_seed").isNotNull(),
         F.lit((_SCALE * 15 // 100) // _PPR_SEEDS),
-    ).otherwise(F.lit(0))
+    ).otherwise(F.lit(0)).cast("long")
     ranks = base.select(
         "node",
         F.when(F.col("_seed").isNotNull(), F.lit(_SCALE // _PPR_SEEDS))
@@ -1103,25 +1088,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("rank"),
     )
-    for _ in range(_ITERS):
-        contrib = (
-            ed.join(ranks.withColumnRenamed("node", "src"), "src")
-            .join(outdeg, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.expr("rank div d")).cast("long").alias("s"))
-        )
-        ranks = (
-            base.join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    tele.cast("long")
-                    + F.expr("(85 * coalesce(s, CAST(0 AS BIGINT))) div 100")
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-        )
+    ranks = _rank_rounds(ed, outdeg, base, tele, ranks)
     return (
         ranks.orderBy(F.col("rank").desc(), F.col("node").asc())
         .limit(20)

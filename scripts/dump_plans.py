@@ -103,7 +103,7 @@ SHOWCASE = {
     "stats_grubbs_test": "Grubbs outlier screen: one stats aggregate, broadcast join-back (stats side = |event_types| rows), one max/argmax aggregate - two passes over events, zero sorts",
     "multimodal_aspect_buckets": "aspect bucketing: one Arrow decode pass over real BMP payloads (checkpointed), bucket aggregate + broadcast join-back of the ~15-row bucket table for the waste sum",
     "experiment_bh_fdr": "BH-FDR over permutation tests: deliberate B=80 replicate explode (rebalance_if_narrow spreads the 1-partition events scan before the 80x generation, r12) (md5-quartered: one hash = four draws) into ONE partial hash aggregate keyed (type, replicate); obs stats checkpointed once and BROADCAST into both the replicate compare and the p-value join; the BH step-up runs on |types| rows with an integer decision rule. The B-vs-corpus lever is the documented scale knob",
-    "graph_harmonic_centrality": "multi-source frontier BFS: the reached set keys (seed, node) so 4 seeds share every edge probe; per round one join vs the SHARED checkpointed edge list + min-agg + anti-join; harmonic sum emitted as exact integer 6*sum(1/d)",
+    "graph_harmonic_centrality": "multi-source frontier BFS: the reached set keys (seed, node) so 4 seeds share every edge probe; graph_bfs_distance's round loop (`_frontier_bfs`): per round one broadcast-frontier join vs the SHARED checkpointed edge list + distinct + un-hinted anti-join; harmonic sum emitted as exact integer 6*sum(1/d)",
     "graph_hits_bipartite": "HITS, two mutual-reinforcement rounds in exact BIGINT (normalization dropped, ranking identical): edge list checkpointed once for its three consumers, each round one broadcast join + map-side-combined sum, top-15 via TakeOrderedAndProject",
     "versioned_changefeed": "net CDF across mixed DML (append/DV delete/merge): inserts read only span-added files, deletes only DV-targeted old files — O(changes), never O(table); netting is one anti-join of two bounded change sets",
     "supplier_otif": "OTIF vendor scorecard: one orderkey-shuffled equi join + one suppkey hash aggregate, both map-side combined; never-shipped lines counted against the rate without a second pass",

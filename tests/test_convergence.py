@@ -20,15 +20,20 @@ hash-matches its (equally partial) oracle. These tests pin the
 
 `connected_components` needs no bound-vs-fixpoint test: its loop already
 self-terminates on an explicit did-anything-change probe (the __changed
-filter in operators/dedup.py) — here we pin that the early-exit result
-equals a generously-bounded run on a worst-case path graph (diameter ==
-node count, the slowest-converging topology for min-label propagation).
+flag observed on each round's checkpoint in
+operators/dedup.py:min_label_fixpoint) — here we pin that the early-exit
+result equals a generously-bounded run on a worst-case path graph
+(diameter == node count, the slowest-converging topology for min-label
+propagation), and that the probe costs no job of its own.
 """
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.operators import dedup as dedup_mod
 from hw_kafka_flink_health_spark.operators.dedup import connected_components
 from hw_kafka_flink_health_spark.queries import QUERIES
 from hw_kafka_flink_health_spark.queries import geo as geo_mod
@@ -62,10 +67,14 @@ def test_kcore_output_certifies_fixpoint(spark):
 def test_dbscan_bound_reaches_fixpoint(spark, monkeypatch):
     """Min-label propagation is monotone decreasing and cluster_id IS the
     label, so any label still in flight would move a cell between output
-    groups — aggregate equality under +1 round iff converged."""
+    groups — aggregate equality under +1 round iff converged. DBSCAN runs
+    the uncached loop: its edge frame must not evict the cluster map the
+    dedup queries share."""
+    cached = list(dedup_mod._CLUSTERS._entries)
     base = _run("geo_dbscan_cells", spark)
     monkeypatch.setattr(geo_mod, "_DBSCAN_ROUNDS", geo_mod._DBSCAN_ROUNDS + 1)
     assert _run("geo_dbscan_cells", spark) == base
+    assert list(dedup_mod._CLUSTERS._entries) == cached
 
 
 def test_bfs_bound_reaches_fixpoint(spark, monkeypatch):
@@ -75,16 +84,40 @@ def test_bfs_bound_reaches_fixpoint(spark, monkeypatch):
     assert _run("graph_bfs_distance", spark) == base
 
 
+def _path_pairs(spark):
+    """The path graph 0-1-2-...-9."""
+    return spark.createDataFrame([(i, i + 1) for i in range(9)], "doc1 long, doc2 long")
+
+
 def test_connected_components_early_exit_is_fixpoint(spark):
     """Worst-case diameter: a path graph 0-1-2-...-9 needs the most
     min-label rounds of any 10-node topology. The early-exit run must
     equal a generously-bounded one AND the known answer (all nodes
     labeled 0)."""
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "doc1 long, doc2 long"
-    )
+    pairs = _path_pairs(spark)
     got = connected_components(pairs).toPandas()
     assert sorted(got["node"]) == list(range(10))
     assert set(got["cluster_id"]) == {0}
     generous = connected_components(pairs, max_iterations=50).toPandas()
     assert canon(got) == canon(generous)
+
+
+def test_min_label_round_job_budget(spark):
+    """One min-label round costs at most 7 jobs: the convergence probe
+    rides the round's eager checkpoint instead of running an action of
+    its own. The path graph has not converged after 3 or 4 rounds, so
+    the two runs' job counts differ by exactly one round."""
+    sc = spark.sparkContext
+    pairs = _path_pairs(spark)
+    jobs = []
+    for rounds in (3, 4):
+        dedup_mod._CLUSTERS.clear()
+        group = f"min-label-{rounds}-rounds-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            connected_components(pairs, max_iterations=rounds)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[1] - jobs[0] <= 7, jobs

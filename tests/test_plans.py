@@ -686,19 +686,12 @@ def test_kmeans_step_broadcasts_seeds_no_point_shuffle(spark):
     assert plan.count("Exchange hashpartitioning") == 2, plan
 
 
-def test_bfs_round_plan_shape(spark):
-    """graph_bfs_distance round contract (round-6 verdict item 3): the
-    frontier join stays hint-broadcast with the checkpointed edge table
-    streamed in place (NO exchange on the edge side), while the
-    reached-set anti-join carries NO broadcast hint — dist grows toward
-    all reached nodes, and a forced broadcast there is an OOM at real
-    graph cardinalities. AQE may still CHOOSE broadcast while dist is
-    small; what must not happen is the plan forcing it."""
+def _ring_edges(spark):
+    """A 100-node directed ring (each edge 10x), checkpointed like the
+    production edge table."""
     from pyspark.sql import functions as F
 
-    from hw_kafka_flink_health_spark.queries.graph import _bfs_round
-
-    ed = (
+    return (
         spark.range(1000)
         .select(
             (F.col("id") % 100).cast("string").alias("src"),
@@ -706,7 +699,31 @@ def test_bfs_round_plan_shape(spark):
         )
         .localCheckpoint()
     )
-    start = spark.createDataFrame([("1", 0)], "node string, dist int").localCheckpoint()
+
+
+@pytest.mark.parametrize(
+    "schema,row",
+    [
+        ("node string, dist int", ("1", 0)),
+        ("seed string, node string, dist int", ("s", "1", 0)),
+    ],
+    ids=["single_source", "seeded"],
+)
+def test_bfs_round_plan_shape(spark, schema, row):
+    """`_bfs_round` contract, for the single-source frontier of
+    graph_bfs_distance and the (seed, node) frontier of
+    graph_harmonic_centrality (round-6 verdict item 3): the frontier
+    join stays hint-broadcast with the checkpointed edge table streamed
+    in place (NO exchange on the edge side), while the reached-set
+    anti-join, on every frontier key, carries NO broadcast hint — the
+    reached set grows toward all reached nodes, and a forced broadcast
+    there is an OOM at real graph cardinalities. AQE may still CHOOSE
+    broadcast while it is small; what must not happen is the plan
+    forcing it."""
+    from hw_kafka_flink_health_spark.queries.graph import _bfs_round
+
+    ed = _ring_edges(spark)
+    start = spark.createDataFrame([row], schema).localCheckpoint()
     new = _bfs_round(ed, start, start, 0)
     qe = new._jdf.queryExecution()
     logical = qe.optimizedPlan().toString()
@@ -715,6 +732,7 @@ def test_bfs_round_plan_shape(spark):
     # reached-set anti-join: NO hint of any kind
     anti = logical[logical.index("Join LeftAnti") :].splitlines()[0]
     assert "Hint" not in anti and "hint" not in anti, anti
+    assert anti.count(" = ") == len(row) - 1, anti
     # edge table never shuffles: in the executed round plan, the streamed
     # (first-child, ':-'-prefixed) subtree of the inner broadcast join
     # reaches the edge RDD scan with no exchange in between
@@ -732,6 +750,28 @@ def test_bfs_round_plan_shape(spark):
         streamed.append(line)
     assert any("Scan ExistingRDD" in l for l in streamed), executed
     assert not any("Exchange" in l for l in streamed), executed
+
+
+def test_seeded_bfs_matches_single_source_per_seed(spark):
+    """A two-seed `_frontier_bfs` is the two single-source searches run
+    side by side: seed by seed, the same (node, dist) rows."""
+    from pyspark.sql import functions as F
+
+    from hw_kafka_flink_health_spark.queries.graph import _frontier_bfs
+
+    ed = _ring_edges(spark)
+    seeds = ("1", "50")
+    dist0 = spark.createDataFrame(
+        [(s, s, 0) for s in seeds], "seed string, node string, dist int"
+    )
+    both = _frontier_bfs(ed, dist0, 4)
+    for s in seeds:
+        single = _frontier_bfs(
+            ed, spark.createDataFrame([(s, 0)], "node string, dist int"), 4
+        )
+        got = both.filter(F.col("seed") == s).select("node", "dist").collect()
+        assert sorted(got) == sorted(single.collect()), s
+        assert len(got) == 5, got
 
 
 def test_bucketed_join_has_no_exchange(spark):
