@@ -28,6 +28,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench import envinfo  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Deliberately-suboptimal instrumentation queries (round-6 verdict item 5):
@@ -437,7 +439,6 @@ TRACKED = [
     "stats_kruskal_wallis",
     "stats_poisson_bootstrap_ci",
     "streaming_alert_pipeline",
-    "streaming_alert_pipeline_first",
     "text_cross_doc_dup_spans",
     "text_rake_keywords",
     "versioned_changefeed",
@@ -455,26 +456,14 @@ def bench_streaming(spark) -> float:
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
     from hw_kafka_flink_health_spark.sources.files import load_table
+    from hw_kafka_flink_health_spark.sources.rate import events_producer_json
     from hw_kafka_flink_health_spark.streaming.health_pipeline import build_streaming_job
 
     work = tempfile.mkdtemp(prefix="bench_stream_")
     try:
         ev = load_table(spark, SF_DIR, "events")
-        raw = ev.select(
-            F.to_json(
-                F.struct(
-                    F.format_string("p%03d", F.col("user_id")).alias("patient_id"),
-                    F.concat(
-                        F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"),
-                        F.lit("+00:00"),
-                    ).alias("timestamp"),
-                    F.floor("value").cast("int").alias("heart_rate_bpm"),
-                )
-            ).alias("raw")
-        )
+        raw = ev.select(events_producer_json().alias("raw"))
         src = f"{work}/src"
         raw.coalesce(8).write.mode("overwrite").json(src)
 
@@ -494,62 +483,18 @@ def bench_streaming(spark) -> float:
         shutil.rmtree(work, ignore_errors=True)
 
 
-try:
-    LOAD_AVG_START = [round(x, 2) for x in os.getloadavg()]
-except OSError:
-    LOAD_AVG_START = None
-
-
-def _cpu_score() -> float:
-    """Deterministic single-thread CPU probe: md5 over a fixed 1 MiB
-    buffer, ~0.3 s of work, reported as MiB hashed per second. The SAME
-    work every round, so the ratio of two rounds' scores directly
-    calibrates machine drift — the r8->r9 bench record showed a uniform
-    ~1.2x slowdown on untouched queries that nobody could adjudicate
-    from load averages alone (VERDICT r9 item 3)."""
-    import hashlib
-
-    buf = b"\xa5" * (1 << 20)
-    n = 0
-    t0 = time.perf_counter()
-    while time.perf_counter() - t0 < 0.3:
-        hashlib.md5(buf)
-        n += 1
-    return round(n / (time.perf_counter() - t0), 1)
-
-
-def _fingerprint(spark) -> dict:
-    """Environment fingerprint recorded WITH the numbers (VERDICT r9):
-    enough hardware/software identity + a calibrated CPU score that a
-    later reader can classify a cross-round delta as environmental
-    without re-running anything."""
-    fp: dict = {"cpu_score_mib_s": _cpu_score()}
-    try:
-        with open("/proc/cpuinfo") as f:
-            for line in f:
-                if line.lower().startswith("model name"):
-                    fp["cpu_model"] = line.split(":", 1)[1].strip()
-                    break
-    except OSError:
-        pass
-    try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemTotal"):
-                    fp["mem_total_kb"] = int(line.split()[1])
-                    break
-    except OSError:
-        pass
-    try:
-        fp["kernel"] = os.uname().release
-    except OSError:
-        pass
-    fp["python"] = sys.version.split()[0]
-    try:
-        fp["spark"] = spark.version
-    except Exception:
-        pass
-    return fp
+def fingerprint(spark, snap: dict) -> dict:
+    """Environment fingerprint recorded WITH the numbers (VERDICT r9): box
+    identity, interpreter and engine versions, and the calibrated CPU
+    score of `snap` (an `envinfo.snapshot()`), so a later reader can
+    classify a cross-round delta as environmental without re-running
+    anything."""
+    return {
+        **envinfo.fingerprint(),
+        "cpu_score_mib_s": snap["cpu_score_mib_s"],
+        "python": sys.version.split()[0],
+        "spark": spark.version,
+    }
 
 
 def main() -> None:
@@ -606,10 +551,10 @@ def main() -> None:
 
     # Fingerprint BEFORE the query loop (ADVICE r10): the CPU probe must
     # measure the conditions the queries are about to see, not a box
-    # cooling down after them. A second probe after the loop records the
-    # drift across the run.
-    fingerprint = _fingerprint(spark)
-    fingerprint["python_worker_warm"] = True
+    # cooling down after them. A second snapshot after the loop records
+    # the drift across the run.
+    start = envinfo.snapshot()
+    fp = {**fingerprint(spark, start), "python_worker_warm": True}
 
     # SPARK_GRAFT_BENCH_FULL=1 times the ENTIRE registered catalog
     # instead of the headline list (VERDICT r11 #5: 125 of 419 queries
@@ -634,14 +579,6 @@ def main() -> None:
         else "headline_query_wall_time_total"
     )
     timings: dict[str, float] = {}
-    # Position-controlled streaming probe (VERDICT r12 #7): the
-    # historical `streaming_alert_pipeline` entry runs LAST, after ~295
-    # queries of accumulated load, and has read ~2x its solo time since
-    # r11. This FIRST-slot run of the identical pipeline is an ADDED
-    # entry (the last-slot one keeps its name and position so
-    # round-over-round comparison stays apples-to-apples); the pair
-    # measures the position artifact directly inside every record.
-    timings["streaming_alert_pipeline_first"] = bench_streaming(spark)
     for name in names:
         # time construction + execution: iterative operators (connected
         # components) do eager work while the DataFrame is being built
@@ -661,12 +598,9 @@ def main() -> None:
     # co-tenanted and identical code has measured 2x apart across a day —
     # recording the 1/5/15-min load averages WITH the numbers lets a
     # later reader classify a "regression" as environmental without
-    # forensic reconstruction. load_avg_end is sampled after the run so
+    # forensic reconstruction. The end snapshot is taken after the run so
     # the bench's own load is visible too.
-    try:
-        load_end = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        load_end = None
+    end = envinfo.snapshot()
     canaries = sorted(CANARIES & set(timings))
     engine_best_total = round(
         sum(v for k, v in timings.items() if k not in CANARIES), 3
@@ -679,10 +613,10 @@ def main() -> None:
         "sf": sf_val,
         "canaries": canaries,
         "value_engine_best": engine_best_total,
-        "load_avg_start": LOAD_AVG_START,
-        "load_avg_end": load_end,
+        "load_avg_start": [round(x, 2) for x in start["loadavg"]],
+        "load_avg_end": [round(x, 2) for x in end["loadavg"]],
         "n_cpus": os.cpu_count(),
-        "fingerprint": {**fingerprint, "cpu_score_mib_s_post": _cpu_score()},
+        "fingerprint": {**fp, "cpu_score_mib_s_post": end["cpu_score_mib_s"]},
     }
     # SPARK_GRAFT_BENCH_DETAIL redirects the detail artifact: the bench
     # contract TEST runs this script at sf0.001 and previously clobbered

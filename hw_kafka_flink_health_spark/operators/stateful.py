@@ -150,7 +150,7 @@ EWMA_STATE_SCHEMA = T.StructType([T.StructField("ewma", T.DoubleType())])
 def _ewma_batch_frame(
     key, pdf: pd.DataFrame, prev: float | None, alpha: float
 ) -> tuple[pd.DataFrame | None, float | None]:
-    """Vectorized per-micro-batch EWMA step shared by both stateful APIs.
+    """Vectorized per-micro-batch EWMA step.
 
     pandas ``ewm(alpha, adjust=False)`` runs exactly the recursion
     ``e_t = a*x_t + (1-a)*e_{t-1}`` (seed ``e_1 = x_1``) in Cython — no
@@ -213,47 +213,6 @@ def ewma_stream(parsed: DataFrame, alpha: float = 0.2) -> DataFrame:
         stateStructType=EWMA_STATE_SCHEMA,
         outputMode="append",
         timeoutConf="NoTimeout",
-    )
-
-
-def ewma_stream_tws(parsed: DataFrame, alpha: float = 0.2) -> DataFrame:
-    """`ewma_stream` on transformWithStateInPandas (Spark 4's arbitrary-
-    state successor API with timers/TTL). Requires google.protobuf in the
-    Python env — absent here, so this path is import-gated; the
-    applyInPandasWithState form above is the tested default. Kept because
-    on a real cluster TWS is where new stateful operators should land.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-    except ImportError as e:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package"
-        ) from e
-
-    ship_package(parsed.sparkSession)
-
-    class EwmaProcessor(StatefulProcessor):
-        def init(self, handle) -> None:
-            self.state = handle.getValueState("ewma", EWMA_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self.state.get()[0] if self.state.exists() else None
-            for pdf in rows:
-                frame, prev = _ewma_batch_frame(key[0], pdf, prev, alpha)
-                if frame is not None:
-                    yield frame
-            if prev is not None:
-                self.state.update((prev,))
-
-        def close(self) -> None:
-            pass
-
-    return parsed.groupBy("patient_id").transformWithStateInPandas(
-        statefulProcessor=EwmaProcessor(),
-        outputStructType=EWMA_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
     )
 
 

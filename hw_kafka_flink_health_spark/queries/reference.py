@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from hw_kafka_flink_health_spark.functions.parsing import annotate_df, parse_events_df
 from hw_kafka_flink_health_spark.queries._registry import register
 from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.rate import events_producer_json
 from hw_kafka_flink_health_spark.streaming.health_pipeline import heart_rate_alerts
 
 
@@ -140,24 +141,15 @@ def hr_alerts_sliding_10s(spark: SparkSession, sf_dir: str) -> DataFrame:
 def hr_parse_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1+P3+P4: raw JSON -> parse -> validate -> drop invalid.
 
-    Synthesizes the reference's wire format (JSON strings, ISO8601 with
-    +00:00 offset — src/kafka_producer.py:23-27) from the events table,
+    Synthesizes the reference's wire format (`sources.rate`'s producer
+    JSON, ISO8601 with +00:00 offset) from the events table,
     injects malformed records (every 20th), and runs the engine's
     vectorized parse_event. The oracle keeps only the valid rows — the
     None-contract check.
     """
     ev = load_table(spark, sf_dir, "events")
     raw = F.when((F.col("event_id") % 20) == 0, F.lit("not-json")).otherwise(
-        F.to_json(
-            F.struct(
-                F.format_string("p%03d", F.col("user_id")).alias("patient_id"),
-                F.concat(
-                    F.date_format(F.col("ts"), "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"),
-                    F.lit("+00:00"),
-                ).alias("timestamp"),
-                F.floor("value").cast("int").alias("heart_rate_bpm"),
-            )
-        )
+        events_producer_json()
     )
     # the to_json synthesis + from_json parse both run in the scan stage
     # (pure narrow plan): spread the under-partitioned events scan BEFORE

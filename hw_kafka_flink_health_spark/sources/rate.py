@@ -10,7 +10,7 @@ so batch runs are reproducible (unlike random(), which is per-task)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 PATIENTS = [f"p{i:03d}" for i in range(1, 6)]  # reference: src/kafka_producer.py:37
@@ -27,15 +27,28 @@ def _event_cols(id_col, ts_col):
     )
     baseline = _hash_mod(id_col, 2, 16) + 65  # randint(65, 80)
     noise = _hash_mod(id_col, 3, 26) - 10  # randint(-10, 15)
-    bpm = (baseline + noise).cast("int")
+    return producer_cols(patient, ts_col, baseline + noise)
+
+
+def producer_cols(patient, ts_col, bpm) -> list[Column]:
+    """The producer's event fields (reference src/kafka_producer.py:23-27):
+    `patient_id`, an ISO-8601 `timestamp` with a `+00:00` offset, and an
+    integer `heart_rate_bpm`."""
     iso_ts = F.concat(
         F.date_format(ts_col, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"), F.lit("+00:00")
     )
     return [
         patient.alias("patient_id"),
         iso_ts.alias("timestamp"),
-        bpm.alias("heart_rate_bpm"),
+        bpm.cast("int").alias("heart_rate_bpm"),
     ]
+
+
+def events_producer_json() -> Column:
+    """An `events` table row as the producer's wire JSON: patient
+    `p<user_id:03d>`, `ts` as the timestamp, `floor(value)` as the bpm."""
+    patient = F.format_string("p%03d", F.col("user_id"))
+    return F.to_json(F.struct(*producer_cols(patient, F.col("ts"), F.floor("value"))))
 
 
 def synthetic_heart_rate_stream(

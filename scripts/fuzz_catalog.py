@@ -188,7 +188,7 @@ def sweep(spark, scenario: str) -> list:
     import duckdb
 
     from hw_kafka_flink_health_spark.queries import ORACLES, QUERIES
-    from tests.test_oracle import canon
+    from tests.test_oracle import oracle_diff
 
     base = build(spark, scenario)
     con = duckdb.connect()
@@ -212,13 +212,9 @@ def sweep(spark, scenario: str) -> list:
             fails.append((scenario, name, f"oracle error: {str(e)[:150]}"))
             print(f"{scenario} {name}: ORACLE ERROR", flush=True)
             continue
-        ok = (
-            len(sdf) == len(odf)
-            and sorted(map(str.lower, sdf.columns)) == sorted(map(str.lower, odf.columns))
-            and canon(sdf) == canon(odf)
-        )
-        if not ok:
-            fails.append((scenario, name, f"rows {len(sdf)}/{len(odf)}"))
+        diff = oracle_diff(sdf, odf)
+        if diff is not None:
+            fails.append((scenario, name, diff[:300]))
             print(f"{scenario} {name}: MISMATCH", flush=True)
         if i % 40 == 0:
             print(f"[{scenario} {i}/{len(todo)}] ({time.time()-t0:.1f}s)", flush=True)
@@ -276,7 +272,7 @@ def sweep_repart(spark) -> list:
     scenarios."""
     from hw_kafka_flink_health_spark.cache import conf_override
     from hw_kafka_flink_health_spark.queries import ORACLES, QUERIES
-    from tests.test_oracle import canon
+    from tests.test_oracle import oracle_diff
 
     base1, base16 = build_repart(spark)
     bases = (base1, base16)
@@ -302,14 +298,9 @@ def sweep_repart(spark) -> list:
                 break
         if outs is None:
             continue
-        a, b = outs
-        ok = (
-            len(a) == len(b)
-            and sorted(map(str.lower, a.columns)) == sorted(map(str.lower, b.columns))
-            and canon(a) == canon(b)
-        )
-        if not ok:
-            fails.append(("repart", name, f"layout-dependent: rows {len(a)}/{len(b)}"))
+        diff = oracle_diff(*outs)
+        if diff is not None:
+            fails.append(("repart", name, f"layout-dependent: {diff[:300]}"))
             print(f"repart {name}: LAYOUT-DEPENDENT RESULT", flush=True)
         if i % 40 == 0:
             print(f"[repart {i}/{len(todo)}] ({time.time()-t0:.1f}s)", flush=True)

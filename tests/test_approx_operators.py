@@ -675,12 +675,12 @@ def test_srp_signature_tiers_bit_identical_and_plan_routed(spark):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
 
-    def canon(rows):
+    def ranked(rows):
         return sorted((r["query_id"], r["neighbor_id"], r["rank"]) for r in rows)
 
     hof = srp_ann_topk(emb, q, k=3, signature_work_threshold=1 << 60)
     arrow = srp_ann_topk(emb, q, k=3, signature_work_threshold=1)
-    assert canon(hof.collect()) == canon(arrow.collect())
+    assert ranked(hof.collect()) == ranked(arrow.collect())
     hof_plan = hof._jdf.queryExecution().executedPlan().toString()
     arrow_plan = arrow._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" not in hof_plan

@@ -105,3 +105,17 @@ def test_bench_detail_queries_are_registered():
     ]
     assert not stale_tracked, stale_tracked
     assert len(bench.TRACKED) == len(set(bench.TRACKED))
+
+
+def test_bench_fingerprint_keys(spark):
+    """The environment fingerprint bench.py records with every run, built
+    from perfbench's probes: the fast-tier twin of the fingerprint check
+    in the subprocess bench test."""
+    import bench
+
+    from perfbench import envinfo
+
+    fp = bench.fingerprint(spark, envinfo.snapshot())
+    assert fp["cpu_score_mib_s"] > 0
+    assert fp["python"] and fp["spark"]
+    assert fp["nproc"] >= 1

@@ -12,8 +12,6 @@ and empty partitions; heavy_hitters local-bound recall)."""
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 import pytest
 
@@ -22,7 +20,7 @@ from hypothesis import strategies as st
 
 from hw_kafka_flink_health_spark.cache import conf_override
 from hw_kafka_flink_health_spark.queries import ORACLES, QUERIES
-from tests.test_oracle import canon
+from tests.test_oracle import canon, oracle_diff
 
 # full-suite tier: the driver's own correctness gate (and run_simlog)
 # re-checks every oracle each round; this mirror runs with
@@ -328,18 +326,8 @@ def _compare(name: str, spark, fuzz_dir: str) -> None:
         odf = con.execute(ORACLES[name]).df()
     finally:
         con.close()
-    assert sorted(map(str.lower, sdf.columns)) == sorted(
-        map(str.lower, odf.columns)
-    ), f"{name}: column mismatch"
-    assert len(sdf) == len(odf), f"{name}: rows {len(sdf)} vs {len(odf)}"
-    s, o = canon(sdf), canon(odf)
-    if s != o:
-        diff_s = [r for r in s if r not in set(o)][:5]
-        diff_o = [r for r in o if r not in set(s)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch on fuzz data\n spark-only: {diff_s}\n"
-            f" oracle-only: {diff_o}"
-        )
+    diff = oracle_diff(sdf, odf)
+    assert diff is None, f"{name} on fuzz data: {diff}"
 
 
 def test_recent_list_is_current():
@@ -434,9 +422,6 @@ def test_fuzz_canon_float_negzero_guard():
     assert canon(a) != canon(b)
 
 
-assert math is not None  # keep the import for canon's nan handling
-
-
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_survive_pathological_data(name, spark, fuzz_ties):
     """Rows-only queries have no oracle to diverge from, but they must at
@@ -500,9 +485,8 @@ def test_fuzz_repartition_invariance(name, spark, repart_layouts):
             "spark.sql.files.openCostInBytes": ocb,
         }):
             outs.append(QUERIES[name](spark, repart_layouts[which]).toPandas())
-    a, b = outs
-    assert len(a) == len(b), f"{name}: rows {len(a)} vs {len(b)} across layouts"
-    assert canon(a) == canon(b), f"{name}: layout-dependent values"
+    diff = oracle_diff(*outs)
+    assert diff is None, f"{name}: layout-dependent result: {diff}"
 
 
 def test_repart_risky_list_is_current():

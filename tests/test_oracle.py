@@ -13,11 +13,6 @@ from hw_kafka_flink_health_spark.queries import ORACLES, QUERIES
 
 from tests.conftest import SF_DIR
 
-# full-suite tier: the driver's own correctness gate (and run_simlog)
-# re-checks every oracle each round; this mirror runs with
-# SPARK_GRAFT_TESTS_FULL=1 (see conftest)
-pytestmark = pytest.mark.slow
-
 
 def assert_driver_scalar_schema(name: str, df) -> None:
     """Catalog-wide lint: the external driver canonicalizes query output via
@@ -55,27 +50,33 @@ def canon(df: pd.DataFrame) -> list[tuple]:
     return out
 
 
+def oracle_diff(spark_pdf: pd.DataFrame, other_pdf: pd.DataFrame) -> str | None:
+    """Why two results of one query differ, or None when they match:
+    column names (case-insensitive), then row count, then the
+    order-insensitive canonical values with up to five rows found on
+    only one side."""
+    cols, other_cols = sorted(spark_pdf.columns), sorted(other_pdf.columns)
+    if sorted(map(str.lower, cols)) != sorted(map(str.lower, other_cols)):
+        return f"column mismatch {cols} vs {other_cols}"
+    if len(spark_pdf) != len(other_pdf):
+        return f"row count {len(spark_pdf)} vs {len(other_pdf)}"
+    case = {c.lower(): c for c in cols}
+    other_pdf = other_pdf.rename(columns={c: case[c.lower()] for c in other_cols})
+    s, o = canon(spark_pdf), canon(other_pdf)
+    if s == o:
+        return None
+    s_rows, o_rows = set(s), set(o)
+    spark_only = [r for r in s if r not in o_rows][:5]
+    other_only = [r for r in o if r not in s_rows][:5]
+    return f"value mismatch\n spark-only: {spark_only}\n other-only: {other_only}"
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(name, spark, duck):
     sdf_spark = QUERIES[name](spark, SF_DIR)
     assert_driver_scalar_schema(name, sdf_spark)
-    sdf = sdf_spark.toPandas()
-    odf = duck.execute(ORACLES[name]).df()
-    assert sorted(map(str.lower, sdf.columns)) == sorted(map(str.lower, odf.columns)), (
-        f"{name}: column mismatch {sorted(sdf.columns)} vs {sorted(odf.columns)}"
-    )
-    odf.columns = [c for c in odf.columns]
-    # align case: rename oracle columns to spark's casing
-    case_map = {c.lower(): c for c in sdf.columns}
-    odf = odf.rename(columns={c: case_map[c.lower()] for c in odf.columns})
-    assert len(sdf) == len(odf), f"{name}: row count {len(sdf)} vs {len(odf)}"
-    s, o = canon(sdf), canon(odf)
-    if s != o:
-        diff_s = [r for r in s if r not in set(o)][:5]
-        diff_o = [r for r in o if r not in set(s)][:5]
-        raise AssertionError(
-            f"{name}: value mismatch\n spark-only: {diff_s}\n oracle-only: {diff_o}"
-        )
+    diff = oracle_diff(sdf_spark.toPandas(), duck.execute(ORACLES[name]).df())
+    assert diff is None, f"{name}: {diff}"
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

@@ -98,7 +98,7 @@ def test_udtf_matches_native_explode(spark):
 
 
 def test_ewma_stream_matches_batch_twin(spark, tmp_path):
-    """transformWithStateInPandas EWMA: ValueState must carry the running
+    """applyInPandasWithState EWMA: GroupState must carry the running
     average across micro-batches; output equals the non-recursive batch
     fold on the same events."""
     from hw_kafka_flink_health_spark.operators.stateful import ewma_batch, ewma_stream
@@ -150,26 +150,6 @@ def test_ewma_stream_matches_batch_twin(spark, tmp_path):
     # spot-check the recursion: p001 = 80, .2*100+.8*80=84, .2*90+.8*84=85.2
     p1 = sorted(v for v in got if v[0] == "p001")
     assert [round(x[3], 4) for x in p1] == [80.0, 84.0, 85.2]
-
-
-def test_ewma_tws_gated_on_protobuf(spark):
-    """The transformWithStateInPandas variant either runs (protobuf
-    present) or raises the documented NotImplementedError — never a
-    silent wrong path."""
-    import pytest
-
-    from hw_kafka_flink_health_spark.operators.stateful import ewma_stream_tws
-
-    parsed = spark.createDataFrame(
-        [("p001", 1000, 80)], "patient_id string, event_time long, heart_rate_bpm int"
-    )
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(NotImplementedError):
-            ewma_stream_tws(parsed)
-    else:
-        pytest.skip("protobuf present; TWS covered by streaming envs")
 
 
 def test_session_timeout_stream_closes_sessions_via_watermark(spark, tmp_path):
