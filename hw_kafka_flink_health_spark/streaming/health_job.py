@@ -50,36 +50,8 @@ def main() -> None:
         )
 
         raw = synthetic_heart_rate_raw_stream(spark, rows_per_second=args.rate)
-        alerts = build_streaming_job(
-            raw,
-            watermark=args.watermark,
-            window_duration=args.window,
-            slide_duration=args.slide,
-            as_json=False,
-        )
-        sinks = [
-            alerts.writeStream.outputMode("append")
-            .format("console")
-            .option("truncate", "false")
-            .start()
-        ]
-        if args.alert_files:
-            sinks.append(
-                alerts.writeStream.outputMode("append")
-                .format("json")
-                .option("path", args.alert_files)
-                .option("checkpointLocation", args.checkpoint + "_files")
-                .start()
-            )
-        import time
-
-        time.sleep(args.demo)
-        for q in sinks:
-            q.stop()
-        spark.stop()
-        return
-
-    raw = read_kafka_stream(spark, topic=args.input, bootstrap=args.bootstrap)
+    else:
+        raw = read_kafka_stream(spark, topic=args.input, bootstrap=args.bootstrap)
     alerts = build_streaming_job(
         raw,
         watermark=args.watermark,
@@ -87,16 +59,23 @@ def main() -> None:
         slide_duration=args.slide,
         as_json=False,
     )
-    from hw_kafka_flink_health_spark.functions.classify import alert_json_expr
+    if args.demo is not None:
+        sink = (
+            alerts.writeStream.outputMode("append")
+            .format("console")
+            .option("truncate", "false")
+            .start()
+        )
+    else:
+        from hw_kafka_flink_health_spark.functions.classify import alert_json_expr
 
-    queries = [
-        write_kafka_stream(
+        sink = write_kafka_stream(
             alerts.select(alert_json_expr()),
             topic=args.output,
             bootstrap=args.bootstrap,
             checkpoint_dir=args.checkpoint,
         )
-    ]
+    queries = [sink]
     if args.alert_files:
         queries.append(
             alerts.writeStream.outputMode("append")
@@ -105,8 +84,14 @@ def main() -> None:
             .option("checkpointLocation", args.checkpoint + "_files")
             .start()
         )
-    for q in queries:
-        q.awaitTermination()
+    # Wait on all sinks at once: a failure of any of them (the file sink
+    # too, not only the first) is raised here. --demo returns after SECONDS.
+    try:
+        spark.streams.awaitAnyTermination(args.demo)
+    finally:
+        for q in queries:
+            q.stop()
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -324,7 +324,12 @@ def main() -> None:
             # report a clean sweep (review finding)
             print(f"unknown query names: {unknown}")
             sys.exit(2)
-    spark = get_spark(app_name="fuzz_catalog", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="fuzz_catalog",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     spark.sparkContext.setLogLevel("ERROR")
     fails = []
     for s in scenarios:

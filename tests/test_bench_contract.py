@@ -66,9 +66,6 @@ def test_bench_emits_single_json_line(tmp_path):
     assert fp.get("python") and fp.get("spark")
 
 
-# test_all_query_columns_are_aliased_stable_names moved to
-# tests/test_catalog_sweep.py (r13): shares one full-catalog build pass.
-
 def test_headline_names_resolve_in_registry():
     """Static guard: every bench headline name must be a registered
     query (a typo here would only surface in the driver's bench run)."""

@@ -1,17 +1,32 @@
 """Mirror of the driver's correctness gate: every oracle-checkable query
 runs on Spark AND DuckDB at sf0.001; row counts, column names, and
-order-insensitive canonicalized values must match exactly."""
+order-insensitive canonicalized values must match exactly.
+
+The same build of each registered query also runs the catalog plan
+gates (`build_gated`): scalar, identifier-named output columns, no
+CartesianProduct, and no unpartitioned window outside the audited
+whitelist — including windows inside subtrees a localCheckpoint hides.
+"""
 
 from __future__ import annotations
 
 import math
+import re
 
 import pandas as pd
 import pytest
 
+from hw_kafka_flink_health_spark.plans import (
+    analyzed_str,
+    capture_checkpoints,
+    unpartitioned_specs,
+)
 from hw_kafka_flink_health_spark.queries import ORACLES, QUERIES
 
 from tests.conftest import SF_DIR
+from tests.test_window_sweep import AUDITED_BOUNDED
+
+IDENTIFIER = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
 def assert_driver_scalar_schema(name: str, df) -> None:
@@ -71,17 +86,71 @@ def oracle_diff(spark_pdf: pd.DataFrame, other_pdf: pd.DataFrame) -> str | None:
     return f"value mismatch\n spark-only: {spark_only}\n other-only: {other_only}"
 
 
+@pytest.fixture(scope="module", autouse=True)
+def cold_operator_caches():
+    """Clear the session-scoped operator caches once, so every cached
+    subtree (dedup pairs and clusters, graph edges) is built, and so
+    captured, inside this module. Warm from earlier tests, each
+    dedup/graph-family query would be a cache hit and a window added
+    inside those operators would pass the window gate."""
+    from hw_kafka_flink_health_spark.operators import dedup
+    from hw_kafka_flink_health_spark.queries import graph
+
+    dedup._PAIRS.clear()
+    dedup._CLUSTERS.clear()
+    graph._EDGES.clear()
+
+
+def build_gated(name: str, spark):
+    """Build QUERIES[name] once and run the catalog plan gates on it.
+
+    * scalar output columns (`assert_driver_scalar_schema`);
+    * identifier-only column names: the driver hash-compares columns BY
+      NAME against the DuckDB oracle, so a forgotten alias (a column
+      named like `round(avg(x), 2)` or `count(1)`) breaks the match even
+      when values agree;
+    * no CartesianProduct in the physical plan, the one join shape that
+      cannot survive any scale-up (1-row broadcast nested loops from
+      scalar subqueries are fine and are not matched);
+    * no unpartitioned window over the analyzed plan or any subtree a
+      localCheckpoint hid, unless the query is in AUDITED_BOUNDED — and
+      a whitelisted query must still have one, or its entry is stale.
+      See tests/test_window_sweep.py for the boundedness taxonomy.
+    """
+    captured: list[str] = []
+    with capture_checkpoints(captured):
+        df = QUERIES[name](spark, SF_DIR)
+    assert_driver_scalar_schema(name, df)
+    bad = [c for c in df.columns if not IDENTIFIER.match(c)]
+    assert not bad, f"{name}: output columns are not plain identifiers: {bad}"
+    physical = df._jdf.queryExecution().executedPlan().toString()
+    assert "CartesianProduct" not in physical, f"{name}: plans a CartesianProduct"
+    hits = sorted(
+        {h for p in [analyzed_str(df), *captured] for h in unpartitioned_specs(p)}
+    )
+    if name in AUDITED_BOUNDED:
+        assert hits, (
+            f"{name}: whitelisted in AUDITED_BOUNDED but has no unpartitioned "
+            "window left (prune the entry)"
+        )
+    else:
+        assert not hits, (
+            f"{name}: unpartitioned window over input not audited as bounded — "
+            "either fix the plan (distributed_row_number / global_prefix_sum) "
+            f"or audit and whitelist it with a boundedness argument: {hits}"
+        )
+    return df
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_match(name, spark, duck):
-    sdf_spark = QUERIES[name](spark, SF_DIR)
-    assert_driver_scalar_schema(name, sdf_spark)
+    sdf_spark = build_gated(name, spark)
     diff = oracle_diff(sdf_spark.toPandas(), duck.execute(ORACLES[name]).df())
     assert diff is None, f"{name}: {diff}"
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
 def test_rows_only_queries_run(name, spark):
-    df = QUERIES[name](spark, SF_DIR)
-    assert_driver_scalar_schema(name, df)
+    df = build_gated(name, spark)
     assert df.count() >= 0
     assert len(df.columns) > 0

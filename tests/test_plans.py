@@ -108,9 +108,6 @@ def test_q17_per_part_avg_broadcasts_back(spark):
     assert "BroadcastHashJoin" in plan
 
 
-# test_catalog_never_plans_cartesian_product moved to
-# tests/test_catalog_sweep.py (r13): shares one full-catalog build pass.
-
 def test_jaccard_postings_no_inferred_generate_filter(spark):
     """InferFiltersFromGenerate must not push a size(shingles) > 0
     predicate into the documents scan: the pushed form inlines the whole
@@ -121,7 +118,7 @@ def test_jaccard_postings_no_inferred_generate_filter(spark):
     The pairs pipeline is checkpointed into the session-keyed pairs
     cache (r12), so the visible plan starts at Scan ExistingRDD —
     assert on the CAPTURED pre-checkpoint executed subtree instead, the
-    same window the catalog sweep uses."""
+    same window the catalog window gate uses."""
     from hw_kafka_flink_health_spark.operators import dedup as dd
     from hw_kafka_flink_health_spark.plans import capture_checkpoints
 

@@ -5,13 +5,16 @@ VERDICT r10 #3: the round-10 per-query plan gate inspected EXECUTED plans,
 which a checkpoint truncates — text_heaps_vocab_growth's doc-cardinality
 ``row_number().over(Window.orderBy(...))`` was invisible to it because the
 localCheckpoint two lines later cut the window out of the inspected tree.
-This sweep wraps ``DataFrame.localCheckpoint`` to capture the ANALYZED plan
-of its input *before* materialization, builds every registered query, and
-parses every ``windowspecdefinition`` for an empty partition spec. Any
-query with such a window must be in the audited whitelist below, with the
+The gate wraps ``DataFrame.localCheckpoint`` to capture the ANALYZED plan
+of its input *before* materialization and parses every
+``windowspecdefinition`` for an empty partition spec. It runs per query
+on the build the oracle mirror already makes (``build_gated`` in
+tests/test_oracle.py, over all 420 registered queries). Any query with
+such a window must be in the audited whitelist below, with the
 boundedness argument written next to its name; a whitelist entry whose
-window disappears must be pruned (both directions asserted), so the list
-can only ever shrink toward the truth.
+window disappears fails as stale (both directions asserted), so the list
+can only ever shrink toward the truth. This module holds the whitelist,
+the parser self-checks and the capture liveness check.
 
 An unpartitioned window plans as ``Exchange SinglePartition`` + one task
 sorting the entire input — the one plan shape that cannot survive 100 TB
@@ -31,8 +34,6 @@ from hw_kafka_flink_health_spark.plans import (
 )
 
 from hw_kafka_flink_health_spark.queries import QUERIES
-
-SF = "/root/testdata/sf0.001"
 
 #: query name -> why its unpartitioned window(s) survive 100x scale.
 AUDITED_BOUNDED = {
@@ -152,9 +153,22 @@ def test_unpartitioned_spec_parser_self_check(spark):
     assert unpartitioned_specs(analyzed_str(wide))
 
 
-def _moved_note():
-    """test_no_unaudited_unpartitioned_window_anywhere moved to
-    tests/test_catalog_sweep.py (r13): it shares ONE full-catalog
-    build pass with the cartesian and column-name sweeps instead of
-    re-building all 420 queries itself. AUDITED_BOUNDED stays here
-    (imported by the shared sweep) next to its taxonomy."""
+def test_audited_entries_are_registered_queries():
+    """A whitelist entry for a query that no longer exists is stale too;
+    the per-query gate never builds it, so check the names here."""
+    assert not sorted(set(AUDITED_BOUNDED) - set(QUERIES))
+
+
+def test_checkpoint_capture_is_live(spark):
+    """The capture must see the subtree a checkpoint hides: the r11 patch
+    targeted the pyspark.sql.DataFrame base while Spark 4 instances are
+    classic.DataFrame with their own localCheckpoint, so zero subtrees
+    were captured and the gate silently degraded to final-plan-only."""
+    from pyspark.sql import Window, functions as F
+
+    df = spark.range(10).withColumn("rn", F.row_number().over(Window.orderBy("id")))
+    captured: list[str] = []
+    with capture_checkpoints(captured):
+        checkpointed = df.localCheckpoint()
+    assert not unpartitioned_specs(analyzed_str(checkpointed))
+    assert len(captured) == 1 and unpartitioned_specs(captured[0]), captured
