@@ -15,7 +15,7 @@ Scale design notes:
   — the sub-quadratic path for 100 TB corpora.
 * SimHash: per-token xxhash64 (JVM-side), per-bit sign sums, recombined to a
   63-bit fingerprint (bit 63 is skipped so the result stays a positive
-  signed long). Near-dup candidates are grouped by fingerprint band.
+  signed long).
 """
 
 from __future__ import annotations
@@ -434,37 +434,6 @@ def winnowing_fingerprint(
         "doc",
         "fingerprints",
         F.size("fingerprints").cast("long").alias("n_fingerprints"),
-    )
-
-
-def simhash_band_candidates(fps: DataFrame, band_bits: int = 16) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing any of the 4 16-bit simhash
-    bands (detects pairs within Hamming distance 3 of each other with
-    certainty; standard banding argument)."""
-    bands = fps.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("simhash", i * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("key"),
-                    )
-                    for i in range(63 // band_bits + 1)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = bands.select(F.col("doc").alias("doc1"), F.col("simhash").alias("sh1"), "band", "key")
-    b = bands.select(F.col("doc").alias("doc2"), F.col("simhash").alias("sh2"), "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc1") < F.col("doc2"))
-        .select("doc1", "doc2", "sh1", "sh2")
-        .distinct()
     )
 
 

@@ -135,24 +135,6 @@ def runtime_bloom_session(
     return s
 
 
-def cluster_for_joins(
-    spark: SparkSession,
-    df: DataFrame,
-    other: DataFrame,
-    on: str | list[str],
-    table_left: str,
-    table_right: str,
-    *,
-    buckets: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Bucket both join sides by the join key and return the re-read
-    (co-located) tables; joining them produces an exchange-free plan."""
-    keys = [on] if isinstance(on, str) else list(on)
-    write_bucketed(df, table_left, buckets=buckets, key=keys)
-    write_bucketed(other, table_right, buckets=buckets, key=keys)
-    return spark.table(table_left), spark.table(table_right)
-
-
 def write_sorted(
     df: DataFrame,
     path: str,

@@ -6,9 +6,9 @@ sortExprs..., specifiedwindowframe(...))``; sort expressions carry
 spec — the first non-frame arg is a sort expr, or there are no non-frame
 args at all (an ``over ()`` whole-frame window) — plans as
 ``Exchange SinglePartition`` + one task sorting the entire input: the
-one plan shape that cannot survive 100 TB fact cardinality. One parser,
-imported by both the CI gate and the scout script, so a Catalyst
-print-format change is fixed in exactly one place (review r11).
+one plan shape that cannot survive 100 TB fact cardinality. One parser
+serves every gate, so a Catalyst print-format change is fixed in
+exactly one place (review r11).
 """
 
 from __future__ import annotations

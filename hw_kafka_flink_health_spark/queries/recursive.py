@@ -1,5 +1,6 @@
-"""Recursive CTE queries (Spark 4 `WITH RECURSIVE`): calendar-spine
-gap-fill and hierarchy rollup.
+"""Recursive queries: Spark 4 `WITH RECURSIVE` for calendar-spine
+gap-fill, hierarchy rollup, banded DTW and Croston; one bounded fold
+for Holt and Holt-Winters smoothing.
 
 Extension surface (SURVEY.md §2.C, SQL-surface family): the reference has
 no SQL interface at all; these pin the two canonical recursive-SQL shapes
@@ -13,15 +14,25 @@ produces a tiny spine/closure.
 
 Both queries run verbatim in DuckDB (same ANSI recursive syntax), so they
 carry full value oracles.
+
+Scale lesson for DTW and Croston: Spark does NOT materialize
+non-recursive CTEs referenced from a recursive term, so an inline series
+CTE would re-aggregate the fact table on EVERY iteration; they
+localCheckpoint the series first (DuckDB materializes CTEs, so the
+oracles stay one statement). Each step still costs Spark jobs, so Holt
+and Holt-Winters recurse only in their oracles and run as one
+operators/sequential.py:fold.
 """
 
 from __future__ import annotations
 
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.operators.sequential import fold
 from hw_kafka_flink_health_spark.queries._registry import register
 from hw_kafka_flink_health_spark.sources.files import load_table
 
@@ -166,21 +177,13 @@ def recursive_part_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # Holt's linear-trend (double) exponential smoothing. EWMA has a closed
-# form (events_ewma), but Holt's COUPLED level/trend recursion does not —
-# it is the canonical "genuinely iterative numeric method" and exactly
-# what WITH RECURSIVE's one-row-per-step mode is for. The recursion runs
-# over the MONTH-grain aggregate (depth = months in the date range, ~84
-# here), never over raw rows. Crucial scale detail: Spark does NOT
-# materialize non-recursive CTEs referenced from a recursive term — an
-# inline `idx` CTE would be re-aggregated from the fact table on EVERY
-# iteration (~84 scans of orders). The Spark path therefore
-# localCheckpoints the month series first and the recursion joins the
-# materialized ~84-row table; DuckDB materializes CTEs, so the oracle
-# keeps the whole thing as one statement. Money is summed in integer
-# cents so the series entering the recursion is bitwise-identical in
-# both engines, and the recursive step is the SAME literal arithmetic
-# text in both — level and trend stay bitwise-equal through all
-# iterations (rounding only at output).
+# form (events_ewma), but Holt's COUPLED level/trend recursion does not.
+# It runs over the MONTH-grain aggregate (~84 rows; the calendar fixes
+# the length) as one fold in Python floats. Money is summed in integer
+# cents so the series is bitwise-identical in both engines, and each
+# step does _HOLT_STEP_SQL's double operations in the same order, so
+# level and trend stay bitwise-equal. Rounding happens only at output,
+# in Spark (HALF_UP like the oracle; Python's round is half-even).
 _HOLT_STEP_SQL = """holt(i, m, y, lvl, trd) AS (
   SELECT i, m, y, y, CAST(0.0 AS DOUBLE) FROM {idx} WHERE i = 1
   UNION ALL
@@ -213,53 +216,54 @@ WITH RECURSIVE months AS (
 )
 
 
+def _holt_steps(pdf: pd.DataFrame) -> pd.DataFrame:
+    rows = []
+    for i, y in enumerate(pdf["y"].tolist(), 1):
+        if i == 1:
+            lvl, trd = y, 0.0
+        else:
+            new = 0.4 * y + 0.6 * (lvl + trd)
+            lvl, trd = new, 0.3 * (new - lvl) + 0.7 * trd
+        rows.append((i, y, lvl, trd))
+    return pd.DataFrame(rows, columns=["step", "revenue", "level", "trend"])
+
+
 @register("recursive_holt_linear_trend", oracle=_HOLT_ORACLE)
 def recursive_holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt double exponential smoothing of monthly revenue via WITH
-    RECURSIVE (alpha=0.4, beta=0.3): level_t = a*y_t + (1-a)*(level+trend),
-    trend_t = b*(level_t - level) + (1-b)*trend, one recursion step per
-    month. The heavy part — scan + month aggregate of the fact table —
-    runs ONCE and is localCheckpointed; the recursion's per-step join
-    touches only the materialized ~84-row series (see module note on why
-    inlining the CTE would re-scan orders every iteration). Emits the
-    full fitted series plus the one-step-ahead forecast; value-oracled
-    exactly (integer-cent inputs, identical step-arithmetic text)."""
-    from pyspark.sql import Window as W
-
-    _ensure_recursion_headroom(spark)
-    # NULL dates/prices out: a NULL month group flips the row_number
-    # anchor between the engines' NULL-ordering defaults, and an
-    # all-NULL-price month would send a NULL y through every later
-    # recursion step (nulls fuzz finding).
+    """Holt double exponential smoothing of monthly revenue (alpha=0.4,
+    beta=0.3): level_t = a*y_t + (1-a)*(level+trend),
+    trend_t = b*(level_t - level) + (1-b)*trend, one step per month.
+    Emits the full fitted series plus the one-step-ahead forecast;
+    value-oracled exactly (integer-cent inputs, identical step
+    arithmetic)."""
+    # NULL dates/prices out: a NULL month group flips the step order
+    # between the engines' NULL-ordering defaults, and an all-NULL-price
+    # month would send a NULL y through every later step (nulls fuzz
+    # finding).
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate").isNotNull() & F.col("o_totalprice").isNotNull()
     )
     months = orders.groupBy(
         F.date_trunc("month", F.col("o_orderdate")).alias("m")
     ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")).alias("c"))
-    idx = months.select(
-        "m",
-        (F.col("c") / F.lit(100.0).cast("double")).alias("y"),
-        F.row_number().over(W.orderBy("m")).cast("bigint").alias("i"),
-    ).localCheckpoint()
-    return _sql_over_views(
-        spark, "WITH RECURSIVE " + _HOLT_STEP_SQL.format(idx="{idx}"), {"idx": idx}
+    series = months.select("m", (F.col("c") / F.lit(100.0).cast("double")).alias("y"))
+    holt = fold(
+        series, "m", _holt_steps, "step long, revenue double, level double, trend double"
+    )
+    return holt.select(
+        "step",
+        *(F.round(c, 2).alias(c) for c in ("revenue", "level", "trend")),
+        F.round(F.col("level") + F.col("trend"), 2).alias("forecast_next"),
     )
 
 
 # Holt-Winters ADDITIVE seasonal smoothing (level + trend + 7-slot
 # seasonal state), the seasonal extension of recursive_holt_linear_trend.
-# The seasonal state rides through the recursion as a 7-element DOUBLE
-# array: ss[1] is the seasonal component due at the current step, and
-# each step rotates the array (drop head, append the re-estimated
-# component). Array PLUMBING differs by engine (element_at/slice/concat
-# vs [1]/list_slice/list_append) — that is fine, because plumbing moves
-# doubles without touching them; every ARITHMETIC op is the same literal
-# expression text in both engines, so level/trend/seasonal stay bitwise
-# equal through all ~113 iterations. Window: 59 days of 1995 keeps the
-# recursion depth at ~52 (each level is one micro-job of fixed scheduler
-# cost — depth, not data size, is the price) while covering 8 full
-# weekly cycles.
+# The oracle carries the seasonal state as a 7-element DOUBLE list: ss[1]
+# is the component due at the current step, and each step rotates the
+# list. The Spark side runs the same recursion as one fold, with
+# _hw_step's arithmetic in the same order, so every state stays bitwise
+# equal. Window: 59 days of 1995 covers 8 full weekly cycles.
 def _hw_step(s1: str) -> tuple[str, str, str]:
     lvl = (
         f"(CAST(0.4 AS DOUBLE) * (x.y - {s1}) "
@@ -318,27 +322,37 @@ WITH RECURSIVE daily AS (
 """
 
 
+def _hw_steps(pdf: pd.DataFrame) -> pd.DataFrame:
+    # a NULL day sum arrives as NaN and propagates through + - * as NULL
+    # does in SQL; fold's pandas output turns NaN back into NULL
+    y, d_ms = pdf["y"].tolist(), pdf["day_ms"].tolist()
+    # anchor: SQL sum skips NULL cents and is NULL when all are NULL
+    week = pdf["c"].iloc[:7].dropna()
+    base = int(week.astype("int64").sum()) / 700.0 if len(week) else float("nan")
+    lvl, trd, ss = base, 0.0, [v - base for v in y[:7]]
+    rows = []
+    for i in range(8, len(y) + 1):
+        yi, s1 = y[i - 1], ss[0]
+        new = 0.4 * (yi - s1) + 0.6 * (lvl + trd)
+        new_trd = 0.3 * (new - lvl) + 0.7 * trd
+        sn = 0.2 * (yi - new) + 0.8 * s1
+        rows.append((i, d_ms[i - 1], yi, new, new_trd, sn, lvl + trd + s1))
+        lvl, trd, ss = new, new_trd, ss[1:] + [sn]
+    return pd.DataFrame(
+        rows, columns=["step", "day_ms", "revenue", "level", "trend", "seasonal", "fitted"]
+    )
+
+
 @register("recursive_holt_winters_daily", oracle=_HW_ORACLE)
 def recursive_holt_winters_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt-Winters additive triple exponential smoothing of daily
-    revenue with a weekly (7-slot) season, via WITH RECURSIVE
-    (alpha=0.4, beta=0.3, gamma=0.2): the coupled level/trend/seasonal
-    recursion has no closed form, and the seasonal state travels as a
-    rotating 7-double array column. Initialization is the standard
-    first-cycle anchor: level = mean of the first week, trend 0,
-    seasonal = each day's deviation from that mean.
-
-    Scale shape follows the Holt lesson (module note): the daily
-    aggregate of the fact table runs ONCE and is localCheckpointed;
-    recursion depth is bounded by the 59-day window (~52 steps), never
-    by table size, and each step joins the materialized ~59-row series.
-    Exactness: integer-cent daily sums enter as bitwise-identical
-    doubles; the step arithmetic is the same literal text in both
-    engines (array access/rotation differs syntactically but only MOVES
-    values); rounding happens at output only."""
-    from pyspark.sql import Window as W
-
-    _ensure_recursion_headroom(spark)
+    revenue with a weekly (7-slot) season (alpha=0.4, beta=0.3,
+    gamma=0.2): the coupled level/trend/seasonal recursion has no closed
+    form. Initialization is the standard first-cycle anchor: level =
+    mean of the first week, trend 0, seasonal = each day's deviation
+    from that mean. The series length is fixed by the 59-day window at
+    any table size; integer-cent daily sums enter as bitwise-identical
+    doubles and rounding happens at output only."""
     orders = load_table(spark, sf_dir, "orders")
     daily = (
         orders.filter(
@@ -348,49 +362,22 @@ def recursive_holt_winters_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.date_trunc("day", "o_orderdate").alias("d"))
         .agg(F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")).alias("c"))
     )
-    idx = daily.select(
-        F.row_number().over(W.orderBy("d")).cast("bigint").alias("i"),
-        F.unix_millis(F.col("d").cast("timestamp")).alias("d_ms"),
+    series = daily.select(
+        F.unix_millis(F.col("d").cast("timestamp")).alias("day_ms"),
         "c",
         (F.col("c") / F.lit(100.0)).alias("y"),
-    ).localCheckpoint()
-    w7 = idx.filter(F.col("i") <= 7).select(
-        "i", "c", F.sum("c").over(W.partitionBy()).cast("bigint").alias("sc")
     )
-    anchor = w7.groupBy().agg(
-        F.max("sc").alias("msc"),
-        F.array_sort(F.collect_list(F.struct("i", "c", "sc"))).alias("cl"),
-    ).select(
-        F.lit(7).cast("bigint").alias("i"),
-        F.lit(None).cast("bigint").alias("d_ms"),
-        F.lit(None).cast("double").alias("y"),
-        (F.col("msc") / F.lit(700.0)).alias("lvl"),
-        F.lit(0.0).alias("trd"),
-        F.lit(None).cast("double").alias("sn"),
-        F.lit(None).cast("double").alias("fit"),
-        F.transform(
-            "cl",
-            lambda s: s.getField("c") / F.lit(100.0)
-            - s.getField("sc") / F.lit(700.0),
-        ).alias("ss"),
-    ).localCheckpoint()
-    lvl_s, trd_s, snew_s = _hw_step("element_at(h.ss, 1)")
-    return _sql_over_views(
-        spark,
-        f"""
-WITH RECURSIVE hw AS (
-  SELECT * FROM {{anchor}}
-  UNION ALL
-  SELECT x.i, x.d_ms, x.y,
-         {lvl_s},
-         {trd_s},
-         {snew_s},
-         h.lvl + h.trd + element_at(h.ss, 1),
-         concat(slice(h.ss, 2, 6), array({snew_s}))
-  FROM hw h JOIN {{idx}} x ON x.i = h.i + 1
-){_HW_FINAL_SQL}
-""",
-        {"anchor": anchor, "idx": idx},
+    hw = fold(
+        series,
+        "day_ms",
+        _hw_steps,
+        "step long, day_ms long, revenue double, level double, trend double, "
+        "seasonal double, fitted double",
+    )
+    return hw.select(
+        "step",
+        "day_ms",
+        *(F.round(c, 2).alias(c) for c in ("revenue", "level", "trend", "seasonal", "fitted")),
     )
 
 
@@ -458,7 +445,7 @@ def timeseries_dtw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The O(n·w) DP runs as a recursive CTE whose working set is ONE ROW
     carrying the last two anti-diagonals as BIGINT arrays (the
-    Holt-Winters array-state pattern): each of the 2n-1 iterations maps
+    Holt-Winters oracle's array-state pattern): each of the 2n-1 iterations maps
     `transform(sequence(1, n), ...)` over the band, so recursion depth
     and row width are fixed by the WINDOW (59 days), not the table —
     the heavy work (daily conditional aggregate) happens once in the
@@ -599,7 +586,7 @@ def timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     on demand days, forecast = size/interval — the standard
     spares/slow-mover model a plain EWMA gets wrong on sparse series.
 
-    Scale shape follows the Holt lesson (module note): the fact-table
+    Scale shape follows the module note's lesson: the fact-table
     scan + day aggregate runs ONCE and is localCheckpointed; the
     recursion joins the materialized <=181-row demand series, so
     recursion cost is depth x O(1), independent of table size. The

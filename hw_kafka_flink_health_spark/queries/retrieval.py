@@ -17,10 +17,12 @@ once). RRF then fuses two k-row rankings — driver-free, size k each.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from hw_kafka_flink_health_spark.operators.similarity import cosine_topk
+from hw_kafka_flink_health_spark.operators.sequential import fold, greedy_mmr
+from hw_kafka_flink_health_spark.operators.similarity import cosine_expr, cosine_topk
 from hw_kafka_flink_health_spark.queries._registry import register
 from hw_kafka_flink_health_spark.sources.files import load_table
 
@@ -318,69 +320,49 @@ def retrieval_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ALL corpus-sized work is the distributed candidate pass
     (`cosine_topk`: query broadcast, corpus scanned once); the greedy
     loop is inherently sequential but runs on the K-candidate set, which
-    is bounded by construction (20 rels + 380 pairwise sims collected —
-    the same bounded-driver-collect contract as the ANN query side).
+    is bounded by construction: the 20x20 pairwise sims go through one
+    operators/sequential.py:fold into greedy_mmr, with no driver collect.
     Both engines round rel/pairwise sims to 6 dp BEFORE the greedy
     arithmetic, so the argmax compares bit-identical doubles; ties break
     to the lowest vec_id. The DuckDB twin replays the greedy loop as
     unrolled CTEs (the BPE-oracle idiom)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # localCheckpoint: the K-row candidate table has TWO consuming
-    # actions (the rels collect and the pairwise-sims pass built from
-    # its ids) — unmaterialized, each would re-run the corpus-sized
-    # cosine ranking (review r11)
+    # localCheckpoint: both sides of the pairwise cross join read the
+    # K-row candidate table; unmaterialized, each side re-runs the
+    # corpus-sized cosine ranking (the two plan copies prune different
+    # columns, so Spark does not reuse one for the other)
     cand = (
         cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=_MMR_K_CAND)
         .select(F.col("neighbor_id").alias("vec_id"), F.round("cosine", 6).alias("rel"))
         .localCheckpoint()
     )
-    ids = cand.select("vec_id")
-    vecs = emb.join(F.broadcast(ids), "vec_id").select("vec_id", "embedding")
-    from hw_kafka_flink_health_spark.operators.similarity import cosine_expr
-
-    a = vecs.select(F.col("vec_id").alias("ai"), F.col("embedding").alias("ea"))
+    vecs = emb.join(F.broadcast(cand), "vec_id")
+    a = vecs.select(F.col("vec_id").alias("ai"), "rel", F.col("embedding").alias("ea"))
     b = vecs.select(F.col("vec_id").alias("bi"), F.col("embedding").alias("eb"))
-    pw_df = (
-        a.crossJoin(F.broadcast(b))
-        .filter(F.col("ai") != F.col("bi"))
-        .select("ai", "bi", F.round(cosine_expr(F.col("ea"), F.col("eb")), 6).alias("s"))
+    # every (ai, bi) pair, the diagonal too, so a lone candidate still
+    # reaches the fold; greedy_mmr never reads the diagonal
+    pairs = a.crossJoin(F.broadcast(b)).select(
+        "ai", "bi", "rel", F.round(cosine_expr(F.col("ea"), F.col("eb")), 6).alias("s")
     )
-    rels = [(r["vec_id"], r["rel"]) for r in cand.collect()]
-    assert len(rels) <= _MMR_K_CAND, "candidate collect exceeded its bound"
-    pw = {(r["ai"], r["bi"]): r["s"] for r in pw_df.collect()}
-    assert len(pw) <= _MMR_K_CAND * (_MMR_K_CAND - 1), "pairwise collect bound"
 
-    selected: list[tuple[int, int, float, float]] = []  # (step, id, rel, pen)
-    chosen: list[int] = []
-    remaining = dict(rels)
-    # fewer candidates than selections (tiny fixtures): emit what exists,
-    # exactly like the oracle's pick{k}-of-empty-rel degenerates to empty
-    for step in range(1, min(_MMR_K_SEL, len(rels)) + 1):
-        best = None
-        for cid, rel in remaining.items():
-            pen = max((pw.get((cid, s), 0.0) for s in chosen), default=0.0)
-            score = 0.7 * rel - 0.3 * pen
-            key = (-score, cid)
-            if best is None or key < best[0]:
-                best = (key, cid, rel, pen)
-        _, cid, rel, pen = best
-        selected.append((step, cid, rel, pen))
-        chosen.append(cid)
-        del remaining[cid]
-    if not selected:
-        return spark.createDataFrame(
-            [],
-            "step long, vec_id long, rel double, max_sim_selected double, "
-            "mmr_score double",
+    def rerank(pdf: pd.DataFrame) -> pd.DataFrame:
+        sims = pdf.pivot(index="ai", columns="bi", values="s")
+        rel = pdf.groupby("ai")["rel"].first()
+        picks = greedy_mmr(
+            sims.index.to_numpy(), rel.to_numpy(), sims.to_numpy(), _MMR_K_SEL, 0.7, 0.3
         )
-    out = spark.createDataFrame(
-        selected, "step long, vec_id long, rel double, max_sim_selected double"
-    )
-    return out.select(
-        "step",
-        "vec_id",
-        "rel",
-        "max_sim_selected",
+        # the oracle's round-1 penalty is 0.0: nothing is selected yet
+        return pd.DataFrame(
+            [
+                (step, i, rel[i], 0.0 if pen is None else pen)
+                for step, (i, _, pen) in enumerate(picks, 1)
+            ],
+            columns=["step", "vec_id", "rel", "max_sim_selected"],
+        )
+
+    schema = "step long, vec_id long, rel double, max_sim_selected double"
+    return fold(pairs, ["ai", "bi"], rerank, schema).select(
+        "*",
         # UNROUNDED: 0.7*rel - 0.3*pen over 6dp-exact inputs is an exact
         # 7-decimal rational that can land ON a 6dp half-grain, where the
         # engines' round() split (r8 rule: identical inputs + identical

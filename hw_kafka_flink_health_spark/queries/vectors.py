@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.operators.sequential import fold, greedy_mmr
 from hw_kafka_flink_health_spark.operators.similarity import (
     cosine_topk,
     cosine_topk_auto,
@@ -1142,9 +1143,9 @@ def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick), and the pool is BOUNDED BY CONSTRUCTION (_MMR_POOL — at
     100 TB an MMR pool is always a pre-filtered ANN shortlist, never the
     corpus), so the right plan is ONE job: the pushed-down pool scan
-    groups into a single applyInPandas call whose numpy body runs the 8
-    rounds on int64 exactly (V·q relevance, incremental
-    pen = max(pen, V·v_pick), first-argmax-on-sorted-ids tie-break).
+    feeds one operators/sequential.py:fold whose greedy_mmr body runs the
+    8 rounds on int64 exactly (V·q relevance, pen = running max of
+    V·v_pick, first-argmax-on-sorted-ids tie-break).
     Chaining 8 Spark jobs for 199 rows was measured 4-7 s of pure
     scheduling/planning overhead; this shape is one Arrow batch. The
     oracle replays the same integers from a pre-materialized pairwise
@@ -1159,45 +1160,22 @@ def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding", lambda x: F.floor(x.cast("double") * 64).cast("long")
         ).alias("qv"),
     )
-    rounds = _MMR_ROUNDS
-
     def mmr(pdf: "pd.DataFrame") -> "pd.DataFrame":
         out_cols = ["vec_id", "rnd", "score"]
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         qrows = pdf[pdf["vec_id"] == 0]
         cand = pdf[pdf["vec_id"] >= 1]
         if len(qrows) == 0 or len(cand) == 0:
             return pd.DataFrame(columns=out_cols).astype("int64")
         qv = np.asarray(list(qrows["qv"])[0], dtype=np.int64)
-        ids = cand["vec_id"].to_numpy(dtype=np.int64)
         V = np.stack([np.asarray(v, dtype=np.int64) for v in cand["qv"]])
-        rel = V @ qv
-        # pen=None for round 1 (nothing selected -> zero penalty); after
-        # that it is max over selected sims WITHOUT a floor at 0 —
-        # anti-correlated picks legitimately carry a NEGATIVE penalty
-        # (score above pure relevance), matching the oracle's
-        # coalesce-only-when-no-selected semantics
-        pen = None
-        taken = np.zeros(len(ids), dtype=bool)
-        picks = []
-        for r in range(1, rounds + 1):
-            if taken.all():
-                break
-            score = rel if pen is None else rel - pen
-            masked = np.where(taken, np.iinfo(np.int64).min, score)
-            # ids are sorted ascending and argmax returns the FIRST max,
-            # so ties break by smallest vec_id — same as ORDER BY
-            # score DESC, vec_id
-            best = int(np.argmax(masked))
-            picks.append((int(ids[best]), r, int(score[best])))
-            s = V @ V[best]
-            pen = s.copy() if pen is None else np.maximum(pen, s)
-            taken[best] = True
-        return pd.DataFrame(picks, columns=out_cols)
+        picks = greedy_mmr(
+            cand["vec_id"].to_numpy(dtype=np.int64), V @ qv, V @ V.T, _MMR_ROUNDS, 1, 1
+        )
+        return pd.DataFrame(
+            [(i, r, s) for r, (i, s, _) in enumerate(picks, 1)], columns=out_cols
+        )
 
-    return pool.groupBy(F.lit(1).alias("__g")).applyInPandas(
-        mmr, schema="vec_id long, rnd long, score long"
-    )
+    return fold(pool, "vec_id", mmr, "vec_id long, rnd long, score long")
 
 
 @register(

@@ -13,8 +13,8 @@ SF_DIR = "/root/testdata/sf0.001"
 #: contract / operator-unit test plus the sf0.001 oracle mirror
 #: (tests/test_oracle.py: all 420 registered queries, 411 of them
 #: value-checked against DuckDB, each also gated on its plan shape on
-#: that same build): 775 tests in 1045-1212 s on 4 cores at a CPU score
-#: (`perfbench/envinfo.py:cpu_score()`) of 420-471 MiB/s, inside a
+#: that same build): 779 tests in 789-838 s on 4 cores at a CPU score
+#: (`perfbench/envinfo.py:cpu_score()`) of 407-493 MiB/s, inside a
 #: 2670 s verify window with room for a 2x slower host.
 #: SPARK_GRAFT_TESTS_FULL=1 adds the slow-marked rest: the
 #: pathological-data fuzz sweep (tests/test_fuzz_oracle.py, 729 tests,

@@ -25,12 +25,17 @@ operators/dedup.py:min_label_fixpoint) — here we pin that the early-exit
 result equals a generously-bounded run on a worst-case path graph
 (diameter == node count, the slowest-converging topology for min-label
 propagation), and that the probe costs no job of its own.
+
+The job-budget tests pin what each loop's design costs in Spark jobs:
+one min-label round at most 7, and each recurrence that runs as one
+operators/sequential.py:fold a fixed handful for the whole series.
 """
 
 from __future__ import annotations
 
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.operators import dedup as dedup_mod
@@ -102,22 +107,53 @@ def test_connected_components_early_exit_is_fixpoint(spark):
     assert oracle_diff(got, generous) is None
 
 
+def _jobs(spark, label: str, run) -> int:
+    """How many Spark jobs `run()` launches, counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"{label}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_min_label_round_job_budget(spark):
     """One min-label round costs at most 7 jobs: the convergence probe
     rides the round's eager checkpoint instead of running an action of
     its own. The path graph has not converged after 3 or 4 rounds, so
     the two runs' job counts differ by exactly one round."""
-    sc = spark.sparkContext
     pairs = _path_pairs(spark)
     jobs = []
     for rounds in (3, 4):
         dedup_mod._CLUSTERS.clear()
-        group = f"min-label-{rounds}-rounds-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            connected_components(pairs, max_iterations=rounds)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        jobs.append(
+            _jobs(
+                spark,
+                f"min-label-{rounds}-rounds",
+                lambda: connected_components(pairs, max_iterations=rounds),
+            )
+        )
     assert jobs[1] - jobs[0] <= 7, jobs
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("recursive_holt_linear_trend", 8),
+        ("recursive_holt_winters_daily", 8),
+        ("embedding_mmr_select", 4),
+        ("retrieval_mmr_rerank", 10),
+    ],
+)
+def test_sequential_fold_job_budget(spark, name, budget):
+    """The short sequential recurrences (Holt, Holt-Winters, both greedy
+    MMR loops) run as one operators/sequential.py:fold, so building and
+    collecting one costs a fixed handful of jobs for the whole series,
+    not one or more per recursion step."""
+    out = []
+    jobs = _jobs(spark, f"fold-{name}", lambda: out.append(_run(name, spark)))
+    assert len(out[0]) > 0
+    assert jobs <= budget, jobs

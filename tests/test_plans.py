@@ -618,11 +618,11 @@ def test_funnel_time_to_convert_shares_user_exchange(spark):
     assert scan and len(scan.group(1).split(",")) == 3, scan and scan.group(1)
 
 
-def test_holt_recursion_never_rescans_the_fact_table(spark):
-    plan = plan_of(spark, "recursive_holt_linear_trend")
-    # the recursion must iterate over the localCheckpointed month series:
-    # an inline idx CTE would re-aggregate orders from parquet on EVERY
-    # UnionLoop iteration (~84 fact-table scans)
+def test_croston_recursion_never_rescans_the_fact_table(spark):
+    plan = plan_of(spark, "timeseries_croston")
+    # the recursion must iterate over the localCheckpointed demand series:
+    # an inline idx CTE would re-aggregate lineitem from parquet on EVERY
+    # UnionLoop iteration (one fact-table scan per demand day)
     assert "UnionLoop" in plan, plan
     assert "parquet" not in plan, plan
 

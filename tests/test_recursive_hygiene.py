@@ -14,8 +14,8 @@ def test_recursive_queries_leave_no_temp_views(spark):
 
     for name in (
         "recursive_month_spine_revenue",
-        "recursive_holt_linear_trend",
-        "recursive_holt_winters_daily",
+        "timeseries_croston",
+        "timeseries_dtw_band",
     ):
         df = QUERIES[name](spark, SF_DIR)
         assert df.count() > 0
@@ -42,7 +42,7 @@ def test_recursion_headroom_is_monotonic(spark):
 
 
 def test_concurrent_recursive_runs_do_not_cross_talk(spark):
-    """Two Holt runs interleaved on one session: with uuid-suffixed
+    """Two recursive runs interleaved on one session: with uuid-suffixed
     views neither can read the other's staged series."""
     from concurrent.futures import ThreadPoolExecutor
 
@@ -52,6 +52,6 @@ def test_concurrent_recursive_runs_do_not_cross_talk(spark):
         return QUERIES[name](spark, SF_DIR).count()
 
     with ThreadPoolExecutor(max_workers=2) as ex:
-        a = ex.submit(run, "recursive_holt_linear_trend")
-        b = ex.submit(run, "recursive_holt_winters_daily")
+        a = ex.submit(run, "timeseries_croston")
+        b = ex.submit(run, "timeseries_dtw_band")
         assert a.result() > 0 and b.result() > 0

@@ -15,6 +15,9 @@ from hw_kafka_flink_health_spark.sources.files import (
     read_parquet_evolved,
 )
 
+#: the checkout these tests belong to; CLI subprocesses import its code
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def test_merge_schema_unions_evolving_batches(spark, tmp_path):
     path = str(tmp_path / "landing")
@@ -95,7 +98,7 @@ def test_sqlrun_cli_executes_sql(tmp_path):
         text=True,
         timeout=300,
         cwd="/tmp",  # must work from any cwd
-        env={**__import__("os").environ, "PYTHONPATH": "/root/repo"},
+        env={**os.environ, "PYTHONPATH": REPO_ROOT},
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     rows = [_json.loads(line) for line in proc.stdout.strip().splitlines()]
@@ -126,7 +129,7 @@ def test_sqlrun_cli_explain(tmp_path):
         text=True,
         timeout=300,
         cwd="/tmp",
-        env={**__import__("os").environ, "PYTHONPATH": "/root/repo"},
+        env={**os.environ, "PYTHONPATH": REPO_ROOT},
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "== Physical Plan ==" in proc.stdout

@@ -19,6 +19,9 @@ from hw_kafka_flink_health_spark.streaming.health_pipeline import (
     heart_rate_alerts,
 )
 
+#: the checkout these tests belong to; CLI subprocesses run its code
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _write_events_json(path: str, events: list[dict]) -> None:
     os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -589,7 +592,7 @@ def test_health_job_demo_cli_runs():
         capture_output=True,
         text=True,
         timeout=120,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "Batch: " in proc.stdout  # console sink ticked
@@ -1385,7 +1388,7 @@ def test_cep_job_demo_cli_runs(tmp_path):
             stdout=out,
             stderr=subprocess.STDOUT,
             text=True,
-            cwd="/root/repo",
+            cwd=REPO_ROOT,
         )
         try:
             deadline = _t.monotonic() + 150

@@ -46,12 +46,9 @@ AUDITED_BOUNDED = {
     "spc_imr_revenue": "day grain (I-MR control chart over days)",
     "stats_runs_test": "day grain (sign runs over days)",
     "timeseries_ma_decomposition": "day grain (centered MA over days)",
-    # (the next four had been invisible to the r11 sweep: the checkpoint
+    # (the next two had been invisible to the r11 sweep: the checkpoint
     # capture never fired on Spark 4 — see capture_checkpoints — so their
     # pre-checkpoint windows were audited only in r12)
-    "recursive_holt_linear_trend": "month grain (~84-row series anchor)",
-    "recursive_holt_winters_daily": "day grain inside a FIXED 59-day "
-    "window (row_number anchor + first-week seasonal init)",
     "timeseries_croston": "day grain inside a FIXED 181-day window "
     "(demand-day anchor + lag intervals)",
     "eval_isotonic_calibration": "20 fixed score bins (prefix sums for "
