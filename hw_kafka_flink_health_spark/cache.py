@@ -43,6 +43,7 @@ from __future__ import annotations
 import contextlib
 import os
 import threading
+import time
 from collections import OrderedDict
 from urllib.parse import unquote, urlparse
 
@@ -56,12 +57,17 @@ class LRU:
     cache (the undirected edge list builds on the directed one), and a
     build is a Spark job that must not stall other threads' hits. Two
     threads missing on one key both build; the first insert wins and
-    both get it back."""
+    both get it back.
+
+    ``hits``, ``misses``, ``evictions`` and ``build_s`` (seconds spent in
+    builds, summed over threads) count keyed lookups since creation."""
 
     def __init__(self, cap: int):
         self.cap = cap
         self._entries: OrderedDict = OrderedDict()
         self._lock = threading.Lock()
+        self.hits = self.misses = self.evictions = 0
+        self.build_s = 0.0
 
     def get_or_build(self, key, build):
         """The cached value for `key`, else `build()` cached under it.
@@ -70,14 +76,20 @@ class LRU:
             return build()
         with self._lock:
             if key in self._entries:
+                self.hits += 1
                 self._entries.move_to_end(key)
                 return self._entries[key]
+            self.misses += 1
+        t0 = time.perf_counter()
         value = build()
+        elapsed = time.perf_counter() - t0
         with self._lock:
+            self.build_s += elapsed
             value = self._entries.setdefault(key, value)
             self._entries.move_to_end(key)
             while len(self._entries) > self.cap:
                 self._entries.popitem(last=False)
+                self.evictions += 1
         return value
 
     def clear(self) -> None:

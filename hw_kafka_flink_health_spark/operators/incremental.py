@@ -34,8 +34,6 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PARTIAL_COLS = ("cnt", "sum_cents", "min_value", "max_value")
-
 
 def daily_partials(
     events: DataFrame,

@@ -1740,8 +1740,6 @@ def linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # channel bits for the Shapley coalition mask (purchase is the conversion
 # event, every other event type is an attributable touchpoint channel)
 _SHAP_CHANNELS = [("view", 1), ("click", 2), ("signup", 4), ("error", 8)]
-# Shapley coalition weights for n=4 in exact 24ths: |T|!(n-|T|-1)!/n!
-_SHAP_W24 = {0: 6, 1: 2, 2: 2, 3: 6}
 
 
 @register(
@@ -1832,6 +1830,7 @@ def attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     ch = spark.createDataFrame(_SHAP_CHANNELS, "channel string, bit long")
+    # Shapley coalition weights for n=4 in exact 24ths: |T|!(n-|T|-1)!/n!
     w24 = F.expr(
         "CASE bit_count(tm) WHEN 0 THEN 6 WHEN 1 THEN 2 WHEN 2 THEN 2 WHEN 3 THEN 6 END"
     )

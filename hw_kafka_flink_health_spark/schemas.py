@@ -22,17 +22,6 @@ HEART_RATE_EVENT_SCHEMA = T.StructType(
     ]
 )
 
-# Parsed event (post parse_event): reference contract at README "Part 2"
-# — patient_id str, heart_rate_bpm int, event_time epoch-milliseconds int
-# (tests/test_flink_logic.py:6-11).
-PARSED_EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("patient_id", T.StringType(), True),
-        T.StructField("heart_rate_bpm", T.IntegerType(), True),
-        T.StructField("event_time", T.LongType(), True),
-    ]
-)
-
 # Alert record written to `heart_rate_alerts` (reference:
 # src/flink_job.py:113-122).
 ALERT_SCHEMA = T.StructType(

@@ -1,15 +1,13 @@
-"""Batch file sources/sinks (reference operators S5-S7).
-
-The reference's batch half reads JSON alert files and writes parquet/csv
-(``src/spark_batch_analysis.py:22-26``). Here the same surface is generic:
-parquet-first loaders for the synthetic star schema plus JSON/CSV helpers.
+"""Batch file sources: the synthetic star-schema loaders plus the
+evolving-parquet and robust-CSV readers. The reference's JSON-read and
+parquet/csv-write batch job is ``streaming/batch_analysis.py:run``.
 
 Scale notes:
 * Parquet scans go through Spark's vectorized reader; filters/projections
   prune at the file/row-group level (check ``PushedFilters`` in explain).
-* ``events.ts`` is stored as parquet TIMESTAMP(NANOS); Spark 4 reads it
-  (with ``spark.sql.legacy.parquet.nanosAsLong``) as a long, so the loader
-  converts to a microsecond TIMESTAMP_NTZ here, once, at the source —
+* ``events.ts`` may be stored as parquet TIMESTAMP(NANOS); Spark 4 reads
+  it (with ``spark.sql.legacy.parquet.nanosAsLong``) as a long, so the
+  loader converts to a microsecond TIMESTAMP_NTZ here, once, at the source —
   downstream operators always see a real timestamp column.
 """
 
@@ -19,30 +17,83 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from hw_kafka_flink_health_spark.cache import LRU, conf_override
+from hw_kafka_flink_health_spark.cache import LRU, conf_override, file_stats_signature
 from hw_kafka_flink_health_spark.schemas import STAR_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+# Inferred schema per table file or directory, keyed on its content (see
+# load_table); an sf dir holds 10 tables, so this keeps several sf dirs.
+_SCHEMAS = LRU(64)
+
+# Confs every caller session needs, set by load_table when they differ:
+# * nanosAsLong: parquet TIMESTAMP(NANOS) columns, which Spark 4 otherwise
+#   rejects at scan time, read as epoch-nanos longs;
+# * UTC session TZ: epoch-millis math (unix_millis over NTZ casts) must
+#   agree with UTC-naive oracle engines.
+_FORCED_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _listed_files(path: str) -> tuple | None:
+    """Every file Spark reads at local `path`: the file, or each file under
+    the directory not named ``_*`` or ``.*`` (Spark skips ``_SUCCESS`` and
+    ``.crc`` files); None when `path` is neither, e.g. a URI."""
+    if os.path.isfile(path):
+        return (path,)
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [os.path.join(root, n) for n in names if not n.startswith(("_", "."))]
+    return tuple(sorted(files))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table; normalizes `events.ts` nanos -> timestamp.
+
+    The parquet schema is inferred (a footer-read Spark job) once per
+    content: the key holds the absolute path, ``(size, mtime_ns)`` of every
+    file Spark reads there and the confs that change inference, so a
+    rewrite or a conf flip infers again and a warm load launches no job.
+    A path ``os.stat`` cannot read (an object-store URI) is not cached: a
+    name-only key could serve the old schema of a rewritten remote table.
 
     `ts DIV 1000` is integer division on the JVM side — a float division
     would lose precision above 2^53 ns (~1970+104 days), so epoch-nanos
     MUST stay integral until the final cast.
     """
     # Defend against caller sessions (e.g. the driver's) missing the
-    # engine's correctness confs — both are runtime-settable:
-    # * nanosAsLong: events.parquet stores TIMESTAMP(NANOS), which Spark 4
-    #   otherwise rejects at scan time;
-    # * UTC session TZ: epoch-millis math (unix_millis over NTZ casts)
-    #   must agree with UTC-naive oracle engines.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    # engine's correctness confs, without a conf write when they are set.
+    for k, v in _FORCED_CONFS.items():
+        if spark.conf.get(k) != v:
+            spark.conf.set(k, v)
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    local = os.path.abspath(path)
+    files = _listed_files(local)
+    if files is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+    else:
+        stats = file_stats_signature(files)
+        confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+        schema = _SCHEMAS.get_or_build(
+            (local, files, stats, confs), lambda: spark.read.parquet(path).schema
+        )
+        df = spark.read.schema(schema).parquet(path)
+    ts = schema["ts"].dataType if "ts" in schema.names else None
+    if name == "events" and isinstance(ts, T.LongType):
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz")
         )
@@ -89,19 +140,10 @@ def rebalance_if_narrow(df: DataFrame) -> DataFrame:
         files = ()
     key = None
     if files:
-        # conf.get(key, default) VALIDATES the default against the conf
-        # type in Spark 4 — an unset conf must be probed with try, not a
-        # sentinel default
-        def _conf(k: str) -> str:
-            try:
-                return spark.conf.get(k)
-            except Exception:
-                return "<default>"
-
         key = (
             files,
-            _conf("spark.sql.files.maxPartitionBytes"),
-            _conf("spark.sql.files.openCostInBytes"),
+            spark.conf.get("spark.sql.files.maxPartitionBytes"),
+            spark.conf.get("spark.sql.files.openCostInBytes"),
             target,
         )
     n = _NARROW_PROBES.get_or_build(key, lambda: df.rdd.getNumPartitions())
@@ -157,31 +199,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every synthetic table as a temp view for spark.sql()."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-def read_json_dir(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """S6: batch-read a directory of JSON records (alert files).
-
-    Always pass a schema in production — schema inference is a full extra
-    pass over 100 TB of input.
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    """S7: parquet sink, overwrite mode like the reference batch job."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S7 (csv variant)."""
-    df.write.mode(mode).option("header", "true").csv(path)
 
 
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:

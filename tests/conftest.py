@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -13,12 +14,13 @@ SF_DIR = "/root/testdata/sf0.001"
 #: contract / operator-unit test plus the sf0.001 oracle mirror
 #: (tests/test_oracle.py: all 420 registered queries, 411 of them
 #: value-checked against DuckDB, each also gated on its plan shape on
-#: that same build): 779 tests in 789-838 s on 4 cores at a CPU score
-#: (`perfbench/envinfo.py:cpu_score()`) of 407-493 MiB/s, inside a
+#: that same build): 782 tests in 683-819 s on 4 cores at a CPU score
+#: (`perfbench/envinfo.py:cpu_score()`) of 417-507 MiB/s, inside a
 #: 2670 s verify window with room for a 2x slower host.
 #: SPARK_GRAFT_TESTS_FULL=1 adds the slow-marked rest: the
 #: pathological-data fuzz sweep (tests/test_fuzz_oracle.py, 729 tests,
-#: 779 s at a CPU score of 390; with it tier-1 would pass 1500 s) and
+#: 576-779 s at a CPU score of 390-449; with it tier-1 would pass
+#: 1250 s) and
 #: the subprocess bench run, plus the CLI subprocess tests.
 RUN_FULL = os.environ.get("SPARK_GRAFT_TESTS_FULL", "").lower() in (
     "1",
@@ -43,6 +45,19 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if item.get_closest_marker("slow"):
             item.add_marker(skip)
+
+
+def count_jobs(spark, label: str, run) -> int:
+    """How many Spark jobs `run()` launches, counted under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"{label}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

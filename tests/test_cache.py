@@ -32,7 +32,8 @@ def _rows(df) -> list[tuple]:
 
 def test_lru_recency_and_concurrent_misses():
     """A hit refreshes recency; a None key never caches; threads missing
-    on one key all get the first inserted value; the size stays capped."""
+    on one key all get the first inserted value; the size stays capped;
+    every keyed lookup counts as one hit or one miss."""
     lru = LRU(2)
     a = lru.get_or_build("a", object)
     lru.get_or_build("b", object)
@@ -40,6 +41,7 @@ def test_lru_recency_and_concurrent_misses():
     lru.get_or_build("c", object)  # evicts b, not a
     assert lru.get_or_build("a", object) is a
     assert lru.get_or_build(None, object) is not lru.get_or_build(None, object)
+    assert (lru.hits, lru.misses, lru.evictions) == (2, 3, 1)
 
     n = 16  # more threads than cores
     start, fetched = threading.Barrier(n, timeout=60), threading.Barrier(n, timeout=60)
@@ -66,6 +68,10 @@ def test_lru_recency_and_concurrent_misses():
         sys.setswitchinterval(old)
     assert all(v is got[0] for v in got), "concurrent misses returned different values"
     assert len(lru._entries) <= lru.cap
+    assert lru.hits + lru.misses == 5 + n + n * 300
+    # a miss inserts at most once, and only inserts evict
+    assert 0 < lru.evictions <= lru.misses - len(lru._entries)
+    assert lru.build_s >= 0.01  # at least one slow_build ran to the end
 
 
 def test_concurrent_graph_queries_keep_results_and_aqe(spark, tmp_path_factory):

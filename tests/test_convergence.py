@@ -33,8 +33,6 @@ operators/sequential.py:fold a fixed handful for the whole series.
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,6 +42,7 @@ from hw_kafka_flink_health_spark.queries import QUERIES
 from hw_kafka_flink_health_spark.queries import geo as geo_mod
 from hw_kafka_flink_health_spark.queries import graph as graph_mod
 
+from tests.conftest import count_jobs
 from tests.test_oracle import oracle_diff
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -107,19 +106,6 @@ def test_connected_components_early_exit_is_fixpoint(spark):
     assert oracle_diff(got, generous) is None
 
 
-def _jobs(spark, label: str, run) -> int:
-    """How many Spark jobs `run()` launches, counted under a fresh job group."""
-    sc = spark.sparkContext
-    group = f"{label}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_min_label_round_job_budget(spark):
     """One min-label round costs at most 7 jobs: the convergence probe
     rides the round's eager checkpoint instead of running an action of
@@ -130,7 +116,7 @@ def test_min_label_round_job_budget(spark):
     for rounds in (3, 4):
         dedup_mod._CLUSTERS.clear()
         jobs.append(
-            _jobs(
+            count_jobs(
                 spark,
                 f"min-label-{rounds}-rounds",
                 lambda: connected_components(pairs, max_iterations=rounds),
@@ -154,6 +140,6 @@ def test_sequential_fold_job_budget(spark, name, budget):
     collecting one costs a fixed handful of jobs for the whole series,
     not one or more per recursion step."""
     out = []
-    jobs = _jobs(spark, f"fold-{name}", lambda: out.append(_run(name, spark)))
+    jobs = count_jobs(spark, f"fold-{name}", lambda: out.append(_run(name, spark)))
     assert len(out[0]) > 0
     assert jobs <= budget, jobs

@@ -1,19 +1,30 @@
-"""File-source robustness: schema evolution across parquet batches and
+"""File-source robustness: schema evolution across parquet batches,
 malformed-row tolerance on CSV — the parse-don't-crash contract of the
-reference's `parse_event` (None on bad input) applied at the file layer."""
+reference's `parse_event` (None on bad input) applied at the file layer —
+and a `load_table` schema cache that never outlives the files or confs
+it was inferred from."""
 
 from __future__ import annotations
 
 import pytest
 
 import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.cache import conf_override
 from hw_kafka_flink_health_spark.sources.files import (
+    _SCHEMAS,
+    load_table,
     read_csv_robust,
     read_parquet_evolved,
 )
+from tests.conftest import SF_DIR, count_jobs
+
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 #: the checkout these tests belong to; CLI subprocesses import its code
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -47,6 +58,100 @@ def test_merge_schema_unions_evolving_batches(spark, tmp_path):
         .toString()
     )
     assert "PushedFilters" in plan and "region" in plan.split("PushedFilters")[1][:80]
+
+
+def _counts() -> tuple[int, int]:
+    return _SCHEMAS.hits, _SCHEMAS.misses
+
+
+def test_warm_load_table_launches_no_job_and_writes_no_conf(spark, tmp_path, monkeypatch):
+    """A cold load infers the schema (one footer-read job), a warm load
+    reuses it: no job and, with the engine confs already set, no session
+    conf write. A path os.stat cannot read (a file: URI) is never cached."""
+    shutil.copy(f"{SF_DIR}/events.parquet", tmp_path / "events.parquet")
+    hits, misses = _counts()
+    cold = count_jobs(spark, "load-cold", lambda: load_table(spark, str(tmp_path), "events"))
+    assert (cold, *_counts()) == (1, hits, misses + 1)
+
+    writes = []
+    conf_cls = type(spark.conf)
+    real_set = conf_cls.set
+    monkeypatch.setattr(
+        conf_cls, "set", lambda self, k, v: writes.append(k) or real_set(self, k, v)
+    )
+    out = []
+    warm = count_jobs(
+        spark, "load-warm", lambda: out.append(load_table(spark, str(tmp_path), "events"))
+    )
+    assert (warm, *_counts()) == (0, hits + 1, misses + 1)
+    assert writes == []
+    assert dict(out[0].dtypes)["ts"] == "timestamp_ntz"
+    expected = spark.read.parquet(f"{SF_DIR}/events.parquet").orderBy("event_id")
+    assert out[0].orderBy("event_id").collect() == expected.collect()
+
+    uri = f"file://{tmp_path}"
+    for _ in range(2):
+        assert count_jobs(spark, "load-uri", lambda: load_table(spark, uri, "events")) == 1
+    assert _counts() == (hits + 1, misses + 1)
+
+
+def test_schema_cache_misses_on_rewritten_file_and_directory(spark, tmp_path):
+    """Overwriting a single-file table, or a Spark-written directory, with
+    an extra column: the next load infers again and sees the column."""
+    orders = pq.read_table(f"{SF_DIR}/orders.parquet")
+    pq.write_table(orders, tmp_path / "orders.parquet")
+    assert "o_extra" not in load_table(spark, str(tmp_path), "orders").columns
+    extra = pa.array(range(orders.num_rows), pa.int64())
+    pq.write_table(orders.append_column("o_extra", extra), tmp_path / "orders.parquet")
+    got = load_table(spark, str(tmp_path), "orders")
+    assert got.columns[-1] == "o_extra"
+    assert got.agg(F.sum("o_extra")).first()[0] == sum(range(orders.num_rows))
+
+    table = f"{tmp_path}/written/region.parquet"
+    spark.range(3).write.mode("overwrite").parquet(table)
+    assert load_table(spark, f"{tmp_path}/written", "region").columns == ["id"]
+    spark.range(3).withColumn("r_extra", F.col("id") * 2).write.mode("overwrite").parquet(
+        table
+    )
+    got = load_table(spark, f"{tmp_path}/written", "region")
+    assert sorted(got.collect()) == [(i, 2 * i) for i in range(3)]
+
+
+def test_schema_key_follows_inference_confs(spark, tmp_path):
+    """events.ts is a TIMESTAMP(MICROS) not adjusted to UTC, so
+    `inferTimestampNTZ` decides its type: a load under the flipped conf
+    gets its own entry and a TIMESTAMP column, and the first entry is hit
+    again afterwards. A TIMESTAMP(NANOS) copy loads under a session with
+    `nanosAsLong` off: load_table turns it on, infers ts as a long and
+    converts it to the same microsecond timestamps."""
+    shutil.copy(f"{SF_DIR}/events.parquet", tmp_path / "events.parquet")
+
+    def ts_type() -> str:
+        return dict(load_table(spark, str(tmp_path), "events").dtypes)["ts"]
+
+    assert ts_type() == "timestamp_ntz"
+    hits, misses = _counts()
+    with conf_override(spark, **{"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}):
+        assert ts_type() == "timestamp"
+    assert _counts() == (hits, misses + 1)
+    assert ts_type() == "timestamp_ntz"
+    assert _counts() == (hits + 1, misses + 1)
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = events.schema.get_field_index("ts")
+    nanos = events.set_column(i, "ts", events["ts"].cast(pa.timestamp("ns")))
+    (tmp_path / "nanos").mkdir()
+    pq.write_table(nanos, tmp_path / "nanos" / "events.parquet")
+    stored = pq.ParquetFile(tmp_path / "nanos" / "events.parquet").schema.column(i)
+    assert "nanoseconds" in str(stored.logical_type)
+    with conf_override(spark, **{NANOS_AS_LONG: "false"}):
+        got = load_table(spark, str(tmp_path / "nanos"), "events")
+        assert spark.conf.get(NANOS_AS_LONG) == "true"
+    micros = load_table(spark, str(tmp_path), "events")
+    assert dict(got.dtypes)["ts"] == "timestamp_ntz"
+    assert sorted(got.select("event_id", "ts").collect()) == sorted(
+        micros.select("event_id", "ts").collect()
+    )
 
 
 def test_csv_permissive_captures_malformed(spark, tmp_path):
