@@ -35,9 +35,9 @@ _FORCED_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.session.timeZone": "UTC",
 }
-# Session confs that change what parquet schema inference returns.
+# Session confs that change what parquet schema inference returns
+# (nanosAsLong does too, but load_table always forces it to true).
 _INFERENCE_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
@@ -47,16 +47,23 @@ _INFERENCE_CONFS = (
 
 def _listed_files(path: str) -> tuple | None:
     """Every file Spark reads at local `path`: the file, or each file under
-    the directory not named ``_*`` or ``.*`` (Spark skips ``_SUCCESS`` and
-    ``.crc`` files); None when `path` is neither, e.g. a URI."""
+    the directory that Spark's listing keeps; None when `path` is neither,
+    e.g. a URI. Like Spark, it skips names starting with ``.`` or with
+    ``_`` and no ``=`` (``_SUCCESS``, ``.crc`` files), but keeps partition
+    dirs such as ``_p=1/`` and parquet's ``_metadata`` summary files."""
     if os.path.isfile(path):
         return (path,)
     if not os.path.isdir(path):
         return None
+
+    def kept(n: str) -> bool:
+        hidden = n.startswith(".") or (n.startswith("_") and "=" not in n)
+        return not hidden or n.startswith(("_metadata", "_common_metadata"))
+
     files = []
     for root, dirs, names in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        files += [os.path.join(root, n) for n in names if not n.startswith(("_", "."))]
+        dirs[:] = filter(kept, dirs)
+        files += [os.path.join(root, n) for n in names if kept(n)]
     return tuple(sorted(files))
 
 
@@ -82,16 +89,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     local = os.path.abspath(path)
     files = _listed_files(local)
-    if files is None:
-        df = spark.read.parquet(path)
-        schema = df.schema
-    else:
-        stats = file_stats_signature(files)
+    key = None
+    if files is not None:
         confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
-        schema = _SCHEMAS.get_or_build(
-            (local, files, stats, confs), lambda: spark.read.parquet(path).schema
-        )
-        df = spark.read.schema(schema).parquet(path)
+        key = (local, files, file_stats_signature(files), confs)
+    schema = _SCHEMAS.get_or_build(key, lambda: spark.read.parquet(path).schema)
+    df = spark.read.schema(schema).parquet(path)
     ts = schema["ts"].dataType if "ts" in schema.names else None
     if name == "events" and isinstance(ts, T.LongType):
         df = df.withColumn(

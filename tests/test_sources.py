@@ -116,6 +116,15 @@ def test_schema_cache_misses_on_rewritten_file_and_directory(spark, tmp_path):
     got = load_table(spark, f"{tmp_path}/written", "region")
     assert sorted(got.collect()) == [(i, 2 * i) for i in range(3)]
 
+    # Spark reads partition dirs named `_p=...`; their files are in the key
+    part = f"{tmp_path}/part/region.parquet"
+    spark.range(2).withColumn("_p", F.col("id")).write.partitionBy("_p").parquet(part)
+    assert load_table(spark, f"{tmp_path}/part", "region").columns == ["id", "_p"]
+    wider = spark.range(2).withColumn("r_extra", F.col("id") * 2)
+    wider.withColumn("_p", F.col("id")).write.mode("overwrite").partitionBy("_p").parquet(part)
+    got = load_table(spark, f"{tmp_path}/part", "region")
+    assert sorted(got.collect()) == [(i, 2 * i, i) for i in range(2)]
+
 
 def test_schema_key_follows_inference_confs(spark, tmp_path):
     """events.ts is a TIMESTAMP(MICROS) not adjusted to UTC, so
