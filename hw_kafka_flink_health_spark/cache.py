@@ -15,7 +15,9 @@ Why a hit can never serve stale data: ``frame_key`` pins
 * the exact input file list plus each file's size and mtime. Parquet
   writers name part files uniquely, and this repo's fixtures are
   fixed-name single files, so an in-session overwrite at the same path
-  must change the key too;
+  must change the key too. A frame reading a file ``os.stat`` cannot
+  read (an object-store URI, a deleted file) gets no key, as in
+  ``load_table``: a name-only key could serve a rewritten input;
 * the canonicalized analyzed plan (exprIds normalized, so identical
   builds compare equal), which pins every transformation between the
   scan and the operator: a filtered or re-projected frame over the same
@@ -98,8 +100,8 @@ class LRU:
 
 
 def file_stats_signature(files: tuple) -> tuple:
-    """(size, mtime_ns) per input file. Non-local URIs (no os.stat)
-    contribute None: the key then degrades to name-keyed."""
+    """(size, mtime_ns) per input file; None for a file os.stat cannot
+    read (a non-local URI, a deleted file), which callers build uncached."""
     out = []
     for f in files:
         p = unquote(urlparse(f).path) if f.startswith("file:") else f
@@ -113,10 +115,12 @@ def file_stats_signature(files: tuple) -> tuple:
 
 def frame_key(df: DataFrame, *params) -> tuple | None:
     """Cache key (session, files, file stats, canonical plan, params) for
-    `df`, or None when `df` reads no files (see the module docstring)."""
+    `df`, or None when `df` reads no files or a file os.stat cannot read
+    (see the module docstring)."""
     try:
         files = tuple(sorted(df.inputFiles()))
-        if not files:
+        stats = file_stats_signature(files)
+        if not files or None in stats:
             return None
         spark = df.sparkSession
         with untruncated_plans(spark):
@@ -124,7 +128,7 @@ def frame_key(df: DataFrame, *params) -> tuple | None:
         session = spark._jsparkSession.sessionUUID()
     except Exception:
         return None
-    return (session, files, file_stats_signature(files), plan, *params)
+    return (session, files, stats, plan, *params)
 
 
 # Session conf is global to every thread of the session, so an unlocked

@@ -1,7 +1,10 @@
-"""Short sequential recurrences (Holt and Holt-Winters smoothing, greedy
-MMR) over series that are short by construction: the whole recurrence
-runs in one pandas call, instead of one Spark job per step (`WITH
-RECURSIVE`) or a driver loop over collected rows."""
+"""Short sequential recurrences over series that are short by
+construction: Holt and Holt-Winters smoothing, Croston's intermittent-
+demand EWMAs and banded DTW over a fixed calendar window, the Markov
+stationary power iteration over an event-type transition matrix, and
+greedy MMR over a top-K shortlist. The whole recurrence runs in one
+pandas call, instead of one Spark job per step (`WITH RECURSIVE`, a
+checkpointed driver loop) or a driver loop over collected rows."""
 
 from __future__ import annotations
 

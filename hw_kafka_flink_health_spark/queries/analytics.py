@@ -11,10 +11,14 @@ called out per query.
 
 from __future__ import annotations
 
+import math
+
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.operators.relational import distributed_ntile
+from hw_kafka_flink_health_spark.operators.sequential import fold
 from hw_kafka_flink_health_spark.queries._registry import register
 from hw_kafka_flink_health_spark.sources.files import load_table
 
@@ -2710,6 +2714,25 @@ def _markov_stationary_oracle(rounds: int = _STATIONARY_ROUNDS) -> str:
     )
 
 
+def _markov_power(pdf: pd.DataFrame) -> pd.DataFrame:
+    # NaN stands for the oracle's NULL: it propagates through + and *,
+    # and the output maps it back to NULL
+    states = sorted(set(pdf["i"]))
+    src = set(states)
+    # rows arrive ordered by (i, j), so each target's terms add up in
+    # ascending source order, like the oracle's list(... ORDER BY p2.i)
+    edges = [(i, j, p) for i, j, p in zip(pdf["i"], pdf["j"], pdf["p"]) if j in src]
+    pi = dict.fromkeys(states, 1.0 / len(states))
+    for _ in range(_STATIONARY_ROUNDS):
+        raw: dict = {}
+        for i, j, p in edges:
+            if i in pi:
+                raw[j] = raw[j] + pi[i] * p if j in raw else pi[i] * p
+        tot = sum(raw[s] for s in sorted(raw))
+        pi = {s: v / tot if tot != 0 else math.nan for s, v in raw.items()}
+    return pd.DataFrame({"event_type": states, "v": [pi.get(s, math.nan) for s in states]})
+
+
 @register("events_markov_stationary", oracle=_markov_stationary_oracle())
 def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stationary distribution of the per-user event-type Markov chain —
@@ -2719,15 +2742,18 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (6 rounds, renormalized each round because transitions into
     never-a-source states leak mass out of the restricted chain).
 
-    Distributed shape: the heavy work is the ONE per-user lag window +
-    |types|² count aggregate; the iteration itself runs entirely on the
-    k-state vector against the k² matrix (joins on tiny checkpointed
-    tables — at 100 TB this is the canonical "aggregate first, iterate
-    on the summary" posture, the matrix never rescans the events). Every
-    cross-state sum — both the matrix-vector product and the
-    renormalizer — is folded in pinned state order (array_sort +
-    sequential fold / list ORDER BY), so the doubles are identical in
-    both engines and the oracle replays all 6 rounds exactly."""
+    Distributed shape: the heavy work is the ONE per-user lead window +
+    |types|² count aggregate and the row-normalized probabilities; the
+    iteration itself runs as one fold over that matrix — the canonical
+    "aggregate first, iterate on the summary" posture, the matrix never
+    rescans the events. The fold is bounded because it holds source
+    states × target states (an event-type vocabulary squared, 5 × 5
+    here), not data rows; FOLD_MAX_ROWS makes a vocabulary over about
+    100 states fail loudly. Every cross-state sum — both the
+    matrix-vector product and the renormalizer — adds in ascending state
+    order, the oracle's pinned list_reduce order, so the doubles are
+    identical in both engines and the oracle replays all 6 rounds
+    exactly; a zero total gives NULL, as try_divide does."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = (
@@ -2739,58 +2765,14 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("j").isNotNull())
     )
     tr = nxt.groupBy("i", "j").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    states = tr.select("i").distinct().localCheckpoint()
-    rs = Window.partitionBy("i")
     p = tr.select(
-        "i", "j", (F.col("n").cast("double") / F.sum("n").over(rs)).alias("p")
+        "i",
+        "j",
+        (F.col("n").cast("double") / F.sum("n").over(Window.partitionBy("i"))).alias("p"),
     )
-    p2 = p.join(
-        states.select(F.col("i").alias("j")), "j", "left_semi"
-    ).localCheckpoint()
-    kk = states.agg(F.count(F.lit(1)).cast("long").alias("k"))
-    pi = states.crossJoin(F.broadcast(kk)).select(
-        F.col("i").alias("s"), (F.lit(1.0) / F.col("k")).alias("v")
-    ).localCheckpoint()
-    for _ in range(_STATIONARY_ROUNDS):
-        raw = (
-            p2.join(pi, p2["i"] == pi["s"])
-            .groupBy("j")
-            .agg(
-                F.aggregate(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("i", (F.col("v") * F.col("p")).alias("t")))
-                        ),
-                        lambda x: x["t"],
-                    ),
-                    F.lit(0.0),
-                    lambda acc, t: acc + t,
-                ).alias("v")
-            )
-            .select(F.col("j").alias("s"), "v")
-            # checkpoint the UNNORMALIZED vector, not pi: raw has two
-            # consumers (the renormalizer aggregate and the division), so
-            # checkpointing downstream of both re-executed the round's
-            # join+aggregate twice per round (r12); pi stays a lazy 1-level
-            # projection over this materialized k-row table
-            .localCheckpoint()
-        )
-        tot = raw.agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("s", "v"))),
-                    lambda x: x["v"],
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ).alias("t")
-        )
-        pi = raw.crossJoin(F.broadcast(tot)).select(
-            "s", F.try_divide(F.col("v"), F.col("t")).alias("v")
-        )
-    return states.join(pi, states["i"] == pi["s"], "left").select(
-        F.col("i").alias("event_type"),
-        F.round(F.coalesce("v", F.lit(0.0)), 6).alias("stationary_p"),
+    pi = fold(p, ["i", "j"], _markov_power, "event_type string, v double")
+    return pi.select(
+        "event_type", F.round(F.coalesce("v", F.lit(0.0)), 6).alias("stationary_p")
     )
 
 

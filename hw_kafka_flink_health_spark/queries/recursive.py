@@ -1,6 +1,6 @@
 """Recursive queries: Spark 4 `WITH RECURSIVE` for calendar-spine
-gap-fill, hierarchy rollup, banded DTW and Croston; one bounded fold
-for Holt and Holt-Winters smoothing.
+gap-fill and hierarchy rollup; one bounded fold each for Holt and
+Holt-Winters smoothing, banded DTW and Croston.
 
 Extension surface (SURVEY.md §2.C, SQL-surface family): the reference has
 no SQL interface at all; these pin the two canonical recursive-SQL shapes
@@ -8,25 +8,25 @@ a warehouse user expects — generate-a-spine and walk-a-hierarchy — on
 Spark 4's native recursive CTE execution (iterative union with a loop
 limit, default 100 levels). Both recursions are DEPTH-bounded by data
 properties (months in the date range ≈ 80; log₂(max partkey) ≈ 15), not
-row counts, so they hold at 100 TB: each iteration is a small
-narrow-dependency step and the expensive tables join AFTER the recursion
-produces a tiny spine/closure.
+row counts, so they hold at 100 TB and stay under the default limit:
+each iteration is a small narrow-dependency step and the expensive
+tables join AFTER the recursion produces a tiny spine/closure. Past the
+limit Spark fails loudly (RECURSION_LEVEL_LIMIT_EXCEEDED); a recursion
+that needs more headroom takes the per-query `MAX RECURSION LEVEL n`
+clause, never a session conf write.
 
 Both queries run verbatim in DuckDB (same ANSI recursive syntax), so they
 carry full value oracles.
 
-Scale lesson for DTW and Croston: Spark does NOT materialize
-non-recursive CTEs referenced from a recursive term, so an inline series
-CTE would re-aggregate the fact table on EVERY iteration; they
-localCheckpoint the series first (DuckDB materializes CTEs, so the
-oracles stay one statement). Each step still costs Spark jobs, so Holt
-and Holt-Winters recurse only in their oracles and run as one
-operators/sequential.py:fold.
+The other four recurrences are coupled scalar state over a series whose
+length a fixed calendar window sets, not the data. Each Spark step of a
+recursive CTE costs jobs, so they recurse only in their oracles and run
+in Spark as one operators/sequential.py:fold: Spark aggregates the
+series once, and the recurrence does the oracle's arithmetic in the same
+order in Python, so every state stays bitwise-equal.
 """
 
 from __future__ import annotations
-
-import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -36,46 +36,6 @@ from hw_kafka_flink_health_spark.operators.sequential import fold
 from hw_kafka_flink_health_spark.queries._registry import register
 from hw_kafka_flink_health_spark.sources.files import load_table
 
-
-def _ensure_recursion_headroom(spark: SparkSession, levels: int = 400) -> None:
-    """Raise (never lower) the session's recursion level cap. The conf
-    must stay raised for the returned DataFrame's LAZY execution, so a
-    restore-after-build would break collection later; a monotonic raise
-    is idempotent and cannot clip another run that asked for more
-    (round-6 advice: no observable cross-query state changes beyond the
-    one-way headroom raise). The 1M-row limit stays the runaway
-    backstop."""
-    try:
-        cur = int(spark.conf.get("spark.sql.cteRecursionLevelLimit"))
-    except Exception:
-        cur = 100
-    if cur < levels:
-        spark.conf.set("spark.sql.cteRecursionLevelLimit", str(levels))
-
-
-def _sql_over_views(spark: SparkSession, sql: str, views: dict[str, DataFrame]) -> DataFrame:
-    """Run `sql` with each {placeholder} bound to a UNIQUELY-named temp
-    view of the given DataFrame, then drop the views. Fixed view names
-    were session-global side effects (round-6 advice): two concurrent
-    runs in one session could read each other's staged series. spark.sql
-    analyzes eagerly (the view subplans are inlined into the returned
-    DataFrame's analyzed plan), so dropping the views immediately is
-    safe for later execution."""
-    names = {}
-    try:
-        for ph, df in views.items():
-            name = f"__rec_{ph}_{uuid.uuid4().hex[:12]}"
-            df.createOrReplaceTempView(name)
-            names[ph] = name
-        bound = sql
-        for ph, name in names.items():
-            bound = bound.replace("{" + ph + "}", name)
-        out = spark.sql(bound)
-        out.schema  # force analysis before the views disappear  # noqa: B018
-        return out
-    finally:
-        for name in names.values():
-            spark.catalog.dropTempView(name)
 
 # The spine carries the max bound as a column through the recursion
 # (anchor computes both endpoints) because neither engine allows a scalar
@@ -130,19 +90,13 @@ def _duck(sql: str) -> str:
 def _spark_sql(
     spark: SparkSession, sf_dir: str, sql: str, tables: dict[str, str]
 ) -> DataFrame:
-    # headroom over the 100-level default: the month spine is ~80 levels
-    # on this corpus but a 2x-wider date range would hit the wall; the
-    # row limit (default 1M) is the real runaway backstop, so raising the
-    # level cap is safe. DuckDB's default max_recursive_cte_iterations is
-    # unbounded, so only Spark needs the knob.
-    _ensure_recursion_headroom(spark)
     # Spark's count(x)::BIGINT cast syntax differs; normalize the two
     # DuckDB-isms used above to portable forms for the Spark run.
+    # spark.sql binds each {placeholder} to its table through a uniquely
+    # named temp view that it drops again before returning.
     portable = sql.replace("::BIGINT", "").replace("{TS}", "TIMESTAMP_NTZ")
-    return _sql_over_views(
-        spark,
-        portable,
-        {ph: load_table(spark, sf_dir, name) for ph, name in tables.items()},
+    return spark.sql(
+        portable, **{ph: load_table(spark, sf_dir, name) for ph, name in tables.items()}
     )
 
 
@@ -436,6 +390,20 @@ _DTW_ORACLE = f"""
     """
 
 
+def _dtw_band(pdf: pd.DataFrame) -> pd.DataFrame:
+    # row i of the DP over columns 0..n; column 0 and row 0 are the
+    # boundary (only D[0][0] = 0 is finite), cells off the band stay INF
+    a, b = pdf["ca"].tolist(), pdf["cb"].tolist()
+    n = len(a)
+    prev = [0] + [_DTW_INF] * n
+    for i in range(1, n + 1):
+        cur = [_DTW_INF] * (n + 1)
+        for j in range(max(1, i - _DTW_W), min(n, i + _DTW_W) + 1):
+            cur[j] = abs(a[i - 1] - b[j - 1]) + min(prev[j], cur[j - 1], prev[j - 1])
+        prev = cur
+    return pd.DataFrame({"n_days": [n], "dtw_cents": [prev[n]]})
+
+
 @register("timeseries_dtw_band", oracle=_DTW_ORACLE)
 def timeseries_dtw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded dynamic-time-warping distance between the URGENT and LOW
@@ -443,123 +411,62 @@ def timeseries_dtw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity measure used to compare phase-shifted time series where
     pointwise (Euclidean) distance over-penalizes small lags.
 
-    The O(n·w) DP runs as a recursive CTE whose working set is ONE ROW
-    carrying the last two anti-diagonals as BIGINT arrays (the
-    Holt-Winters oracle's array-state pattern): each of the 2n-1 iterations maps
-    `transform(sequence(1, n), ...)` over the band, so recursion depth
-    and row width are fixed by the WINDOW (59 days), not the table —
-    the heavy work (daily conditional aggregate) happens once in the
-    anchor, and at 100 TB the recursion still touches one 59-element
-    row per step. All costs are exact integer cents with an integer INF
-    sentinel (2^50 — min() absorbs it, and accumulation cannot reach
-    int64), so the distance is bit-identical cross-engine. The
-    Sakoe-Chiba band (|i-j| <= 7) is the standard constraint that keeps
-    warping local and cuts the DP to O(n·w)."""
-    _ensure_recursion_headroom(spark)
+    Spark aggregates the daily conditional cents once and left-joins
+    them onto the 59-day spine (empty days cost 0, so an empty window
+    still gives one row, dtw 0). The O(n·w) DP is a local computation
+    over those 59 rows, so it runs as one fold in Python ints, not as
+    one distributed step per anti-diagonal (the oracle's recursion):
+    its size is fixed by the WINDOW, not the table. All costs are exact
+    integer cents with the oracle's integer INF sentinel (2^50 — min()
+    absorbs it, and accumulation cannot reach int64), so the distance
+    is bit-identical cross-engine. The Sakoe-Chiba band (|i-j| <= 7) is
+    the standard constraint that keeps warping local and cuts the DP to
+    O(n·w)."""
     orders = load_table(spark, sf_dir, "orders")
-    INF, N, W, ITERS = _DTW_INF, _DTW_N, _DTW_W, _DTW_ITERS
-    base = orders.filter(
-        F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
-        & (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1995-03-01").cast("timestamp"))
-    ).select(
-        (
-            F.expr("unix_millis(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000")
-            - F.lit(9131).cast("long")  # epoch-day of 1995-01-01
-        ).alias("d"),
-        F.when(
-            F.col("o_orderpriority") == "1-URGENT",
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"),
+    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
+    zero = F.lit(0).cast("long")
+    dly = (
+        orders.filter(
+            F.col("o_orderpriority").isin("1-URGENT", "5-LOW")
+            & (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
+            & (F.col("o_orderdate") < F.lit("1995-03-01").cast("timestamp"))
         )
-        .otherwise(F.lit(0).cast("long"))
-        .alias("ca"),
-        F.when(
-            F.col("o_orderpriority") == "5-LOW",
-            F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"),
+        .groupBy(
+            (
+                F.expr("unix_millis(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000")
+                - F.lit(9131).cast("long")  # epoch-day of 1995-01-01
+            ).alias("d")
         )
-        .otherwise(F.lit(0).cast("long"))
-        .alias("cb"),
+        .agg(
+            *(
+                F.sum(F.when(F.col("o_orderpriority") == pri, cents).otherwise(zero))
+                .cast("long")
+                .alias(c)
+                for c, pri in (("ca", "1-URGENT"), ("cb", "5-LOW"))
+            )
+        )
     )
-    dly = base.groupBy("d").agg(
-        F.sum("ca").cast("long").alias("ca"), F.sum("cb").cast("long").alias("cb")
+    days = spark.range(_DTW_N).withColumnRenamed("id", "d").join(dly, "d", "left")
+    series = days.select(
+        "d", *(F.coalesce(c, zero).alias(c) for c in ("ca", "cb"))
     )
-    arrs = dly.agg(
-        F.map_from_entries(F.collect_list(F.struct("d", "ca"))).alias("m_a"),
-        F.map_from_entries(F.collect_list(F.struct("d", "cb"))).alias("m_b"),
-    ).select(
-        F.expr(
-            f"transform(sequence(CAST(0 AS BIGINT), {N - 1}), dd -> "
-            f"CAST(coalesce(try_element_at(m_a, dd), 0) AS BIGINT))"
-        ).alias("a"),
-        F.expr(
-            f"transform(sequence(CAST(0 AS BIGINT), {N - 1}), dd -> "
-            f"CAST(coalesce(try_element_at(m_b, dd), 0) AS BIGINT))"
-        ).alias("b"),
-    ).localCheckpoint()
-    return _sql_over_views(
-        spark,
-        f"""
-WITH RECURSIVE st AS (
-  SELECT 1 AS t,
-         transform(sequence(1, {N}), i ->
-           CASE WHEN i = 1 THEN abs(try_element_at(a, 1) - try_element_at(b, 1))
-                ELSE CAST({INF} AS BIGINT) END) AS cur,
-         transform(sequence(1, {N}), i -> CAST({INF} AS BIGINT)) AS prev,
-         a, b
-  FROM {{arrs}}
-  UNION ALL
-  SELECT t + 1,
-         transform(sequence(1, {N}), i ->
-           CASE WHEN t + 2 - i BETWEEN 1 AND {N}
-                     AND abs(2 * i - t - 2) <= {W}
-                THEN abs(try_element_at(a, i) - try_element_at(b, t + 2 - i))
-                     + least(coalesce(CASE WHEN i > 1
-                                          THEN try_element_at(cur, i - 1) END,
-                                      CAST({INF} AS BIGINT)),
-                             coalesce(try_element_at(cur, i), CAST({INF} AS BIGINT)),
-                             coalesce(CASE WHEN i > 1
-                                          THEN try_element_at(prev, i - 1) END,
-                                      CAST({INF} AS BIGINT)))
-                ELSE CAST({INF} AS BIGINT) END) AS cur,
-         cur AS prev, a, b
-  FROM st WHERE t < {ITERS}
-)
-SELECT CAST({N} AS BIGINT) AS n_days,
-       CAST(try_element_at(cur, {N}) AS BIGINT) AS dtw_cents
-FROM st WHERE t = {ITERS}
-""",
-        {"arrs": arrs},
-    )
+    return fold(series, "d", _dtw_band, "n_days long, dtw_cents long")
 
 
 # Croston's method — THE intermittent-demand forecaster (sparse series
 # with many zero periods, where plain exponential smoothing collapses
 # toward zero between demands). Two coupled EWMA states update ONLY on
 # nonzero-demand periods: demand size z and inter-demand interval p;
-# forecast = z/p. Like Holt, the coupled recursion has no closed form —
-# WITH RECURSIVE one-row-per-step over the NONZERO days only (the zero
-# days never enter the loop; their count rides in as the integer gap),
-# so the depth is the number of demand days in a FIXED calendar window
-# (<= 181 here at any SF), never the table size. Demand sums are exact
-# integer quantities, the gap is an exact integer day count, and the
-# recursive step is the same literal arithmetic text in both engines —
-# states stay bitwise-equal through every iteration and are emitted
-# UNROUNDED (round() on identical doubles is the cross-engine hazard).
-_CROSTON_STEP_SQL = """croston(i, d_ms, d, q, z, p) AS (
-  SELECT i, d_ms, d, q, CAST(d AS DOUBLE), CAST(1.0 AS DOUBLE)
-  FROM {idx} WHERE i = 1
-  UNION ALL
-  SELECT x.i, x.d_ms, x.d, x.q,
-         CAST(0.1 AS DOUBLE) * x.d + CAST(0.9 AS DOUBLE) * c.z,
-         CAST(0.1 AS DOUBLE) * x.q + CAST(0.9 AS DOUBLE) * c.p
-  FROM croston c JOIN {idx} x ON x.i = c.i + 1
-)
-SELECT i AS step, d_ms AS day_ms, d AS demand, q AS gap_days,
-       z AS size_ewma, p AS interval_ewma, z / p AS forecast
-FROM croston"""
-
-_CROSTON_ORACLE = (
-    """
+# forecast = z/p. Like Holt, the coupled recursion has no closed form.
+# The oracle recurses one row per step over the NONZERO days only (the
+# zero days never enter the loop; their count rides in as the integer
+# gap); Spark runs the same steps as one fold over the demand days of a
+# FIXED calendar window (<= 181 at any SF). Demand sums are exact
+# integer quantities, the gap is an exact integer day count, and each
+# step does the oracle's double operations in the same order — states
+# stay bitwise-equal and are emitted UNROUNDED (round() on identical
+# doubles is the cross-engine hazard).
+_CROSTON_ORACLE = """
 WITH RECURSIVE demand AS MATERIALIZED (
   SELECT date_trunc('day', l_shipdate) AS d_day,
          CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS d
@@ -574,9 +481,39 @@ WITH RECURSIVE demand AS MATERIALIZED (
          CAST(coalesce(date_diff('day',
               lag(d_day) OVER (ORDER BY d_day), d_day), 1) AS BIGINT) AS q
   FROM demand
-), """
-    + _CROSTON_STEP_SQL.format(idx="idx")
+), croston(i, d_ms, d, q, z, p) AS (
+  SELECT i, d_ms, d, q, CAST(d AS DOUBLE), CAST(1.0 AS DOUBLE)
+  FROM idx WHERE i = 1
+  UNION ALL
+  SELECT x.i, x.d_ms, x.d, x.q,
+         CAST(0.1 AS DOUBLE) * x.d + CAST(0.9 AS DOUBLE) * c.z,
+         CAST(0.1 AS DOUBLE) * x.q + CAST(0.9 AS DOUBLE) * c.p
+  FROM croston c JOIN idx x ON x.i = c.i + 1
 )
+SELECT i AS step, d_ms AS day_ms, d AS demand, q AS gap_days,
+       z AS size_ewma, p AS interval_ewma, z / p AS forecast
+FROM croston"""
+
+
+def _croston_steps(pdf: pd.DataFrame) -> pd.DataFrame:
+    # a NULL demand day (all quantities NULL) arrives as NaN and turns
+    # every later size state NaN, as NULL does in the oracle's step; the
+    # output maps NaN back to NULL
+    rows, prev = [], None
+    for i, (day_ms, day, d) in enumerate(zip(pdf["day_ms"], pdf["day"], pdf["d"]), 1):
+        q = 1 if prev is None else int(day) - prev
+        if i == 1:
+            z, p = float(d), 1.0
+        else:
+            z, p = 0.1 * d + 0.9 * z, 0.1 * q + 0.9 * p
+        rows.append((i, int(day_ms), None if pd.isna(d) else int(d), q, z, p, z / p))
+        prev = int(day)
+    out = pd.DataFrame(
+        rows,
+        columns=["step", "day_ms", "demand", "gap_days", "size_ewma", "interval_ewma", "forecast"],
+    )
+    out["demand"] = out["demand"].astype("Int64")
+    return out
 
 
 @register("timeseries_croston", oracle=_CROSTON_ORACLE)
@@ -586,15 +523,11 @@ def timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     on demand days, forecast = size/interval — the standard
     spares/slow-mover model a plain EWMA gets wrong on sparse series.
 
-    Scale shape follows the module note's lesson: the fact-table
-    scan + day aggregate runs ONCE and is localCheckpointed; the
-    recursion joins the materialized <=181-row demand series, so
-    recursion cost is depth x O(1), independent of table size. The
-    first demand day anchors z = its demand, p = 1 (no observed prior
-    interval); gaps are integer day counts from lag()."""
-    from pyspark.sql import Window as W
-
-    _ensure_recursion_headroom(spark)
+    Spark scans and aggregates the fact table once into the <=181
+    demand days; the recurrence runs over them as one fold, so its cost
+    is independent of table size. The first demand day anchors z = its
+    demand, p = 1 (no observed prior interval); gaps are integer day
+    counts between consecutive demand days."""
     li = load_table(spark, sf_dir, "lineitem")
     demand = (
         li.filter(
@@ -605,22 +538,15 @@ def timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.date_trunc("day", F.col("l_shipdate")).alias("d_day"))
         .agg(F.sum(F.col("l_quantity").cast("long")).cast("long").alias("d"))
     )
-    w = W.orderBy("d_day")
-    idx = demand.select(
-        F.row_number().over(w).cast("bigint").alias("i"),
-        F.unix_millis(F.col("d_day").cast("timestamp")).alias("d_ms"),
+    series = demand.select(
+        F.unix_millis(F.col("d_day").cast("timestamp")).alias("day_ms"),
+        F.unix_date(F.col("d_day").cast("date")).alias("day"),
         "d",
-        F.coalesce(
-            F.datediff(
-                F.col("d_day").cast("date"), F.lag("d_day").over(w).cast("date")
-            ),
-            F.lit(1),
-        )
-        .cast("bigint")
-        .alias("q"),
-    ).localCheckpoint()
-    return _sql_over_views(
-        spark,
-        "WITH RECURSIVE " + _CROSTON_STEP_SQL.format(idx="{idx}"),
-        {"idx": idx},
+    )
+    return fold(
+        series,
+        "day_ms",
+        _croston_steps,
+        "step long, day_ms long, demand long, gap_days long, size_ewma double, "
+        "interval_ewma double, forecast double",
     )

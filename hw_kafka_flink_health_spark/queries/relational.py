@@ -578,26 +578,18 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "agg_grouping_sets",
-    oracle="""
+_GROUPING_SETS_SQL = """
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """,
-)
+    """
+
+
+@register("agg_grouping_sets", oracle=_GROUPING_SETS_SQL.format(lineitem="lineitem"))
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via Spark SQL (same Expand-based plan)."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
+    return spark.sql(_GROUPING_SETS_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 @register(
@@ -917,27 +909,19 @@ def pivot_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "scalar_subquery_ratio",
-    oracle="""
+_SCALAR_SUBQUERY_SQL = """
     SELECT o_orderkey,
-           round(o_totalprice / (SELECT avg(o_totalprice) FROM orders), 4) AS price_ratio
-    FROM orders
-    WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM orders)
-    """,
-)
+           round(o_totalprice / (SELECT avg(o_totalprice) FROM {orders}), 4) AS price_ratio
+    FROM {orders}
+    WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM {orders})
+    """
+
+
+@register("scalar_subquery_ratio", oracle=_SCALAR_SUBQUERY_SQL.format(orders="orders"))
 def scalar_subquery_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subqueries (uncorrelated, in projection and predicate) —
     Catalyst plans them as one-row broadcast joins, no driver round-trip."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT o_orderkey,
-               round(o_totalprice / (SELECT avg(o_totalprice) FROM orders), 4) AS price_ratio
-        FROM orders
-        WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM orders)
-        """
-    )
+    return spark.sql(_SCALAR_SUBQUERY_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 @register(
@@ -1650,19 +1634,22 @@ def setops_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     return b.intersectAll(a)
 
 
-@register(
-    "join_lateral_topn",
-    oracle="""
+_LATERAL_TOPN_SQL = """
     SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-    FROM customer c,
+    FROM {customer} c,
          LATERAL (
-           SELECT o_orderkey, o_totalprice FROM orders
+           SELECT o_orderkey, o_totalprice FROM {orders}
            WHERE o_custkey = c.c_custkey
            ORDER BY o_totalprice DESC, o_orderkey
            LIMIT 2
          ) o
     WHERE c.c_mktsegment = 'MACHINERY'
-    """,
+    """
+
+
+@register(
+    "join_lateral_topn",
+    oracle=_LATERAL_TOPN_SQL.format(customer="customer", orders="orders"),
 )
 def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery (SQL-standard top-N-per-group): each
@@ -1671,21 +1658,10 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan has no per-customer re-execution, so it scales like any
     ranked join (one shuffle on the key), while the SQL stays the natural
     per-row formulation. Oracle: DuckDB executes the identical LATERAL."""
-    from hw_kafka_flink_health_spark.sources.files import register_views
-
-    register_views(spark, sf_dir)
     return spark.sql(
-        """
-        SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
-        FROM customer c,
-             LATERAL (
-               SELECT o_orderkey, o_totalprice FROM orders
-               WHERE o_custkey = c.c_custkey
-               ORDER BY o_totalprice DESC, o_orderkey
-               LIMIT 2
-             ) o
-        WHERE c.c_mktsegment = 'MACHINERY'
-        """
+        _LATERAL_TOPN_SQL,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

@@ -465,11 +465,11 @@ _FILTER_AGG_SQL = """
            CAST(count(*) FILTER (WHERE l_discount = 0) AS BIGINT) AS n_undiscounted,
            round(sum(l_extendedprice) FILTER (WHERE l_tax = 0), 2) AS taxfree_revenue,
            CAST(count(*) AS BIGINT) AS n
-    FROM lineitem GROUP BY l_returnflag
+    FROM {lineitem} GROUP BY l_returnflag
 """
 
 
-@register("agg_filter_clause", oracle=_FILTER_AGG_SQL)
+@register("agg_filter_clause", oracle=_FILTER_AGG_SQL.format(lineitem="lineitem"))
 def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL-standard FILTER clause on aggregates — several differently-
     conditioned aggregates in ONE grouped pass (the idiom that replaces
@@ -477,10 +477,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional partial aggregate, so the fact table is scanned and
     shuffled once regardless of how many filtered metrics ride along.
     The oracle is the IDENTICAL SQL text run by DuckDB."""
-    from hw_kafka_flink_health_spark.sources.files import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_FILTER_AGG_SQL)
+    return spark.sql(_FILTER_AGG_SQL, lineitem=load_table(spark, sf_dir, "lineitem"))
 
 
 @register(

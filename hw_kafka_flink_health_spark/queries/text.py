@@ -2140,9 +2140,9 @@ def text_sentences_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     idx += 1
 
     spark.udtf.register("sentence_split", SentenceSplit)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("__udtf_docs")
     out = spark.sql(
-        "SELECT doc_id, s.n_words FROM __udtf_docs, LATERAL sentence_split(text) s"
+        "SELECT doc_id, s.n_words FROM {docs}, LATERAL sentence_split(text) s",
+        docs=load_table(spark, sf_dir, "documents"),
     )
     return out.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_sentences"),

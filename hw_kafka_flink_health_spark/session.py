@@ -133,9 +133,11 @@ def get_spark(
     * ``spark.sql.session.timeZone=UTC`` — the reference's timestamps are
       UTC ISO8601 (``src/kafka_producer.py:25``); UTC also makes results
       comparable against UTC-naive engines (DuckDB oracle).
-    * ``spark.sql.legacy.parquet.nanosAsLong=true`` — the synthetic
-      ``events`` table stores TIMESTAMP(NANOS), which Spark 4 otherwise
-      rejects; the loader converts nanos->timestamp explicitly.
+    * ``spark.sql.legacy.parquet.nanosAsLong=true`` — every fixture's
+      ``events.ts`` is TIMESTAMP(MICROS), but parquet written elsewhere
+      may store TIMESTAMP(NANOS), which Spark 4 otherwise rejects; with
+      it, such a file reads as longs and the loader converts
+      nanos->timestamp explicitly.
     * AQE + skew-join handling on: at 100 TB, skewed keys and bad static
       partition counts are the norm, not the exception.
 

@@ -88,7 +88,7 @@ SHOWCASE = {
     "basket_rules_lift": "association rules: pair supports keyed on the order (basket-width-bounded fan-out); item supports broadcast back; conf/lift in integer micro-units",
     # round-7 additions
     "graph_kcore": "bounded-round k-core peel: per round ONE degree agg + two semi-joins on the shrinking checkpointed edge table; final plan reads the last checkpoint only",
-    "timeseries_dtw_band": "banded DTW as single-row array recursion: anchor = one conditional daily aggregate; the 117-step loop maps transform() over two 59-element arrays - no joins, no scans inside the recursion",
+    "timeseries_dtw_band": "banded DTW as one fold: one conditional daily aggregate, left-joined onto range(59), feeds a single FlatMapGroupsInPandas whose DP runs in Python ints - no recursion, no checkpoint, the orders scan runs once",
     "join_bucketed_colocated": "bucketed co-located join: both scans carry SelectedBucketsCount and the SortMergeJoin has ZERO exchanges below it - the shuffle was paid at ingest",
     "stats_levene_test": "two passes: percentile_disc group medians (5 rows, broadcast back), then one moment aggregate + 5-row reduction; SS terms rounded to the 1e6 grain for order-independence",
     "text_keyness_g2": "one (source, token) aggregate + three tiny-aggregate joins back (per-source totals broadcast, token totals co-partitioned, corpus total 1-row); per-source top-10 under WindowGroupLimit",

@@ -17,7 +17,7 @@ from concurrent.futures import ThreadPoolExecutor
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
-from hw_kafka_flink_health_spark.cache import LRU, conf_override
+from hw_kafka_flink_health_spark.cache import LRU, conf_override, frame_key
 from hw_kafka_flink_health_spark.plans import analyzed_str
 from hw_kafka_flink_health_spark.queries import QUERIES
 from hw_kafka_flink_health_spark.queries.graph import _cs_edges_undirected
@@ -140,3 +140,15 @@ def test_conf_override_restores_unset_and_edge_cache_tracks_input(spark, tmp_pat
     expected = sorted(pairs | {(d, s) for s, d in pairs})
     assert _rows(after) == expected
     assert _rows(before) != expected
+
+
+def test_frame_key_skips_files_it_cannot_stat(spark, tmp_path):
+    """A frame whose input file os.stat cannot read gets no key: a
+    name-only key would serve the cached result of a file that was
+    since rewritten."""
+    shutil.copy(f"{SF_DIR}/orders.parquet", tmp_path / "orders.parquet")
+    df = spark.read.parquet(str(tmp_path / "orders.parquet"))
+    assert frame_key(df) is not None
+    (tmp_path / "orders.parquet").unlink()
+    assert df.inputFiles(), "precondition: the frame still lists its file"
+    assert frame_key(df) is None

@@ -132,11 +132,15 @@ def test_min_label_round_job_budget(spark):
         ("recursive_holt_winters_daily", 8),
         ("embedding_mmr_select", 4),
         ("retrieval_mmr_rerank", 10),
+        ("timeseries_croston", 8),
+        ("timeseries_dtw_band", 5),
+        ("events_markov_stationary", 8),
     ],
 )
 def test_sequential_fold_job_budget(spark, name, budget):
     """The short sequential recurrences (Holt, Holt-Winters, both greedy
-    MMR loops) run as one operators/sequential.py:fold, so building and
+    MMR loops, Croston, banded DTW, the Markov power iteration) run as
+    one operators/sequential.py:fold, so building and
     collecting one costs a fixed handful of jobs for the whole series,
     not one or more per recursion step."""
     out = []

@@ -101,6 +101,21 @@ def cold_operator_caches():
     graph._EDGES.clear()
 
 
+def temp_view_names(spark) -> set[str]:
+    """The session's temp view names."""
+    names = spark._jsparkSession.sessionState().catalog().getTempViewNames()
+    return set(names.mkString("\n").split("\n")) - {""}
+
+
+def _conf_diff(spark, before) -> dict:
+    """key -> (before, now) for every SQL conf that differs from the
+    `getAllConfs()` snapshot `before`."""
+    to_java = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    now = spark._jsparkSession.sessionState().conf().getAllConfs()
+    a, b = dict(to_java(before)), dict(to_java(now))
+    return {k: (a.get(k), b.get(k)) for k in a.keys() | b.keys() if a.get(k) != b.get(k)}
+
+
 def build_gated(name: str, spark):
     """Build QUERIES[name] once and run the catalog plan gates on it.
 
@@ -116,10 +131,25 @@ def build_gated(name: str, spark):
       localCheckpoint hid, unless the query is in AUDITED_BOUNDED — and
       a whitelisted query must still have one, or its entry is stale.
       See tests/test_window_sweep.py for the boundedness taxonomy.
+    * the session is left as it was found: no temp view name added or
+      dropped and no SQL conf written (both read on the JVM side, well
+      under a millisecond each; `spark.catalog.listTables` and
+      `spark.conf.getAll` cost tens to hundreds of ms a call). A query
+      that repoints a view the caller registered keeps the names; that
+      case is tests/test_recursive_hygiene.py's.
     """
     captured: list[str] = []
+    conf = spark._jsparkSession.sessionState().conf()
+    views, confs = temp_view_names(spark), conf.getAllConfs()
     with capture_checkpoints(captured):
         df = QUERIES[name](spark, SF_DIR)
+    assert temp_view_names(spark) == views, (
+        f"{name}: building changed the session's temp views "
+        f"{sorted(views)} -> {sorted(temp_view_names(spark))}"
+    )
+    assert conf.getAllConfs().equals(confs), (
+        f"{name}: building wrote session conf: {_conf_diff(spark, confs)}"
+    )
     assert_driver_scalar_schema(name, df)
     bad = [c for c in df.columns if not IDENTIFIER.match(c)]
     assert not bad, f"{name}: output columns are not plain identifiers: {bad}"

@@ -618,13 +618,23 @@ def test_funnel_time_to_convert_shares_user_exchange(spark):
     assert scan and len(scan.group(1).split(",")) == 3, scan and scan.group(1)
 
 
-def test_croston_recursion_never_rescans_the_fact_table(spark):
-    plan = plan_of(spark, "timeseries_croston")
-    # the recursion must iterate over the localCheckpointed demand series:
-    # an inline idx CTE would re-aggregate lineitem from parquet on EVERY
-    # UnionLoop iteration (one fact-table scan per demand day)
-    assert "UnionLoop" in plan, plan
-    assert "parquet" not in plan, plan
+def test_month_spine_recursion_never_rescans_the_fact_table(spark):
+    # the recursive term steps the spine carried in the loop; the orders
+    # scan belongs to the anchor (min/max) and to the join AFTER the
+    # loop — a scan inside the recursive term would run once per month
+    plan = plan_of(spark, "recursive_month_spine_revenue").splitlines()
+    at = next(k for k, line in enumerate(plan) if "UnionLoop " in line)
+    col = plan[at].index("UnionLoop")
+    subtree = []
+    for line in plan[at + 1 :]:
+        if line[: col + 3].strip(" :|"):
+            break
+        subtree.append(line)
+    # the second child (`+-` right under UnionLoop) is the recursive term
+    body_at = next(k for k, line in enumerate(subtree) if line[col + 3 : col + 5] == "+-")
+    anchor, body = "\n".join(subtree[:body_at]), "\n".join(subtree[body_at:])
+    assert "parquet" in anchor, anchor
+    assert "UnionLoopRef" in body and "parquet" not in body, body
 
 
 def test_fellegi_sunter_u_estimation_is_broadcast(spark):

@@ -46,11 +46,9 @@ AUDITED_BOUNDED = {
     "spc_imr_revenue": "day grain (I-MR control chart over days)",
     "stats_runs_test": "day grain (sign runs over days)",
     "timeseries_ma_decomposition": "day grain (centered MA over days)",
-    # (the next two had been invisible to the r11 sweep: the checkpoint
-    # capture never fired on Spark 4 — see capture_checkpoints — so their
-    # pre-checkpoint windows were audited only in r12)
-    "timeseries_croston": "day grain inside a FIXED 181-day window "
-    "(demand-day anchor + lag intervals)",
+    # (the next one had been invisible to the r11 sweep: the checkpoint
+    # capture never fired on Spark 4 — see capture_checkpoints — so its
+    # pre-checkpoint window was audited only in r12)
     "eval_isotonic_calibration": "20 fixed score bins (prefix sums for "
     "the PAV minimax identity)",
     # -- decile / fixed-bucket rollups: <= 10s of rows by construction --
