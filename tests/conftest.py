@@ -13,10 +13,12 @@ SF_DIR = "/root/testdata/sf0.001"
 #: Two suite tiers. The default tier runs every plan-shape / money-idiom /
 #: contract / operator-unit test plus the sf0.001 oracle mirror
 #: (tests/test_oracle.py: all 420 registered queries, 411 of them
-#: value-checked against DuckDB, each also gated on its plan shape on
-#: that same build): 782 tests in 683-897 s on 4 cores at a CPU score
-#: (`perfbench/envinfo.py:cpu_score()`) of 400-507 MiB/s, inside a
-#: 2670 s verify window with room for a 2x slower host.
+#: value-checked against DuckDB, each also gated on its plan shape and
+#: on leaving the session's temp views and SQL conf as it found them, on
+#: that same build): 786 tests in 683-897 s on 4 cores at a CPU score
+#: (`perfbench/envinfo.py:cpu_score()`) of 400-507 MiB/s (804 s at
+#: 446-468 with the session gate), inside a 2670 s verify window with
+#: room for a 2x slower host.
 #: SPARK_GRAFT_TESTS_FULL=1 adds the slow-marked rest: the
 #: pathological-data fuzz sweep (tests/test_fuzz_oracle.py, 729 tests,
 #: 556-779 s at a CPU score of 390-490; with it tier-1 would pass
