@@ -84,22 +84,22 @@ def valid_filter() -> Column:
     )
 
 
-def parse_events_df(raw_df: DataFrame, raw_col: str = "raw") -> DataFrame:
+def parse_events_df(raw_df: DataFrame) -> DataFrame:
     """P1+P3+P4 fused: raw JSON strings -> validated typed events.
 
     Works identically on batch and streaming DataFrames (unified API).
     """
-    return raw_df.select(*parsed_event_cols(F.col(raw_col))).filter(valid_filter())
+    return raw_df.select(*parsed_event_cols(F.col("raw"))).filter(valid_filter())
 
 
-def annotate_df(raw_df: DataFrame, raw_col: str = "raw", processed_by: str = "spark-engine") -> DataFrame:
+def annotate_df(raw_df: DataFrame, processed_by: str = "spark-engine") -> DataFrame:
     """P2: the hello-world map (src/hello_flink_job.py:41-52).
 
     Parse JSON, add `processed_by`, re-serialize; on decode error fall back
     to wrapping the raw string — `coalesce` reproduces the reference's
     try/except fallback declaratively.
     """
-    parsed = F.from_json(F.col(raw_col), HELLO_MESSAGE_SCHEMA)
+    parsed = F.from_json(F.col("raw"), HELLO_MESSAGE_SCHEMA)
     annotated = F.to_json(
         F.struct(
             parsed["id"].alias("id"),
@@ -109,10 +109,10 @@ def annotate_df(raw_df: DataFrame, raw_col: str = "raw", processed_by: str = "sp
         )
     )
     fallback = F.to_json(
-        F.struct(F.col(raw_col).alias("raw"), F.lit(processed_by).alias("processed_by"))
+        F.struct(F.col("raw").alias("raw"), F.lit(processed_by).alias("processed_by"))
     )
     value = F.when(
         parsed["id"].isNotNull() | parsed["message"].isNotNull(), annotated
     ).otherwise(fallback)
     # non-raw columns pass through (lets callers keep a row identity)
-    return raw_df.withColumn("value", value).drop(raw_col)
+    return raw_df.withColumn("value", value).drop("raw")

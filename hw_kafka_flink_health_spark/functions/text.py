@@ -74,9 +74,9 @@ def avg_token_len_expr(toks: Column) -> Column:
     return total.cast("double") / F.size(toks)
 
 
-def quality_ok_expr(toks: Column, *, min_tokens: int = 5, min_distinct_ratio: float = 0.3) -> Column:
+def quality_ok_expr(toks: Column) -> Column:
     """Boolean-ish (0/1 int) quality gate: enough tokens + vocabulary."""
     return F.when(
-        (F.size(toks) >= min_tokens) & (distinct_ratio_expr(toks) > min_distinct_ratio),
+        (F.size(toks) >= 5) & (distinct_ratio_expr(toks) > 0.3),
         F.lit(1),
     ).otherwise(F.lit(0))

@@ -21,19 +21,12 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def observed_write(
-    df: DataFrame,
-    path: str,
-    metrics: dict[str, Column],
-    *,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> dict:
+def observed_write(df: DataFrame, path: str, metrics: dict[str, Column]) -> dict:
     """Write `df` while collecting `metrics` (name -> aggregate Column)
     in the same pass. Returns the observed values as a dict."""
     obs = Observation("audit")
     observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    observed.write.mode(mode).format(fmt).save(path)
+    observed.write.mode("overwrite").format("parquet").save(path)
     return dict(obs.get)
 
 

@@ -49,12 +49,7 @@ def _merge_expr(sym: Column, a: str, b: str) -> Column:
     )
 
 
-def bpe_train(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    n_merges: int = 50,
-) -> list[tuple[str, str]]:
+def bpe_train(docs: DataFrame, *, n_merges: int = 50) -> list[tuple[str, str]]:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the ordered
     merge list [(left, right), ...] (rank = position).
 
@@ -66,7 +61,7 @@ def bpe_train(
     from hw_kafka_flink_health_spark.operators.dedup import norm_tokens_expr
 
     words = (
-        docs.select(F.explode(norm_tokens_expr(text_col)).alias("word"))
+        docs.select(F.explode(norm_tokens_expr("text")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -131,15 +126,9 @@ def bpe_encode_py(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return sym
 
 
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Encode every document with a learned merge table; returns
-    (id_col, n_bpe_tokens, n_words). Arrow-batched mapInPandas with a
+    (doc_id, n_bpe_tokens, n_words). Arrow-batched mapInPandas with a
     per-batch word->len cache (natural corpora repeat words, so the
     data-dependent merge loop runs once per distinct word per batch);
     the merge table rides the closure (KBs).
@@ -164,20 +153,20 @@ def bpe_encode(
     ship_package(docs.sparkSession)
 
     ranks = {p: i for i, p in enumerate(merges)}
-    schema = f"{id_col} long, n_bpe_tokens long, n_words long"
+    schema = "doc_id long, n_bpe_tokens long, n_words long"
 
     def encode(batches):
         cache: dict[str, int] = {}
         for pdf in batches:
             out = []
-            for did, words in zip(pdf[id_col], pdf["__toks"]):
+            for did, words in zip(pdf["doc_id"], pdf["__toks"]):
                 n_tok = 0
                 for w in words:
                     if w not in cache:
                         cache[w] = len(bpe_encode_py(w, ranks))
                     n_tok += cache[w]
                 out.append((did, n_tok, len(words)))
-            yield pd.DataFrame(out, columns=[id_col, "n_bpe_tokens", "n_words"])
+            yield pd.DataFrame(out, columns=["doc_id", "n_bpe_tokens", "n_words"])
 
     # NULL text would propagate through norm_tokens_expr/F.filter to a
     # NULL __toks (a None in the Arrow batch — the worker's `for w in
@@ -185,9 +174,9 @@ def bpe_encode(
     # null-text doc encodes as (0 tokens, 0 words), matching the
     # LEFT JOIN + coalesce(0) convention of the DuckDB oracle.
     staged = docs.select(
-        id_col,
+        "doc_id",
         F.coalesce(
-            F.filter(norm_tokens_expr(text_col), lambda t: t != ""),
+            F.filter(norm_tokens_expr("text"), lambda t: t != ""),
             F.array().cast("array<string>"),
         ).alias("__toks"),
     )

@@ -35,31 +35,21 @@ PHONE_RE = r"\d{3}[-.]\d{3}[-.]\d{4}"
 SSN_RE = r"\d{3}-\d{2}-\d{4}"
 
 
-def chunk_documents(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    chunk_size: int = 200,
-    overlap: int = 50,
-) -> DataFrame:
-    """Split each document into fixed-size character chunks with overlap.
+def chunk_documents(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Split each document into 200-character chunks overlapping by 50.
 
-    Chunk i covers ``[i*stride, i*stride + chunk_size)`` where
-    ``stride = chunk_size - overlap``; the number of chunks is
-    ``max(1, ceil((len - overlap) / stride))`` so the final chunk is the
+    Chunk i covers ``[i*150, i*150 + 200)``; the number of chunks is
+    ``max(1, ceil((len - 50) / 150))`` so the final chunk is the
     only short one and no chunk is pure overlap-tail.
 
     Output: one row per (doc, chunk) with ``chunk_id`` (0-based),
     ``chunk_text``, ``chunk_len``. Pure Catalyst (sequence/posexplode/
     substring) — no UDF, no shuffle.
     """
-    stride = chunk_size - overlap
-    if stride <= 0:
-        raise ValueError("chunk_size must exceed overlap")
+    stride = 200 - 50
     n = F.greatest(
         F.lit(1),
-        F.ceil((F.length(F.col(text_col)) - F.lit(overlap)) / F.lit(float(stride))),
+        F.ceil((F.length(F.col(text_col)) - F.lit(50)) / F.lit(float(stride))),
     ).cast("int")
     exploded = df.select(
         F.col(id_col),
@@ -67,7 +57,7 @@ def chunk_documents(
         F.posexplode(F.sequence(F.lit(0), n - 1)).alias("chunk_id", "_start_idx"),
     )
     chunk = F.substring(
-        F.col(text_col), F.col("_start_idx") * stride + 1, chunk_size
+        F.col(text_col), F.col("_start_idx") * stride + 1, 200
     )
     return exploded.select(
         F.col(id_col),
@@ -111,7 +101,7 @@ def pack_greedy(
     return out
 
 
-def redact_pii_expr(col: Column | str, replacement: str = "[PII]") -> Column:
+def redact_pii_expr(col: Column | str) -> Column:
     """Scrub emails, phone numbers, and SSN-shaped strings from text.
 
     One chained regexp_replace per pattern — all JVM-side, codegen'd, and
@@ -121,5 +111,5 @@ def redact_pii_expr(col: Column | str, replacement: str = "[PII]") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     out = c
     for pat in (EMAIL_RE, PHONE_RE, SSN_RE):
-        out = F.regexp_replace(out, pat, replacement)
+        out = F.regexp_replace(out, pat, "[PII]")
     return out

@@ -22,26 +22,24 @@ from hw_kafka_flink_health_spark.pyship import ship_package
 COMPRESS_LEVEL = 6
 
 
-def compression_ratio(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id_col, n_bytes, n_zlib_bytes, zlib_ratio) per document; ratio =
+def compression_ratio(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_bytes, n_zlib_bytes, zlib_ratio) per document; ratio =
     compressed/raw in [~0, ~1.01] (tiny inputs can exceed 1 from header
     overhead). Level pinned so results are stable across runs/machines."""
     import pandas as pd
     import zlib
 
     ship_package(docs.sparkSession)
-    schema = f"{id_col} long, n_bytes long, n_zlib_bytes long, zlib_ratio double"
+    schema = "doc_id long, n_bytes long, n_zlib_bytes long, zlib_ratio double"
 
     def op(batches):
         for pdf in batches:
-            raw = [str(t).encode("utf-8") for t in pdf[text_col]]
+            raw = [str(t).encode("utf-8") for t in pdf["text"]]
             nb = [len(b) for b in raw]
             nz = [len(zlib.compress(b, COMPRESS_LEVEL)) for b in raw]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].astype("int64").to_numpy(),
+                    "doc_id": pdf["doc_id"].astype("int64").to_numpy(),
                     "n_bytes": nb,
                     "n_zlib_bytes": nz,
                     "zlib_ratio": [
@@ -50,4 +48,4 @@ def compression_ratio(
                 }
             )
 
-    return docs.select(id_col, text_col).mapInPandas(op, schema=schema)
+    return docs.select("doc_id", "text").mapInPandas(op, schema=schema)

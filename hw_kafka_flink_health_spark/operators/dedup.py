@@ -8,9 +8,7 @@ Scale design notes:
   hash, map-side partial aggregation; never a sort.
 * N-gram Jaccard = explode shingles -> self-equi-join on shingle ->
   count-common -> filter. The join key is the shingle, so frequency skew is
-  the scale hazard: `max_shingle_freq` drops stop-shingles (df > cap) before
-  the join, the standard trick that bounds the pair blowup (a shingle seen
-  in f docs contributes f^2 pairs).
+  the scale hazard: a shingle seen in f docs contributes f^2 pairs.
 * MinHash LSH uses pyspark.ml's MinHashLSH (banding via approxSimilarityJoin)
   — the sub-quadratic path for 100 TB corpora.
 * SimHash: per-token xxhash64 (JVM-side), per-bit sign sums, recombined to a
@@ -118,15 +116,12 @@ def _ngram_pair_counts(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    *,
-    n: int,
-    max_shingle_freq: int | None,
 ) -> DataFrame:
     """(doc1, doc2, common, n1, n2) for every doc pair sharing >= 1
-    distinct word n-gram — the measure-independent core of BOTH
+    distinct word trigram — the measure-independent core of BOTH
     near-dup screens (Jaccard and containment differ only in the final
     scalar over these five columns), cached and checkpointed ONCE per
-    (input plan, n, cap) so a session running both screens builds the
+    input plan so a session running both screens builds the
     postings pipeline a single time (r13; before, the containment query
     replayed the whole explode+shuffle the jaccard cache had already
     materialized).
@@ -144,10 +139,9 @@ def _ngram_pair_counts(
     would perturb a count with probability ~|shingles|^2 / 2^64; treated
     as exact (the DuckDB string-based oracle agrees on the test corpora).
 
-    `max_shingle_freq` drops stop-shingle buckets (df > cap) BEFORE pair
-    generation — the scale lever: a shingle in f docs makes f^2/2 pairs,
-    so at 100 TB an uncapped hot shingle is the whole job. With a cap the
-    counts are lower bounds; None keeps them exact.
+    Counts are exact: every shingle bucket generates its pairs. A
+    shingle in f docs makes f^2/2 pairs, so at 100 TB a hot shingle is
+    the whole job.
 
     ALWAYS materialized (review r12): the pair-count table is tiny
     relative to the postings pass, and consumers (the two screens, the
@@ -156,25 +150,19 @@ def _ngram_pair_counts(
     non-file-backed inputs the cache skips.
     """
     return _PAIRS.get_or_build(
-        frame_key(df, "counts", text_col, id_col, n, max_shingle_freq),
-        lambda: _count_shared_shingles(df, text_col, id_col, n, max_shingle_freq),
+        frame_key(df, "counts", text_col, id_col),
+        lambda: _count_shared_shingles(df, text_col, id_col),
     )
 
 
-def _count_shared_shingles(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int,
-    max_shingle_freq: int | None,
-) -> DataFrame:
+def _count_shared_shingles(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """The uncached build behind `_ngram_pair_counts`."""
     # shingle_table spreads an under-partitioned scan across the cluster
     # (cached probe in rebalance_if_narrow); no extra probe here — the
     # raw df.rdd.getNumPartitions() this used to call compiles a fresh
     # RDD lineage per invocation (~0.3 s, r7 lesson) and duplicated the
     # rebalance shingle_table already performs.
-    sh = shingle_table(df, text_col, id_col, n)
+    sh = shingle_table(df, text_col, id_col, 3)
     # Per-doc shingle counts ride ALONG the postings (8 bytes/row of extra
     # shuffle) instead of a second shingle pass + two re-joins at the end.
     # explode_OUTER, not explode: plain explode triggers the
@@ -195,8 +183,6 @@ def _count_shared_shingles(
         .agg(F.sort_array(F.collect_list(F.struct("doc", "n"))).alias("ds"))
         .filter(F.size("ds") > 1)
     )
-    if max_shingle_freq is not None:
-        buckets = buckets.filter(F.size("ds") <= max_shingle_freq)
     # Spread the bucket arrays before the upper-triangle generation: the
     # generator's work is QUADRATIC in bucket size while the bucket rows
     # themselves are linear, and AQE's bytes-based coalescing sees only
@@ -231,13 +217,11 @@ def ngram_jaccard_pairs(
     text_col: str,
     id_col: str,
     *,
-    n: int = 3,
     threshold: float = 0.3,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (id1 < id2, jaccard >= threshold).
+    """Exact word-trigram Jaccard near-dup pairs (id1 < id2, jaccard >= threshold).
 
-    Jaccard = |A∩B| / (|A|+|B|-|A∩B|) over distinct word n-grams.
+    Jaccard = |A∩B| / (|A|+|B|-|A∩B|) over distinct word trigrams.
     The heavy pipeline lives in `_ngram_pair_counts` (shared with the
     containment screen and cached per session); this is one scalar +
     filter over that checkpointed five-column table. The thresholded
@@ -246,9 +230,7 @@ def ngram_jaccard_pairs(
     same object back.
     """
     def build() -> DataFrame:
-        counts = _ngram_pair_counts(
-            df, text_col, id_col, n=n, max_shingle_freq=max_shingle_freq
-        )
+        counts = _ngram_pair_counts(df, text_col, id_col)
         jaccard = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
         # no second checkpoint: a narrow filter+projection over the
         # already-checkpointed counts table — each consumer re-reads a
@@ -260,7 +242,7 @@ def ngram_jaccard_pairs(
         )
 
     return _PAIRS.get_or_build(
-        frame_key(df, "jacc", text_col, id_col, n, threshold, max_shingle_freq),
+        frame_key(df, "jacc", text_col, id_col, threshold),
         build,
     )
 
@@ -270,12 +252,10 @@ def ngram_containment_pairs(
     text_col: str,
     id_col: str,
     *,
-    n: int = 3,
     threshold: float = 0.8,
     min_shingles: int = 1,
-    max_shingle_freq: int | None = None,
 ) -> DataFrame:
-    """Exact n-gram CONTAINMENT pairs: the asymmetric near-dup measure
+    """Exact word-trigram CONTAINMENT pairs: the asymmetric near-dup measure
     C(A->B) = |A∩B| / |A| that catches quotes/excerpts/supersets, which
     Jaccard structurally misses (a 10-gram quote inside a 10 000-gram
     doc has Jaccard ~0.001 but containment 1.0). Emits both directions
@@ -286,9 +266,7 @@ def ngram_containment_pairs(
     counts are identical — only the final scalar differs), so a session
     running both builds the postings pipeline once (r13).
     """
-    counts = _ngram_pair_counts(
-        df, text_col, id_col, n=n, max_shingle_freq=max_shingle_freq
-    )
+    counts = _ngram_pair_counts(df, text_col, id_col)
     c12 = F.col("common") / F.col("n1")
     c21 = F.col("common") / F.col("n2")
     return (
@@ -360,16 +338,14 @@ def winnowing_fingerprint(
     text_col: str,
     id_col: str,
     *,
-    kgram: int = 8,
-    window: int = 4,
     hash: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing document fingerprint (rolling hash over char k-grams).
 
-    The MOSS scheme: hash every k-char gram (rolling window via substring
-    + hash — all codegen'd), then keep the minimum hash of each `window`
+    The MOSS scheme: hash every 8-char gram (rolling window via substring
+    + hash — all codegen'd), then keep the minimum hash of each 4
     consecutive grams; the distinct minima are the fingerprint set.
-    Guarantees any shared substring of length >= kgram+window-1 yields a
+    Guarantees any shared substring of length >= 11 yields a
     shared fingerprint — the standard near-dup/plagiarism sketch.
 
     `hash` picks the gram hash: "xxhash64" (JVM engine-specific, so no
@@ -387,7 +363,7 @@ def winnowing_fingerprint(
     back into the consumer when the staged column is referenced once —
     which turns the windowed-min pass into O(len^2) HASH evaluations (at
     sf0.1 that was 420M md5 calls, ~700 s, vs <2 s staged). The window
-    min is therefore built from `window` separate element lookups
+    min is therefore built from 4 separate element lookups
     (`least(get(g, j), get(g, j+1), ...)`): multiple references to a
     non-cheap alias block the collapse (asserted on the optimized plan in
     tests/test_plans.py), and per-window slice-array allocation is gone
@@ -404,11 +380,11 @@ def winnowing_fingerprint(
             "long"
         )
     c = F.col(text_col)
-    n_grams = F.length(c) - (kgram - 1)
+    n_grams = F.length(c) - 7
     grams = F.when(
         n_grams > 0,
         F.transform(
-            F.sequence(F.lit(1), n_grams), lambda i: hf(c.substr(i, F.lit(kgram)))
+            F.sequence(F.lit(1), n_grams), lambda i: hf(c.substr(i, F.lit(8)))
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     # the per-gram hash chain (~len hashes per row, md5 in the oracle
@@ -420,13 +396,13 @@ def winnowing_fingerprint(
     src = rebalance_if_narrow(df.select(F.col(id_col), F.col(text_col)))
     staged = src.select(F.col(id_col).alias("doc"), grams.alias("__grams"))
     g = F.col("__grams")
-    n_wins = F.size("__grams") - (window - 1)
+    n_wins = F.size("__grams") - 3
     wins = F.when(
         n_wins > 0,
         F.transform(
             F.sequence(F.lit(1), n_wins),
             # j is 1-based; F.get is 0-based
-            lambda j: F.least(*[F.get(g, j + k - 1) for k in range(window)]),
+            lambda j: F.least(*[F.get(g, j + k - 1) for k in range(4)]),
         ),
     ).otherwise(F.array().cast("array<bigint>"))
     staged2 = staged.select("doc", F.array_distinct(wins).alias("fingerprints"))
@@ -442,10 +418,7 @@ def minhash_lsh_pairs(
     text_col: str,
     id_col: str,
     *,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
     jaccard_distance_threshold: float = 0.7,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Approximate near-dup pairs via MinHash LSH (pyspark.ml).
 
@@ -456,10 +429,10 @@ def minhash_lsh_pairs(
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    sh = shingle_table(df, text_col, id_col, shingle_n, nonempty=True)
-    tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=num_features, binary=True)
+    sh = shingle_table(df, text_col, id_col, 3, nonempty=True)
+    tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True)
     feats = tf.transform(sh)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42)
+    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
     model = lsh.fit(feats)
     pairs = model.approxSimilarityJoin(feats, feats, jaccard_distance_threshold, distCol="jaccard_distance")
     return (
@@ -495,7 +468,6 @@ def _minhash_det_bands(
     *,
     num_perm: int,
     rows_per_band: int,
-    shingle_n: int,
 ) -> DataFrame:
     """(doc, sig, band, key) rows of the deterministic minhash banding —
     the shared core of `minhash_det_pairs` (full-corpus self-join) and
@@ -517,7 +489,7 @@ def _minhash_det_bands(
             f"(p={MINHASH_P}); use rows_per_band in (1, 2)"
         )
     n_bands = num_perm // rows_per_band
-    sh = shingle_table(df, text_col, id_col, shingle_n, nonempty=True)
+    sh = shingle_table(df, text_col, id_col, 3, nonempty=True)
     x = (
         F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
         % MINHASH_P
@@ -557,7 +529,6 @@ def minhash_det_pairs(
     num_perm: int = 16,
     rows_per_band: int = 2,
     threshold: float = 0.2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """MinHash LSH near-dup candidate pairs — NATIVE deterministic tier.
 
@@ -586,7 +557,7 @@ def minhash_det_pairs(
     """
     bands = _minhash_det_bands(
         df, text_col, id_col,
-        num_perm=num_perm, rows_per_band=rows_per_band, shingle_n=shingle_n,
+        num_perm=num_perm, rows_per_band=rows_per_band,
     )
     a = bands.select(
         F.col("doc").alias("doc1"), F.col("sig").alias("sig1"), "band", "key"
@@ -615,29 +586,23 @@ def minhash_det_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    *,
-    src: str = "doc1",
-    dst: str = "doc2",
-    max_iterations: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame, *, max_iterations: int = 20) -> DataFrame:
     """Cluster ids for near-dup pairs: each node gets the MIN node id
     reachable in its component — the canonical-representative step that
     turns pairwise dedup output into keep/drop decisions. Returns
     (node, cluster_id); see `min_label_fixpoint` for the rounds.
 
-    The result is memoized per session on (pairs, src, dst,
-    max_iterations): three registered queries run this exact fixpoint on
-    the SAME cached pairs frame (see _PAIRS). A DataFrame hashes by
+    The result is memoized per session on (pairs, max_iterations):
+    three registered queries run this exact fixpoint on the SAME cached
+    pairs frame (see _PAIRS). A DataFrame hashes by
     identity and the key holds the frame, so a recomputed or
     differently-parameterized pairs table can never be served a stale
     cluster map. Callers with their own, unshared edge frame call
     `min_label_fixpoint` directly, so they do not evict this entry.
     """
     return _CLUSTERS.get_or_build(
-        (pairs, src, dst, max_iterations),
-        lambda: min_label_fixpoint(pairs, src, dst, max_iterations),
+        (pairs, max_iterations),
+        lambda: min_label_fixpoint(pairs, "doc1", "doc2", max_iterations),
     )
 
 
@@ -733,21 +698,19 @@ def decontaminate_hits(
     corpus: DataFrame,
     benchmark: DataFrame,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination: which corpus docs share an n-gram with the
     eval set (the GPT-3/PaLM-style 13-gram overlap check, parameterized n).
 
-    Returns one row per contaminated corpus doc: (id_col, n_hit_grams) where
+    Returns one row per contaminated corpus doc: (doc_id, n_hit_grams) where
     n_hit_grams counts DISTINCT shared n-grams. Scale shape: the benchmark
     gram set is tiny relative to the corpus, so it is broadcast — the corpus
     grams are generated map-side, filtered by the broadcast hash join
     in-place, and only the surviving (doc, gram) pairs shuffle once for the
     per-doc count. The corpus is never self-joined and never sorted."""
     bench_grams = (
-        benchmark.select(norm_tokens_expr(text_col).alias("__toks"))
+        benchmark.select(norm_tokens_expr("text").alias("__toks"))
         .select(F.explode(ngrams_from_tokens(F.col("__toks"), n)).alias("gram"))
         .distinct()
     )
@@ -758,13 +721,13 @@ def decontaminate_hits(
     from hw_kafka_flink_health_spark.sources.files import rebalance_if_narrow
 
     corpus_grams = rebalance_if_narrow(
-        corpus.select(F.col(id_col), norm_tokens_expr(text_col).alias("__toks"))
+        corpus.select(F.col("doc_id"), norm_tokens_expr("text").alias("__toks"))
     ).select(
-        F.col(id_col), F.explode(ngrams_from_tokens(F.col("__toks"), n)).alias("gram")
+        F.col("doc_id"), F.explode(ngrams_from_tokens(F.col("__toks"), n)).alias("gram")
     )
     return (
         corpus_grams.join(F.broadcast(bench_grams), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hit_grams"))
     )
 
@@ -775,10 +738,7 @@ def minhash_incremental_candidates(
     text_col: str,
     id_col: str,
     *,
-    num_hash_tables: int = 8,
-    num_features: int = 1 << 18,
     jaccard_distance_threshold: float = 0.7,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Ingestion-time NEAR-dup detection: candidate pairs between a new
     batch and the existing corpus only — the incremental sibling of
@@ -796,16 +756,16 @@ def minhash_incremental_candidates(
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
     def featurize(df):
-        sh = shingle_table(df, text_col, id_col, shingle_n, nonempty=True)
+        sh = shingle_table(df, text_col, id_col, 3, nonempty=True)
         tf = HashingTF(
-            inputCol="sh", outputCol="features", numFeatures=num_features, binary=True
+            inputCol="sh", outputCol="features", numFeatures=1 << 18, binary=True
         )
         return tf.transform(sh)
 
     hist_f = featurize(history)
     batch_f = featurize(batch)
     lsh = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
+        inputCol="features", outputCol="hashes", numHashTables=8, seed=42
     )
     model = lsh.fit(hist_f)
     pairs = model.approxSimilarityJoin(
@@ -824,10 +784,7 @@ def minhash_det_incremental_candidates(
     text_col: str,
     id_col: str,
     *,
-    num_perm: int = 16,
-    rows_per_band: int = 2,
     threshold: float = 0.2,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Deterministic tier of the ingestion-time near-dup screen: the
     asymmetric sibling of `minhash_det_pairs` — candidates come from
@@ -843,7 +800,7 @@ def minhash_det_incremental_candidates(
 
     Returns (new_doc, old_doc, est_jaccard), est_jaccard >= threshold.
     """
-    kw = dict(num_perm=num_perm, rows_per_band=rows_per_band, shingle_n=shingle_n)
+    kw = dict(num_perm=16, rows_per_band=2)
     new_b = _minhash_det_bands(batch, text_col, id_col, **kw).select(
         F.col("doc").alias("new_doc"), F.col("sig").alias("new_sig"), "band", "key"
     )
@@ -863,5 +820,5 @@ def minhash_det_incremental_candidates(
     return cand.select(
         "new_doc",
         "old_doc",
-        (matches / F.lit(float(num_perm))).alias("est_jaccard"),
+        (matches / F.lit(16.0)).alias("est_jaccard"),
     ).filter(F.col("est_jaccard") >= threshold)

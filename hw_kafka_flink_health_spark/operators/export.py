@@ -48,11 +48,8 @@ def write_webdataset_shards(
     df: DataFrame,
     out_dir: str,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     meta_cols: tuple[str, ...] = (),
     n_shards: int = 4,
-    salt: str = "wds",
 ) -> None:
     """Write `shard-{N:05d}.tar` files under out_dir: each sample is a
     `{pos:08d}.txt` member (utf-8 text) followed by `{pos:08d}.json`
@@ -63,8 +60,8 @@ def write_webdataset_shards(
     ship_package(df.sparkSession)
     os.makedirs(out_dir, exist_ok=True)
 
-    cols = [id_col, text_col, *meta_cols]
-    draw = hash_unit(id_col, salt)
+    cols = ["doc_id", "text", *meta_cols]
+    draw = hash_unit("doc_id", "wds")
     out = (
         df.select(*cols)
         .withColumn("__draw", draw)
@@ -75,7 +72,7 @@ def write_webdataset_shards(
             ),
         )
         .repartition(n_shards, F.col("__shard"))
-        .sortWithinPartitions("__shard", "__draw", id_col)
+        .sortWithinPartitions("__shard", "__draw", "doc_id")
     )
 
     def write_partition(rows) -> None:
@@ -96,8 +93,8 @@ def write_webdataset_shards(
                     os.path.join(out_dir, f"shard-{shard:05d}.tar"), "w"
                 )
             key = f"{pos:08d}"
-            _add_member(tar, f"{key}.txt", str(row[text_col]).encode("utf-8"))
-            meta = {id_col: row[id_col], **{c: row[c] for c in meta_cols}}
+            _add_member(tar, f"{key}.txt", str(row["text"]).encode("utf-8"))
+            meta = {"doc_id": row["doc_id"], **{c: row[c] for c in meta_cols}}
             _add_member(
                 tar,
                 f"{key}.json",

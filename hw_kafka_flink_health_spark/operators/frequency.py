@@ -100,23 +100,28 @@ def heavy_hitters(
     )
 
 
+# Sketch shapes. Build and probe hash with the same family, so each pair
+# shares one constant.
+CMS_DEPTH, CMS_WIDTH = 4, 1024
+BLOOM_BITS, BLOOM_HASHES = 1 << 16, 5
+AMS_ESTIMATORS, AMS_COUNTERS = 5, 64
+
+
 def cms_build(
     df: DataFrame,
     key: str | Column,
     *,
-    depth: int = 4,
-    width: int = 1024,
     hash: str = "xxhash64",
     weight: str | Column | None = None,
 ) -> DataFrame:
-    """Count-min sketch over a key column: a (depth × width) counter table
+    """Count-min sketch over a key column: a (CMS_DEPTH × CMS_WIDTH) counter table
     as a tiny DataFrame (seed, bucket, cnt) — the mergeable approximate
     sibling of `heavy_hitters`.
 
-    Distributed shape: each input row fans out to `depth` (seed, bucket)
+    Distributed shape: each input row fans out to CMS_DEPTH (seed, bucket)
     pairs map-side (posexplode of a d-element bucket array computed with
     xxhash64 — JVM codegen, no Python), then ONE map-side-combined groupBy
-    whose shuffle carries at most depth×width partial rows per task —
+    whose shuffle carries at most CMS_DEPTH×CMS_WIDTH partial rows per task —
     O(d·w), never O(distinct keys). That is the whole point at token
     scale: the shuffle is constant-size regardless of key cardinality,
     and two sketches over disjoint data merge by counter addition
@@ -132,7 +137,8 @@ def cms_build(
     and hashing ~10^7 vocabulary entries.
 
     Guarantee (standard CMS): estimate >= true count always; estimate <=
-    true + eps*N with probability 1-delta for eps=e/width, delta=e^-depth.
+    true + eps*N with probability 1-delta for eps=e/CMS_WIDTH,
+    delta=e^-CMS_DEPTH.
     """
     kcol = F.col(key) if isinstance(key, str) else key
     hf = _seeded_hash(hash)
@@ -144,7 +150,7 @@ def cms_build(
         kcol.cast("string").alias("key"), wcol.alias("__w")
     ).filter(F.col("key").isNotNull())
     buckets = F.array(
-        *[(hf(F.col("key"), d) % width).cast("int") for d in range(depth)]
+        *[(hf(F.col("key"), d) % CMS_WIDTH).cast("int") for d in range(CMS_DEPTH)]
     )
     return (
         keyed.select(F.posexplode(buckets).alias("seed", "bucket"), "__w")
@@ -167,25 +173,22 @@ def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
 def cms_estimate(
     sketch: DataFrame,
     keys: DataFrame,
-    key: str = "key",
     *,
-    depth: int = 4,
-    width: int = 1024,
     hash: str = "xxhash64",
 ) -> DataFrame:
     """Point-query the sketch for each row of `keys`: estimate = min over
-    the depth counters the key hashes into. depth/width/hash MUST match
-    the build call — they define the hash family. The sketch is d×w rows —
+    the depth counters the key hashes into. `hash` MUST match the build
+    call — it defines the hash family. The sketch is d×w rows —
     broadcast; the (typically small) candidate set joins it without
     shuffling the corpus. Keys never inserted estimate as the min of
     whatever collided into their buckets (>= 0, standard CMS behavior)."""
-    kcol = F.col(key).cast("string")
+    kcol = F.col("key").cast("string")
     hf = _seeded_hash(hash)
     buckets = F.array(
-        *[(hf(kcol, d) % width).cast("int") for d in range(depth)]
+        *[(hf(kcol, d) % CMS_WIDTH).cast("int") for d in range(CMS_DEPTH)]
     )
     probes = keys.select(
-        F.col(key).alias("key"), F.posexplode(buckets).alias("seed", "bucket")
+        F.col("key").alias("key"), F.posexplode(buckets).alias("seed", "bucket")
     )
     return (
         probes.join(F.broadcast(sketch), ["seed", "bucket"], "left")
@@ -198,8 +201,6 @@ def bloom_build(
     df: DataFrame,
     key: str | Column,
     *,
-    n_bits: int = 1 << 16,
-    n_hashes: int = 5,
     hash: str = "xxhash64",
 ) -> DataFrame:
     """Bloom filter as a DataFrame: the set of SET bit positions (one int
@@ -208,7 +209,7 @@ def bloom_build(
     is a small relational value that merges with plain relational ops
     (Bloom merge = UNION DISTINCT of positions; containment = all k
     positions present). The build is an explode of k xxhash64 positions
-    + one distinct whose shuffle is capped at n_bits rows — O(m), never
+    + one distinct whose shuffle is capped at BLOOM_BITS rows — O(m), never
     O(distinct keys). This is the portable cousin of the parquet-footer
     bloom indexes in operators/storage.py: those live in file metadata
     for scan pruning; this one is a first-class value you can join,
@@ -218,47 +219,44 @@ def bloom_build(
     keyed = df.select(kcol.cast("string").alias("key")).filter(F.col("key").isNotNull())
     positions = F.array(
         *[
-            (hf(F.col("key"), 1000 + d) % n_bits).cast("int")
-            for d in range(n_hashes)
+            (hf(F.col("key"), 1000 + d) % BLOOM_BITS).cast("int")
+            for d in range(BLOOM_HASHES)
         ]
     )
     return keyed.select(F.explode(positions).alias("pos")).distinct()
 
 
 def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Union of two filters built with the same (n_bits, n_hashes): the
-    merged filter answers membership for the union of both key sets —
-    exactly (same positions as building from the concatenated input)."""
+    """Union of two filters built with the same `hash`: the merged filter
+    answers membership for the union of both key sets — exactly (same
+    positions as building from the concatenated input)."""
     return a.unionByName(b).distinct()
 
 
 def bloom_probe(
     bloom: DataFrame,
     keys: DataFrame,
-    key: str = "key",
     *,
-    n_bits: int = 1 << 16,
-    n_hashes: int = 5,
     hash: str = "xxhash64",
 ) -> DataFrame:
     """(key, maybe_present) for each probe row: present iff ALL k bit
     positions are set. No false negatives ever; false-positive rate
     ~(1 - e^{-kn/m})^k, pinned by test. The bloom side broadcasts (<=
-    n_bits rows); probing is a left join + count match — no shuffle of
+    BLOOM_BITS rows); probing is a left join + count match — no shuffle of
     the probe side beyond its own aggregate. NULL probe keys are dropped,
     mirroring `bloom_build`'s NULL filter: NULL has no membership
     verdict (it was never inserted and hashing it would just hash the
     seed)."""
-    kcol = F.col(key).cast("string")
+    kcol = F.col("key").cast("string")
     hf = _seeded_hash(hash)
     positions = F.array(
         *[
-            (hf(kcol, 1000 + d) % n_bits).cast("int")
-            for d in range(n_hashes)
+            (hf(kcol, 1000 + d) % BLOOM_BITS).cast("int")
+            for d in range(BLOOM_HASHES)
         ]
     )
-    probes = keys.filter(F.col(key).isNotNull()).select(
-        F.col(key).alias("key"), F.explode(positions).alias("pos")
+    probes = keys.filter(F.col("key").isNotNull()).select(
+        F.col("key").alias("key"), F.explode(positions).alias("pos")
     )
     marked = probes.join(
         F.broadcast(bloom.withColumn("__hit", F.lit(1))), "pos", "left"
@@ -273,14 +271,12 @@ def ams_f2_sketch(
     df: DataFrame,
     key: str | Column,
     *,
-    n_counters: int = 64,
-    n_estimators: int = 5,
     hash: str = "xxhash64",
 ) -> DataFrame:
     """AMS (Alon–Matias–Szegedy) sketch for the second frequency moment
     F2 = Σ f_k² — the collision/self-join-size statistic: completes the
     frequency-moment family (F0 = HLL, F1 = count, heavy F∞ = two-phase
-    prune, point queries = CMS). Each estimator row e holds `n_counters`
+    prune, point queries = CMS). Each estimator row e holds AMS_COUNTERS
     signed counters: counter c accumulates ±1 per occurrence (sign and
     bucket from xxhash64). Like CMS this is a LINEAR sketch — counters
     add across partitions/batches (map-side-combined agg, O(e·c) shuffle
@@ -295,14 +291,14 @@ def ams_f2_sketch(
         *[
             F.struct(
                 F.lit(e).alias("est"),
-                (hf(F.col("key"), 2000 + e) % n_counters)
+                (hf(F.col("key"), 2000 + e) % AMS_COUNTERS)
                 .cast("int")
                 .alias("counter"),
                 F.when(hf(F.col("key"), 3000 + e) % 2 == 0, 1)
                 .otherwise(-1)
                 .alias("sgn"),
             )
-            for e in range(n_estimators)
+            for e in range(AMS_ESTIMATORS)
         ]
     )
     return (

@@ -35,13 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def daily_partials(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def daily_partials(events: DataFrame) -> DataFrame:
     """Per-(day, key) algebraic partial states for one ingest slice.
 
     Emits only mergeable states (count/sum/min/max). The sum is carried
@@ -55,17 +49,17 @@ def daily_partials(
     """
     return (
         events.groupBy(
-            F.to_date(F.col(ts_col)).alias("day"),
-            F.col(key_col).alias("key"),
+            F.to_date(F.col("ts")).alias("day"),
+            F.col("event_type").alias("key"),
         ).agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(
-                F.floor(F.col(value_col).cast("double") * 100 + 0.5).cast("bigint")
+                F.floor(F.col("value").cast("double") * 100 + 0.5).cast("bigint")
             ).alias(
                 "sum_cents"
             ),
-            F.min(F.col(value_col).cast("double")).alias("min_value"),
-            F.max(F.col(value_col).cast("double")).alias("max_value"),
+            F.min(F.col("value").cast("double")).alias("min_value"),
+            F.max(F.col("value").cast("double")).alias("max_value"),
         )
     )
 

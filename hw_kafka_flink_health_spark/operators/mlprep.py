@@ -38,25 +38,17 @@ def hash_bucket(col: Column | str, buckets: int = 10, salt: str = "") -> Column:
     return (h.cast("bigint") % buckets).cast("bigint")
 
 
-def train_valid_test_split(
-    df: DataFrame,
-    id_col: str,
-    *,
-    train: int = 8,
-    valid: int = 1,
-    buckets: int = 10,
-    salt: str = "",
-) -> DataFrame:
+def train_valid_test_split(df: DataFrame, id_col: str, *, salt: str = "") -> DataFrame:
     """Tag each row 'train' / 'valid' / 'test' by hash bucket of its id.
 
-    `train` and `valid` are bucket counts out of `buckets` (remainder is
-    test). Salting lets different experiments draw independent splits
+    Of 10 buckets, 8 are train, 1 is valid and the remainder is test.
+    Salting lets different experiments draw independent splits
     from the same corpus without correlation between them.
     """
-    b = hash_bucket(id_col, buckets, salt)
+    b = hash_bucket(id_col, 10, salt)
     split = (
-        F.when(b < train, "train")
-        .when(b < train + valid, "valid")
+        F.when(b < 8, "train")
+        .when(b < 9, "valid")
         .otherwise("test")
     )
     return df.withColumn("split", split)
@@ -104,13 +96,7 @@ def stratified_sample(
     return df.filter(u < frac)
 
 
-def shuffle_shards(
-    df: DataFrame,
-    id_col: str,
-    *,
-    n_shards: int = 8,
-    salt: str = "shuffle",
-) -> DataFrame:
+def shuffle_shards(df: DataFrame, id_col: str, *, n_shards: int = 8) -> DataFrame:
     """Deterministic global shuffle + shard assignment for training export.
 
     Every pretraining run needs the corpus in a random-but-reproducible
@@ -118,7 +104,7 @@ def shuffle_shards(
     global sort and Spark's sampled RangePartitioner (whose cut points are
     non-deterministic across runs):
 
-    * ``draw`` — a portable uniform draw in [0,1) from md5(id||salt)
+    * ``draw`` — a portable uniform draw in [0,1) from md5(id||'shuffle')
       (`hash_unit`) defines the global permutation.
     * ``shard = floor(draw * n_shards)`` — fixed uniform cut points on the
       draw, so shards are contiguous slices of the permutation with
@@ -137,7 +123,7 @@ def shuffle_shards(
     unchanged rows (new rows interleave deterministically), which a
     seeded `orderBy(rand())` cannot do.
     """
-    draw = hash_unit(id_col, salt)
+    draw = hash_unit(id_col, "shuffle")
     out = df.withColumn("draw", draw).withColumn(
         "shard", F.least(F.floor(F.col("draw") * n_shards), F.lit(n_shards - 1)).cast("bigint")
     )
@@ -145,9 +131,7 @@ def shuffle_shards(
     return out.withColumn("pos", (F.row_number().over(w) - 1).cast("bigint"))
 
 
-def int8_quantize_stats(
-    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def int8_quantize_stats(df: DataFrame) -> DataFrame:
     """Per-vector int8 quantization (min/max affine, 256 levels) with
     reconstruction audit — the compression step before shipping vectors
     to an ANN index or a feature store (4x smaller than float32).
@@ -163,7 +147,7 @@ def int8_quantize_stats(
     vectors (scale 0) would yield null codes; the caller filters them
     (can't happen for real embeddings).
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     df = df.withColumn("_v", v)
     mn = F.array_min(F.col("_v"))
     scale = (F.array_max(F.col("_v")) - mn) / F.lit(255.0)
@@ -175,7 +159,7 @@ def int8_quantize_stats(
         lambda x: F.abs(x - (F.col("_mn") + code(x) * F.col("_scale"))),
     )
     return df.select(
-        id_col,
+        "vec_id",
         F.round(F.col("_mn"), 6).alias("mn"),
         F.round(F.col("_scale"), 8).alias("scale"),
         F.aggregate(codes, F.lit(0).cast("bigint"), lambda a, x: a + x.cast("bigint"))
@@ -204,8 +188,6 @@ def write_shuffled_shards(
     id_col: str,
     *,
     n_shards: int = 8,
-    salt: str = "shuffle",
-    mode: str = "overwrite",
 ) -> None:
     """Materialize `shuffle_shards` as the physical training export: one
     parquet file per shard, rows inside each file in permutation order.
@@ -226,7 +208,7 @@ def write_shuffled_shards(
     file order already encodes position, so neither `pos` nor the `draw`
     sort key is persisted.
     """
-    draw = hash_unit(id_col, salt)
+    draw = hash_unit(id_col, "shuffle")
     out = df.withColumn("draw", draw).withColumn(
         "shard",
         F.least(F.floor(F.col("draw") * n_shards), F.lit(n_shards - 1)).cast("bigint"),
@@ -239,7 +221,7 @@ def write_shuffled_shards(
         out.repartition(n_shards, F.col("shard"))
         .sortWithinPartitions("shard", "draw", id_col)
         .drop("draw")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("shard")
         .parquet(path)
     )

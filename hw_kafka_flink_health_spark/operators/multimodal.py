@@ -6,9 +6,9 @@ as Arrow-batched pandas functions over ``mapInPandas`` so each Python
 worker sees a columnar batch, never a row at a time.
 
 The actual codec step is environment-dependent (no image/audio libs in
-this container), so `decode_image_batch` raises NotImplementedError unless
-a decoder is injected; `fake_decode` is the deterministic stand-in used by
-tests — it exercises the REAL Spark plumbing (schema, partitioning, UDF
+this container), so `decode_image_batch` raises NotImplementedError;
+`fake_decode` is the deterministic stand-in `extract_features` runs — it
+exercises the REAL Spark plumbing (schema, partitioning, UDF
 signature, Arrow batch shape) with a fake pixel-stats computation derived
 from the payload bytes.
 
@@ -17,7 +17,7 @@ Extension surface (SURVEY §2.C): driver-mandated multimodal columns; the refere
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 
@@ -31,10 +31,10 @@ FEATURE_SCHEMA = (
 )
 
 
-def attach_payload_metadata(assets: DataFrame, payload_col: str = "payload") -> DataFrame:
+def attach_payload_metadata(assets: DataFrame) -> DataFrame:
     """Cheap JVM-side metadata: byte length + content hash (no decode)."""
-    return assets.withColumn("byte_len", F.octet_length(F.col(payload_col)).cast("long")).withColumn(
-        "content_md5", F.md5(F.col(payload_col))
+    return assets.withColumn("byte_len", F.octet_length(F.col("payload")).cast("long")).withColumn(
+        "content_md5", F.md5(F.col("payload"))
     )
 
 
@@ -54,12 +54,11 @@ def decode_image_batch(payloads: pd.Series) -> pd.Series:
     """Real decoder slot for COMPRESSED formats — jpeg/png libs are absent
     in this environment. Uncompressed containers have real pure-Python
     codecs here: `parse_bmp24` (24-bit BMP) and `parse_wav_pcm16`
-    (RIFF/WAVE PCM16); inject those or a library codec via
-    extract_features(decoder=...)."""
+    (RIFF/WAVE PCM16)."""
     raise NotImplementedError(
         "compressed-image decoding requires a codec library not present in "
-        "this container; inject a decoder via extract_features(decoder=...) "
-        "— parse_bmp24 / parse_wav_pcm16 cover the uncompressed formats"
+        "this container — parse_bmp24 / parse_wav_pcm16 cover the "
+        "uncompressed formats"
     )
 
 
@@ -168,16 +167,11 @@ def parse_wav_pcm16(payload: bytes):
     return rate, np.frombuffer(data, dtype="<i2")
 
 
-def extract_features(
-    assets: DataFrame,
-    *,
-    decoder: Callable[[bytes], list[float]] = fake_decode,
-    payload_col: str = "payload",
-) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over mapInPandas.
 
     Per-batch (not per-row) Python: each iteration receives a columnar
-    pandas batch; the decoder runs once per asset; summary stats are
+    pandas batch; `fake_decode` runs once per asset; summary stats are
     vectorized. Partitioning is preserved — no shuffle is introduced.
     """
     import numpy as np
@@ -188,7 +182,7 @@ def extract_features(
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [decoder(p) for p in pdf[payload_col]]
+            feats = [fake_decode(p) for p in pdf["payload"]]
             means = [float(np.mean(f)) if f else 0.0 for f in feats]
             stds = [float(np.std(f)) if f else 0.0 for f in feats]
             dims = [len(f) for f in feats]
@@ -196,7 +190,7 @@ def extract_features(
                 {
                     "asset_id": pdf["asset_id"],
                     "modality": pdf["modality"],
-                    "byte_len": [len(p) if p is not None else 0 for p in pdf[payload_col]],
+                    "byte_len": [len(p) if p is not None else 0 for p in pdf["payload"]],
                     "feat_mean": means,
                     "feat_std": stds,
                     "feat_dim": dims,
@@ -216,16 +210,14 @@ def resize_images(
     *,
     target_w: int = 64,
     target_h: int = 64,
-    decoder: Callable[[bytes], list[float]] | None = None,
-    payload_col: str = "payload",
 ) -> DataFrame:
     """Resize stage: mapInPandas, one Arrow batch at a time.
 
     With no real codec in this environment, the resample is a
     deterministic byte-stride downsample of the payload (same shape of
-    work as a real resize: decode -> resample -> re-encode); inject
-    `decoder` when codecs exist. The Spark-side plumbing — schema,
-    batch iteration, binary columns in Arrow — is the real thing.
+    work as a real resize: decode -> resample -> re-encode). The
+    Spark-side plumbing — schema, batch iteration, binary columns in
+    Arrow — is the real thing.
     """
     from hw_kafka_flink_health_spark.pyship import ship_package
 
@@ -235,7 +227,7 @@ def resize_images(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             outs = []
-            for p in pdf[payload_col]:
+            for p in pdf["payload"]:
                 if p is None or len(p) == 0:
                     outs.append(b"")
                 else:
@@ -257,12 +249,7 @@ def resize_images(
 FRAME_SCHEMA = "asset_id long, frame_idx int, frame_payload binary"
 
 
-def sample_frames(
-    assets: DataFrame,
-    *,
-    n_frames: int = 4,
-    payload_col: str = "payload",
-) -> DataFrame:
+def sample_frames(assets: DataFrame) -> DataFrame:
     """Frame-sampling stage (video modality): 1 input row -> n output rows.
 
     Demonstrates the expanding mapInPandas shape (a flat-map, which
@@ -277,11 +264,11 @@ def sample_frames(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
-            for aid, p in zip(pdf["asset_id"], pdf[payload_col]):
+            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
                 if p is None or len(p) == 0:
                     continue
-                chunk = max(1, len(p) // n_frames)
-                for i in range(n_frames):
+                chunk = max(1, len(p) // 4)
+                for i in range(4):
                     ids.append(aid)
                     idxs.append(i)
                     frames.append(bytes(p[i * chunk : (i + 1) * chunk]))
@@ -334,7 +321,7 @@ def synthesize_codec_assets(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id").mapInPandas(op, schema=CODEC_ASSET_SCHEMA)
 
 
-def decode_codec_stats(assets: DataFrame, *, payload_col: str = "payload") -> DataFrame:
+def decode_codec_stats(assets: DataFrame) -> DataFrame:
     """Decode stage: parse each binary payload with the REAL container
     parser for its modality (BMP header/padding/row-order walk, or WAV
     RIFF chunk walk) and emit integer statistics over the decoded values
@@ -351,7 +338,7 @@ def decode_codec_stats(assets: DataFrame, *, payload_col: str = "payload") -> Da
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for aid, mod, p in zip(pdf["asset_id"], pdf["modality"], pdf[payload_col]):
+            for aid, mod, p in zip(pdf["asset_id"], pdf["modality"], pdf["payload"]):
                 buf = bytes(p)
                 if mod == "image":
                     w, h, rgb = parse_bmp24(buf)
@@ -429,7 +416,6 @@ def resize_raw_rgb(
     *,
     target_w: int = 32,
     target_h: int = 32,
-    payload_col: str = "payload",
 ) -> DataFrame:
     """REAL image resize + channel statistics over the raw_rgb format:
     numpy nearest-neighbor via index-grid fancy indexing (the O(out_pixels)
@@ -447,7 +433,7 @@ def resize_raw_rgb(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for aid, p in zip(pdf["asset_id"], pdf[payload_col]):
+            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
                 img = decode_raw_rgb(bytes(p))
                 h, w = img.shape[0], img.shape[1]
                 ys = (np.arange(target_h) * h // target_h).astype(np.int64)
@@ -486,7 +472,6 @@ def resize_raw_rgb_arrow(
     *,
     target_w: int = 32,
     target_h: int = 32,
-    payload_col: str = "payload",
 ) -> DataFrame:
     """`mapInArrow` twin of `resize_raw_rgb` — the fastest Python escape
     hatch for BINARY payloads. mapInPandas boxes every payload into a
@@ -506,7 +491,7 @@ def resize_raw_rgb_arrow(
     def op(batches):
         for batch in batches:
             ids = batch.column("asset_id")
-            payloads = batch.column(payload_col)
+            payloads = batch.column("payload")
             out_ids, means, payload_out = [], [], []
             for aid, p in zip(ids, payloads):
                 img = decode_raw_rgb(memoryview(p.as_buffer()))
@@ -540,11 +525,7 @@ AUDIO_FEATURE_SCHEMA = (
 )
 
 
-def audio_features_pcm16(
-    assets: DataFrame,
-    *,
-    payload_col: str = "payload",
-) -> DataFrame:
+def audio_features_pcm16(assets: DataFrame) -> DataFrame:
     """REAL audio features over raw little-endian PCM16 payloads: RMS
     level, zero-crossing rate, and normalized peak — the standard
     silence/clipping screens a speech-data pipeline runs before
@@ -559,7 +540,7 @@ def audio_features_pcm16(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for aid, p in zip(pdf["asset_id"], pdf[payload_col]):
+            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
                 x = np.frombuffer(bytes(p), dtype="<i2").astype(np.float64) / 32768.0
                 n = x.size
                 if n == 0:
@@ -587,7 +568,6 @@ def video_frame_stats_raw(
     *,
     frame_w: int,
     frame_h: int,
-    payload_col: str = "payload",
 ) -> DataFrame:
     """REAL video analysis over raw concatenated RGB frames (payload =
     k frames of w*h*3 uint8, no container format): per-frame channel
@@ -605,7 +585,7 @@ def video_frame_stats_raw(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for aid, p in zip(pdf["asset_id"], pdf[payload_col]):
+            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
                 buf = bytes(p)
                 k = len(buf) // fbytes
                 prev = None
@@ -636,12 +616,7 @@ AUDIO_SPECTRUM_SCHEMA = (
 )
 
 
-def audio_spectrum_pcm16(
-    assets: DataFrame,
-    *,
-    sample_rate: int = 16000,
-    payload_col: str = "payload",
-) -> DataFrame:
+def audio_spectrum_pcm16(assets: DataFrame, *, sample_rate: int = 16000) -> DataFrame:
     """REAL spectral analysis over raw PCM16: one rFFT per clip yields the
     dominant frequency + its power share, the spectral centroid, and the
     energy split across low (<300 Hz) / mid (300-3400 Hz) / high bands —
@@ -658,7 +633,7 @@ def audio_spectrum_pcm16(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for aid, p in zip(pdf["asset_id"], pdf[payload_col]):
+            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
                 b = bytes(p)
                 # PCM16 frames are 2 bytes; tolerate a truncated tail byte
                 x = np.frombuffer(b[: len(b) // 2 * 2], dtype="<i2").astype(np.float64) / 32768.0
@@ -704,13 +679,7 @@ VAD_SCHEMA = (
 )
 
 
-def vad_pcm16(
-    assets: DataFrame,
-    *,
-    frame_samples: int = 16,
-    energy_threshold: int = 5_600_000,
-    payload_col: str = "payload",
-) -> DataFrame:
+def vad_pcm16(assets: DataFrame) -> DataFrame:
     """Energy-gate VOICE ACTIVITY DETECTION over RIFF/WAVE PCM16 payloads
     — the first stage of every speech-data pipeline (silence trimming,
     speech-segment extraction before transcription). The real container
@@ -730,13 +699,13 @@ def vad_pcm16(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for aid, p in zip(pdf["asset_id"], pdf[payload_col]):
+            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
                 _, s = parse_wav_pcm16(bytes(p))
                 x = s.astype(np.int64)
-                nf = x.size // frame_samples
-                fr = x[: nf * frame_samples].reshape(nf, frame_samples)
+                nf = x.size // 16
+                fr = x[: nf * 16].reshape(nf, 16)
                 energy = (fr * fr).sum(axis=1)
-                active = energy > energy_threshold
+                active = energy > 5_600_000
                 pad = np.concatenate(([0], active.astype(np.int64), [0]))
                 d = np.diff(pad)
                 starts = np.flatnonzero(d == 1)
@@ -770,12 +739,10 @@ def vad_pcm16(
 PHASH_SCHEMA = "asset_id long, w long, h long, phash long"
 
 
-def phash_codec_images(
-    assets: DataFrame, *, payload_col: str = "payload", n_buckets: int = 16
-) -> DataFrame:
+def phash_codec_images(assets: DataFrame) -> DataFrame:
     """Perceptual average-hash over REAL decoded BMP pixels — the image
     near-dup fingerprint (aHash family): bucket the grayscale stream
-    into `n_buckets` contiguous index ranges and set bit b iff bucket
+    into 16 contiguous index ranges and set bit b iff bucket
     b's mean exceeds the image mean. Every step is integer (gray =
     r+g+b per pixel; the mean comparison cross-multiplies: bsum * n_px >
     total * bcnt), so the 16-bit signature is engine-exact and a SQL
@@ -796,26 +763,26 @@ def phash_codec_images(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for aid, p in zip(pdf["asset_id"], pdf[payload_col]):
+            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
                 w, h, rgb = parse_bmp24(bytes(p))
                 px = np.frombuffer(rgb, dtype=np.uint8).astype(np.int64)
                 gray = px.reshape(-1, 3).sum(axis=1)
                 n = int(gray.size)
-                b = (np.arange(n) * n_buckets) // n
+                b = (np.arange(n) * 16) // n
                 # same exactness guard as tile_codec (r12): bincount's
                 # float64 accumulation is integer-exact only while a
                 # bucket total stays < 2^53 (n < 2^42 at max gray 765)
                 if n < 1 << 42:
                     bsum = np.bincount(
-                        b, weights=gray, minlength=n_buckets
+                        b, weights=gray, minlength=16
                     ).astype(np.int64)
                 else:  # exact scatter fallback for absurd asset sizes
-                    bsum = np.zeros(n_buckets, dtype=np.int64)
+                    bsum = np.zeros(16, dtype=np.int64)
                     np.add.at(bsum, b, gray)
-                bcnt = np.bincount(b, minlength=n_buckets).astype(np.int64)
+                bcnt = np.bincount(b, minlength=16).astype(np.int64)
                 total = int(gray.sum())
                 ph = 0
-                for i in range(n_buckets):
+                for i in range(16):
                     if int(bsum[i]) * n > total * int(bcnt[i]):
                         ph |= 1 << i
                 out.append((int(aid), int(w), int(h), ph))
@@ -832,9 +799,7 @@ TILE_SCHEMA = (
 )
 
 
-def tile_codec_images(
-    assets: DataFrame, *, payload_col: str = "payload", grid: int = 2
-) -> DataFrame:
+def tile_codec_images(assets: DataFrame, *, grid: int = 2) -> DataFrame:
     """Spatial tiling over REAL decoded BMP pixels — the patch-extraction
     plumbing every vision-transformer ingest pipeline needs (image ->
     grid x grid tiles -> per-tile statistics). Stricter than
@@ -857,7 +822,7 @@ def tile_codec_images(
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for aid, p in zip(pdf["asset_id"], pdf[payload_col]):
+            for aid, p in zip(pdf["asset_id"], pdf["payload"]):
                 w, h, rgb = parse_bmp24(bytes(p))
                 px = np.frombuffer(rgb, dtype=np.uint8).astype(np.int64)
                 gray = px.reshape(-1, 3).sum(axis=1)

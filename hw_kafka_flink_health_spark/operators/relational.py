@@ -159,7 +159,6 @@ def top_k_per_group(
     group_cols: list[str],
     order_cols: list,
     k: int,
-    rank_alias: str = "rank",
 ) -> DataFrame:
     """Top-k rows per group via row_number (deterministic iff order_cols
     form a total order within each group — pass a unique tiebreaker).
@@ -169,8 +168,8 @@ def top_k_per_group(
     """
     w = Window.partitionBy(*group_cols).orderBy(*order_cols)
     return (
-        df.withColumn(rank_alias, F.row_number().over(w).cast("long"))
-        .filter(F.col(rank_alias) <= k)
+        df.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -195,15 +194,8 @@ def merge_upsert(
     return keep.unionByName(updates)
 
 
-def winsorize(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    *,
-    lo: float = 0.01,
-    hi: float = 0.99,
-) -> DataFrame:
-    """Clip `value_col` to per-group exact [lo, hi] percentiles — the
+def winsorize(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
+    """Clip `value_col` to per-group exact [1%, 99%] percentiles — the
     outlier-trim pass before aggregate features feed a model (sensor
     glitches in a health stream, crawler junk in a corpus).
 
@@ -214,8 +206,8 @@ def winsorize(
     streaming sketch merge.
     """
     pcts = df.groupBy(group_col).agg(
-        F.percentile(value_col, F.lit(lo)).alias("_p_lo"),
-        F.percentile(value_col, F.lit(hi)).alias("_p_hi"),
+        F.percentile(value_col, F.lit(0.01)).alias("_p_lo"),
+        F.percentile(value_col, F.lit(0.99)).alias("_p_hi"),
     )
     return (
         df.join(F.broadcast(pcts), group_col)
@@ -317,7 +309,6 @@ def global_prefix_sums(
     order_cols: list,
     *,
     out_cols: list | None = None,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Multi-column :func:`global_prefix_sum`: ONE range shuffle + ONE
     bounded offsets collect computes the inclusive running total of EACH
@@ -330,7 +321,6 @@ def global_prefix_sums(
         value_cols,
         order_cols,
         out_cols=out_cols,
-        n_partitions=n_partitions,
     )
 
 

@@ -30,6 +30,9 @@ from pyspark.sql import functions as F
 # OOM the driver mid-collect.
 MAX_QUERY_SET_ROWS = 65_536
 MAX_TRAIN_SAMPLE_ROWS = 1_000_000
+# Both exact tiers rank on cosine rounded to this many decimals (id
+# tiebreak), so they agree row-for-row under floating-point jitter.
+RANK_ROUND = 6
 
 
 def _collect_query_set(
@@ -69,19 +72,11 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return F.try_divide(dot_expr(a, b), norm_expr(a) * norm_expr(b))
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    rank_round: int = 6,
-) -> DataFrame:
+def cosine_topk(corpus: DataFrame, queries: DataFrame, *, k: int = 5) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
     Returns (query_id, neighbor_id, cosine, rank). Ranking orders by
-    cosine rounded to `rank_round` decimals with neighbor_id as tiebreak,
+    cosine rounded to `RANK_ROUND` decimals with neighbor_id as tiebreak,
     which makes the result deterministic under floating-point jitter.
     Self-matches (same id) are excluded.
     """
@@ -90,9 +85,9 @@ def cosine_topk(
     # is computed once, so per-pair work is ONE fold (the dot product)
     # instead of three. Same arithmetic, bit-identical cosine.
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        norm_expr(F.col(vec_col)).alias("__qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        norm_expr(F.col("embedding")).alias("__qnorm"),
     )
     # The |corpus| x |queries| dot-product folds run in the CORPUS SCAN
     # stage (the query side broadcasts, and the only exchange is the
@@ -103,24 +98,24 @@ def cosine_topk(
     # pass through untouched.
     from hw_kafka_flink_health_spark.sources.files import rebalance_if_narrow
 
-    c = rebalance_if_narrow(corpus.select(id_col, vec_col)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        norm_expr(F.col(vec_col)).alias("__cnorm"),
+    c = rebalance_if_narrow(corpus.select("vec_id", "embedding")).select(
+        F.col("vec_id"),
+        F.col("embedding"),
+        norm_expr(F.col("embedding")).alias("__cnorm"),
     )
     joined = c.crossJoin(F.broadcast(q)).filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     # try_divide: a zero-norm (all-zero) corpus or query vector has no
     # defined cosine — it becomes NULL and is filtered below, instead of
     # an ANSI DIVIDE_BY_ZERO kill. The arrow tier excludes NaN the same
     # way, so the tiers stay row-for-row parity on degenerate inputs.
     sim = F.try_divide(
-        dot_expr(F.col(vec_col), F.col("__qvec")),
+        dot_expr(F.col("embedding"), F.col("__qvec")),
         F.col("__cnorm") * F.col("__qnorm"),
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("__sim"), rank_round).desc(), F.col(id_col).asc()
+        F.round(F.col("__sim"), RANK_ROUND).desc(), F.col("vec_id").asc()
     )
     return (
         joined.withColumn("__sim", sim)
@@ -129,7 +124,7 @@ def cosine_topk(
         .filter(F.col("rank") <= k)
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.col("__sim").alias("cosine"),
             "rank",
         )
@@ -139,8 +134,6 @@ def cosine_topk(
 def neardup_pairs_blocked(
     vectors: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str = "label",
     threshold: float = 0.9,
 ) -> DataFrame:
@@ -152,15 +145,15 @@ def neardup_pairs_blocked(
     """
     a = vectors.select(
         F.col(block_col).alias("__blk"),
-        F.col(id_col).alias("id1"),
-        F.col(vec_col).alias("__v1"),
-        norm_expr(F.col(vec_col)).alias("__n1"),
+        F.col("vec_id").alias("id1"),
+        F.col("embedding").alias("__v1"),
+        norm_expr(F.col("embedding")).alias("__n1"),
     )
     b = vectors.select(
         F.col(block_col).alias("__blk"),
-        F.col(id_col).alias("id2"),
-        F.col(vec_col).alias("__v2"),
-        norm_expr(F.col(vec_col)).alias("__n2"),
+        F.col("vec_id").alias("id2"),
+        F.col("embedding").alias("__v2"),
+        norm_expr(F.col("embedding")).alias("__n2"),
     )
     sim = F.try_divide(
         dot_expr(F.col("__v1"), F.col("__v2")), F.col("__n1") * F.col("__n2")
@@ -204,23 +197,13 @@ def _fit_kmeans_clusters(feat: DataFrame, vec_col: str, n_clusters: int, seed: i
     return model.transform(feat), centroids
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_clusters: int = 10,
-    n_probe: int = 2,
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate top-k via an IVF (inverted-file) coarse index.
+def ivf_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-5 via an IVF (inverted-file) coarse index.
 
-    Train k-means centroids, assign every corpus vector to its nearest
-    centroid (the inverted lists), route each query to its `n_probe`
-    nearest centroids, and brute-force ONLY those lists. Search cost drops
-    by ~n_clusters/n_probe vs brute force; recall is tunable via n_probe.
+    Train 10 k-means centroids, assign every corpus vector to its nearest
+    centroid (the inverted lists), route each query to its 2 nearest
+    centroids, and brute-force ONLY those lists. Search cost drops by
+    ~5x vs brute force; recall grows with the probe count.
 
     At 100 TB the assignment is a write-once partitioning of the corpus
     (cluster id as a partition column), so a query scan prunes to the
@@ -231,25 +214,25 @@ def ivf_topk(
     from pyspark.ml.functions import array_to_vector
 
     feat = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        array_to_vector(F.transform(F.col(vec_col), lambda x: x.cast("double"))).alias(
+        F.col("vec_id"),
+        F.col("embedding"),
+        array_to_vector(F.transform(F.col("embedding"), lambda x: x.cast("double"))).alias(
             "features"
         ),
     )
-    clustered, centroids = _fit_kmeans_clusters(feat, vec_col, n_clusters, seed)
+    clustered, centroids = _fit_kmeans_clusters(feat, "embedding", 10, 42)
     # corpus-side norms staged once per row (see cosine_topk): candidate
     # scoring below then pays one fold per pair, not three
     assigned = clustered.select(
-        id_col, vec_col, "cluster", norm_expr(F.col(vec_col)).alias("__cnorm")
+        "vec_id", "embedding", "cluster", norm_expr(F.col("embedding")).alias("__cnorm")
     )
     cdf = corpus.sparkSession.createDataFrame(centroids, ["cluster", "centroid"])
 
-    # route queries to n_probe nearest centroids (tiny broadcast join)
+    # route queries to their 2 nearest centroids (tiny broadcast join)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        norm_expr(F.col(vec_col)).alias("__qnorm"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qvec"),
+        norm_expr(F.col("embedding")).alias("__qnorm"),
     )
     routed = (
         q.crossJoin(F.broadcast(cdf))
@@ -262,45 +245,36 @@ def ivf_topk(
                 )
             ),
         )
-        .filter(F.col("__crank") <= n_probe)
+        .filter(F.col("__crank") <= 2)
         .select("query_id", "__qvec", "__qnorm", "cluster")
     )
 
     # brute-force only within probed inverted lists
     cand = assigned.join(F.broadcast(routed), "cluster").filter(
-        F.col(id_col) != F.col("query_id")
+        F.col("vec_id") != F.col("query_id")
     )
     w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("__sim"), 6).desc(), F.col(id_col).asc()
+        F.round(F.col("__sim"), 6).desc(), F.col("vec_id").asc()
     )
     sim = F.try_divide(
-        dot_expr(F.col(vec_col), F.col("__qvec")),
+        dot_expr(F.col("embedding"), F.col("__qvec")),
         F.col("__cnorm") * F.col("__qnorm"),
     )
     return (
         cand.withColumn("__sim", sim)
         .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select(
             "query_id",
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.col("__sim").alias("cosine"),
             "rank",
         )
     )
 
 
-def lsh_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 4,
-) -> DataFrame:
-    """Approximate top-k nearest neighbors via random-projection LSH.
+def lsh_ann_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-5 nearest neighbors via random-projection LSH.
 
     Euclidean LSH (BucketedRandomProjectionLSH) as the candidate
     generator; for L2-normalized vectors Euclidean ordering == cosine
@@ -310,11 +284,11 @@ def lsh_ann_topk(
     from pyspark.ml.functions import array_to_vector
 
     def prep(df: DataFrame, idn: str) -> DataFrame:
-        arr = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+        arr = F.transform(F.col("embedding"), lambda x: x.cast("double"))
         norm = F.sqrt(F.aggregate(arr, F.lit(0.0), lambda a, x: a + x * x))
         unit = F.transform(arr, lambda x: F.try_divide(x, norm))
         return df.select(
-            F.col(id_col).alias(idn), array_to_vector(unit).alias("features")
+            F.col("vec_id").alias(idn), array_to_vector(unit).alias("features")
         )
 
     c = prep(corpus, "cid")
@@ -322,8 +296,8 @@ def lsh_ann_topk(
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
+        bucketLength=2.0,
+        numHashTables=4,
         seed=42,
     )
     model = lsh.fit(c)
@@ -348,8 +322,12 @@ def lsh_ann_topk(
             )
             .cast("long"),
         )
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
     )
+
+
+_SRP_BITS = 16
+_SRP_BAND_BITS = 4
 
 
 def _srp_sign_matrix(dim: int, n_bits: int) -> list[list[int]]:
@@ -415,12 +393,7 @@ def srp_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
-    n_bits: int = 16,
-    band_bits: int = 4,
-    scale: int = 1000,
     signature_work_threshold: int = 500_000,
     n_corpus: int | None = None,
     n_queries: int | None = None,
@@ -430,14 +403,14 @@ def srp_ann_topk(
     value-oracle-able, unlike the seeded tiers (`lsh_ann_topk`,
     `ivf_topk`, `pq_topk`):
 
-    * each vector is quantized to integers (`floor(x · scale)` in
+    * each vector is quantized to integers (`floor(x · 1000)` in
       double — exact and identical in every engine, no float-sum
       order hazard: the hyperplane dot products below are pure int64
       arithmetic);
-    * signature bit j = [⟨q, h_j⟩ > 0] for the pinned ±1 hyperplane
+    * signature bit j (of 16) = [⟨q, h_j⟩ > 0] for the pinned ±1 hyperplane
       h_j (`_srp_sign_matrix` — md5-parity coins, no seeds). Vectors
       on the same side of all hyperplanes in a band collide: P[bit
-      match] = 1 − θ/π (Charikar 2002), so banding `band_bits` bits
+      match] = 1 − θ/π (Charikar 2002), so banding 4 bits per band
       trades recall vs candidate count exactly like MinHash banding;
     * candidates = band-key equi-join of query vs corpus signatures
       (sub-quadratic, never all-pairs), then EXACT double-precision
@@ -445,7 +418,7 @@ def srp_ann_topk(
       round(sim, 6) + id tiebreak the exact tier uses.
 
     The signature pass tiers on estimated work (rows x dim x bits): a
-    narrow codegen projection of n_bits zip_with/aggregate folds below
+    narrow codegen projection of 16 zip_with/aggregate folds below
     `signature_work_threshold`, ONE numpy int64 matmul per Arrow batch
     above it — bit-identical either way (the quantization expression is
     shared; integer dots have no summation-order hazard). The only
@@ -459,50 +432,48 @@ def srp_ann_topk(
     for anything correctness-bearing. Returns (query_id, neighbor_id,
     sim, rank).
     """
-    if n_bits % band_bits != 0:
-        raise ValueError("n_bits must be a multiple of band_bits")
     # one probe job reads dim AND the corpus row count (the count only
     # routes the signature tier — both tiers are bit-identical, so an
     # approximate size is always SAFE; r12: the separate dim + count +
     # count probe jobs were ~20% of this operator's wall time at sf0.1)
     if n_corpus is None:
         probe = corpus.agg(
-            F.max(F.size(F.col(vec_col))).alias("d"),
+            F.max(F.size(F.col("embedding"))).alias("d"),
             F.count(F.lit(1)).alias("n"),
         ).first()
         dim = probe["d"] or 0
         n_corpus = int(probe["n"])
     else:
-        dim_row = corpus.agg(F.max(F.size(F.col(vec_col)))).first()
+        dim_row = corpus.agg(F.max(F.size(F.col("embedding")))).first()
         dim = dim_row[0] or 0
-    mat = _srp_sign_matrix(dim, n_bits)
-    n_bands = n_bits // band_bits
+    mat = _srp_sign_matrix(dim, _SRP_BITS)
+    n_bands = _SRP_BITS // _SRP_BAND_BITS
     known_n = {"query_id": n_queries, "neighbor_id": n_corpus}
 
     def bands_of(df: DataFrame, role: str) -> DataFrame:
         qv = F.transform(
-            F.col(vec_col), lambda x: F.floor(x.cast("double") * scale)
+            F.col("embedding"), lambda x: F.floor(x.cast("double") * 1000)
         )
         # Only vectors of exactly the corpus dimension participate: a
         # ragged/NULL vector would NULL-pad the zip_with below, poisoning
         # every dot product to NULL (sig 0 — a spurious bucket), while a
         # SQL replay would compute a partial sum. Dropping them keeps the
         # Spark result and the oracle bit-identical.
-        staged = df.filter(F.size(F.col(vec_col)) == dim).select(
-            F.col(id_col).alias(role), qv.alias("_qv")
+        staged = df.filter(F.size(F.col("embedding")) == dim).select(
+            F.col("vec_id").alias(role), qv.alias("_qv")
         )
         # Tier the signature pass on estimated work (rows x dim x bits):
-        # the n_bits zip_with/aggregate folds evaluate ~dim*bits lambdas
+        # the 16 zip_with/aggregate folds evaluate ~dim*16 lambdas
         # per row, so a large corpus pays seconds HOF vs ~1 s for the
         # Arrow int64-matmul tier — which is BIT-IDENTICAL (quantization
         # stays in the shared Spark expression above; integer dots have
         # no summation-order hazard). A caller-supplied size skips the
         # probe count job.
         n_side = known_n[role] if known_n[role] is not None else staged.count()
-        if n_side * max(dim, 1) * n_bits > signature_work_threshold:
-            sigs = _srp_sigs_arrow(staged, role, mat, n_bits)
+        if n_side * max(dim, 1) * _SRP_BITS > signature_work_threshold:
+            sigs = _srp_sigs_arrow(staged, role, mat, _SRP_BITS)
         else:
-            # The dim x n_bits fold is rendered as ONE SQL string per
+            # The dim x 16 fold is rendered as ONE SQL string per
             # column and parsed server-side: the same expressions built
             # through the F.* API cost ~2 s of pure DRIVER construction
             # per call (thousands of py4j round trips for the literal
@@ -519,21 +490,22 @@ def srp_ann_topk(
                     "(a, s) -> coalesce(a, CAST(0 AS BIGINT)) * CAST(s AS BIGINT)), "
                     f"CAST(0 AS BIGINT), (acc, v) -> acc + v) AS dp{j}"
                 )
-                for j in range(n_bits)
+                for j in range(_SRP_BITS)
             ]
             dots = staged.selectExpr(role, *dp_exprs)
             sig_sql = " + ".join(
                 f"(CASE WHEN dp{j} > 0 THEN CAST({1 << j} AS BIGINT) "
                 "ELSE CAST(0 AS BIGINT) END)"
-                for j in range(n_bits)
+                for j in range(_SRP_BITS)
             )
             sigs = dots.selectExpr(role, f"CAST(0 AS BIGINT) + {sig_sql} AS sig")
         band_entries = [
             F.struct(
                 F.lit(b).alias("band"),
-                (F.shiftright(F.col("sig"), b * band_bits) % (1 << band_bits)).alias(
-                    "bval"
-                ),
+                (
+                    F.shiftright(F.col("sig"), b * _SRP_BAND_BITS)
+                    % (1 << _SRP_BAND_BITS)
+                ).alias("bval"),
             )
             for b in range(n_bands)
         ]
@@ -548,8 +520,8 @@ def srp_ann_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("ne"))
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
+    cv = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
     sims = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id").select(
         "query_id",
         "neighbor_id",
@@ -564,22 +536,13 @@ def srp_ann_topk(
     )
 
 
-def ivf_det_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    n_centroids: int = 10,
-    n_probe: int = 2,
-) -> DataFrame:
+def ivf_det_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF (inverted-file) ANN with every source of randomness pinned —
     the coarse-quantizer sibling of `srp_ann_topk` in the value-oracled
     ANN family, where `ivf_topk` (seeded kmeans) is the recall-tunable
     production tier:
 
-    * centroids = the `n_centroids` corpus vectors with the
+    * centroids = the 10 corpus vectors with the
       lexicographically smallest `md5(id)` — a deterministic,
       engine-portable pseudo-random sample standing in for trained
       centers (data-independent, so no iterative fit to replay);
@@ -587,29 +550,29 @@ def ivf_det_topk(
       round(sim, 6) + centroid-id tiebreak the exact tier uses for FP
       determinism — this builds the inverted lists;
     * probe = each query scores the centroid table (broadcast,
-      `n_centroids` rows) and searches its top `n_probe` lists only;
+      10 rows) and searches its top 2 lists only;
       candidates join the inverted lists on centroid id — cost scales
       with list sizes, never the full corpus per query;
     * exact double-precision cosine re-ranks candidates, row_number
-      top-k.
+      top-3.
 
     Returns (query_id, neighbor_id, sim, rank).
     """
     cent = (
         corpus.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("ce"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
+            F.col("vec_id").alias("cid"),
+            F.col("embedding").alias("ce"),
+            F.md5(F.col("vec_id").cast("string")).alias("__h"),
         )
         .orderBy(F.col("__h").asc(), F.col("cid").asc())
-        .limit(n_centroids)
+        .limit(10)
         .drop("__h")
     )
     sim_c = cosine_expr(F.col("ve"), F.col("ce"))
 
     def nearest(df: DataFrame, role: str, top: int) -> DataFrame:
         scored = (
-            df.select(F.col(id_col).alias(role), F.col(vec_col).alias("ve"))
+            df.select(F.col("vec_id").alias(role), F.col("embedding").alias("ve"))
             .crossJoin(F.broadcast(cent))
             .select(role, "cid", sim_c.alias("csim"))
         )
@@ -623,15 +586,15 @@ def ivf_det_topk(
         )
 
     inv_lists = nearest(corpus, "neighbor_id", 1)
-    probes = nearest(queries, "query_id", n_probe)
+    probes = nearest(queries, "query_id", 2)
     cand = (
         probes.join(inv_lists, "cid")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qe"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("ne"))
+    qv = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
+    cv = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ne"))
     sims = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id").select(
         "query_id",
         "neighbor_id",
@@ -642,7 +605,7 @@ def ivf_det_topk(
     )
     return (
         sims.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
     )
 
 
@@ -650,10 +613,7 @@ def cosine_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    rank_round: int = 6,
 ) -> DataFrame:
     """Exact cosine top-k via Arrow-batched NumPy matmul (mapInPandas).
 
@@ -676,7 +636,7 @@ def cosine_topk_arrow(
     import numpy as np
     import pandas as pd
 
-    qrows = _collect_query_set(queries, id_col, vec_col)
+    qrows = _collect_query_set(queries, "vec_id", "embedding")
     qids_l = np.array([r.qid for r in qrows], dtype=np.int64)
     qmat_l = np.array([r.qv for r in qrows], dtype=np.float64)  # (q, d)
     bq = corpus.sparkSession.sparkContext.broadcast((qids_l, qmat_l))
@@ -685,7 +645,7 @@ def cosine_topk_arrow(
         f"query_id long, neighbor_id long, cosine double"
     )
     # Local selection must be consistent with the GLOBAL ranking, which
-    # orders by round(cosine, rank_round): keep every candidate whose
+    # orders by round(cosine, RANK_ROUND): keep every candidate whose
     # rounded sim is within 1.5 quanta of the local k-th kept value. The
     # margin is deliberately 1.5x the quantum, not 1.0x: np.round
     # (half-even) and Spark's round (half-up) can disagree by a full
@@ -695,7 +655,7 @@ def cosine_topk_arrow(
     # dropped candidate then has >= k batch-mates strictly above it after
     # Spark-side rounding, so it can never win globally on the id
     # tie-break.
-    quantum = 10.0 ** (-rank_round)
+    quantum = 10.0 ** (-RANK_ROUND)
 
     def batches(it):
         qids, qmat = bq.value
@@ -717,7 +677,7 @@ def cosine_topk_arrow(
                 if len(cand_idx) == 0:
                     continue
                 take = min(k, len(cand_idx))
-                rounded = np.round(col[cand_idx], rank_round)
+                rounded = np.round(col[cand_idx], RANK_ROUND)
                 # argpartition: O(n) local selection on the ROUNDED sims,
                 # then widen to every rounded near-tie of the k-th value
                 kth = np.partition(-rounded, take - 1)[take - 1]
@@ -738,10 +698,10 @@ def cosine_topk_arrow(
     # tier is the one that needs spreading (per-row fold in the scan
     # stage); this tier's unit of work is already batch-sized.
     local = corpus.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+        F.col("vec_id").alias("__id"), F.col("embedding").alias("__vec")
     ).mapInPandas(batches, schema=out_schema)
     w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cosine"), rank_round).desc(), F.col("neighbor_id").asc()
+        F.round(F.col("cosine"), RANK_ROUND).desc(), F.col("neighbor_id").asc()
     )
     return (
         local.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -773,22 +733,13 @@ def _lloyd(X, k: int, iters: int, rng):
     return C
 
 
-def pq_train(
-    corpus: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 4,
-    codebook_size: int = 256,
-    sample_size: int = 2000,
-    iters: int = 10,
-    salt: str = "pq",
-):
+def pq_train(corpus: DataFrame, *, m: int = 4, sample_size: int = 2000):
     """Train product-quantization codebooks: split dims into `m` subspaces,
-    k-means each on a DETERMINISTIC bounded sample (hash_unit-ordered, so
-    retrains reproduce bit-identically — no random() draw).
+    run 256-centroid k-means (10 Lloyd iterations) on each over a
+    DETERMINISTIC bounded sample (hash_unit-ordered, so retrains
+    reproduce bit-identically — no random() draw).
 
-    Returns (codebooks ndarray (m, k*, d/m), dim) for `pq_encode`/`pq_topk`.
+    Returns (codebooks ndarray (m, 256, d/m), dim) for `pq_encode`/`pq_topk`.
     Vectors are unit-normalized before training so PQ distances rank like
     cosine; zero vectors are excluded (no defined direction).
     """
@@ -805,7 +756,7 @@ def pq_train(
         )
     rows = (
         corpus.select(
-            F.col(vec_col).alias("v"), hash_unit(F.col(id_col), salt).alias("u")
+            F.col("embedding").alias("v"), hash_unit(F.col("vec_id"), "pq").alias("u")
         )
         .orderBy("u", "v")
         .limit(sample_size)  # bounded: training sample only, never the corpus
@@ -822,21 +773,15 @@ def pq_train(
 
     # stable seed: python's str hash() is process-salted, md5 is not
     rng = np.random.RandomState(
-        int(hashlib.md5(salt.encode()).hexdigest()[:8], 16) % (2**31)
+        int(hashlib.md5(b"pq").hexdigest()[:8], 16) % (2**31)
     )
     codebooks = np.stack(
-        [_lloyd(X[:, j * ds : (j + 1) * ds], codebook_size, iters, rng) for j in range(m)]
+        [_lloyd(X[:, j * ds : (j + 1) * ds], 256, 10, rng) for j in range(m)]
     )
     return codebooks, d
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(corpus: DataFrame, codebooks) -> DataFrame:
     """Encode every corpus vector as `m` one-byte centroid ids (the PQ
     codes): a 64-dim float64 row becomes m=4 bytes — the ~128x memory
     squeeze that makes billion-vector ANN fit a cluster's RAM. One
@@ -869,27 +814,19 @@ def pq_encode(
             yield pd.DataFrame({"vec_id": ids, "codes": list(codes)})
 
     return corpus.select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+        F.col("vec_id").alias("__id"), F.col("embedding").alias("__vec")
     ).mapInPandas(encode, schema="vec_id long, codes array<int>")
 
 
-def pq_topk(
-    codes_df: DataFrame,
-    queries: DataFrame,
-    codebooks,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Approximate top-k by asymmetric distance computation (ADC) over PQ
-    codes: each query builds an (m x k*) lookup table of exact
+def pq_topk(codes_df: DataFrame, queries: DataFrame, codebooks) -> DataFrame:
+    """Approximate top-5 by asymmetric distance computation (ADC) over PQ
+    codes: each query builds an (m x 256) lookup table of exact
     query-subvector-to-centroid squared distances, and every corpus
     vector's approximate distance is m TABLE LOOKUPS summed — no float
     math per pair, which is why PQ scans are memory-bandwidth-bound and
     fast even on CPUs. For unit vectors approx_cosine = 1 - d2/2.
 
-    Same fan-in shape as `cosine_topk_arrow`: per-batch local top-k (k
+    Same fan-in shape as `cosine_topk_arrow`: per-batch local top-5 (5
     rows per query per batch survive), then a global window. Returns
     (query_id, neighbor_id, approx_cosine, rank) — approximate by
     construction, so it registers rows-only with a recall property test
@@ -898,7 +835,7 @@ def pq_topk(
     import numpy as np
     import pandas as pd
 
-    qrows = _collect_query_set(queries, id_col, vec_col)
+    qrows = _collect_query_set(queries, "vec_id", "embedding")
     qids = np.array([r.qid for r in qrows], dtype=np.int64)
     Q = np.array([r.qv for r in qrows], dtype=np.float64)
     qn = np.sqrt((Q * Q).sum(axis=1))
@@ -932,7 +869,7 @@ def pq_topk(
                 cand = np.nonzero(mask)[0]
                 if len(cand) == 0:
                     continue
-                take = min(k, len(cand))
+                take = min(5, len(cand))
                 top = cand[np.argpartition(-sim[cand], take - 1)[:take]]
                 yield pd.DataFrame(
                     {
@@ -950,19 +887,12 @@ def pq_topk(
     )
     return (
         local.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", F.round("approx_cosine", 6).alias("approx_cosine"), "rank")
     )
 
 
-def semdedup_det(
-    vectors: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 8,
-    threshold: float = 0.99,
-) -> DataFrame:
+def semdedup_det(vectors: DataFrame, *, n_clusters: int = 8) -> DataFrame:
     """SemDeDup with every source of randomness pinned — the
     value-oracle-able twin of :func:`semdedup`, completing the
     deterministic ANN/dedup family (`srp_ann_topk`, `ivf_det_topk`):
@@ -974,13 +904,13 @@ def semdedup_det(
       replay), ranked by the round(csim, 6) + centroid-id tiebreak;
     * prune rule = identical to `semdedup`'s greedy min-id
       representative: a vector is dropped iff round(cosine, 6) >
-      `threshold` against ANY lower-id vector in its cluster — one
+      0.99 against ANY lower-id vector in its cluster — one
       anti-joinable drop set, no iteration; the round-6 grain makes the
       threshold comparison engine-portable (both engines fold the
       64-element products in index order, but the pinned grain removes
       even that assumption from the contract).
 
-    Returns (id_col, cluster = centroid id as long, keep). Same
+    Returns (vec_id, cluster = centroid id as long, keep). Same
     sub-quadratic shape as `semdedup`: the pair pass is per-cluster
     (sum of per-cluster squares), never corpus-wide; at 100 TB raise
     `n_clusters` so lists stay bounded and write the corpus partitioned
@@ -991,9 +921,9 @@ def semdedup_det(
     # doubles bit-for-bit (identical sequential fold), ~3x less HOF work.
     cent = (
         vectors.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("ce"),
-            F.md5(F.col(id_col).cast("string")).alias("__h"),
+            F.col("vec_id").alias("cid"),
+            F.col("embedding").alias("ce"),
+            F.md5(F.col("vec_id").cast("string")).alias("__h"),
         )
         .orderBy(F.col("__h").asc(), F.col("cid").asc())
         .limit(n_clusters)
@@ -1001,30 +931,32 @@ def semdedup_det(
         .drop("__h")
     )
     v = vectors.select(
-        F.col(id_col), F.col(vec_col).alias("ve"), norm_expr(F.col(vec_col)).alias("nv")
+        F.col("vec_id"),
+        F.col("embedding").alias("ve"),
+        norm_expr(F.col("embedding")).alias("nv"),
     )
     scored = v.crossJoin(F.broadcast(cent)).select(
-        id_col,
+        "vec_id",
         "cid",
         F.try_divide(
             dot_expr(F.col("ve"), F.col("ce")), F.col("nv") * F.col("cn")
         ).alias("csim"),
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("vec_id").orderBy(
         F.round(F.col("csim"), 6).desc(), F.col("cid").asc()
     )
     assigned = (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select(id_col, "cid")
+        .select("vec_id", "cid")
     )
-    av = assigned.join(v, id_col).localCheckpoint()
+    av = assigned.join(v, "vec_id").localCheckpoint()
     a = av.select(
-        "cid", F.col(id_col).alias("id1"), F.col("ve").alias("v1"),
+        "cid", F.col("vec_id").alias("id1"), F.col("ve").alias("v1"),
         F.col("nv").alias("n1"),
     )
     b = av.select(
-        "cid", F.col(id_col).alias("id2"), F.col("ve").alias("v2"),
+        "cid", F.col("vec_id").alias("id2"), F.col("ve").alias("v2"),
         F.col("nv").alias("n2"),
     )
     drops = (
@@ -1037,14 +969,14 @@ def semdedup_det(
                 ),
                 6,
             )
-            > F.lit(threshold)
+            > F.lit(0.99)
         )
-        .select(F.col("id2").alias(id_col))
+        .select(F.col("id2").alias("vec_id"))
         .distinct()
         .withColumn("__dropped", F.lit(True))
     )
-    return av.join(drops, id_col, "left").select(
-        id_col,
+    return av.join(drops, "vec_id", "left").select(
+        "vec_id",
         F.col("cid").cast("long").alias("cluster"),
         F.col("__dropped").isNull().alias("keep"),
     )
@@ -1053,8 +985,6 @@ def semdedup_det(
 def semdedup(
     vectors: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_clusters: int = 10,
     threshold: float = 0.95,
     seed: int = 42,
@@ -1069,7 +999,7 @@ def semdedup(
     rule is the greedy min-id representative: a vector is dropped iff it
     is within ``threshold`` cosine of ANY lower-id vector in its cluster
     — one anti-joinable drop set, no iteration. Returns
-    (id_col, cluster, keep) for every input vector.
+    (vec_id, cluster, keep) for every input vector.
 
     At 100 TB: train the quantizer on a bounded sample, write the corpus
     partitioned by cluster id (same layout IVF wants), and the pair pass
@@ -1078,26 +1008,24 @@ def semdedup(
     from pyspark.ml.functions import array_to_vector
 
     feat = vectors.select(
-        F.col(id_col),
-        F.col(vec_col),
+        F.col("vec_id"),
+        F.col("embedding"),
         array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+            F.transform(F.col("embedding"), lambda x: x.cast("double"))
         ).alias("features"),
     )
-    clustered, _ = _fit_kmeans_clusters(feat, vec_col, n_clusters, seed)
-    assigned = clustered.select(id_col, vec_col, "cluster")
+    clustered, _ = _fit_kmeans_clusters(feat, "embedding", n_clusters, seed)
+    assigned = clustered.select("vec_id", "embedding", "cluster")
     pairs = neardup_pairs_blocked(
         assigned,
-        id_col=id_col,
-        vec_col=vec_col,
         block_col="cluster",
         threshold=threshold,
     )
-    drops = pairs.select(F.col("id2").alias(id_col)).distinct().withColumn(
+    drops = pairs.select(F.col("id2").alias("vec_id")).distinct().withColumn(
         "__drop", F.lit(True)
     )
-    return assigned.join(drops, id_col, "left").select(
-        id_col, "cluster", F.col("__drop").isNull().alias("keep")
+    return assigned.join(drops, "vec_id", "left").select(
+        "vec_id", "cluster", F.col("__drop").isNull().alias("keep")
     )
 
 
@@ -1105,10 +1033,7 @@ def cosine_topk_auto(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
-    rank_round: int = 6,
     work_threshold: int = 10_000_000,
     n_corpus: int | None = None,
     n_queries: int | None = None,
@@ -1142,7 +1067,7 @@ def cosine_topk_auto(
     n_c = corpus.count() if n_corpus is None else int(n_corpus)
     if n_queries is None or dims is None:
         probe = queries.agg(
-            F.count(F.lit(1)).alias("n"), F.max(F.size(F.col(vec_col))).alias("d")
+            F.count(F.lit(1)).alias("n"), F.max(F.size(F.col("embedding"))).alias("d")
         ).first()
         n_q = int(probe["n"]) if n_queries is None else int(n_queries)
         dim = (
@@ -1154,6 +1079,4 @@ def cosine_topk_auto(
         n_q, dim = int(n_queries), int(dims)
     work = n_c * n_q * max(dim, 1)
     tier = cosine_topk_arrow if work > work_threshold else cosine_topk
-    return tier(
-        corpus, queries, id_col=id_col, vec_col=vec_col, k=k, rank_round=rank_round
-    )
+    return tier(corpus, queries, k=k)

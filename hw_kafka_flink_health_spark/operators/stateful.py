@@ -113,24 +113,21 @@ def new_peak_stream(parsed: DataFrame) -> DataFrame:
 def new_peaks_batch(
     df: DataFrame,
     *,
-    key_col: str = "patient_id",
-    ts_col: str = "event_time",
-    value_col: str = "heart_rate_bpm",
     tiebreak_cols: list[str] | None = None,
 ) -> DataFrame:
     """Batch twin of new_peak_stream as a pure window expression: a row is
     a peak iff its value > max over all strictly-previous rows (pass
     tiebreak_cols to totalize the order under equal timestamps)."""
     w = (
-        Window.partitionBy(key_col)
-        .orderBy(ts_col, *(tiebreak_cols or []))
+        Window.partitionBy("patient_id")
+        .orderBy("event_time", *(tiebreak_cols or []))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    prev_max = F.max(value_col).over(w)
+    prev_max = F.max("heart_rate_bpm").over(w)
     return (
         df.withColumn("__prev_max", prev_max)
-        .filter(F.col("__prev_max").isNull() | (F.col(value_col) > F.col("__prev_max")))
-        .select(key_col, ts_col, value_col)
+        .filter(F.col("__prev_max").isNull() | (F.col("heart_rate_bpm") > F.col("__prev_max")))
+        .select("patient_id", "event_time", "heart_rate_bpm")
     )
 
 
@@ -145,10 +142,11 @@ EWMA_OUTPUT_SCHEMA = T.StructType(
 
 
 EWMA_STATE_SCHEMA = T.StructType([T.StructField("ewma", T.DoubleType())])
+EWMA_ALPHA = 0.2
 
 
 def _ewma_batch_frame(
-    key, pdf: pd.DataFrame, prev: float | None, alpha: float
+    key, pdf: pd.DataFrame, prev: float | None
 ) -> tuple[pd.DataFrame | None, float | None]:
     """Vectorized per-micro-batch EWMA step.
 
@@ -162,11 +160,11 @@ def _ewma_batch_frame(
     xs = pdf.sort_values("event_time")
     vals = xs["heart_rate_bpm"].astype(float).reset_index(drop=True)
     if prev is None:
-        sm = vals.ewm(alpha=alpha, adjust=False).mean()
+        sm = vals.ewm(alpha=EWMA_ALPHA, adjust=False).mean()
     else:
         sm = (
             pd.concat([pd.Series([float(prev)]), vals], ignore_index=True)
-            .ewm(alpha=alpha, adjust=False)
+            .ewm(alpha=EWMA_ALPHA, adjust=False)
             .mean()
             .iloc[1:]
             .reset_index(drop=True)
@@ -182,7 +180,7 @@ def _ewma_batch_frame(
     return frame, float(sm.iloc[-1])
 
 
-def ewma_stream(parsed: DataFrame, alpha: float = 0.2) -> DataFrame:
+def ewma_stream(parsed: DataFrame) -> DataFrame:
     """Per-patient exponentially-weighted moving average of heart rate —
     a smoothing monitor whose recursion (ewma_t = a*x_t + (1-a)*ewma_{t-1})
     needs true per-key running state, not a window frame. GroupState
@@ -199,7 +197,7 @@ def ewma_stream(parsed: DataFrame, alpha: float = 0.2) -> DataFrame:
         prev = state.get[0] if state.exists else None
         frames = []
         for pdf in pdfs:
-            frame, prev = _ewma_batch_frame(key[0], pdf, prev, alpha)
+            frame, prev = _ewma_batch_frame(key[0], pdf, prev)
             if frame is not None:
                 frames.append(frame)
         if prev is not None:
@@ -216,7 +214,7 @@ def ewma_stream(parsed: DataFrame, alpha: float = 0.2) -> DataFrame:
     )
 
 
-def ewma_batch(parsed: DataFrame, alpha: float = 0.2) -> DataFrame:
+def ewma_batch(parsed: DataFrame) -> DataFrame:
     """Deterministic batch twin of `ewma_stream`: per-key event-time sort
     + aggregate-fold over the collected series (keys are small: one
     patient's readings), exploded back to rows. Same recursion, no state
@@ -240,8 +238,8 @@ def ewma_batch(parsed: DataFrame, alpha: float = 0.2) -> DataFrame:
                 F.when(
                     F.size(acc) == 0, x["heart_rate_bpm"].cast("double")
                 ).otherwise(
-                    F.lit(alpha) * x["heart_rate_bpm"]
-                    + F.lit(1 - alpha) * F.element_at(acc, -1)
+                    F.lit(EWMA_ALPHA) * x["heart_rate_bpm"]
+                    + F.lit(1 - EWMA_ALPHA) * F.element_at(acc, -1)
                 )
             ),
         ),
@@ -280,10 +278,10 @@ SESSION_STATE_SCHEMA = T.StructType(
 )
 
 
-def session_timeout_stream(parsed: DataFrame, *, gap_seconds: int = 30) -> DataFrame:
+def session_timeout_stream(parsed: DataFrame) -> DataFrame:
     """Custom gap-session operator with EVENT-TIME TIMEOUT: a key's
     session closes (and emits exactly one summary row) when the watermark
-    passes its last event + gap — i.e. the stream itself proves no more
+    passes its last event + a 30 s gap — i.e. the stream itself proves no more
     in-gap events can arrive. This is the timeout half of the GroupState
     API that `new_peak_stream` (NoTimeout) doesn't exercise, and the
     applyInPandasWithState twin of the built-in ``session_window`` agg
@@ -297,7 +295,7 @@ def session_timeout_stream(parsed: DataFrame, *, gap_seconds: int = 30) -> DataF
     cannot grow unboundedly."""
     ship_package(parsed.sparkSession)
 
-    gap_ms = gap_seconds * 1000
+    gap_ms = 30_000
 
     def fn(key: tuple, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
@@ -507,10 +505,10 @@ BURST_OUTPUT_SCHEMA = T.StructType(
 BURST_STATE_SCHEMA = T.StructType([T.StructField("open_run", T.LongType())])
 
 
-def cep_error_burst_stream(events: DataFrame, *, threshold: int = 3) -> DataFrame:
+def cep_error_burst_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of `queries/cep.py:cep_error_burst` (FlinkCEP
-    `times(threshold).consecutive()`): alert ONCE per run, at the moment
-    the run REACHES `threshold` consecutive 'error' events — state is a
+    `times(3).consecutive()`): alert ONCE per run, at the moment
+    the run REACHES 3 consecutive 'error' events — state is a
     single long per key (the open trailing run length), vectorized per
     micro-batch with the same islands arithmetic as the batch query:
     cumsum of non-error markers ids the consecutive groups; carry-in
@@ -540,7 +538,7 @@ def cep_error_burst_stream(events: DataFrame, *, threshold: int = 3) -> DataFram
             # an error (grp==grp[0] and err[0])
             if open_run and len(xs) and err[0]:
                 pos = np.where((grp == grp[0]) & err, pos + open_run, pos)
-            hit = err & (pos == threshold)
+            hit = err & (pos == 3)
             if hit.any():
                 out = xs[hit]
                 frames.append(
@@ -548,7 +546,7 @@ def cep_error_burst_stream(events: DataFrame, *, threshold: int = 3) -> DataFram
                         {
                             "user_id": out["user_id"].astype("int64").to_numpy(),
                             "alert_ms": out["ts_ms"].astype("int64").to_numpy(),
-                            "run_len": threshold,
+                            "run_len": 3,
                         }
                     )
                 )

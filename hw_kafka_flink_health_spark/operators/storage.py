@@ -30,8 +30,6 @@ def write_bucketed(
     *,
     buckets: int,
     key: str | list[str],
-    sort: bool = True,
-    mode: str = "overwrite",
 ) -> None:
     """Persist `df` as a parquet table bucketed (and bucket-sorted) by `key`.
 
@@ -43,10 +41,8 @@ def write_bucketed(
     Sort).
     """
     keys = [key] if isinstance(key, str) else list(key)
-    writer = df.write.format("parquet").mode(mode).bucketBy(buckets, *keys)
-    if sort:
-        writer = writer.sortBy(*keys)
-    writer.saveAsTable(table)
+    writer = df.write.format("parquet").mode("overwrite").bucketBy(buckets, *keys)
+    writer.sortBy(*keys).saveAsTable(table)
 
 
 def write_partitioned(
@@ -54,7 +50,6 @@ def write_partitioned(
     path: str,
     *,
     partition_cols: str | list[str],
-    mode: str = "overwrite",
 ) -> None:
     """Write parquet hive-style partitioned by `partition_cols`.
 
@@ -63,7 +58,7 @@ def write_partitioned(
     a user_id is wrong). Readers get directory-level pruning for free.
     """
     cols = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
-    df.write.mode(mode).partitionBy(*cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*cols).parquet(path)
 
 
 def materialize_partitioned(
@@ -92,13 +87,7 @@ def materialize_partitioned(
     return spark.read.parquet(path)
 
 
-def runtime_bloom_session(
-    spark: SparkSession,
-    *,
-    application_side_threshold: str = "0",
-    creation_side_threshold: str = "100MB",
-    disable_broadcast: bool = True,
-) -> SparkSession:
+def runtime_bloom_session(spark: SparkSession) -> SparkSession:
     """Clone the session with runtime bloom-filter injection active for
     shuffle joins (`InjectRuntimeFilter`): the selective small side
     builds a bloom filter that is pushed into the big side's scan filter
@@ -124,14 +113,13 @@ def runtime_bloom_session(
     s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
     s.conf.set(
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        application_side_threshold,
+        "0",
     )
     s.conf.set(
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        creation_side_threshold,
+        "100MB",
     )
-    if disable_broadcast:
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     return s
 
 
@@ -140,7 +128,6 @@ def write_sorted(
     path: str,
     *,
     sort_cols: str | list[str],
-    mode: str = "overwrite",
     target_partitions: int | None = None,
     writer_options: dict | None = None,
 ) -> None:
@@ -165,7 +152,7 @@ def write_sorted(
         out = out.repartitionByRange(target_partitions, *cols)
     else:
         out = out.repartitionByRange(*cols)
-    writer = out.sortWithinPartitions(*cols).write.mode(mode)
+    writer = out.sortWithinPartitions(*cols).write.mode("overwrite")
     for k, v in (writer_options or {}).items():
         writer = writer.option(k, v)
     writer.parquet(path)
@@ -221,8 +208,6 @@ def write_zordered(
     path: str,
     *,
     cluster_cols: list[str],
-    bits: int = 8,
-    mode: str = "overwrite",
     target_partitions: int | None = None,
     writer_options: dict | None = None,
 ) -> None:
@@ -233,37 +218,31 @@ def write_zordered(
     predicates; this is the right one when two-to-four columns share
     them (e.g. events range-scanned by time AND by user). The write
     costs one `approxQuantile` sketch pass (bounded driver payload:
-    2^bits-1 doubles per column, to rank-scale the key) plus the same
+    255 doubles per column, to rank-scale the key to 8 bits) plus the same
     one range shuffle `write_sorted` pays; range-partitioning on the
     Z-key also evens out z-value skew across files. Footer-level
     skipping on both columns is proven from the written parquet
     metadata in `tests/test_storage.py`.
     """
     cols = list(cluster_cols)
-    nq = (1 << bits) - 1
+    nq = (1 << 8) - 1
     probs = [(i + 1) / (nq + 1) for i in range(nq)]
     qs = df.approxQuantile(cols, probs, 1.0 / (4 * (nq + 1)))
     boundaries = dict(zip(cols, qs))
-    out = df.withColumn("__zkey", zorder_expr(cols, boundaries, bits=bits))
+    out = df.withColumn("__zkey", zorder_expr(cols, boundaries, bits=8))
     if target_partitions is not None:
         out = out.repartitionByRange(target_partitions, "__zkey")
     else:
         out = out.repartitionByRange("__zkey")
     out = out.sortWithinPartitions("__zkey").drop("__zkey")
-    writer = out.write.mode(mode)
+    writer = out.write.mode("overwrite")
     for k, v in (writer_options or {}).items():
         writer = writer.option(k, v)
     writer.parquet(path)
 
 
-def compact_small_files(
-    spark,
-    src_dir: str,
-    dst_dir: str,
-    *,
-    target_file_mb: int = 128,
-) -> int:
-    """Compact a directory of small parquet files into ~target-sized ones.
+def compact_small_files(spark, src_dir: str, dst_dir: str) -> int:
+    """Compact a directory of small parquet files into ~128 MB ones.
 
     The small-file problem is the dominant tax on long-lived 100 TB
     tables fed by streaming/incremental writers: every micro-batch
@@ -287,19 +266,13 @@ def compact_small_files(
         for f in fs
         if f.endswith(".parquet")
     )
-    n_out = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
+    n_out = max(1, math.ceil(total / (128 * 1024 * 1024)))
     df = spark.read.parquet(src_dir)
     df.coalesce(n_out).write.mode("overwrite").parquet(dst_dir)
     return n_out
 
 
-def write_bloom_filtered(
-    df,
-    path: str,
-    cols: list[str],
-    *,
-    expected_ndv: int = 100_000,
-) -> None:
+def write_bloom_filtered(df, path: str, cols: list[str]) -> None:
     """Write parquet with file-level bloom-filter indexes on ``cols``.
 
     Blooms answer point-lookup predicates (``k = ?``, ``k IN (...)``) on
@@ -307,9 +280,9 @@ def write_bloom_filtered(
     (a uniformly distributed key spans every row group's min/max range).
     At 100 TB this is the difference between opening every row group and
     skipping all but the ones that might contain the key — the standard
-    companion to z-ordering for needle-in-haystack reads. Size the
-    ``expected_ndv`` per column near the true distinct count: too low
-    inflates the false-positive rate, too high wastes footer bytes.
+    companion to z-ordering for needle-in-haystack reads. Each column's
+    filter is sized for 100 000 distinct values: too low inflates the
+    false-positive rate, too high wastes footer bytes.
     Note parquet-mr omits the bloom for column chunks that stay fully
     dictionary-encoded (the dictionary is already an exact membership
     filter) — so only high-cardinality columns actually pay/benefit.
@@ -319,7 +292,7 @@ def write_bloom_filtered(
     w = df.write.mode("overwrite")
     for c in cols:
         w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        w = w.option(f"parquet.bloom.filter.expected.ndv#{c}", str(expected_ndv))
+        w = w.option(f"parquet.bloom.filter.expected.ndv#{c}", "100000")
     w.parquet(path)
 
 
@@ -385,9 +358,8 @@ def materialize_bucketed(
     table_name: str,
     *,
     bucket_col: str,
-    n_buckets: int = 8,
 ) -> DataFrame:
-    """Session-cached BUCKETED catalog table: `bucketBy(n, key).sortBy(key)
+    """Session-cached BUCKETED catalog table: `bucketBy(8, key).sortBy(key)
     .saveAsTable` the first time, `spark.table` after.
 
     Bucketing is the ingest-time half of a shuffle-free join: two tables
@@ -411,7 +383,7 @@ def materialize_bucketed(
             # table), never be silently clobbered by ours
             (
                 df.write.mode("errorifexists")
-                .bucketBy(n_buckets, bucket_col)
+                .bucketBy(8, bucket_col)
                 .sortBy(bucket_col)
                 .saveAsTable(table_name)
             )

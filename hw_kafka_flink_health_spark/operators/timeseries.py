@@ -34,10 +34,8 @@ def resample_forward_fill(
     key_col: str,
     ts_col: str,
     value_col: str,
-    *,
-    bucket: str = "1 day",
 ) -> DataFrame:
-    """Resample per-key observations onto a dense `bucket` grid from each
+    """Resample per-key observations onto a dense 1-day grid from each
     key's first to last observation, averaging within buckets and
     forward-filling empty buckets with the most recent average.
 
@@ -46,7 +44,7 @@ def resample_forward_fill(
     construction, since the grid starts at the first observation).
     """
     bucketed = (
-        events.groupBy(F.col(key_col), F.window(F.col(ts_col), bucket))
+        events.groupBy(F.col(key_col), F.window(F.col(ts_col), "1 day"))
         .agg(F.avg(value_col).alias("bucket_avg"))
         .select(
             F.col(key_col),
@@ -63,7 +61,7 @@ def resample_forward_fill(
         .select(
             F.col(key_col),
             F.explode(
-                F.sequence("_lo", "_hi", F.expr(f"INTERVAL {bucket}"))
+                F.sequence("_lo", "_hi", F.expr("INTERVAL 1 day"))
             ).alias("bucket_ts"),
         )
     )

@@ -819,7 +819,6 @@ def commit_snapshot_clustered(
     cluster_col: str,
     n_files: int = 4,
     mode: str = "overwrite",
-    batch_id: int | None = None,
 ) -> int:
     """Commit with manifest-level statistics (the Iceberg metadata-pruning
     mechanism): range-cluster rows by `cluster_col` into `n_files` files,
@@ -836,7 +835,7 @@ def commit_snapshot_clustered(
         cluster_col
     )
     prev = current_version(table_dir) if mode == "append" else None
-    version = commit_snapshot(clustered, table_dir, mode=mode, batch_id=batch_id)
+    version = commit_snapshot(clustered, table_dir, mode=mode)
     with open(_manifest_path(table_dir, version)) as f:
         manifest = json.load(f)
     # commit_snapshot writes a stats-free manifest, so carried-over files'
@@ -913,16 +912,19 @@ def read_snapshot_pruned(
     return df.filter(F.col(col).between(lo, hi))
 
 
-def _zvalue_expr(cols, lo_hi: dict, *, bits: int = 16):
+_ZORDER_BITS = 16
+
+
+def _zvalue_expr(cols, lo_hi: dict):
     """Interleaved-bits Z-value over 2+ numeric columns, as a pure Catalyst
     expression (shift/and/or — whole-stage codegen'd, no UDF). Each column
-    is min-max scaled to [0, 2^bits) with the provided bounds; the scaling
+    is min-max scaled to [0, 2^16) with the provided bounds; the scaling
     only shapes the physical LAYOUT, so float rounding here can never
     affect query results."""
     from pyspark.sql import functions as F
 
     scaled = []
-    top = (1 << bits) - 1
+    top = (1 << _ZORDER_BITS) - 1
     for c in cols:
         lo, hi = lo_hi[c]
         span = float(hi) - float(lo)
@@ -935,7 +937,7 @@ def _zvalue_expr(cols, lo_hi: dict, *, bits: int = 16):
             scaled.append(F.greatest(F.least(s, F.lit(top)), F.lit(0)))
     z = F.lit(0).cast("long")
     n = len(cols)
-    for b in range(bits):
+    for b in range(_ZORDER_BITS):
         for j, s in enumerate(scaled):
             bit = F.shiftright(s, b).bitwiseAND(F.lit(1))
             z = z.bitwiseOR(F.shiftleft(bit, b * n + j))
@@ -964,9 +966,6 @@ def commit_snapshot_zordered(
     *,
     cluster_cols: list[str],
     n_files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
-    batch_id: int | None = None,
 ) -> int:
     """Commit with Z-ORDER clustering (Delta/Iceberg OPTIMIZE ZORDER BY):
     rows are range-partitioned and sorted by the interleaved-bits Z-value
@@ -985,24 +984,17 @@ def commit_snapshot_zordered(
     lo_hi = {
         c: (bounds[f"lo_{i}"], bounds[f"hi_{i}"]) for i, c in enumerate(cluster_cols)
     }
-    z = _zvalue_expr(cluster_cols, lo_hi, bits=bits)
+    z = _zvalue_expr(cluster_cols, lo_hi)
     clustered = (
         df.withColumn("__z", z)
         .repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    version = commit_snapshot(clustered, table_dir, mode=mode, batch_id=batch_id)
+    version = commit_snapshot(clustered, table_dir)
     with open(_manifest_path(table_dir, version)) as f:
         manifest = json.load(f)
     stats2 = dict(manifest.get("stats2", {}))
-    prev = version - 1 if mode == "append" and version > 0 else None
-    if prev is not None:
-        try:
-            with open(_manifest_path(table_dir, prev)) as f:
-                stats2.update(json.load(f).get("stats2", {}))
-        except FileNotFoundError:
-            pass
     for name in manifest["files"]:
         if name in stats2:
             continue
@@ -1014,7 +1006,7 @@ def commit_snapshot_zordered(
         if per_col:
             stats2[name] = per_col
     manifest["stats2"] = stats2
-    manifest["zorder"] = {"cols": list(cluster_cols), "bits": bits}
+    manifest["zorder"] = {"cols": list(cluster_cols), "bits": _ZORDER_BITS}
     _rewrite_manifest(table_dir, version, manifest)
     return version
 
@@ -1023,8 +1015,6 @@ def read_snapshot_pruned_2d(
     spark: SparkSession,
     table_dir: str,
     preds: dict,
-    *,
-    version: int | None = None,
 ) -> DataFrame:
     """Multi-dimension manifest pruning: keep only files whose recorded
     [min,max] overlaps EVERY predicate interval in `preds`
@@ -1033,7 +1023,7 @@ def read_snapshot_pruned_2d(
     (pruning must never lose rows)."""
     from pyspark.sql import functions as F
 
-    v = current_version(table_dir) if version is None else version
+    v = current_version(table_dir)
     if v is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
     with open(_manifest_path(table_dir, v)) as f:
@@ -1074,7 +1064,6 @@ def compact_snapshot(
     table_dir: str,
     *,
     small_file_bytes: int = 8 * 1024 * 1024,
-    target_files: int | None = None,
 ) -> int:
     """OPTIMIZE (small-file compaction): rewrite the current version's
     small files into fewer, larger ones and commit the result as the next
@@ -1103,9 +1092,8 @@ def compact_snapshot(
     big = [n for n in manifest["files"] if sizes[n] >= small_file_bytes]
     if len(small) < 2:
         return v
-    if target_files is None:
-        total = sum(sizes[n] for n in small)
-        target_files = max(1, -(-total // small_file_bytes))  # ceil div
+    total = sum(sizes[n] for n in small)
+    target_files = max(1, -(-total // small_file_bytes))  # ceil div
     merged = spark.read.option("mergeSchema", "true").parquet(
         *[os.path.join(table_dir, p) for p in small]
     )
@@ -1562,7 +1550,6 @@ def commit_snapshot_checked(
     *,
     check: str,
     mode: str = "overwrite",
-    batch_id: int | None = None,
     expect_version: int | None = None,
 ) -> int:
     """Commit with a Delta-style CHECK constraint: every incoming row must
@@ -1582,9 +1569,7 @@ def commit_snapshot_checked(
             f"CHECK ({check}) failed for {n_bad} incoming row(s); "
             f"example: {sample[0].asDict()}"
         )
-    return commit_snapshot(
-        df, table_dir, mode=mode, batch_id=batch_id, expect_version=expect_version
-    )
+    return commit_snapshot(df, table_dir, mode=mode, expect_version=expect_version)
 
 
 # --- branches: git-like named refs over the shared version space ---------
@@ -1624,12 +1609,12 @@ def _write_branches(table_dir: str, branches: dict) -> None:
     os.rename(tmp, _branches_path(table_dir))
 
 
-def create_branch(table_dir: str, name: str, version: int | None = None) -> int:
-    """Fork a branch at `version` (main head by default). Like tags, the
+def create_branch(table_dir: str, name: str) -> int:
+    """Fork a branch at the main head. Like tags, the
     in-lock manifest check makes branch-vs-vacuum race-free: the branch
     either lands before vacuum reads the ref maps (head pinned) or a
     swept version fails here instead of becoming a dangling ref."""
-    v = current_version(table_dir) if version is None else version
+    v = current_version(table_dir)
     if v is None:
         raise FileNotFoundError(f"no committed version in {table_dir}")
     lock = os.path.join(table_dir, "_tags.lock")

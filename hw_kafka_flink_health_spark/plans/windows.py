@@ -14,18 +14,22 @@ exactly one place (review r11).
 from __future__ import annotations
 
 import contextlib
+import threading
 
 from hw_kafka_flink_health_spark.cache import untruncated_plans
 
 
-@contextlib.contextmanager
-def capture_checkpoints(captured: list, executed: list | None = None):
-    """Patch ``localCheckpoint`` so the ANALYZED plan of every frame
-    about to be checkpointed is appended (untruncated) to ``captured``
-    before materialization — the sweep's window into subtrees the
-    checkpoint later hides. When ``executed`` is given, the EXECUTED
-    (physical) plan text is appended there too, for shape tests that
-    need to see exchanges behind a checkpoint.
+# The active captures of each thread, innermost last. The wrapper that
+# `capture_checkpoints` installs appends to every list on the calling
+# thread's stack, so concurrent builds on other threads never see each
+# other's plans and nested captures all fill.
+_CAPTURES = threading.local()
+_INSTALL_LOCK = threading.Lock()
+_installed = False
+
+
+def _install_capture_hook() -> None:
+    """Wrap ``localCheckpoint`` once per process; never unwrapped.
 
     MUST patch the CONCRETE class: on Spark 4, DataFrame instances are
     ``pyspark.sql.classic.dataframe.DataFrame``, which defines its OWN
@@ -34,47 +38,69 @@ def capture_checkpoints(captured: list, executed: list | None = None):
     attribute). The r11 sweep's capture never fired for exactly this
     reason; found in r12 when ``stats_kruskal_wallis``'s runtime
     single-partition WARN contradicted an empty capture list. Every
-    class in the MRO chain that defines the method is patched with its
-    own original, and restored on exit.
+    class in the MRO chain that defines the method is wrapped around its
+    own original.
     """
-    targets = [("pyspark.sql", "DataFrame")]
-    try:
-        from pyspark.sql.classic import dataframe as _classic  # noqa: F401
+    global _installed
+    with _INSTALL_LOCK:
+        if _installed:
+            return
+        targets = [("pyspark.sql", "DataFrame")]
+        try:
+            from pyspark.sql.classic import dataframe as _classic  # noqa: F401
 
-        targets.append(("pyspark.sql.classic.dataframe", "DataFrame"))
-    except ImportError:  # older line without the classic split
-        pass
-    import importlib
+            targets.append(("pyspark.sql.classic.dataframe", "DataFrame"))
+        except ImportError:  # older line without the classic split
+            pass
+        import importlib
 
-    patched: list[tuple[type, object]] = []
-    for mod_name, cls_name in targets:
-        cls = getattr(importlib.import_module(mod_name), cls_name)
-        orig = cls.__dict__.get("localCheckpoint")
-        if orig is None:
-            continue
+        for mod_name, cls_name in targets:
+            cls = getattr(importlib.import_module(mod_name), cls_name)
+            orig = cls.__dict__.get("localCheckpoint")
+            if orig is not None:
+                setattr(cls, "localCheckpoint", _capturing(orig))
+        _installed = True
 
-        def make(orig_fn):
-            # signature-transparent: PySpark 4.1's localCheckpoint is
-            # (self, eager=True, storageLevel=None) — a fixed (self,
-            # eager) wrapper would TypeError on storageLevel and turn a
-            # legitimate build into a spurious BUILD_ERROR (review r12)
-            def capturing(self, *args, **kwargs):
-                captured.append(analyzed_str(self))
+
+def _capturing(orig_fn):
+    # signature-transparent: PySpark 4.1's localCheckpoint is
+    # (self, eager=True, storageLevel=None) — a fixed (self,
+    # eager) wrapper would TypeError on storageLevel and turn a
+    # legitimate build into a spurious BUILD_ERROR (review r12)
+    def capturing(self, *args, **kwargs):
+        active = getattr(_CAPTURES, "stack", None)
+        if active:
+            plan = analyzed_str(self)
+            physical = None
+            if any(executed is not None for _, executed in active):
+                physical = str(self._jdf.queryExecution().executedPlan())
+            for captured, executed in active:
+                captured.append(plan)
                 if executed is not None:
-                    executed.append(
-                        str(self._jdf.queryExecution().executedPlan())
-                    )
-                return orig_fn(self, *args, **kwargs)
+                    executed.append(physical)
+        return orig_fn(self, *args, **kwargs)
 
-            return capturing
+    return capturing
 
-        setattr(cls, "localCheckpoint", make(orig))
-        patched.append((cls, orig))
+
+@contextlib.contextmanager
+def capture_checkpoints(captured: list, executed: list | None = None):
+    """Append the ANALYZED plan of every frame this thread is about to
+    ``localCheckpoint`` (untruncated) to ``captured``, before
+    materialization — the sweep's window into subtrees the checkpoint
+    later hides. When ``executed`` is given, the EXECUTED (physical)
+    plan text is appended there too, for shape tests that need to see
+    exchanges behind a checkpoint. Only checkpoints taken on the calling
+    thread are captured.
+    """
+    _install_capture_hook()
+    if not hasattr(_CAPTURES, "stack"):
+        _CAPTURES.stack = []
+    _CAPTURES.stack.append((captured, executed))
     try:
         yield captured
     finally:
-        for cls, orig in patched:
-            setattr(cls, "localCheckpoint", orig)
+        _CAPTURES.stack.pop()
 
 
 def split_top_level(s: str) -> list[str]:

@@ -2659,7 +2659,7 @@ def funnel_time_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STATIONARY_ROUNDS = 6
 
 
-def _markov_stationary_oracle(rounds: int = _STATIONARY_ROUNDS) -> str:
+def _markov_stationary_oracle() -> str:
     """Unrolled power-iteration twin. Every per-state sum is a
     list_reduce over a list(... ORDER BY ...) — the pinned-order fold
     idiom (see stats_anova_f) that makes a float summation identical in
@@ -2687,7 +2687,7 @@ def _markov_stationary_oracle(rounds: int = _STATIONARY_ROUNDS) -> str:
       SELECT st.i AS s, CAST(1 AS DOUBLE) / kk.k AS v FROM st, kk
     )"""
     its = []
-    for r in range(1, rounds + 1):
+    for r in range(1, _STATIONARY_ROUNDS + 1):
         its.append(f"""
     raw{r} AS MATERIALIZED (
       SELECT p2.j AS s,
@@ -2708,8 +2708,8 @@ def _markov_stationary_oracle(rounds: int = _STATIONARY_ROUNDS) -> str:
         + ",".join(its)
         + f"""
     SELECT st.i AS event_type,
-           round(coalesce(pi{rounds}.v, CAST(0 AS DOUBLE)), 6) AS stationary_p
-    FROM st LEFT JOIN pi{rounds} ON st.i = pi{rounds}.s
+           round(coalesce(pi{_STATIONARY_ROUNDS}.v, CAST(0 AS DOUBLE)), 6) AS stationary_p
+    FROM st LEFT JOIN pi{_STATIONARY_ROUNDS} ON st.i = pi{_STATIONARY_ROUNDS}.s
     """
     )
 

@@ -107,7 +107,7 @@ def chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.operators.chunking import chunk_documents
 
     docs = load_table(spark, sf_dir, "documents")
-    return chunk_documents(docs, "doc_id", "text", chunk_size=200, overlap=50)
+    return chunk_documents(docs, "doc_id", "text")
 
 
 @register(
@@ -593,7 +593,7 @@ def mlprep_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.operators.mlprep import shuffle_shards
 
     docs = load_table(spark, sf_dir, "documents")
-    out = shuffle_shards(docs, "doc_id", n_shards=8, salt="shuffle")
+    out = shuffle_shards(docs, "doc_id", n_shards=8)
     return out.select("doc_id", "shard", "pos", F.round("draw", 8).alias("draw"))
 
 
@@ -755,7 +755,7 @@ def pipeline_rag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.size(toks) >= 5)
         & (F.size(F.array_distinct(toks)).cast("double") / F.size(toks) > 0.3)
     )
-    chunks = chunk_documents(qual, "doc_id", "text", chunk_size=200, overlap=50)
+    chunks = chunk_documents(qual, "doc_id", "text")
     return chunks.join(emb, chunks.doc_id == emb.vec_id).select(
         "doc_id",
         "chunk_id",
@@ -1072,7 +1072,7 @@ def mlprep_dedup_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.queries.text import ngram_jaccard_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2)
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.2)
     cl = connected_components(pairs).select(
         F.col("node").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("rep"),

@@ -684,7 +684,6 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_cols=["o_custkey"],
         order_cols=[F.col("o_totalprice").desc(), F.col("o_orderkey").asc()],
         k=3,
-        rank_alias="rank",
     )
 
 
@@ -1084,7 +1083,6 @@ def interval_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         on="user_id",
         left_ts="purchase_ts",
         right_ts="click_ts",
-        lower="0 seconds",
         upper="30 minutes",
     )
 
@@ -1159,7 +1157,6 @@ def interval_join_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFra
         on="user_id",
         left_ts="purchase_ts",
         right_ts="click_ts",
-        lower="0 seconds",
         upper="30 minutes",
         how="left_outer",
     )
@@ -1272,7 +1269,7 @@ def winsorize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.operators.relational import winsorize
 
     events = load_table(spark, sf_dir, "events")
-    w = winsorize(events, "event_type", "value", lo=0.01, hi=0.99)
+    w = winsorize(events, "event_type", "value")
     return w.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("was_clipped").cast("bigint").alias("n_clipped"),
@@ -1519,7 +1516,6 @@ def interval_join_full_attribution(spark: SparkSession, sf_dir: str) -> DataFram
         on="user_id",
         left_ts="purchase_ts",
         right_ts="click_ts",
-        lower="0 seconds",
         upper="30 minutes",
         how="full_outer",
     )

@@ -648,13 +648,13 @@ def approx_topk_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         .localCheckpoint()
     )
-    sketch = cms_build(counts, "tok", depth=4, width=1024, hash="md5", weight="c")
+    sketch = cms_build(counts, "tok", hash="md5", weight="c")
     MIN_FREQ = 64
     candidates = counts.filter(F.col("c") >= MIN_FREQ).select(
         F.col("tok").alias("key")
     )
     return (
-        cms_estimate(sketch, candidates, depth=4, width=1024, hash="md5")
+        cms_estimate(sketch, candidates, hash="md5")
         .orderBy(F.col("est").desc(), F.col("key").asc())
         .limit(15)
         .select("key", "est")

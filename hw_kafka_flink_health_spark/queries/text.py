@@ -145,10 +145,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-trigram Jaccard near-dup pairs (>= 0.2).
 
     Shingle-explode + self-equi-join on shingle — never a cross join. At
-    100 TB the same operator runs with max_shingle_freq set to cap
-    hot-shingle blowup (and MinHash LSH below replaces it wholesale)."""
+    100 TB MinHash LSH below replaces it wholesale."""
     docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2).select(
+    return ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.2).select(
         "doc1", "doc2", F.round("jaccard", 4).alias("jaccard")
     )
 
@@ -696,7 +695,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.operators.dedup import connected_components
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2)
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.2)
     return connected_components(pairs).select(
         F.col("node").cast("bigint").alias("node"),
         F.col("cluster_id").cast("bigint").alias("cluster_id"),
@@ -1777,7 +1776,7 @@ def dedup_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2)
+    pairs = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.2)
     clusters = connected_components(pairs)
     sizes = clusters.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
@@ -2050,7 +2049,7 @@ def dedup_sketch_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    exact = ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.3).select(
+    exact = ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.3).select(
         F.col("doc1").alias("id1"), F.col("doc2").alias("id2")
     )
     approx = minhash_det_pairs(docs, "text", "doc_id", threshold=0.3).select(
@@ -2109,7 +2108,7 @@ def dedup_sketch_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_sentences_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python user-defined TABLE function (Spark 3.5+/4 `@udtf`,
-    Arrow-optimized) driven through SQL `LATERAL` — the one-row-in,
+    Arrow-optimized) driven through a lateral join — the one-row-in,
     many-rows-out escape hatch the scalar/aggregate UDF tiers can't
     express. The UDTF splits each document into sentences (regex on
     '.'+whitespace) and yields (idx, sentence, n_words) rows; the query
@@ -2139,11 +2138,10 @@ def text_sentences_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield idx, s, len(re.split(r"[ \t\n\r\f]+", s))
                     idx += 1
 
-    spark.udtf.register("sentence_split", SentenceSplit)
-    out = spark.sql(
-        "SELECT doc_id, s.n_words FROM {docs}, LATERAL sentence_split(text) s",
-        docs=load_table(spark, sf_dir, "documents"),
-    )
+    # called on an outer column reference, not registered by name: a
+    # build leaves no temporary function behind in the session
+    docs = load_table(spark, sf_dir, "documents")
+    out = docs.lateralJoin(SentenceSplit(F.col("text").outer()))
     return out.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_sentences"),
         F.sum("n_words").cast("long").alias("sum_words"),
@@ -2271,7 +2269,7 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     out = ngram_containment_pairs(
-        docs, "text", "doc_id", n=3, threshold=0.5, min_shingles=5
+        docs, "text", "doc_id", threshold=0.5, min_shingles=5
     )
     return out.select(
         "doc1",

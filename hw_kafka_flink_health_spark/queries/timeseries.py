@@ -56,7 +56,7 @@ def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     Value-hash-checked against DuckDB generate_series + IGNORE NULLS
     last_value."""
     events = load_table(spark, sf_dir, "events")
-    ff = resample_forward_fill(events, "user_id", "ts", "value", bucket="1 day")
+    ff = resample_forward_fill(events, "user_id", "ts", "value")
     return ff.select(
         "user_id",
         F.unix_millis(F.col("bucket_ts").cast("timestamp")).alias("bucket_ms"),

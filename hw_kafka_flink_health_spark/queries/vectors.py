@@ -201,7 +201,7 @@ def embedding_ann_ivf_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`embedding_ann_ivf`) remains the trained-quantizer path with its
     recall test."""
     emb = load_table(spark, sf_dir, "embeddings")
-    out = ivf_det_topk(emb, emb.filter(F.col("vec_id") < 20), k=3)
+    out = ivf_det_topk(emb, emb.filter(F.col("vec_id") < 20))
     return out.select(
         "query_id", "neighbor_id", F.round("sim", 4).alias("sim"), "rank"
     )
@@ -325,7 +325,7 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    return ivf_topk(emb, queries, k=5).select(
+    return ivf_topk(emb, queries).select(
         "query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank"
     )
 
@@ -345,9 +345,9 @@ def embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    codebooks, _ = pq_train(emb, m=8, codebook_size=256, sample_size=1000)
+    codebooks, _ = pq_train(emb, m=8, sample_size=1000)
     codes = pq_encode(emb, codebooks)
-    return pq_topk(codes, queries, codebooks, k=5)
+    return pq_topk(codes, queries, codebooks)
 
 
 @register("embedding_ann_lsh")  # approximate/seeded: rows-only by design
@@ -356,7 +356,7 @@ def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from exact top-k by design — recall is checked in tests, not by hash)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    return lsh_ann_topk(emb, queries, k=5).select(
+    return lsh_ann_topk(emb, queries).select(
         "query_id", "neighbor_id", F.round("distance", 4).alias("distance"), "rank"
     )
 
@@ -392,7 +392,7 @@ def embedding_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.operators.mlprep import int8_quantize_stats
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return int8_quantize_stats(emb, "vec_id", "embedding")
+    return int8_quantize_stats(emb)
 
 
 @register(
@@ -486,7 +486,7 @@ def embedding_semdedup_det(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.operators.similarity import semdedup_det
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return semdedup_det(emb, n_clusters=64, threshold=0.99)
+    return semdedup_det(emb, n_clusters=64)
 
 
 @register(

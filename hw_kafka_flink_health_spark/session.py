@@ -18,8 +18,8 @@ import os
 from pyspark.sql import SparkSession
 
 
-#: Conf bundle for the RocksDB state store provider (opt-in via
-#: get_spark(state_store="rocksdb") or SPARK_GRAFT_STATE_STORE=rocksdb).
+#: Conf bundle for the RocksDB state store provider (opt-in: pass it as
+#: get_spark(extra_conf=...) or apply it with cache.conf_override).
 #: The default HDFS-backed provider keeps EVERY key's state on the JVM
 #: heap — fine for the sandbox, but a 100x-scale sliding-window or CEP
 #: job (state amplification: a 1-min window sliding by 10 s holds 6
@@ -96,13 +96,13 @@ def _cgroup_limit_bytes() -> int | None:
     return min(limits) if limits else None
 
 
-def _default_driver_mem(cap_gib: int = 12) -> str:
-    """Local-mode driver heap default: min(cap, ~70% of available RAM),
+def _default_driver_mem() -> str:
+    """Local-mode driver heap default: min(12g, ~70% of available RAM),
     where available = min(MemTotal, cgroup limit) — the cgroup is where
     the OOM-killer actually engages in a container (ADVICE r11).
 
     /proc/meminfo is Linux-only; anywhere it is unreadable the cap is
-    returned unchanged (the pre-r11 behavior).
+    returned (the pre-r11 behavior).
     """
     try:
         with open("/proc/meminfo") as fh:
@@ -113,10 +113,10 @@ def _default_driver_mem(cap_gib: int = 12) -> str:
                     if cg is not None:
                         total = min(total, cg)
                     total_gib = total / (1024**3)
-                    return f"{max(1, min(cap_gib, int(total_gib * 0.7)))}g"
+                    return f"{max(1, min(12, int(total_gib * 0.7)))}g"
     except OSError:
         pass
-    return f"{cap_gib}g"
+    return "12g"
 
 
 def get_spark(
@@ -124,7 +124,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    state_store: str | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults.
 
@@ -141,11 +140,9 @@ def get_spark(
     * AQE + skew-join handling on: at 100 TB, skewed keys and bad static
       partition counts are the norm, not the exception.
 
-    ``state_store="rocksdb"`` (or env ``SPARK_GRAFT_STATE_STORE=rocksdb``)
-    switches streaming state to the RocksDB provider
-    (``ROCKSDB_STATE_CONF``) — mandatory at real scale where windowed/CEP
-    state exceeds executor heap; default stays HDFS-backed in-memory so
-    small jobs skip the native-store overhead.
+    Streaming state stays in the HDFS-backed in-memory provider, so small
+    jobs skip the native-store overhead; pass ``ROCKSDB_STATE_CONF`` as
+    ``extra_conf`` where windowed/CEP state exceeds executor heap.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     if master is None:
@@ -178,12 +175,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    state_store = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE")
-    if state_store == "rocksdb":
-        for k, v in ROCKSDB_STATE_CONF.items():
-            builder = builder.config(k, v)
-    elif state_store not in (None, "", "hdfs"):
-        raise ValueError(f"unknown state_store {state_store!r} (rocksdb|hdfs)")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

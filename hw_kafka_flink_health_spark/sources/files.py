@@ -220,11 +220,10 @@ def read_csv_robust(
     schema,
     *,
     mode: str = "PERMISSIVE",
-    corrupt_col: str = "_corrupt_record",
 ) -> DataFrame:
     """CSV read with the reference's parse-don't-crash contract
     (`parse_event` -> None, SURVEY §2.A P1) applied to files: malformed
-    rows land in `corrupt_col` (PERMISSIVE) or are dropped
+    rows land in `_corrupt_record` (PERMISSIVE) or are dropped
     (DROPMALFORMED) instead of failing the 100 TB job at hour nine.
     Always takes an explicit schema — inference is a full extra pass."""
     reader = (
@@ -233,5 +232,5 @@ def read_csv_robust(
         .option("mode", mode)
     )
     if mode == "PERMISSIVE":
-        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
+        reader = reader.option("columnNameOfCorruptRecord", "_corrupt_record")
     return reader.csv(path)

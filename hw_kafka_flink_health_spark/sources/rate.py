@@ -69,13 +69,11 @@ def synthetic_heart_rate_raw_stream(spark: SparkSession, rows_per_second: int = 
     return ev.select(F.to_json(F.struct("patient_id", "timestamp", "heart_rate_bpm")).alias("raw"))
 
 
-def synthetic_heart_rate_batch(
-    spark: SparkSession, n: int = 1000, start_ts: str = "2025-11-19 07:00:00"
-) -> DataFrame:
+def synthetic_heart_rate_batch(spark: SparkSession, n: int = 1000) -> DataFrame:
     """Batch twin: n events spaced 100 ms apart (the producer's cadence)."""
     base = spark.range(n)
     ts = F.timestamp_millis(
-        F.unix_millis(F.lit(start_ts).cast("timestamp")) + F.col("id") * 100
+        F.unix_millis(F.lit("2025-11-19 07:00:00").cast("timestamp")) + F.col("id") * 100
     )
     return base.select(*_event_cols(F.col("id"), ts))
 

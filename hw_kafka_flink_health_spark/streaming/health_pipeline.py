@@ -35,9 +35,6 @@ DEFAULT_WINDOW = "1 minute"  # reference: README Part 2 (1-min tumbling)
 def windowed_vitals(
     events: DataFrame,
     *,
-    ts_col: str = "event_ts",
-    key_col: str = "patient_id",
-    value_col: str = "heart_rate_bpm",
     window_duration: str = DEFAULT_WINDOW,
     slide_duration: str | None = None,
     watermark: str | None = None,
@@ -51,21 +48,21 @@ def windowed_vitals(
     """
     df = events
     if watermark is not None and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
+        df = df.withWatermark("event_ts", watermark)
     win = (
-        F.window(F.col(ts_col), window_duration, slide_duration)
+        F.window(F.col("event_ts"), window_duration, slide_duration)
         if slide_duration
-        else F.window(F.col(ts_col), window_duration)
+        else F.window(F.col("event_ts"), window_duration)
     )
     return (
-        df.groupBy(win.alias("window"), F.col(key_col))
+        df.groupBy(win.alias("window"), F.col("patient_id"))
         .agg(
-            F.avg(value_col).alias("avg_hr"),
-            F.min(value_col).alias("min_hr"),
-            F.max(value_col).alias("max_hr"),
+            F.avg("heart_rate_bpm").alias("avg_hr"),
+            F.min("heart_rate_bpm").alias("min_hr"),
+            F.max("heart_rate_bpm").alias("max_hr"),
         )
         .select(
-            F.col(key_col),
+            F.col("patient_id"),
             F.unix_millis(F.col("window.start").cast("timestamp")).alias("window_start"),
             F.unix_millis(F.col("window.end").cast("timestamp")).alias("window_end"),
             "avg_hr",
@@ -108,18 +105,9 @@ def build_streaming_job(
     return alerts
 
 
-def windowed_vitals_rollup(
-    events: DataFrame,
-    *,
-    ts_col: str = "event_ts",
-    key_col: str = "patient_id",
-    value_col: str = "heart_rate_bpm",
-    window_duration: str = DEFAULT_WINDOW,
-    rollup_duration: str = "5 minutes",
-    watermark: str | None = None,
-) -> DataFrame:
-    """CHAINED stateful aggregation: fine windows rolled up to a coarse
-    grain inside ONE streaming query (Spark's multiple-stateful-operator
+def windowed_vitals_rollup(events: DataFrame, *, watermark: str | None = None) -> DataFrame:
+    """CHAINED stateful aggregation: 1-minute windows rolled up to
+    5-minute windows inside ONE streaming query (Spark's multiple-stateful-operator
     support: the second `window()` re-windows the first aggregation's
     window struct; both operators share the watermark, each keeps its own
     state store).
@@ -135,17 +123,17 @@ def windowed_vitals_rollup(
     """
     df = events
     if watermark is not None and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
+        df = df.withWatermark("event_ts", watermark)
     fine = df.groupBy(
-        F.window(F.col(ts_col), window_duration).alias("window"), F.col(key_col)
+        F.window(F.col("event_ts"), DEFAULT_WINDOW).alias("window"), F.col("patient_id")
     ).agg(
-        F.sum(value_col).alias("sum_hr"),
+        F.sum("heart_rate_bpm").alias("sum_hr"),
         F.count(F.lit(1)).alias("n_events"),
-        F.min(value_col).alias("min_hr"),
-        F.max(value_col).alias("max_hr"),
+        F.min("heart_rate_bpm").alias("min_hr"),
+        F.max("heart_rate_bpm").alias("max_hr"),
     )
     coarse = fine.groupBy(
-        F.window(F.col("window"), rollup_duration).alias("rollup"), F.col(key_col)
+        F.window(F.col("window"), "5 minutes").alias("rollup"), F.col("patient_id")
     ).agg(
         (F.sum("sum_hr") / F.sum("n_events")).alias("avg_hr"),
         F.sum("n_events").cast("bigint").alias("n_events"),
@@ -154,7 +142,7 @@ def windowed_vitals_rollup(
         F.count(F.lit(1)).cast("bigint").alias("n_fine_windows"),
     )
     return coarse.select(
-        F.col(key_col),
+        F.col("patient_id"),
         F.unix_millis(F.col("rollup.start").cast("timestamp")).alias("rollup_start"),
         F.unix_millis(F.col("rollup.end").cast("timestamp")).alias("rollup_end"),
         "avg_hr",

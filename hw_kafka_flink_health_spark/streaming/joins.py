@@ -32,15 +32,14 @@ def interval_join(
     on: str,
     left_ts: str,
     right_ts: str,
-    lower: str = "0 seconds",
     upper: str = "10 minutes",
     watermark: str = "30 seconds",
     how: str = "inner",
 ) -> DataFrame:
     """Interval join; columns from both sides survive (key once).
 
-    `lower`/`upper` are INTERVAL strings relative to the right side's
-    timestamp. Streaming inputs are watermarked on their own timestamp;
+    The left timestamp must fall in [right, right + `upper`], with
+    `upper` an INTERVAL string. Streaming inputs are watermarked on their own timestamp;
     batch inputs pass through unchanged.
 
     `how` may be "inner", "left_outer", "right_outer", or "full_outer".
@@ -62,7 +61,7 @@ def interval_join(
     rw = rw.withColumnRenamed(on, "__rkey")
     cond = (
         (lw[on] == rw["__rkey"])
-        & (lw[left_ts] >= rw[right_ts] + F.expr(f"INTERVAL {lower}"))
+        & (lw[left_ts] >= rw[right_ts] + F.expr("INTERVAL 0 seconds"))
         & (lw[left_ts] <= rw[right_ts] + F.expr(f"INTERVAL {upper}"))
     )
     joined = lw.join(rw, cond, how)

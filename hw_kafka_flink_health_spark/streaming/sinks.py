@@ -29,14 +29,14 @@ def foreach_batch_parquet(df: DataFrame, out_dir: str, checkpoint_dir: str):
     )
 
 
-def enrich_with_static(stream_df: DataFrame, dim_df: DataFrame, on: str, how: str = "left") -> DataFrame:
+def enrich_with_static(stream_df: DataFrame, dim_df: DataFrame, on: str) -> DataFrame:
     """Stream-static join: enrich a stream with a (batch) dimension table.
 
     Catalyst plans the static side as a regular (usually broadcast) join
     per micro-batch — no state store involved; the dim can be swapped by
     re-reading it in foreachBatch for slowly-changing dims.
     """
-    return stream_df.join(dim_df, on, how)
+    return stream_df.join(dim_df, on, "left")
 
 
 def foreach_batch_upsert(

@@ -23,16 +23,15 @@ def read_state(
     checkpoint_dir: str,
     *,
     operator_id: int = 0,
-    batch_id: int | None = None,
 ) -> DataFrame:
     """Read a streaming operator's state store as a batch DataFrame
-    (key struct, value struct, partition_id). ``batch_id`` selects a
-    historical version (time travel over state); default is the latest
-    committed batch."""
-    r = spark.read.format("statestore").option("operatorId", operator_id)
-    if batch_id is not None:
-        r = r.option("batchId", batch_id)
-    return r.load(checkpoint_dir)
+    (key struct, value struct, partition_id) at the latest committed
+    batch."""
+    return (
+        spark.read.format("statestore")
+        .option("operatorId", operator_id)
+        .load(checkpoint_dir)
+    )
 
 
 def read_state_metadata(spark: SparkSession, checkpoint_dir: str) -> DataFrame:

@@ -302,10 +302,8 @@ def main() -> None:
         "semantics bench.py reports); `dedup_ngram_jaccard` itself carries",
         "the full pipeline build per SF.",
         "",
-        "Beyond-sf0.1 behavior is probed separately by",
-        "`scripts/probe_sf02_basket.py` (run it and record the result in",
-        "PLANS.md — a one-off measurement does not belong in this",
-        "regenerated table).",
+        "Beyond-sf0.1 behavior is recorded in PLANS.md (a one-off",
+        "measurement does not belong in this regenerated table).",
     ]
     out = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md"

@@ -156,7 +156,7 @@ when pandas dtype coercion (object columns, nullable ints) is itself the bug
 risk. Parity between tiers is pinned byte-for-byte by
 tests/test_multimodal.py::test_raw_rgb_arrow_tier_parity.
 
-## cosine tier choice — measured crossover (scripts/bench_cosine_tiers.py)
+## cosine tier choice — measured crossover (one-off bench, since deleted)
 
 Two exact-top-k tiers do the same job: `cosine_topk` (Catalyst HOF fold,
 JVM-side) and `cosine_topk_arrow` (mapInPandas, one BLAS matmul per Arrow
@@ -191,7 +191,7 @@ tasks OOM'd a 1 GB heap before any operator ran. For high-dim embedding
 scans set columnarReaderBatchSize to 512 (or give executors headroom):
 the reader batch is rows x dims x 8 bytes regardless of row count.
 
-## ANN tier bench (scripts/bench_ann.py, sf0.1 embeddings: 5k vectors x 64 dims, k=5, 16 queries)
+## ANN tier bench (one-off bench, since deleted; sf0.1 embeddings: 5k vectors x 64 dims, k=5, 16 queries)
 
 | tier | wall (s) | recall@5 vs exact |
 |---|---|---|
@@ -220,7 +220,7 @@ re-rank of the top ~10k codes).
 
 ## Round-5 re-measure of the r3->r4 "regression" set (VERDICT r4 item 2)
 
-`scripts/bench_regression_ab.py`: 5 repetitions at sf0.1, order-interleaved so
+A one-off A/B script (since deleted): 5 repetitions at sf0.1, order-interleaved so
 machine-load drift hits every query equally, with `q1_pricing_summary` as a
 load control. Measured 2026-08-14 on the shared machine:
 
@@ -273,9 +273,9 @@ touched any of the four query definitions.
 ## Streaming state-store posture (round-6): RocksDB opt-in + amplification measured
 
 The engine default stays Spark's HDFS-backed in-memory provider; at real
-scale streaming state must move off-heap. `session.py:get_spark(state_store=
-"rocksdb")` (or `SPARK_GRAFT_STATE_STORE=rocksdb`) switches every streaming
-query to the bundled RocksDB provider with changelog checkpointing (per-batch
+scale streaming state must move off-heap. `session.py:ROCKSDB_STATE_CONF`
+(passed as `get_spark(extra_conf=...)` or applied with `conf_override`)
+switches every streaming query to the bundled RocksDB provider with changelog checkpointing (per-batch
 deltas instead of full SST snapshot uploads). Engagement is verified, not
 assumed: `tests/test_streaming.py::test_streaming_under_rocksdb_state_store`
 asserts identical alert output AND rocksdb custom metrics in the query
@@ -331,7 +331,7 @@ pinned in tests/test_approx_operators.py.
 
 ## Beyond-sf0.1 probe (round-6): FP-Growth alpha flattens
 
-`scripts/probe_sf02_basket.py` built a doubled-basket sf0.2 (lineitem
+A one-off probe (since deleted) built a doubled-basket sf0.2 (lineitem
 unioned with an order-key-shifted copy — twice the baskets, same item
 universe) and interleave-timed `basket_frequent_itemsets` against
 sf0.1: **3.77 s → 5.46 s, alpha 0.54 over the 0.1→0.2 doubling** — the
@@ -411,7 +411,7 @@ gram's only owner is min(doc_id) INSIDE the same gram aggregate, so
 n_shared = n_grams − unique-count and n_grams is the shingle array's
 size — the dfreq-join-back (a second full postings shuffle on gram,
 hot-key exposed, plus a recomputed explode) is gone. Measured 1.82 s →
-1.57 s at sf0.1; `scripts/probe_sf02_dup_spans.py` (doubled documents,
+1.57 s at sf0.1; a one-off probe (doubled documents, since deleted;
 interleaved): **ratio 0.95, alpha ≈ 0 past sf0.1** — the 0.70 alpha was
 explode amortization, not a steepening curve. Hot-gram skew posture:
 the surviving gram aggregate is map-side combined (a corpus-wide

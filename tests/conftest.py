@@ -15,7 +15,7 @@ SF_DIR = "/root/testdata/sf0.001"
 #: (tests/test_oracle.py: all 420 registered queries, 411 of them
 #: value-checked against DuckDB, each also gated on its plan shape and
 #: on leaving the session's temp views and SQL conf as it found them, on
-#: that same build): 786 tests in 683-897 s on 4 cores at a CPU score
+#: that same build): 788 tests in 683-897 s on 4 cores at a CPU score
 #: (`perfbench/envinfo.py:cpu_score()`) of 400-507 MiB/s (804 s at
 #: 446-468 with the session gate), inside a 2670 s verify window with
 #: room for a 2x slower host.

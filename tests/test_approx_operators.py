@@ -35,7 +35,7 @@ def test_ivf_recall_vs_exact(spark):
     exact = _exact_neighbors(spark)
     emb = load_table(spark, SF, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    approx = ivf_topk(emb, q, k=5, n_clusters=10, n_probe=2).collect()
+    approx = ivf_topk(emb, q).collect()
     got: dict[int, set[int]] = {}
     for r in approx:
         got.setdefault(r.query_id, set()).add(r.neighbor_id)
@@ -48,7 +48,7 @@ def test_ivf_recall_vs_exact(spark):
 def test_ivf_self_excluded_and_k_respected(spark):
     emb = load_table(spark, SF, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
-    rows = ivf_topk(emb, q, k=5).collect()
+    rows = ivf_topk(emb, q).collect()
     assert all(r.neighbor_id != r.query_id for r in rows)
     assert all(1 <= r.rank <= 5 for r in rows)
 
@@ -69,13 +69,13 @@ def test_pq_recall_vs_exact_and_determinism(spark):
     emb = load_table(spark, SF, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
 
-    cb1, d = pq_train(emb, m=8, codebook_size=256, sample_size=1000)
-    cb2, _ = pq_train(emb, m=8, codebook_size=256, sample_size=1000)
+    cb1, d = pq_train(emb, m=8, sample_size=1000)
+    cb2, _ = pq_train(emb, m=8, sample_size=1000)
     assert (cb1 == cb2).all(), "codebook training must be deterministic"
     assert cb1.shape[0] * cb1.shape[2] == d
 
     codes = pq_encode(emb, cb1)
-    rows = pq_topk(codes, q, cb1, k=5).collect()
+    rows = pq_topk(codes, q, cb1).collect()
     assert all(r.neighbor_id != r.query_id for r in rows)
     assert all(1 <= r.rank <= 5 for r in rows)
     got: dict[int, set[int]] = {}
@@ -476,11 +476,11 @@ def test_ivf_det_finds_planted_duplicate(spark):
     )
     corpus = emb.unionByName(copy.select(emb.columns))
     queries = corpus.filter(F.col("vec_id") == 99999)
-    got = ivf_det_topk(corpus, queries, k=3).collect()
+    got = ivf_det_topk(corpus, queries).collect()
     top = [r for r in got if r["rank"] == 1]
     assert len(top) == 1 and top[0]["neighbor_id"] == 3, got
     assert abs(top[0]["sim"] - 1.0) < 1e-9
-    again = ivf_det_topk(corpus, queries, k=3).collect()
+    again = ivf_det_topk(corpus, queries).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, again))
 
 

@@ -24,7 +24,7 @@ def test_chunks_reassemble_to_original(spark):
     """Dropping each chunk's 50-char overlap prefix (except chunk 0) and
     concatenating in order reconstructs the document exactly."""
     docs = load_table(spark, SF_DIR, "documents")
-    chunks = chunk_documents(docs, "doc_id", "text", chunk_size=200, overlap=50)
+    chunks = chunk_documents(docs, "doc_id", "text")
     rebuilt = (
         chunks.withColumn(
             "piece",
@@ -49,7 +49,7 @@ def test_chunks_reassemble_to_original(spark):
 
 def test_chunk_sizes(spark):
     docs = load_table(spark, SF_DIR, "documents")
-    chunks = chunk_documents(docs, "doc_id", "text", chunk_size=200, overlap=50)
+    chunks = chunk_documents(docs, "doc_id", "text")
     # every non-final chunk is exactly chunk_size; finals are 1..chunk_size
     w_max = chunks.groupBy("doc_id").agg(F.max("chunk_id").alias("last_id"))
     joined = chunks.join(w_max, "doc_id")
@@ -111,7 +111,7 @@ def test_redaction_idempotent_and_complete(spark):
 
 def test_gapfill_grid_is_dense(spark):
     events = load_table(spark, SF_DIR, "events")
-    ff = resample_forward_fill(events, "user_id", "ts", "value", bucket="1 day")
+    ff = resample_forward_fill(events, "user_id", "ts", "value")
     per_user = ff.groupBy("user_id").agg(
         F.count("*").alias("n"),
         F.min("bucket_ts").alias("lo"),

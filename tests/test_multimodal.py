@@ -53,7 +53,7 @@ def test_resize_reduces_and_preserves_schema(spark):
 def test_sample_frames_expands_video_rows(spark):
     assets = _assets(spark)
     n_videos = assets.filter(F.col("modality") == "video").count()
-    frames = sample_frames(assets, n_frames=4).collect()
+    frames = sample_frames(assets).collect()
     assert len(frames) == 4 * n_videos
     assert {r.frame_idx for r in frames} == {0, 1, 2, 3}
     # frames partition the payload deterministically

@@ -107,6 +107,12 @@ def temp_view_names(spark) -> set[str]:
     return set(names.mkString("\n").split("\n")) - {""}
 
 
+def temp_function_names(spark) -> set[str]:
+    """The session's temporary function names."""
+    fns = spark._jsparkSession.sessionState().catalog().listTemporaryFunctions()
+    return set(fns.mkString("\n").split("\n")) - {""}
+
+
 def _conf_diff(spark, before) -> dict:
     """key -> (before, now) for every SQL conf that differs from the
     `getAllConfs()` snapshot `before`."""
@@ -131,9 +137,9 @@ def build_gated(name: str, spark):
       localCheckpoint hid, unless the query is in AUDITED_BOUNDED — and
       a whitelisted query must still have one, or its entry is stale.
       See tests/test_window_sweep.py for the boundedness taxonomy.
-    * the session is left as it was found: no temp view name added or
-      dropped and no SQL conf written (both read on the JVM side, well
-      under a millisecond each; `spark.catalog.listTables` and
+    * the session is left as it was found: no temp view or temporary
+      function name added or dropped and no SQL conf written (all read
+      on the JVM side, well under a millisecond each; `spark.catalog.listTables` and
       `spark.conf.getAll` cost tens to hundreds of ms a call). A query
       that repoints a view the caller registered keeps the names; that
       case is tests/test_recursive_hygiene.py's.
@@ -141,11 +147,16 @@ def build_gated(name: str, spark):
     captured: list[str] = []
     conf = spark._jsparkSession.sessionState().conf()
     views, confs = temp_view_names(spark), conf.getAllConfs()
+    fns = temp_function_names(spark)
     with capture_checkpoints(captured):
         df = QUERIES[name](spark, SF_DIR)
     assert temp_view_names(spark) == views, (
         f"{name}: building changed the session's temp views "
         f"{sorted(views)} -> {sorted(temp_view_names(spark))}"
+    )
+    assert temp_function_names(spark) == fns, (
+        f"{name}: building changed the session's temporary functions "
+        f"{sorted(fns)} -> {sorted(temp_function_names(spark))}"
     )
     assert conf.getAllConfs().equals(confs), (
         f"{name}: building wrote session conf: {_conf_diff(spark, confs)}"

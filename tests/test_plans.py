@@ -1086,3 +1086,42 @@ def test_round10_pack_plan_shapes(spark):
     # visible plan must carry NO window at all (the naive formulation
     # would show row_number + count over SinglePartition)
     assert "Window" not in plan_of(spark, "mlprep_global_doc_ids")
+
+
+def test_capture_checkpoints_is_per_thread(spark):
+    """Two threads each hold their own capture while both are open: each
+    list receives only the plan its own thread checkpointed. A nested
+    capture on one thread fills both of that thread's lists."""
+    import threading
+
+    from hw_kafka_flink_health_spark.plans import capture_checkpoints
+
+    barrier = threading.Barrier(2, timeout=60)
+    got: dict[str, list] = {}
+    errors: list = []
+
+    def build(tag: str) -> None:
+        try:
+            captured: list = []
+            inner: list = []
+            with capture_checkpoints(captured):
+                barrier.wait()  # both captures are open before either checkpoints
+                with capture_checkpoints(inner):
+                    spark.range(3).selectExpr(f"id AS {tag}").localCheckpoint()
+                barrier.wait()  # neither closes before both have checkpointed
+            got[tag] = captured
+            got[tag + "_inner"] = inner
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=build, args=(t,)) for t in ("only_a", "only_b")]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads), "capture threads hung"
+    assert not errors, errors
+    for tag, other in (("only_a", "only_b"), ("only_b", "only_a")):
+        for key in (tag, tag + "_inner"):
+            assert len(got[key]) == 1, (key, got[key])
+            assert tag in got[key][0] and other not in got[key][0], (key, got[key])

@@ -184,7 +184,6 @@ def test_session_timeout_stream_closes_sessions_via_watermark(spark, tmp_path):
     parsed = parse_events_df(reader).withWatermark("event_ts", "5 seconds")
     sessions = session_timeout_stream(
         parsed.select("patient_id", "event_time", "event_ts", "heart_rate_bpm"),
-        gap_seconds=30,
     )
     q = (
         sessions.writeStream.outputMode("append")

@@ -150,14 +150,14 @@ def test_cms_estimate_one_sided_and_merge_linear(spark):
         + [(f"noise_{i}",) for i in range(3000)]
     )
     df = spark.createDataFrame(rows, ["v"]).repartition(8)
-    sketch = cms_build(df, "v", depth=4, width=1024)
+    sketch = cms_build(df, "v")
 
     probes = spark.createDataFrame(
         [("hot",), ("warm",), ("noise_7",), ("never_seen",)], ["key"]
     )
     est = {
         r.key: r.est
-        for r in cms_estimate(sketch, probes, depth=4, width=1024).collect()
+        for r in cms_estimate(sketch, probes).collect()
     }
     true = {"hot": 400, "warm": 60, "noise_7": 1, "never_seen": 0}
     for k, t in true.items():
@@ -169,10 +169,10 @@ def test_cms_estimate_one_sided_and_merge_linear(spark):
     half_a = spark.createDataFrame(rows[: len(rows) // 2], ["v"])
     half_b = spark.createDataFrame(rows[len(rows) // 2 :], ["v"])
     merged = cms_merge(
-        cms_build(half_a, "v", depth=4, width=1024),
-        cms_build(half_b, "v", depth=4, width=1024),
+        cms_build(half_a, "v"),
+        cms_build(half_b, "v"),
     )
-    whole = cms_build(df, "v", depth=4, width=1024)
+    whole = cms_build(df, "v")
     a = {(r.seed, r.bucket): r.cnt for r in merged.collect()}
     b = {(r.seed, r.bucket): r.cnt for r in whole.collect()}
     assert a == b

@@ -228,7 +228,7 @@ def test_compact_small_files(spark, tmp_path):
 
     assert len(glob.glob(f"{frag}/*.parquet")) == 40
     out = str(tmp_path / "compacted")
-    n_out = compact_small_files(spark, frag, out, target_file_mb=128)
+    n_out = compact_small_files(spark, frag, out)
     files = glob.glob(f"{out}/*.parquet")
     assert len(files) == n_out == 1  # sf0.001 events << 128 MB
     assert spark.read.parquet(out).count() == events.count()
@@ -254,7 +254,7 @@ def test_bloom_filtered_write_adds_index_bytes_and_reads_back(spark, tmp_path):
     ).coalesce(1)
     plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloomed")
     df.write.mode("overwrite").parquet(plain)
-    write_bloom_filtered(df, bloomed, ["k"], expected_ndv=100_000)
+    write_bloom_filtered(df, bloomed, ["k"])
 
     size = lambda d: sum(os.path.getsize(f) for f in glob.glob(f"{d}/*.parquet"))
     delta = size(bloomed) - size(plain)

@@ -1460,11 +1460,3 @@ def test_streaming_under_rocksdb_state_store(spark, tmp_path):
         for op in ops
     ), f"no rocksdb metrics in progress: {ops}"
 
-
-def test_get_spark_rejects_unknown_state_store():
-    import pytest
-
-    from hw_kafka_flink_health_spark.session import get_spark
-
-    with pytest.raises(ValueError, match="unknown state_store"):
-        get_spark(state_store="leveldb")

@@ -56,7 +56,7 @@ def test_containment_catches_excerpt_jaccard_misses(spark):
         "doc_id long, text string",
     )
     got = ngram_containment_pairs(
-        df, "text", "doc_id", n=3, threshold=0.8, min_shingles=1
+        df, "text", "doc_id", threshold=0.8, min_shingles=1
     ).collect()
     assert len(got) == 1
     r = got[0]
@@ -66,5 +66,5 @@ def test_containment_catches_excerpt_jaccard_misses(spark):
     assert r["containment_1_in_2"] < 0.25
     # jaccard at the same cutoff sees nothing
     assert (
-        ngram_jaccard_pairs(df, "text", "doc_id", n=3, threshold=0.8).count() == 0
+        ngram_jaccard_pairs(df, "text", "doc_id", threshold=0.8).count() == 0
     )
