@@ -5,9 +5,9 @@ as `binary` columns; decode / feature-extract / resize / frame-sample run
 as Arrow-batched pandas functions over ``mapInPandas`` so each Python
 worker sees a columnar batch, never a row at a time.
 
-The actual codec step is environment-dependent (no image/audio libs in
-this container), so `decode_image_batch` raises NotImplementedError;
-`fake_decode` is the deterministic stand-in `extract_features` runs — it
+Compressed codecs need image/audio libraries the package does not depend
+on, so `fake_decode` is the deterministic stand-in `extract_features`
+runs (uncompressed BMP and WAV have real codecs below) — it
 exercises the REAL Spark plumbing (schema, partitioning, UDF
 signature, Arrow batch shape) with a fake pixel-stats computation derived
 from the payload bytes.
@@ -48,18 +48,6 @@ def fake_decode(payload: bytes) -> list[float]:
         return []
     step = max(1, len(payload) // 16)
     return [float(payload[i]) for i in range(0, min(len(payload), 16 * step), step)][:16]
-
-
-def decode_image_batch(payloads: pd.Series) -> pd.Series:
-    """Real decoder slot for COMPRESSED formats — jpeg/png libs are absent
-    in this environment. Uncompressed containers have real pure-Python
-    codecs here: `parse_bmp24` (24-bit BMP) and `parse_wav_pcm16`
-    (RIFF/WAVE PCM16)."""
-    raise NotImplementedError(
-        "compressed-image decoding requires a codec library not present in "
-        "this container — parse_bmp24 / parse_wav_pcm16 cover the "
-        "uncompressed formats"
-    )
 
 
 # --- Real, dependency-free container codecs (public formats: Windows

@@ -5,18 +5,45 @@ reduced to its Spark-visible contract, built from primitives this repo
 already trusts (parquet parts + atomic manifest publication, the same
 commit discipline as `sources/pydatasource.py:ManifestJsonlDataSource`):
 
-* every commit writes NEW parquet files into the table directory, then
-  publishes `manifest-v{N}.json` naming exactly the files that make up
-  version N, and finally flips the `_latest` pointer by ATOMIC RENAME —
-  readers never observe a half-written version;
+* data files are immutable and shared across versions: a commit stages
+  NEW parquet files into the table directory and publishes
+  `manifest-v{N}.json` naming exactly the data files and deletion-vector
+  sidecars that make up version N, so an overwrite logically replaces
+  rows but physically only adds files + one manifest, and commits cost
+  O(new data), never O(table);
 * a read pins a manifest, so it sees one immutable snapshot regardless
   of concurrent commits (snapshot isolation), and old versions stay
-  readable forever until vacuumed (time travel);
-* data files are immutable and shared across versions — an overwrite
-  logically replaces rows but physically only adds files + one manifest,
-  so commits cost O(new data), never O(table);
+  readable until vacuumed (time travel);
 * `vacuum` deletes files unreachable from any retained manifest — the
   only destructive operation, and it never touches the current version.
+
+Every committer goes through ONE claim path, `_claim`:
+
+1. files are staged inside `_staging`, which removes them again on any
+   exit that did not publish a manifest naming them;
+2. version N is claimed by hard-linking a complete manifest to its
+   final name (`_publish_manifest`): the link fails when N is taken, so
+   two writers never share a version and no reader sees a torn one;
+3. a lost claim follows the committer's rule:
+   (a) re-derive the manifest at the next number — the declarative
+       commits: `commit_snapshot` without `expect_version`,
+       `restore_snapshot`, and the branch claims of `commit_to_branch`
+       and `rebase_branch`;
+   (b) step over a parked branch claim while `_latest` still reads the
+       base the change was derived from, else raise
+       `VersionConflictError` — `delete_where`, `merge_into`,
+       `compact_snapshot` and `commit_snapshot` with `expect_version`;
+   (c) rule (b) raising `MergeConflictError` — `merge_branch`;
+4. after the win a main commit advances the monotonic `_latest` pointer
+   (`_advance_pointer`, a check-and-rename under `_latest.lock`); a
+   branch commit CASes its head in the branch map and removes its own
+   manifest when the CAS loses.
+
+Branch commits claim ordinary numbers but never move `_latest`, and the
+main committers' manifests carry no `branch` key, so no manifest that
+`_latest` reaches is a branch claim. Tag and branch maps change only
+through `_update_refs`, one locked read-modify-write under `_tags.lock`
+— the lock `vacuum` holds across its scan and delete pass.
 
 At 100 TB this is the difference between "rewrite the table to update
 it" and "append new parts + swap a pointer"; the read path is a plain
@@ -29,8 +56,18 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from contextlib import contextmanager, suppress
 
 from pyspark.sql import DataFrame, SparkSession
+
+# claim attempts of the committers that take no `max_retries`
+_CLAIM_RETRIES = 20
+# the keys restore_snapshot and merge_branch carry forward when they
+# republish a version by reference: dv (logical content), the pruning
+# stats (dropping them silently full-scans every pruned read) and
+# batch_id (the streaming sink's exactly-once marker — the republished
+# content IS the state as of that batch)
+_CARRIED = ("dv", "stats", "cluster_col", "stats2", "zorder", "batch_id")
 
 
 class VersionConflictError(RuntimeError):
@@ -43,6 +80,19 @@ def _manifest_path(table_dir: str, version: int) -> str:
     return os.path.join(table_dir, f"manifest-v{version}.json")
 
 
+def _manifest_version(name: str) -> int | None:
+    """N for a `manifest-vN.json` file name, else None."""
+    if name.startswith("manifest-v") and name.endswith(".json"):
+        with suppress(ValueError):
+            return int(name[len("manifest-v") : -len(".json")])
+    return None
+
+
+def _read_manifest(table_dir: str, version: int) -> dict:
+    with open(_manifest_path(table_dir, version)) as f:
+        return json.load(f)
+
+
 def _publish_manifest(table_dir: str, version: int, manifest: dict) -> bool:
     """Atomically CLAIM version N by hard-linking a fully-written temp
     manifest to its final name — link fails if the name exists, so two
@@ -50,14 +100,13 @@ def _publish_manifest(table_dir: str, version: int, manifest: dict) -> bool:
     observe a half-written manifest (the content exists before the name
     does). Returns False when another writer already claimed N.
 
-    Every manifest is stamped `committed_at` (epoch seconds) HERE — the
-    single choke point every committer (commit/restore/compact/clustered/
-    zordered/merge) publishes through — which is what read_snapshot's
-    `as_of` timestamp travel resolves against. The stamp rides the
-    manifest json, not the file mtime, so copies/backups don't corrupt
-    time travel. It is clamped to max(previous version's stamp, now):
-    resolve_as_of assumes committed_at is monotone in version number,
-    which a raw wall clock only guarantees on one host with no NTP
+    Every manifest is stamped `committed_at` (epoch seconds) HERE, the
+    publish step of `_claim`, and read_snapshot's `as_of` timestamp
+    travel resolves against that stamp. The stamp
+    rides the manifest json, not the file mtime, so copies/backups don't
+    corrupt time travel. It is clamped to max(previous version's stamp,
+    now): resolve_as_of assumes committed_at is monotone in version
+    number, which a raw wall clock only guarantees on one host with no NTP
     step-backs (round-7 advice — the same clamp Delta applies, see its
     "timestamp adjusted" commit semantics). When the previous manifest
     is already vacuumed the clamp falls back to now; any stamp it could
@@ -67,8 +116,7 @@ def _publish_manifest(table_dir: str, version: int, manifest: dict) -> bool:
 
     stamp = _time.time()
     try:
-        with open(_manifest_path(table_dir, version - 1)) as pf:
-            prev = json.load(pf).get("committed_at")
+        prev = _read_manifest(table_dir, version - 1).get("committed_at")
         if prev is not None:
             stamp = max(stamp, prev)
     except (OSError, ValueError):
@@ -86,23 +134,14 @@ def _publish_manifest(table_dir: str, version: int, manifest: dict) -> bool:
         os.remove(tmp)
 
 
-def _rewrite_manifest(table_dir: str, version: int, manifest: dict) -> None:
-    """Atomically REPLACE an already-claimed manifest (stats enrichment by
-    the clustered/zordered committers). tmp + os.replace: a concurrent
-    reader of the base manifest sees either the old or the new content,
-    never a truncation."""
-    tmp = os.path.join(table_dir, f"_manifest-tmp-{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, _manifest_path(table_dir, version))
-
-
 def _stage_parquet(df: DataFrame, table_dir: str, prefix: str, version: int) -> list:
     """Write df to a scratch dir and move its part files into the table
     dir as `{prefix}-v{version}-<part>` — the shared staging step of every
     commit path. The moved files are invisible to readers until a
     manifest references them (and vacuum's never-referenced TTL guard
-    protects them while the commit is in flight)."""
+    protects them while the commit is in flight). Data file names embed
+    the first-attempt version as a debugging hint; the manifest's file
+    list is the only authority."""
     staging = os.path.join(table_dir, f"_staging-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(staging)
     moved = []
@@ -117,27 +156,36 @@ def _stage_parquet(df: DataFrame, table_dir: str, prefix: str, version: int) -> 
     return moved
 
 
-def _unstage(table_dir: str, files: list) -> None:
-    """Remove just-staged files on a commit path that raises instead of
-    publishing — leaving them would accumulate garbage under contention
-    (each caller retry re-stages a fresh copy) until a vacuum past the
-    orphan TTL. Matches the cleanup delete_where/merge_into/compact do."""
-    for name in files:
-        try:
-            os.remove(os.path.join(table_dir, name))
-        except FileNotFoundError:
-            pass
-
-
-def _staged_rows(table_dir: str, files: list) -> int:
-    """Total row count of just-staged files, from footers (driver-side,
-    O(files) metadata) — the zero-matches/no-op detection every DV-writing
-    path needs."""
+def _stage_rows(df: DataFrame, table_dir: str, prefix: str, version: int) -> list:
+    """`_stage_parquet`, or [] with the files removed again when df has no
+    rows (an empty part file may still be written; the footers say how
+    many rows landed — driver-side, O(files) metadata)."""
     import pyarrow.parquet as pq
 
-    return sum(
-        pq.read_metadata(os.path.join(table_dir, n)).num_rows for n in files
-    )
+    files = _stage_parquet(df, table_dir, prefix, version)
+    if sum(pq.read_metadata(os.path.join(table_dir, n)).num_rows for n in files):
+        return files
+    _unstage(table_dir, files)
+    return []
+
+
+def _unstage(table_dir: str, files: list) -> None:
+    for name in files:
+        with suppress(FileNotFoundError):
+            os.remove(os.path.join(table_dir, name))
+
+
+@contextmanager
+def _staging(table_dir: str):
+    """Yield the list a commit adds its staged file names to; remove what
+    is still listed on exit. `_claim` empties it once a published manifest
+    names the files, so an exit that did not publish (a no-op, a lost
+    claim, any raise) strands no file for vacuum's orphan TTL to find."""
+    staged: list = []
+    try:
+        yield staged
+    finally:
+        _unstage(table_dir, staged)
 
 
 def _acquire_lock(lock: str) -> tuple[int, bytes]:
@@ -204,10 +252,8 @@ def _release_lock(lock: str, fd: int, token: bytes) -> None:
     except FileNotFoundError:
         still_mine = False
     if still_mine:
-        try:
-            os.remove(lock)
-        except FileNotFoundError:
-            pass  # a stealer raced the check; the lock is theirs now
+        with suppress(FileNotFoundError):
+            os.remove(lock)  # a stealer may have raced the check
 
 
 def _advance_pointer(table_dir: str, version: int) -> None:
@@ -241,81 +287,164 @@ def current_version(table_dir: str) -> int | None:
         return None
 
 
+def _head(table_dir: str) -> int:
+    """`current_version`, raising on a table with no committed version."""
+    v = current_version(table_dir)
+    if v is None:
+        raise FileNotFoundError(f"no committed version in {table_dir}")
+    return v
+
+
+def _check_base(table_dir: str, version: int | None, expect_version: int | None) -> None:
+    """Fail fast when the caller pinned `expect_version` and the table moved."""
+    if expect_version is not None and version != expect_version:
+        raise VersionConflictError(
+            f"table {table_dir} is at version {version}, expected {expect_version}"
+        )
+
+
 def _claim_owner_is_branch(table_dir: str, version: int) -> bool:
     """Whether the manifest claiming `version` belongs to a BRANCH commit.
     Branch commits park ordinary version numbers in the shared numbering
     without ever moving main's pointer (see the refs section below), so a
-    lost claim against one does NOT mean main's snapshot changed — the
-    caller may re-claim the next number with its derived state still
-    valid (round-8 advice: delete_where/merge_into/CAS commits previously
-    raised VersionConflictError forever against a parked branch claim).
+    lost claim against one does NOT mean main's snapshot changed.
     Unreadable/missing manifests conservatively count as main (conflict)."""
     try:
-        with open(_manifest_path(table_dir, version)) as f:
-            return "branch" in json.load(f)
+        return "branch" in _read_manifest(table_dir, version)
     except (OSError, ValueError):
         return False
 
 
-def _in_main_history(table_dir: str, tip: int, version: int) -> bool:
-    """Whether `version` is part of MAIN's history when the pointer sits at
-    `tip`. Main's chain is: the tip; then, for a fast-forwarded merge head
-    (manifest carries `branch`), the branch's `parent` chain; otherwise
-    version-1 — skipping over manifests that carry `branch` and were NOT
-    reached via a parent pointer (unmerged branch claims parked in the
-    shared numbering). A vacuum hole below the walk means `version`
-    predates retention — treated as history (it was committed long ago)."""
-    v, via_parent = tip, True  # the tip is main state by definition
-    for _ in range(100000):  # cycle guard; version numbers only decrease
-        if v is None or v < 0:
-            return False
-        try:
-            with open(_manifest_path(table_dir, v)) as f:
-                m = json.load(f)
-        except (OSError, ValueError):
-            return True  # vacuumed history below the retention floor
-        if "branch" in m and not via_parent:
-            v -= 1  # unmerged branch claim: not main state, keep walking
-            continue
-        if v == version:
-            return True
-        if v < version:
-            return False
-        if "branch" in m:
-            v, via_parent = m.get("parent"), True
-        else:
-            v, via_parent = v - 1, False
-    return False
-
-
-def _verify_mainline(
-    table_dir: str, version: int, cleanup_files: list | None = None
-) -> None:
-    """Post-advance check every MAIN committer runs: a fast-forward merge
-    that raced this commit's publish→advance window can move the pointer
-    to a branch head whose chain does not contain `version` — the advance
-    then no-ops monotonically and the commit would report success while
-    its rows are reachable from nothing (round-8 advice). When bypassed,
-    roll the publication back (manifest + staged files — leaving them
-    would pin garbage above the pointer forever, the same leak as a lost
-    branch CAS) and raise so the caller re-derives against the merged
-    state. Ordinary concurrent main commits that advanced past us are
-    fine: their append base resolution walked through our manifest, so
-    the walk finds `version` on the version-1 chain."""
-    cur = current_version(table_dir)
-    if cur is None or cur == version:
-        return
-    if cur > version and not _in_main_history(table_dir, cur, version):
-        try:
-            os.remove(_manifest_path(table_dir, version))
-        except FileNotFoundError:
-            pass
-        if cleanup_files:
-            _unstage(table_dir, cleanup_files)
+def _claim(
+    table_dir: str,
+    version: int,
+    build,
+    staged: list,
+    max_retries: int,
+    *,
+    conflict: type[Exception] | None,
+    base: int | None,
+    ref: tuple | None,
+) -> int:
+    """The one claim path (module docstring): publish `build(v)`, the
+    manifest content without its `version` key, as the first free number
+    v from `version` up, and return v. A lost claim with `conflict` None
+    is rule (a); otherwise a parked BRANCH claim is stepped over while
+    `_latest` still reads `base` (main did not change, so the derived
+    change is still valid) and anything else raises `conflict` (rules b,
+    c). After the win the manifest owns the staged files. `ref` is None
+    for a main commit; a branch commit passes (name, the head it derived
+    from, the new base or None to keep it), and a lost head CAS removes
+    its manifest and files — left in place, the orphan would sit above
+    main's pointer, where vacuum's in-flight-claim rule retains it."""
+    for _attempt in range(max_retries + 1):
+        if _publish_manifest(table_dir, version, {"version": version, **build(version)}):
+            break
+        if conflict is not None and not (
+            _claim_owner_is_branch(table_dir, version)
+            and current_version(table_dir) == base
+        ):
+            raise conflict(
+                f"{table_dir} moved past v{base} while claiming v{version}: "
+                "re-derive the change from the new current version "
+                "(for a branch merge: rebase the branch)"
+            )
+        version += 1
+    else:
         raise VersionConflictError(
-            f"commit v{version} of {table_dir} was bypassed by a concurrent "
-            f"branch merge (main fast-forwarded to v{cur}); re-derive "
-            "against the merged state"
+            f"gave up after {max_retries} contended claims on {table_dir}"
+        )
+    owned = list(staged)
+    staged.clear()
+    if ref is None:
+        _advance_pointer(table_dir, version)
+        return version
+    name, head, new_base = ref
+
+    def cas(branches: dict) -> None:
+        cur = branches.get(name)
+        if cur is None or cur["head"] != head:
+            raise VersionConflictError(
+                f"branch {name!r} moved (head {cur and cur['head']} != {head}) "
+                f"while committing v{version}"
+            )
+        keep = cur["base"] if new_base is None else new_base
+        branches[name] = {"head": version, "base": keep}
+
+    try:
+        _update_refs(table_dir, _branches_path(table_dir), cas)
+    except VersionConflictError:
+        _unstage(table_dir, [os.path.basename(_manifest_path(table_dir, version)), *owned])
+        raise
+    return version
+
+
+def _append_base(table_dir: str, version: int) -> dict | None:
+    """The manifest an append claiming `version` builds on: the nearest
+    one below it that is not a branch claim. Branch commits park numbers
+    in the shared numbering, and merging onto one would drop main's own
+    rows into the branch's state (round-8 advice); a non-branch manifest
+    above `_latest` is a content-complete main claim whose writer has not
+    advanced the pointer yet, a valid base. None for the first commit."""
+    for base in range(version - 1, -1, -1):
+        m = _read_manifest(table_dir, base)
+        if "branch" not in m:
+            return m
+    return None
+
+
+def _commit_data(
+    df: DataFrame,
+    table_dir: str,
+    mode: str,
+    batch_id: int | None,
+    expect_version: int | None,
+    max_retries: int,
+    layout,
+) -> int:
+    """`commit_snapshot`; `layout(staged files) -> dict` (or None) adds
+    the clustered committers' manifest keys before the claim."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"unknown mode {mode!r}")
+    os.makedirs(table_dir, exist_ok=True)
+    prev = current_version(table_dir)
+    _check_base(table_dir, prev, expect_version)
+    version = 0 if prev is None else prev + 1
+    with _staging(table_dir) as staged:
+        new_files = _stage_parquet(df, table_dir, "data", version)
+        staged += new_files
+        extra = {} if layout is None else layout(new_files)
+
+        def build(version: int) -> dict:
+            content = {"files": new_files, **extra}
+            base = _append_base(table_dir, version) if mode == "append" else None
+            if base is not None:
+                content["files"] = base["files"] + new_files
+                if base.get("dv"):
+                    # append preserves the base's deletion vectors —
+                    # dropping them would resurrect every previously
+                    # deleted row (overwrite discards them with the table)
+                    content["dv"] = base["dv"]
+                col = extra.get("cluster_col")
+                if col is not None and base.get("cluster_col") == col:
+                    content["stats"] = {**base.get("stats", {}), **extra["stats"]}
+            if batch_id is not None:
+                # transactional-sink support: the manifest records which
+                # stream batch produced this version, so a replayed batch
+                # is detected and skipped (exactly-once) — see
+                # last_committed_batch
+                content["batch_id"] = batch_id
+            return content
+
+        return _claim(
+            table_dir,
+            version,
+            build,
+            staged,
+            max_retries,
+            conflict=None if expect_version is None else VersionConflictError,
+            base=expect_version,
+            ref=None,
         )
 
 
@@ -332,12 +461,11 @@ def commit_snapshot(
     version exactly df; mode='append' makes it previous-version ∪ df.
     Returns the committed version number.
 
-    Write protocol: stage parquet into a scratch dir, move the part
-    files into the table dir under unique names, atomically CLAIM the
-    next version number by hard-linking the manifest into place, then
-    advance the monotonic `_latest` pointer. A reader that raced the
-    commit either sees the old pointer (old snapshot) or the new one
-    (fully published snapshot) — never a torn state.
+    Write protocol (see the module docstring): stage parquet, claim the
+    next version number with a complete manifest, then advance the
+    monotonic `_latest` pointer. A reader that raced the commit either
+    sees the old pointer (old snapshot) or the new one (fully published
+    snapshot) — never a torn state.
 
     Concurrency (optimistic): two writers can never share a version —
     the loser of the manifest claim RETRIES against the new base
@@ -345,120 +473,62 @@ def commit_snapshot(
     because append is commutative; overwrites become
     last-writer-wins). Pass `expect_version` (the version the caller
     read before deriving its change) to demand compare-and-swap
-    semantics instead: the commit succeeds only as expect_version + 1,
-    else raises VersionConflictError and touches nothing the retry
-    loop can't redo. Data file names embed the first-attempt version as
-    a debugging hint; the manifest's file list is the only authority."""
-    if mode not in ("overwrite", "append"):
-        raise ValueError(f"unknown mode {mode!r}")
-    spark = df.sparkSession
-    os.makedirs(table_dir, exist_ok=True)
-    prev = current_version(table_dir)
-    if expect_version is not None and prev != expect_version:
-        raise VersionConflictError(
-            f"table {table_dir} is at version {prev}, expected {expect_version}"
-        )
-    version = 0 if prev is None else prev + 1
-
-    new_files = _stage_parquet(df, table_dir, "data", version)
-
-    # Any exit without a published manifest must unstage the data files —
-    # not just the two VersionConflictError paths: an unexpected raise
-    # mid-retry (e.g. the base manifest read failing) would otherwise
-    # leak orphans until a TTL vacuum. Once the claim has published, the
-    # manifest references new_files and they must NOT be removed, even
-    # if the pointer advance then fails.
-    published = False
-    try:
-        for _attempt in range(max_retries + 1):
-            files = list(new_files)
-            dv = []
-            if mode == "append":
-                # Resolve the append BASE down main's chain, not blindly at
-                # version-1: a manifest ABOVE main's pointer carrying a
-                # `branch` key is an unmerged branch claim parked in the
-                # shared numbering — merging onto it would silently drop
-                # main's own rows into the branch's state (round-8 advice).
-                # At or below the pointer a manifest IS main state whatever
-                # keys it carries (a fast-forwarded merge head keeps its
-                # `branch` key), and a non-branch manifest above the
-                # pointer is a content-complete main claim whose writer
-                # has not flipped the pointer yet — both are valid bases.
-                ptr = current_version(table_dir)
-                base = version - 1
-                base_manifest = None
-                while base >= 0:
-                    with open(_manifest_path(table_dir, base)) as f:
-                        bm = json.load(f)
-                    if (ptr is not None and base <= ptr) or "branch" not in bm:
-                        base_manifest = bm
-                        break
-                    base -= 1
-                if base_manifest is not None:
-                    files = base_manifest["files"] + files
-                    # append preserves the base's deletion vectors —
-                    # dropping them would resurrect every previously
-                    # deleted row (overwrite correctly discards them: the
-                    # table is being replaced)
-                    dv = list(base_manifest.get("dv", []))
-            manifest = {"version": version, "files": files}
-            if dv:
-                manifest["dv"] = dv
-            if batch_id is not None:
-                # transactional-sink support: the manifest records which
-                # stream batch produced this version, so a replayed batch
-                # is detected and skipped (exactly-once) — see
-                # last_committed_batch
-                manifest["batch_id"] = batch_id
-            if _publish_manifest(table_dir, version, manifest):
-                published = True
-                _advance_pointer(table_dir, version)
-                # a racing fast-forward merge can bypass the advance —
-                # verify main's chain actually contains us (rolls back and
-                # raises otherwise; new_files were referenced only by the
-                # rolled-back manifest, so unstaging them is safe)
-                try:
-                    _verify_mainline(table_dir, version, new_files)
-                except VersionConflictError:
-                    published = False  # already rolled back in full
-                    raise
-                return version
-            # lost the claim: another writer owns this version number
-            if expect_version is not None:
-                # a BRANCH commit parked at this number does not move main
-                # (round-8 advice): the CAS base is still current — re-check
-                # the pointer and re-claim above the parked number
-                if (
-                    _claim_owner_is_branch(table_dir, version)
-                    and current_version(table_dir) == expect_version
-                ):
-                    version += 1
-                    continue
-                raise VersionConflictError(
-                    f"version {version} of {table_dir} was committed "
-                    f"concurrently (base {expect_version} is stale)"
-                )
-            version += 1
-        raise VersionConflictError(
-            f"gave up after {max_retries} contended commits to {table_dir}"
-        )
-    except BaseException:
-        if not published:
-            _unstage(table_dir, new_files)
-        raise
+    semantics instead: the commit succeeds only on top of
+    expect_version (stepping over parked branch claims), else raises
+    VersionConflictError and leaves no staged file behind."""
+    return _commit_data(
+        df, table_dir, mode, batch_id, expect_version, max_retries, None
+    )
 
 
 def _tags_path(table_dir: str) -> str:
     return os.path.join(table_dir, "_tags.json")
 
 
-def list_tags(table_dir: str) -> dict:
-    """name -> version map of all tags (empty if none created yet)."""
+def _branches_path(table_dir: str) -> str:
+    return os.path.join(table_dir, "_branches.json")
+
+
+def _read_refs(path: str) -> dict:
     try:
-        with open(_tags_path(table_dir)) as f:
+        with open(path) as f:
             return json.load(f)
     except FileNotFoundError:
         return {}
+
+
+def _write_refs(path: str, refs: dict) -> None:
+    """Replace a ref map atomically (tmp + rename)."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        json.dump(refs, f)
+    os.rename(tmp, path)
+
+
+def _update_refs(table_dir: str, path: str, change) -> None:
+    """The one locked read-modify-write of a ref map (tags or branches):
+    `change` edits the map in place, or raises to abort without writing.
+    `_tags.lock` keeps two writers from losing each other's update, and
+    vacuum holds it across its scan and delete pass."""
+    lock = os.path.join(table_dir, "_tags.lock")
+    fd, token = _acquire_lock(lock)
+    try:
+        refs = _read_refs(path)
+        change(refs)
+        _write_refs(path, refs)
+    finally:
+        _release_lock(lock, fd, token)
+
+
+def _ref_entry(refs: dict, kind: str, name: str, table_dir: str):
+    if name not in refs:
+        raise KeyError(f"no {kind} {name!r} in {table_dir}")
+    return refs[name]
+
+
+def list_tags(table_dir: str) -> dict:
+    """name -> version map of all tags (empty if none created yet)."""
+    return _read_refs(_tags_path(table_dir))
 
 
 def create_tag(
@@ -469,50 +539,31 @@ def create_tag(
     from vacuum retention: their manifests and data files survive any
     keep_last window until the tag is deleted, so 'the corpus we trained
     run X on' stays reproducible while ordinary history expires.
-    Concurrency: the tag map is rewritten atomically (tmp + rename)
-    under the same steal-safe lock protocol the pointer uses, so two
-    taggers can never lose each other's update."""
-    v = current_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    lock = os.path.join(table_dir, "_tags.lock")
-    fd, token = _acquire_lock(lock)
-    try:
-        # the manifest check lives INSIDE the lock: vacuum holds this
-        # same lock across its scan+delete pass (round-6 advice), so
-        # either this tag lands before vacuum reads the tag map (version
-        # pinned) or vacuum finished first and a swept version fails
-        # here instead of becoming a dangling tag
+    The manifest check runs inside the ref lock (`_update_refs`): either
+    the tag lands before vacuum reads the tag map (version pinned) or
+    vacuum finished first and a swept version fails here instead of
+    becoming a dangling tag."""
+    v = _head(table_dir) if version is None else version
+
+    def add(tags: dict) -> None:
         if not os.path.exists(_manifest_path(table_dir, v)):
             raise FileNotFoundError(f"version {v} has no manifest in {table_dir}")
-        tags = list_tags(table_dir)
         if name in tags and not overwrite:
             raise ValueError(f"tag {name!r} already exists (-> v{tags[name]})")
         tags[name] = v
-        tmp = _tags_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(tags, f)
-        os.rename(tmp, _tags_path(table_dir))
-    finally:
-        _release_lock(lock, fd, token)
+
+    _update_refs(table_dir, _tags_path(table_dir), add)
     return v
 
 
 def delete_tag(table_dir: str, name: str) -> None:
     """Drop a tag; its version re-enters ordinary vacuum retention."""
-    lock = os.path.join(table_dir, "_tags.lock")
-    fd, token = _acquire_lock(lock)
-    try:
-        tags = list_tags(table_dir)
-        if name not in tags:
-            raise KeyError(f"no tag {name!r} in {table_dir}")
+
+    def drop(tags: dict) -> None:
+        _ref_entry(tags, "tag", name, table_dir)
         del tags[name]
-        tmp = _tags_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(tags, f)
-        os.rename(tmp, _tags_path(table_dir))
-    finally:
-        _release_lock(lock, fd, token)
+
+    _update_refs(table_dir, _tags_path(table_dir), drop)
 
 
 def resolve_as_of(table_dir: str, as_of: float) -> int:
@@ -523,20 +574,15 @@ def resolve_as_of(table_dir: str, as_of: float) -> int:
     readers). Raises if every retained manifest is newer — the history
     at that timestamp has been vacuumed, same error posture as Delta's
     earliest-available check."""
-    latest = current_version(table_dir)
-    if latest is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
+    latest = _head(table_dir)
     best = None
     earliest = None
     for name in os.listdir(table_dir):
-        if not name.startswith("manifest-v"):
-            continue
-        v = int(name.split("manifest-v")[1].split(".")[0])
-        if v > latest:
+        v = _manifest_version(name)
+        if v is None or v > latest:
             continue
         try:
-            with open(os.path.join(table_dir, name)) as f:
-                ts = json.load(f).get("committed_at")
+            ts = _read_manifest(table_dir, v).get("committed_at")
         except (FileNotFoundError, ValueError):
             continue
         if ts is None:
@@ -552,6 +598,73 @@ def resolve_as_of(table_dir: str, as_of: float) -> int:
     return best
 
 
+# --- reads: a mergeSchema scan of a pinned file list, with deletion
+# vectors (row-level deletes without rewriting data files, the
+# Delta/Iceberg merge-on-read mechanism) anti-joined out. A delete commits
+# a SIDECAR of (file, row_index) pairs — cost O(matched rows), never
+# O(table) — and readers anti-join it against the scan's
+# _metadata.row_index. Compaction PURGES: rewritten files drop their
+# vector entries for real.
+
+
+def _scan(spark: SparkSession, table_dir: str, files: list) -> DataFrame:
+    """Parquet scan of table files with mergeSchema on: an appended version
+    may mix files written under an older, narrower schema with newer wide
+    ones (schema evolution) — old files surface the new columns as NULL."""
+    return spark.read.option("mergeSchema", "true").parquet(
+        *[os.path.join(table_dir, p) for p in files]
+    )
+
+
+def _no_rows(spark: SparkSession, table_dir: str, files: list) -> DataFrame:
+    """An empty frame with the table's schema (one file read filtered false)."""
+    from pyspark.sql import functions as F
+
+    return _scan(spark, table_dir, files[:1]).filter(F.lit(False))
+
+
+def _with_row_identity(spark: SparkSession, table_dir: str, files: list) -> DataFrame:
+    """Scan the given data files with (__file, __pos) row identity from
+    the parquet reader's metadata column — stable because data files are
+    immutable."""
+    from pyspark.sql import functions as F
+
+    return (
+        _scan(spark, table_dir, files)
+        .withColumn("__file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1))
+        .withColumn("__pos", F.col("_metadata.row_index"))
+    )
+
+
+def _read_dv(spark: SparkSession, table_dir: str, dv_files: list) -> DataFrame:
+    return spark.read.parquet(*[os.path.join(table_dir, p) for p in dv_files]).select(
+        "file", "pos"
+    )
+
+
+def _dv_join(df: DataFrame, dv: DataFrame, how: str) -> DataFrame:
+    """Join a row-identified scan to deletion pairs on (file, position);
+    AQE picks broadcast when the vector is small (the common case —
+    deletes are sparse)."""
+    return df.join(dv, (df["__file"] == dv["file"]) & (df["__pos"] == dv["pos"]), how)
+
+
+def _live(spark: SparkSession, table_dir: str, files: list, dv_files) -> DataFrame:
+    """Row-identified scan of `files` without the rows `dv_files` delete."""
+    df = _with_row_identity(spark, table_dir, files)
+    if not dv_files:
+        return df
+    return _dv_join(df, _read_dv(spark, table_dir, dv_files), "left_anti")
+
+
+def _read_rows(spark: SparkSession, table_dir: str, files: list, dv_files) -> DataFrame:
+    """The rows of `files` minus deleted ones: a plain scan when no
+    deletion vector applies (every pushdown plan property holds)."""
+    if not dv_files:
+        return _scan(spark, table_dir, files)
+    return _live(spark, table_dir, files, dv_files).drop("__file", "__pos")
+
+
 def read_snapshot(
     spark: SparkSession,
     table_dir: str,
@@ -564,46 +677,27 @@ def read_snapshot(
     """Read a pinned snapshot (latest by default; any retained version by
     number — time travel; by TAG name; by BRANCH name — the ref's current
     head; or by `as_of` epoch-seconds timestamp — Delta's TIMESTAMP AS
-    OF, resolved against the committed_at stamp every manifest carries). The manifest's file list is
-    resolved ONCE at plan time, so the DataFrame is immutable under
-    concurrent commits. Retention contract (same as Delta's VACUUM
-    rule): a reader is only safe from concurrent vacuum while its
-    version stays retained — size keep_last (or pin a tag) to cover
-    your longest reader; a reader of an aged-out version can lose data
-    files mid-scan. mergeSchema is always on: an appended version may
-    mix files written under an older, narrower schema with newer wide
-    ones (schema evolution) — old files surface the new columns as NULL,
-    and a version pinned BEFORE the evolution never sees them at all."""
+    OF, resolved against the committed_at stamp every manifest carries).
+    The manifest's file list is resolved ONCE at plan time, so the
+    DataFrame is immutable under concurrent commits. Retention contract
+    (same as Delta's VACUUM rule): a reader is only safe from concurrent
+    vacuum while its version stays retained — size keep_last (or pin a
+    tag) to cover your longest reader; a reader of an aged-out version
+    can lose data files mid-scan. A version pinned BEFORE a schema
+    evolution never sees the new columns."""
     if sum(x is not None for x in (version, tag, as_of, branch)) > 1:
         raise ValueError("pass at most one of version, tag, as_of, branch")
     if tag is not None:
-        tags = list_tags(table_dir)
-        if tag not in tags:
-            raise KeyError(f"no tag {tag!r} in {table_dir}")
-        version = tags[tag]
+        version = _ref_entry(list_tags(table_dir), "tag", tag, table_dir)
     if branch is not None:
-        branches = list_branches(table_dir)
-        if branch not in branches:
-            raise KeyError(f"no branch {branch!r} in {table_dir}")
-        version = branches[branch]["head"]
+        version = _ref_entry(list_branches(table_dir), "branch", branch, table_dir)["head"]
     if as_of is not None:
         version = resolve_as_of(table_dir, as_of)
-    v = current_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    with open(_manifest_path(table_dir, v)) as f:
-        manifest = json.load(f)
-    files = manifest["files"]
-    if not files:
+    v = _head(table_dir) if version is None else version
+    manifest = _read_manifest(table_dir, v)
+    if not manifest["files"]:
         raise ValueError(f"version {v} has an empty file list")
-    if manifest.get("dv"):
-        # merge-on-read: anti-join the deletion sidecars out of the scan
-        return _apply_dv(
-            spark, table_dir, _with_row_identity(spark, table_dir, files), manifest["dv"]
-        )
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_dir, p) for p in files]
-    )
+    return _read_rows(spark, table_dir, manifest["files"], manifest.get("dv"))
 
 
 def vacuum(
@@ -620,7 +714,13 @@ def vacuum(
     debris) are only swept past `orphan_ttl_seconds` of age (the age
     guard Delta's VACUUM applies to uncommitted files). Files referenced
     by some manifest but not a RETAINED one are ordinary expired history
-    and are reclaimed immediately."""
+    and are reclaimed immediately.
+
+    Commits do not take vacuum's lock, so ONE directory listing drives
+    the whole pass: the delete pass removes only manifests and files that
+    listing held and the scan chose to drop. A version claimed after the
+    listing is never touched — removing it would leave its writer
+    advancing `_latest` onto a missing manifest."""
     import shutil
     import time as _time
 
@@ -628,51 +728,66 @@ def vacuum(
     if latest is None:
         return []
     now = _time.time()
-    for name in list(os.listdir(table_dir)):
-        if name.startswith(("_staging-", "_manifest-tmp-")):
-            p = os.path.join(table_dir, name)
-            try:
-                if now - os.path.getmtime(p) > orphan_ttl_seconds:
-                    shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
-            except FileNotFoundError:
-                pass  # concurrent vacuum / commit finished cleanup first
-    # ONE manifest scan builds both retention sets (a prior vacuum with a
-    # smaller keep_last may already have dropped older manifests in the
-    # keep window — missing ones are simply skipped):
-    # * keep (v >= retain_floor): the keep_last trailing versions AND any
-    #   IN-FLIGHT claim (v > latest — claimed, content-complete, pointer
-    #   not yet advanced; sweeping it would brick the commit. A crashed
-    #   claimant's zombie version is passed by the pointer eventually,
-    #   at which point ordinary retention reclaims it. The claimed
-    #   manifest is also the append base for the NEXT claim, so even a
-    #   TTL sweep here would race appenders).
-    # * referenced_any: every file ANY manifest on disk references —
-    #   computed BEFORE manifests are deleted, so expired history is
-    #   distinguishable from never-referenced (possibly mid-publish)
-    #   files, which get the orphan-TTL guard below.
+
+    def aged(path: str) -> bool:
+        """Older than the orphan TTL (False once something removed it)."""
+        try:
+            return now - os.path.getmtime(path) > orphan_ttl_seconds
+        except FileNotFoundError:
+            return False
+
+    for name in os.listdir(table_dir):
+        p = os.path.join(table_dir, name)
+        if name.startswith(("_staging-", "_manifest-tmp-")) and aged(p):
+            with suppress(FileNotFoundError):  # a concurrent cleanup won
+                shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
+    # retained: the keep_last trailing versions, every tagged version or
+    # branch head, and any IN-FLIGHT claim (v > latest — claimed,
+    # content-complete, pointer not yet advanced; sweeping it would brick
+    # the commit, and it is the append base of the next claim). A crashed
+    # claimant's zombie version is passed by the pointer eventually, at
+    # which point ordinary retention reclaims it.
     retain_floor = max(0, latest - keep_last + 1)
-    # The whole scan+delete pass runs under _tags.lock (round-6 advice):
-    # vacuum previously snapshotted the tag map once, so a create_tag
-    # landing between that snapshot and the delete pass could have its
-    # pinned version swept — a dangling tag. Holding the lock serializes
-    # the two: a tag either lands before the scan (pinned) or after the
-    # deletes, where create_tag's in-lock manifest check rejects a swept
-    # version. The lock's 30 s staleness bound applies — the same bound
-    # every other holder accepts; a local-FS manifest sweep is
-    # milliseconds.
-    tags_lock = os.path.join(table_dir, "_tags.lock")
-    fd, token = _acquire_lock(tags_lock)
+    # The whole scan+delete pass runs under _tags.lock (round-6 advice),
+    # serializing it with every ref update (`_update_refs`): a tag either
+    # lands before the scan (pinned) or after the deletes, where
+    # create_tag's in-lock manifest check rejects a swept version.
+    lock = os.path.join(table_dir, "_tags.lock")
+    fd, token = _acquire_lock(lock)
+
+    def heartbeat(i: int) -> None:
+        # a huge table dir (or slow storage) can push the pass past the
+        # 30 s steal bound, and a stolen lock reopens the dangling-tag
+        # race; losing it aborts the pass — files already deleted were
+        # unreferenced under the lock we DID hold, so the table is
+        # consistent and the remainder waits for the next vacuum
+        if i % 200 == 199 and not _heartbeat_lock(lock, token):
+            raise TimeoutError(
+                f"vacuum lost {lock} mid-pass (stolen at the 30s staleness "
+                "bound); aborting the remainder"
+            )
+
     try:
-        # tagged versions are pinned OUTSIDE the keep_last window: a tag
-        # is a named promise of reproducibility, so its manifest and
-        # files survive any retention setting until the tag is deleted.
-        # Exception: a `__restore-<epoch>-*` guard tag whose epoch is
-        # older than orphan_ttl_seconds is debris from a crashed
-        # restore_snapshot — prune it (under this lock) instead of
-        # letting it pin a version forever.
+        names = sorted(os.listdir(table_dir))
+        manifests: dict[int, dict | None] = {}  # None: unreadable json
+        for i, name in enumerate(names):
+            heartbeat(i)
+            v = _manifest_version(name)
+            if v is None:
+                continue
+            try:
+                manifests[v] = _read_manifest(table_dir, v)
+            except FileNotFoundError:
+                continue  # a prior vacuum already dropped it
+            except ValueError:
+                manifests[v] = None
+
+        # a `__restore-<epoch>-*` guard tag older than the orphan TTL is
+        # debris from a crashed restore_snapshot: prune it (under this
+        # lock) instead of letting it pin a version forever
         tags = list_tags(table_dir)
 
-        def _guard_stale(n: str) -> bool:
+        def stale_guard(n: str) -> bool:
             if not n.startswith("__restore-"):
                 return False
             try:
@@ -680,122 +795,85 @@ def vacuum(
             except (IndexError, ValueError):
                 return False  # not a machine-made guard name; leave it
 
-        stale_guards = [n for n in tags if _guard_stale(n)]
-        if stale_guards:
-            for n in stale_guards:
-                del tags[n]
-            tmp = _tags_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(tags, f)
-            os.rename(tmp, _tags_path(table_dir))
-        tagged = set(tags.values())
-        # branch HEADS pin like tags (read under this same lock, so a
-        # branch either lands before this snapshot or its create/commit
-        # re-checks manifests after our deletes). Bases need no pin:
+        stale = [n for n in tags if stale_guard(n)]
+        for n in stale:
+            del tags[n]
+        if stale:
+            _write_refs(_tags_path(table_dir), tags)
+        # tags and branch heads pin their versions outside keep_last:
+        # a tag is a named promise of reproducibility. Bases need no pin:
         # merge conflict detection compares version NUMBERS only.
-        for b in list_branches(table_dir).values():
-            tagged.add(b["head"])
-        keep_versions = []
+        branches = list_branches(table_dir)
+        pinned = set(tags.values()) | {b["head"] for b in branches.values()}
+        # BRANCH manifests parked above main's pointer that no branch head
+        # reaches (a commit_to_branch that crashed between publish and its
+        # head CAS, or a rebased branch's old head) would otherwise be
+        # retained forever as in-flight claims (round-8 advice): past the
+        # orphan TTL they are debris
+        reachable: set[int] = set()
+        for b in branches.values():
+            bv = b["head"]
+            while bv not in reachable and "branch" in (manifests.get(bv) or {}):
+                reachable.add(bv)
+                bv = manifests[bv].get("parent")
+
         keep_files: set[str] = set()
+        # every file ANY listed manifest references, so expired history is
+        # told apart from never-referenced (possibly mid-publish) files
         referenced_any: set[str] = set()
-        branch_manifests: dict[int, dict] = {}
-        for j, name in enumerate(os.listdir(table_dir)):
-            if j % 200 == 199 and not _heartbeat_lock(tags_lock, token):
-                raise TimeoutError(
-                    f"vacuum lost {tags_lock} during the manifest scan"
-                )
-            if not name.startswith("manifest-v"):
+        drop: set[int] = set()
+        for v, m in manifests.items():
+            if m is None:
+                if retain_floor <= v <= latest or v in pinned:
+                    raise ValueError(
+                        f"retained manifest v{v} of {table_dir} is not valid json"
+                    )
+                drop.add(v)
                 continue
-            v = int(name.split("manifest-v")[1].split(".")[0])
+            refs = set(m["files"]) | set(m.get("dv", []))
+            referenced_any |= refs
+            if v < retain_floor and v not in pinned:
+                drop.add(v)
+                continue
+            keep_files |= refs
+            stamp = m.get("committed_at")
+            if (
+                "branch" in m
+                and v > latest
+                and v not in reachable
+                and v not in pinned
+                and (
+                    now - stamp > orphan_ttl_seconds
+                    if stamp is not None
+                    else aged(_manifest_path(table_dir, v))
+                )
+            ):
+                # unreachable branch debris: drop the manifest now; the
+                # files it alone referenced become never-referenced on the
+                # NEXT vacuum and age out through the orphan-TTL sweep
+                drop.add(v)
+
+        deleted = []
+        for i, name in enumerate(names):
+            heartbeat(i)
+            p = os.path.join(table_dir, name)
+            if _manifest_version(name) in drop:
+                with suppress(FileNotFoundError):
+                    os.remove(p)
+                continue
+            if not name.startswith(("data-", "dv-")) or name in keep_files:
+                continue
+            # never referenced: could be a commit mid-publish — only sweep
+            # once it is unambiguously abandoned
+            if name not in referenced_any and not aged(p):
+                continue
             try:
-                with open(os.path.join(table_dir, name)) as f:
-                    m = json.load(f)
+                os.remove(p)
             except FileNotFoundError:
                 continue
-            except ValueError:
-                if retain_floor <= v <= latest or v in tagged:
-                    raise  # a corrupt RETAINED manifest is not vacuumable state
-                continue
-            if "branch" in m:
-                branch_manifests[v] = m
-            refs = set(m["files"]) | set(m.get("dv", []))
-            referenced_any.update(refs)
-            if v >= retain_floor or v in tagged:
-                keep_files.update(refs)
-                keep_versions.append(v)
-        # BRANCH manifests parked above main's pointer that no branch head
-        # can reach (a commit_to_branch that crashed between publish and
-        # its head CAS) would otherwise be retained forever by the
-        # v >= retain_floor in-flight-claim rule (round-8 advice). Walk
-        # every live head's parent chain; unreachable branch claims older
-        # than the orphan TTL are debris — drop the manifest now, and the
-        # files it alone referenced become never-referenced on the NEXT
-        # vacuum, aging out through the ordinary orphan-TTL sweep.
-        reachable: set[int] = set()
-        for b in list_branches(table_dir).values():
-            bv = b["head"]
-            while bv in branch_manifests and bv not in reachable:
-                reachable.add(bv)
-                bv = branch_manifests[bv].get("parent")
-        for bv, m in branch_manifests.items():
-            if bv <= latest or bv in reachable or bv in tagged:
-                continue
-            age_base = m.get("committed_at")
-            if age_base is None:
-                try:
-                    age_base = os.path.getmtime(
-                        _manifest_path(table_dir, bv)
-                    )
-                except FileNotFoundError:
-                    continue
-            if now - age_base > orphan_ttl_seconds:
-                try:
-                    os.remove(_manifest_path(table_dir, bv))
-                except FileNotFoundError:
-                    pass
-                if bv in keep_versions:
-                    keep_versions.remove(bv)
-        deleted = []
-        # Heartbeat the lock every stride entries: a huge table dir (or
-        # slow storage) can push this pass past the 30 s steal bound,
-        # and a stolen lock mid-delete reopens the dangling-tag race the
-        # lock closes. Losing the lock aborts the pass — already-deleted
-        # files were unreferenced under the lock we DID hold, so the
-        # table is consistent; the remainder waits for the next vacuum.
-        hb_stride = 200
-        for i, name in enumerate(sorted(os.listdir(table_dir))):
-            if i % hb_stride == hb_stride - 1 and not _heartbeat_lock(
-                tags_lock, token
-            ):
-                raise TimeoutError(
-                    f"vacuum lost {tags_lock} mid-pass (stolen at the 30s "
-                    f"staleness bound); deleted {len(deleted)} files, "
-                    "aborting the remainder"
-                )
-            if (
-                (name.startswith("data-") or name.startswith("dv-"))
-                and name not in keep_files
-            ):
-                p = os.path.join(table_dir, name)
-                if name not in referenced_any:
-                    # never referenced: could be a commit mid-publish —
-                    # only sweep once it is unambiguously abandoned
-                    try:
-                        if now - os.path.getmtime(p) <= orphan_ttl_seconds:
-                            continue
-                    except FileNotFoundError:
-                        continue
-                try:
-                    os.remove(p)
-                except FileNotFoundError:
-                    continue
-                deleted.append(name)
-            elif name.startswith("manifest-v"):
-                v = int(name.split("manifest-v")[1].split(".")[0])
-                if v not in keep_versions:
-                    os.remove(os.path.join(table_dir, name))
+            deleted.append(name)
     finally:
-        _release_lock(tags_lock, fd, token)
+        _release_lock(lock, fd, token)
     return deleted
 
 
@@ -808,8 +886,38 @@ def last_committed_batch(table_dir: str) -> int | None:
     v = current_version(table_dir)
     if v is None:
         return None
-    with open(_manifest_path(table_dir, v)) as f:
-        return json.load(f).get("batch_id")
+    return _read_manifest(table_dir, v).get("batch_id")
+
+
+def _file_minmax(table_dir: str, name: str, col: str):
+    """[min, max] of `col` from a parquet footer, or None when the column
+    is absent or any row group lacks statistics (caller leaves the file
+    unpruned — never wrong, only less pruned)."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(os.path.join(table_dir, name))
+    if col not in md.schema.names:
+        return None
+    idx = md.schema.names.index(col)
+    st = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
+    if not st or any(s is None for s in st):
+        return None
+    return [min(s.min for s in st), max(s.max for s in st)]
+
+
+def _cluster_stats(table_dir: str, files: list, col: str) -> dict:
+    """name -> [min, max] of `col` for every file whose footer has it."""
+    return {n: mm for n in files if (mm := _file_minmax(table_dir, n, col)) is not None}
+
+
+def _zorder_stats(table_dir: str, files: list, cols: list) -> dict:
+    """name -> {col: [min, max]} for every file with stats on any of `cols`."""
+    stats = {}
+    for n in files:
+        per_col = {c: mm for c in cols if (mm := _file_minmax(table_dir, n, c)) is not None}
+        if per_col:
+            stats[n] = per_col
+    return stats
 
 
 def commit_snapshot_clustered(
@@ -827,42 +935,38 @@ def commit_snapshot_clustered(
     from the plan before Spark ever lists them — metadata pruning ABOVE
     the parquet-footer level, which is what makes point reads on a
     100 TB table open a handful of files instead of consulting every
-    footer. Stats are read from the just-written footers (driver-side,
-    bounded by n_files rows of metadata)."""
-    import pyarrow.parquet as pq
-
+    footer. Stats are read from the staged footers before the claim
+    (driver-side, bounded by n_files rows of metadata). An append keeps
+    the base's stats when the base is clustered on the same column; other
+    carried files stay stat-less, and read_snapshot_pruned keeps such
+    files unpruned (never wrong, only less pruned)."""
     clustered = df.repartitionByRange(n_files, cluster_col).sortWithinPartitions(
         cluster_col
     )
-    prev = current_version(table_dir) if mode == "append" else None
-    version = commit_snapshot(clustered, table_dir, mode=mode)
-    with open(_manifest_path(table_dir, version)) as f:
-        manifest = json.load(f)
-    # commit_snapshot writes a stats-free manifest, so carried-over files'
-    # stats must be copied forward from the PREVIOUS manifest (append mode);
-    # file names are version-unique (`data-v{N}-...`) so keys never collide.
-    stats = dict(manifest.get("stats", {}))
-    if prev is not None:
-        with open(_manifest_path(table_dir, prev)) as f:
-            stats.update(json.load(f).get("stats", {}))
-    for name in manifest["files"]:
-        if name in stats:
-            continue  # appended-in files from a prior version keep theirs
-        md = pq.read_metadata(os.path.join(table_dir, name))
-        if cluster_col not in md.schema.names:
-            # prior version committed un-clustered or on another column:
-            # leave the file stat-less — read_snapshot_pruned keeps such
-            # files unpruned (never wrong, only less pruned)
-            continue
-        idx = md.schema.names.index(cluster_col)
-        col_stats = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
-        if not col_stats or any(s is None for s in col_stats):
-            continue
-        stats[name] = [min(s.min for s in col_stats), max(s.max for s in col_stats)]
-    manifest["stats"] = stats
-    manifest["cluster_col"] = cluster_col
-    _rewrite_manifest(table_dir, version, manifest)
-    return version
+    return _commit_data(
+        clustered,
+        table_dir,
+        mode,
+        None,
+        None,
+        _CLAIM_RETRIES,
+        lambda files: {
+            "stats": _cluster_stats(table_dir, files, cluster_col),
+            "cluster_col": cluster_col,
+        },
+    )
+
+
+def _read_pruned(
+    spark: SparkSession, table_dir: str, manifest: dict, overlaps, row_filter
+) -> DataFrame:
+    """Read only the manifest's files `overlaps` keeps, then apply the
+    row-level filter on the survivors; an empty selection keeps the
+    schema."""
+    keep = [name for name in manifest["files"] if overlaps(name)]
+    if not keep:
+        return _no_rows(spark, table_dir, manifest["files"])
+    return _read_rows(spark, table_dir, keep, manifest.get("dv")).filter(row_filter)
 
 
 def read_snapshot_pruned(
@@ -878,38 +982,17 @@ def read_snapshot_pruned(
     footer pruning + row filtering, the full three-level skip stack.
     Falls back to all files for any file missing stats (never wrong,
     only less pruned)."""
-    v = current_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    with open(_manifest_path(table_dir, v)) as f:
-        manifest = json.load(f)
-    stats = manifest.get("stats", {})
-    col = manifest.get("cluster_col")
-    keep = [
-        name
-        for name in manifest["files"]
-        if name not in stats or not (stats[name][1] < lo or stats[name][0] > hi)
-    ]
-    if not keep:
-        # empty selection: preserve schema by reading one file filtered-false
-        keep = manifest["files"][:1]
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(table_dir, p) for p in keep]
-        )
-        from pyspark.sql import functions as F
-
-        return df.filter(F.lit(False))
     from pyspark.sql import functions as F
 
-    if manifest.get("dv"):
-        df = _apply_dv(
-            spark, table_dir, _with_row_identity(spark, table_dir, keep), manifest["dv"]
-        )
-    else:
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(table_dir, p) for p in keep]
-        )
-    return df.filter(F.col(col).between(lo, hi))
+    manifest = _read_manifest(table_dir, _head(table_dir) if version is None else version)
+    stats = manifest.get("stats", {})
+    return _read_pruned(
+        spark,
+        table_dir,
+        manifest,
+        lambda n: n not in stats or not (stats[n][1] < lo or stats[n][0] > hi),
+        F.col(manifest.get("cluster_col")).between(lo, hi),
+    )
 
 
 _ZORDER_BITS = 16
@@ -944,22 +1027,6 @@ def _zvalue_expr(cols, lo_hi: dict):
     return z
 
 
-def _file_minmax(table_dir: str, name: str, col: str):
-    """[min, max] of `col` from a parquet footer, or None when the column
-    is absent or any row group lacks statistics (caller leaves the file
-    unpruned — never wrong, only less pruned)."""
-    import pyarrow.parquet as pq
-
-    md = pq.read_metadata(os.path.join(table_dir, name))
-    if col not in md.schema.names:
-        return None
-    idx = md.schema.names.index(col)
-    st = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
-    if not st or any(s is None for s in st):
-        return None
-    return [min(s.min for s in st), max(s.max for s in st)]
-
-
 def commit_snapshot_zordered(
     df: DataFrame,
     table_dir: str,
@@ -973,8 +1040,9 @@ def commit_snapshot_zordered(
     dimensions overlaps only ~N^((d-1)/d) of N files — the multi-column
     pruning a single-column sort cannot give. Per-file [min,max] is
     recorded in the manifest for EVERY clustered column
-    (`read_snapshot_pruned_2d` consumes them); the Z-value itself is
-    layout-only and never stored."""
+    (`read_snapshot_pruned_2d` consumes them), read from the staged
+    footers before the claim; the Z-value itself is layout-only and
+    never stored."""
     from pyspark.sql import functions as F
 
     bounds = df.agg(
@@ -991,24 +1059,18 @@ def commit_snapshot_zordered(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    version = commit_snapshot(clustered, table_dir)
-    with open(_manifest_path(table_dir, version)) as f:
-        manifest = json.load(f)
-    stats2 = dict(manifest.get("stats2", {}))
-    for name in manifest["files"]:
-        if name in stats2:
-            continue
-        per_col = {}
-        for c in cluster_cols:
-            mm = _file_minmax(table_dir, name, c)
-            if mm is not None:
-                per_col[c] = mm
-        if per_col:
-            stats2[name] = per_col
-    manifest["stats2"] = stats2
-    manifest["zorder"] = {"cols": list(cluster_cols), "bits": _ZORDER_BITS}
-    _rewrite_manifest(table_dir, version, manifest)
-    return version
+    return _commit_data(
+        clustered,
+        table_dir,
+        "overwrite",
+        None,
+        None,
+        _CLAIM_RETRIES,
+        lambda files: {
+            "stats2": _zorder_stats(table_dir, files, cluster_cols),
+            "zorder": {"cols": list(cluster_cols), "bits": _ZORDER_BITS},
+        },
+    )
 
 
 def read_snapshot_pruned_2d(
@@ -1023,11 +1085,7 @@ def read_snapshot_pruned_2d(
     (pruning must never lose rows)."""
     from pyspark.sql import functions as F
 
-    v = current_version(table_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    with open(_manifest_path(table_dir, v)) as f:
-        manifest = json.load(f)
+    manifest = _read_manifest(table_dir, _head(table_dir))
     stats2 = manifest.get("stats2", {})
 
     def overlaps(name: str) -> bool:
@@ -1038,25 +1096,10 @@ def read_snapshot_pruned_2d(
                 return False
         return True
 
-    keep = [name for name in manifest["files"] if overlaps(name)]
-    row_filter = None
+    row_filter = F.lit(True)
     for c, (lo, hi) in preds.items():
-        cond = F.col(c).between(lo, hi)
-        row_filter = cond if row_filter is None else (row_filter & cond)
-    if not keep:
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(table_dir, p) for p in manifest["files"][:1]]
-        )
-        return df.filter(F.lit(False))
-    if manifest.get("dv"):
-        df = _apply_dv(
-            spark, table_dir, _with_row_identity(spark, table_dir, keep), manifest["dv"]
-        )
-    else:
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(table_dir, p) for p in keep]
-        )
-    return df.filter(row_filter) if row_filter is not None else df
+        row_filter = row_filter & F.col(c).between(lo, hi)
+    return _read_pruned(spark, table_dir, manifest, overlaps, row_filter)
 
 
 def compact_snapshot(
@@ -1078,12 +1121,12 @@ def compact_snapshot(
     movement — compaction cost is O(small bytes), never O(table)); their
     manifest stats (if any) are carried too. Returns the new version, or
     the CURRENT version unchanged when <2 small files exist (nothing to
-    compact)."""
-    v = current_version(table_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    with open(_manifest_path(table_dir, v)) as f:
-        manifest = json.load(f)
+    compact). A lost claim to a main commit raises VersionConflictError
+    (rule b): re-run against the new current version."""
+    from pyspark.sql import functions as F
+
+    v = _head(table_dir)
+    manifest = _read_manifest(table_dir, v)
     sizes = {
         name: os.path.getsize(os.path.join(table_dir, name))
         for name in manifest["files"]
@@ -1094,123 +1137,55 @@ def compact_snapshot(
         return v
     total = sum(sizes[n] for n in small)
     target_files = max(1, -(-total // small_file_bytes))  # ceil div
-    merged = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_dir, p) for p in small]
+    # deletion vectors are PURGED for the files being rewritten: deleted
+    # rows drop out of the compacted files for real
+    merged = _read_rows(spark, table_dir, small, manifest.get("dv")).coalesce(
+        target_files
     )
-    if manifest.get("dv"):
-        # PURGE deletion vectors for the files being rewritten: deleted
-        # rows drop out of the compacted files for real
-        merged = _apply_dv(
-            spark, table_dir, _with_row_identity(spark, table_dir, small), manifest["dv"]
+    # maintenance keeps the layout and the streaming sink's exactly-once
+    # marker: the compacted table still reflects that batch
+    content = {
+        k: manifest[k] for k in ("batch_id", "cluster_col", "zorder") if k in manifest
+    }
+    with _staging(table_dir) as staged:
+        new_files = _stage_parquet(merged, table_dir, "data", v + 1)
+        staged += new_files
+        content["files"] = big + new_files
+        if manifest.get("dv"):
+            # keep only the entries that still target a carried big file,
+            # compacted into one fresh sidecar (stale per-file entries
+            # would be inert in the anti-join, but bloat every read)
+            kept_dv = _read_dv(spark, table_dir, manifest["dv"]).filter(
+                F.col("file").isin(big)
+            )
+            dv_files = _stage_rows(kept_dv.coalesce(1), table_dir, "dv", v + 1)
+            staged += dv_files
+            if dv_files:
+                content["dv"] = dv_files
+        # carried files keep their stats; compacted ones get footer stats
+        # when the table is clustered (same never-wrong fallback)
+        if "stats" in manifest:
+            old = manifest["stats"]
+            content["stats"] = {n: old[n] for n in big if n in old}
+            if manifest.get("cluster_col"):
+                col = manifest["cluster_col"]
+                content["stats"].update(_cluster_stats(table_dir, new_files, col))
+        if "stats2" in manifest:
+            old = manifest["stats2"]
+            content["stats2"] = {n: old[n] for n in big if n in old}
+            if manifest.get("zorder"):
+                cols = manifest["zorder"]["cols"]
+                content["stats2"].update(_zorder_stats(table_dir, new_files, cols))
+        return _claim(
+            table_dir,
+            v + 1,
+            lambda _v: content,
+            staged,
+            _CLAIM_RETRIES,
+            conflict=VersionConflictError,
+            base=v,
+            ref=None,
         )
-    merged = merged.coalesce(target_files)
-    version = v + 1
-    new_files = _stage_parquet(merged, table_dir, "data", version)
-
-    new_manifest = {"version": version, "files": big + new_files}
-    if "batch_id" in manifest:
-        # maintenance must not erase the streaming sink's exactly-once
-        # marker: the compacted table still reflects that batch
-        new_manifest["batch_id"] = manifest["batch_id"]
-    if manifest.get("dv"):
-        # entries for rewritten files were purged into the new data; keep
-        # only the entries that still target a carried big file, compacted
-        # into one fresh sidecar (stale per-file entries would be inert in
-        # the anti-join, but carrying them bloats every future read)
-        dv = spark.read.parquet(
-            *[os.path.join(table_dir, p) for p in manifest["dv"]]
-        ).select("file", "pos")
-        from pyspark.sql import functions as F
-
-        kept_dv = dv.filter(F.col("file").isin(big)).coalesce(1)
-        dv_files = _stage_parquet(kept_dv, table_dir, "dv", version)
-        if _staged_rows(table_dir, dv_files):
-            new_manifest["dv"] = dv_files
-        else:
-            for n in dv_files:
-                os.remove(os.path.join(table_dir, n))
-    # carry forward whatever stats the kept files had; recompute for the
-    # compacted files when the table is clustered (same falls-back-to-
-    # unpruned contract as everywhere else)
-    for key in ("stats", "stats2"):
-        old = manifest.get(key)
-        if old is None:
-            continue
-        kept = {n: old[n] for n in big if n in old}
-        if key == "stats" and manifest.get("cluster_col"):
-            for n in new_files:
-                mm = _file_minmax(table_dir, n, manifest["cluster_col"])
-                if mm is not None:
-                    kept[n] = mm
-        if key == "stats2" and manifest.get("zorder"):
-            for n in new_files:
-                per_col = {}
-                for c in manifest["zorder"]["cols"]:
-                    mm = _file_minmax(table_dir, n, c)
-                    if mm is not None:
-                        per_col[c] = mm
-                if per_col:
-                    kept[n] = per_col
-        new_manifest[key] = kept
-    for key in ("cluster_col", "zorder"):
-        if key in manifest:
-            new_manifest[key] = manifest[key]
-    staged = new_files + new_manifest.get("dv", [])
-    while not _publish_manifest(table_dir, version, new_manifest):
-        # same branch-claim skip as delete_where: a parked branch claim
-        # does not change main, so the compacted content is still the
-        # current version's content — re-claim above it (staged file names
-        # keep the first-attempt version as a debugging hint; the manifest
-        # file list is the only authority, as everywhere else)
-        if _claim_owner_is_branch(table_dir, version) and current_version(table_dir) == v:
-            version += 1
-            new_manifest["version"] = version
-            continue
-        _unstage(table_dir, staged)
-        raise VersionConflictError(
-            f"compaction of {table_dir} lost the claim for version {version} "
-            "to a concurrent commit; re-run against the new current version"
-        )
-    _advance_pointer(table_dir, version)
-    _verify_mainline(table_dir, version, staged)
-    return version
-
-
-# --- deletion vectors: row-level deletes without rewriting data files
-# (the Delta/Iceberg merge-on-read mechanism). A delete commits a SIDECAR
-# of (file, row_index) pairs — cost O(matched rows), never O(table) — and
-# readers anti-join the sidecar against the scan's _metadata.row_index.
-# Compaction PURGES: rewritten files drop their vector entries for real.
-
-
-def _with_row_identity(spark: SparkSession, table_dir: str, files: list) -> DataFrame:
-    """Scan the given data files with (__file, __pos) row identity from
-    the parquet reader's metadata column — stable because data files are
-    immutable."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_dir, p) for p in files]
-    )
-    return df.withColumn(
-        "__file", F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-    ).withColumn("__pos", F.col("_metadata.row_index"))
-
-
-def _apply_dv(spark: SparkSession, table_dir: str, df: DataFrame, dv_files: list) -> DataFrame:
-    """Anti-join the deletion sidecars out of a row-identified scan. The
-    join keys on (file, position); AQE picks broadcast when the vector is
-    small (the common case — deletes are sparse). Returns the df with
-    identity columns dropped."""
-    dv = spark.read.parquet(*[os.path.join(table_dir, p) for p in dv_files]).select(
-        "file", "pos"
-    )
-    out = df.join(
-        dv,
-        (df["__file"] == dv["file"]) & (df["__pos"] == dv["pos"]),
-        "left_anti",
-    )
-    return out.drop("__file", "__pos")
 
 
 def delete_where(
@@ -1228,67 +1203,37 @@ def delete_where(
     nothing matches.
 
     Concurrency: deletes are NOT commutative with concurrent writes (the
-    matched positions were derived from a specific base), so a lost
-    version claim always raises VersionConflictError — re-run against the
-    new current version. Pass expect_version to also fail fast when the
-    base moved before the claim."""
+    matched positions were derived from a specific base), so a claim lost
+    to a main commit raises VersionConflictError (rule b) — re-run
+    against the new current version. Pass expect_version to also fail
+    fast when the base moved before the claim."""
     from pyspark.sql import functions as F
 
-    v = current_version(table_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    if expect_version is not None and v != expect_version:
-        raise VersionConflictError(
-            f"table {table_dir} is at version {v}, expected {expect_version}"
-        )
-    with open(_manifest_path(table_dir, v)) as f:
-        manifest = json.load(f)
+    v = _head(table_dir)
+    _check_base(table_dir, v, expect_version)
+    manifest = _read_manifest(table_dir, v)
     cond = F.expr(condition) if isinstance(condition, str) else condition
-    live = _with_row_identity(spark, table_dir, manifest["files"])
-    if manifest.get("dv"):
-        # already-deleted rows can't be deleted twice (keeps sidecars tight)
-        dv = spark.read.parquet(
-            *[os.path.join(table_dir, p) for p in manifest["dv"]]
-        ).select("file", "pos")
-        live = live.join(
-            dv,
-            (live["__file"] == dv["file"]) & (live["__pos"] == dv["pos"]),
-            "left_anti",
-        )
-    matched = live.filter(cond).select(
-        F.col("__file").alias("file"), F.col("__pos").alias("pos")
+    # already-deleted rows can't be deleted twice (keeps sidecars tight)
+    matched = (
+        _live(spark, table_dir, manifest["files"], manifest.get("dv"))
+        .filter(cond)
+        .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
     )
-
-    version = v + 1
-    new_dv = _stage_parquet(matched, table_dir, "dv", version)
-    # zero matches -> no-op at version v (an empty part file may still
-    # exist; footers say how many rows actually matched)
-    if _staged_rows(table_dir, new_dv) == 0:
-        for name in new_dv:
-            os.remove(os.path.join(table_dir, name))
-        return v
-
-    new_manifest = dict(manifest)
-    new_manifest["version"] = version
-    new_manifest["dv"] = list(manifest.get("dv", [])) + new_dv
-    while not _publish_manifest(table_dir, version, new_manifest):
-        # A parked BRANCH claim at this number does not move main
-        # (round-8 advice: raising here would fail the delete forever
-        # while main never changed). The derived DV positions stay valid
-        # as long as main's pointer still reads v — re-claim above it.
-        if _claim_owner_is_branch(table_dir, version) and current_version(table_dir) == v:
-            version += 1
-            new_manifest["version"] = version
-            continue
-        for name in new_dv:
-            os.remove(os.path.join(table_dir, name))
-        raise VersionConflictError(
-            f"version {version} of {table_dir} was committed concurrently; "
-            "re-derive the delete against the new current version"
+    with _staging(table_dir) as staged:
+        staged += _stage_rows(matched, table_dir, "dv", v + 1)
+        if not staged:
+            return v  # nothing matched
+        content = {**manifest, "dv": manifest.get("dv", []) + staged}
+        return _claim(
+            table_dir,
+            v + 1,
+            lambda _v: content,
+            staged,
+            _CLAIM_RETRIES,
+            conflict=VersionConflictError,
+            base=v,
+            ref=None,
         )
-    _advance_pointer(table_dir, version)
-    _verify_mainline(table_dir, version, new_dv)
-    return version
 
 
 def merge_into(
@@ -1317,8 +1262,9 @@ def merge_into(
     would make results partition-order-dependent.
 
     Concurrency: like delete_where, a merge is derived from a specific
-    base version, so a lost claim raises VersionConflictError rather
-    than rebasing silently; pass expect_version for fail-fast CAS."""
+    base version, so a claim lost to a main commit raises
+    VersionConflictError rather than rebasing silently; pass
+    expect_version for fail-fast CAS."""
     from pyspark.sql import functions as F
 
     if when_matched not in ("update", "delete"):
@@ -1326,15 +1272,9 @@ def merge_into(
     if when_not_matched not in ("insert", "ignore"):
         raise ValueError(f"unknown when_not_matched {when_not_matched!r}")
 
-    v = current_version(table_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    if expect_version is not None and v != expect_version:
-        raise VersionConflictError(
-            f"table {table_dir} is at version {v}, expected {expect_version}"
-        )
-    with open(_manifest_path(table_dir, v)) as f:
-        manifest = json.load(f)
+    v = _head(table_dir)
+    _check_base(table_dir, v, expect_version)
+    manifest = _read_manifest(table_dir, v)
 
     dups = source.groupBy(*on).count().filter(F.col("count") > 1).limit(1).collect()
     if dups:
@@ -1343,28 +1283,12 @@ def merge_into(
             "each target row must match at most one source row"
         )
 
-    live = _with_row_identity(spark, table_dir, manifest["files"])
-    if manifest.get("dv"):
-        dv = spark.read.parquet(
-            *[os.path.join(table_dir, p) for p in manifest["dv"]]
-        ).select("file", "pos")
-        live = live.join(
-            dv,
-            (live["__file"] == dv["file"]) & (live["__pos"] == dv["pos"]),
-            "left_anti",
-        )
+    live = _live(spark, table_dir, manifest["files"], manifest.get("dv"))
     skey = source.select(*on).dropDuplicates(on)
     matched_positions = (
         live.join(skey, on, "left_semi")
         .select(F.col("__file").alias("file"), F.col("__pos").alias("pos"))
     )
-
-    version = v + 1
-    new_dv = _stage_parquet(matched_positions, table_dir, "dv", version)
-    if _staged_rows(table_dir, new_dv) == 0:
-        for n in new_dv:
-            os.remove(os.path.join(table_dir, n))
-        new_dv = []
 
     target_cols = [c for c in live.columns if c not in ("__file", "__pos")]
     if when_matched == "update" and when_not_matched == "insert":
@@ -1380,44 +1304,34 @@ def merge_into(
     else:  # delete matched, ignore unmatched: no incoming rows
         incoming = None
 
-    new_files = (
-        _stage_parquet(incoming, table_dir, "data", version)
-        if incoming is not None
-        else []
-    )
-    if new_files and _staged_rows(table_dir, new_files) == 0:
-        for n in new_files:
-            os.remove(os.path.join(table_dir, n))
-        new_files = []
-
-    if not new_dv and not new_files:
-        return v  # nothing matched, nothing to insert
-
-    new_manifest = dict(manifest)
-    new_manifest["version"] = version
-    new_manifest["files"] = list(manifest["files"]) + new_files
-    if new_dv:
-        new_manifest["dv"] = list(manifest.get("dv", [])) + new_dv
-    if batch_id is not None:
-        # transactional streaming sink: record which stream batch this
-        # merge applied (see last_committed_batch / commit_snapshot)
-        new_manifest["batch_id"] = batch_id
-    while not _publish_manifest(table_dir, version, new_manifest):
-        # same branch-claim skip as delete_where: main's snapshot did not
-        # change, so the derived DV positions and insert set stay valid
-        if _claim_owner_is_branch(table_dir, version) and current_version(table_dir) == v:
-            version += 1
-            new_manifest["version"] = version
-            continue
-        for n in new_dv + new_files:
-            os.remove(os.path.join(table_dir, n))
-        raise VersionConflictError(
-            f"version {version} of {table_dir} was committed concurrently; "
-            "re-derive the merge against the new current version"
+    with _staging(table_dir) as staged:
+        new_dv = _stage_rows(matched_positions, table_dir, "dv", v + 1)
+        staged += new_dv
+        new_files = (
+            _stage_rows(incoming, table_dir, "data", v + 1)
+            if incoming is not None
+            else []
         )
-    _advance_pointer(table_dir, version)
-    _verify_mainline(table_dir, version, new_dv + new_files)
-    return version
+        staged += new_files
+        if not staged:
+            return v  # nothing matched, nothing to insert
+        content = {**manifest, "files": manifest["files"] + new_files}
+        if new_dv:
+            content["dv"] = manifest.get("dv", []) + new_dv
+        if batch_id is not None:
+            # transactional streaming sink: record which stream batch this
+            # merge applied (see last_committed_batch / commit_snapshot)
+            content["batch_id"] = batch_id
+        return _claim(
+            table_dir,
+            v + 1,
+            lambda _v: content,
+            staged,
+            _CLAIM_RETRIES,
+            conflict=VersionConflictError,
+            base=v,
+            ref=None,
+        )
 
 
 def read_version_delta(
@@ -1430,10 +1344,8 @@ def read_version_delta(
     the span is not pure-append (a file was removed or deletion vectors
     changed): such a span has removals a file-level diff cannot express —
     use snapshot_diff over time-travel reads there instead."""
-    with open(_manifest_path(table_dir, from_version)) as f:
-        m0 = json.load(f)
-    with open(_manifest_path(table_dir, to_version)) as f:
-        m1 = json.load(f)
+    m0 = _read_manifest(table_dir, from_version)
+    m1 = _read_manifest(table_dir, to_version)
     if not set(m0["files"]).issubset(set(m1["files"])) or m0.get("dv") != m1.get("dv"):
         raise ValueError(
             f"versions {from_version}..{to_version} of {table_dir} are not an "
@@ -1442,15 +1354,8 @@ def read_version_delta(
         )
     new_files = [n for n in m1["files"] if n not in set(m0["files"])]
     if not new_files:
-        base = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(table_dir, p) for p in m1["files"][:1]]
-        )
-        from pyspark.sql import functions as F
-
-        return base.filter(F.lit(False))
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_dir, p) for p in new_files]
-    )
+        return _no_rows(spark, table_dir, m1["files"])
+    return _scan(spark, table_dir, new_files)
 
 
 def restore_snapshot(
@@ -1465,12 +1370,11 @@ def restore_snapshot(
     pointer keeps moving FORWARD (readers never observe a version number
     decrease — the monotonic-pointer invariant holds).
 
-    Uses the same optimistic claim loop as commit_snapshot: losing a
-    version number to a concurrent writer just re-claims the next one
-    (restore is declarative — "make latest look like v{N}" — so
-    re-publishing against a newer base is still exactly what the caller
-    asked for). Raises FileNotFoundError if the target manifest has been
-    vacuumed away.
+    Losing a version number to a concurrent writer just re-claims the
+    next one (rule a: restore is declarative — "make latest look like
+    v{N}" — so re-publishing against a newer base is still exactly what
+    the caller asked for). Raises FileNotFoundError if the target
+    manifest has been vacuumed away.
 
     Vacuum safety (round-6 advice): the target version is pinned with a
     temporary `__restore-<epoch>-<uuid>` guard TAG for the duration —
@@ -1487,42 +1391,23 @@ def restore_snapshot(
     guard = f"__restore-{int(_time.time())}-{uuid.uuid4().hex}"
     create_tag(table_dir, guard, version=to_version)
     try:
-        with open(_manifest_path(table_dir, to_version)) as f:
-            src = json.load(f)
+        src = _read_manifest(table_dir, to_version)
+        content = {"files": src["files"], "restored_from": to_version}
+        content.update((k, src[k]) for k in _CARRIED if k in src)
         prev = current_version(table_dir)
-        version = 0 if prev is None else prev + 1
-        for _attempt in range(max_retries + 1):
-            manifest = {
-                "version": version,
-                "files": list(src["files"]),
-                "restored_from": to_version,
-            }
-            # carry EVERY content/metadata key of the target forward: dv
-            # (logical content), stats/cluster_col/stats2/zorder (pruning —
-            # dropping them would silently full-scan every pruned read), and
-            # batch_id (the streaming sink's exactly-once marker: the
-            # restored content IS the state as of that batch, so a resumed
-            # stream reprocesses exactly the batches after it instead of
-            # replaying from scratch — the same rule compact_snapshot
-            # follows)
-            for key in ("dv", "stats", "cluster_col", "stats2", "zorder", "batch_id"):
-                if key in src:
-                    manifest[key] = src[key]
-            if _publish_manifest(table_dir, version, manifest):
-                _advance_pointer(table_dir, version)
-                # no staged files to roll back: the manifest references
-                # the TARGET version's files, which that manifest keeps
-                _verify_mainline(table_dir, version)
-                return version
-            version += 1
-        raise VersionConflictError(
-            f"gave up after {max_retries} contended restores of {table_dir}"
+        return _claim(
+            table_dir,
+            0 if prev is None else prev + 1,
+            lambda _v: content,
+            [],
+            max_retries,
+            conflict=None,
+            base=None,
+            ref=None,
         )
     finally:
-        try:
+        with suppress(KeyError):  # a vacuum past the guard TTL pruned it
             delete_tag(table_dir, guard)
-        except KeyError:
-            pass  # a vacuum past the guard TTL already pruned it
 
 
 def scratch_table_dir(prefix: str) -> str:
@@ -1576,88 +1461,58 @@ def commit_snapshot_checked(
 #
 # Iceberg-style refs: a branch is a named MUTABLE pointer into the same
 # global manifest space main uses. Branch commits claim ordinary version
-# numbers (the contended-commit retry loop already makes main skip over
-# them), so nothing about the manifest/claim protocol changes; only the
-# pointer that advances differs. The branch map lives next to the tag map
-# and shares _tags.lock, which is what serializes it against vacuum.
+# numbers through `_claim` (main's claims step over them), and only the
+# pointer that advances differs: the branch head in `_branches.json`,
+# CASed under the `_tags.lock` the tag map shares, which is what
+# serializes it against vacuum.
 
 
 class MergeConflictError(RuntimeError):
-    """Main advanced past the branch base — a fast-forward would discard
-    main's commits. Same posture as a non-FF git merge without a merge
+    """Main advanced past the branch base — merging would discard main's
+    commits. Same posture as a non-FF git merge without a merge
     strategy: the caller must rebase (re-branch from current main and
     re-apply) or abandon."""
 
 
-def _branches_path(table_dir: str) -> str:
-    return os.path.join(table_dir, "_branches.json")
-
-
 def list_branches(table_dir: str) -> dict:
     """name -> {"head": v, "base": v} for every branch (empty if none)."""
-    try:
-        with open(_branches_path(table_dir)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return {}
-
-
-def _write_branches(table_dir: str, branches: dict) -> None:
-    tmp = _branches_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(branches, f)
-    os.rename(tmp, _branches_path(table_dir))
+    return _read_refs(_branches_path(table_dir))
 
 
 def create_branch(table_dir: str, name: str) -> int:
-    """Fork a branch at the main head. Like tags, the
-    in-lock manifest check makes branch-vs-vacuum race-free: the branch
-    either lands before vacuum reads the ref maps (head pinned) or a
-    swept version fails here instead of becoming a dangling ref."""
-    v = current_version(table_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    lock = os.path.join(table_dir, "_tags.lock")
-    fd, token = _acquire_lock(lock)
-    try:
+    """Fork a branch at the main head. Like tags, the in-lock manifest
+    check makes branch-vs-vacuum race-free: the branch either lands
+    before vacuum reads the ref maps (head pinned) or a swept version
+    fails here instead of becoming a dangling ref."""
+    v = _head(table_dir)
+
+    def add(branches: dict) -> None:
         if not os.path.exists(_manifest_path(table_dir, v)):
             raise FileNotFoundError(f"version {v} has no manifest in {table_dir}")
-        branches = list_branches(table_dir)
         if name in branches:
             raise ValueError(f"branch {name!r} already exists")
         branches[name] = {"head": v, "base": v}
-        _write_branches(table_dir, branches)
-    finally:
-        _release_lock(lock, fd, token)
+
+    _update_refs(table_dir, _branches_path(table_dir), add)
     return v
 
 
 def delete_branch(table_dir: str, name: str) -> None:
     """Drop a branch ref; its head re-enters ordinary vacuum retention
     (unmerged branch versions become reclaimable history)."""
-    lock = os.path.join(table_dir, "_tags.lock")
-    fd, token = _acquire_lock(lock)
-    try:
-        branches = list_branches(table_dir)
-        if name not in branches:
-            raise KeyError(f"no branch {name!r} in {table_dir}")
+
+    def drop(branches: dict) -> None:
+        _ref_entry(branches, "branch", name, table_dir)
         del branches[name]
-        _write_branches(table_dir, branches)
-    finally:
-        _release_lock(lock, fd, token)
+
+    _update_refs(table_dir, _branches_path(table_dir), drop)
 
 
 def _max_claimed_version(table_dir: str) -> int:
     """Highest version with a manifest on disk — branch commits must
     claim ABOVE every claim, not just above main's pointer."""
-    mx = -1
-    for n in os.listdir(table_dir):
-        if n.startswith("manifest-v"):
-            try:
-                mx = max(mx, int(n.split("manifest-v")[1].split(".")[0]))
-            except ValueError:
-                continue
-    return mx
+    versions = (_manifest_version(n) for n in os.listdir(table_dir))
+    return max((v for v in versions if v is not None), default=-1)
 
 
 def commit_to_branch(
@@ -1678,69 +1533,27 @@ def commit_to_branch(
     silently interleaving."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"unknown mode {mode!r}")
-    branches = list_branches(table_dir)
-    if branch not in branches:
-        raise KeyError(f"no branch {branch!r} in {table_dir}")
-    head = branches[branch]["head"]
+    head = _ref_entry(list_branches(table_dir), "branch", branch, table_dir)["head"]
+    base = _read_manifest(table_dir, head) if mode == "append" else None
     version = max(_max_claimed_version(table_dir), head) + 1
-    new_files = _stage_parquet(df, table_dir, "data", version)
-    published = False
-    try:
-        for _attempt in range(max_retries + 1):
-            files = list(new_files)
-            dv = []
-            if mode == "append":
-                with open(_manifest_path(table_dir, head)) as f:
-                    base_manifest = json.load(f)
-                files = base_manifest["files"] + files
-                dv = list(base_manifest.get("dv", []))
-            manifest = {
-                "version": version,
-                "files": files,
-                "branch": branch,
-                "parent": head,
-            }
-            if dv:
-                manifest["dv"] = dv
-            if _publish_manifest(table_dir, version, manifest):
-                published = True
-                break
-            version += 1
-        else:
-            raise VersionConflictError(
-                f"gave up after {max_retries} contended branch commits to "
-                f"{table_dir}"
-            )
-        lock = os.path.join(table_dir, "_tags.lock")
-        fd, token = _acquire_lock(lock)
-        try:
-            branches = list_branches(table_dir)
-            cur = branches.get(branch)
-            if cur is None or cur["head"] != head:
-                # Roll the publication back BEFORE raising: the orphan
-                # manifest would otherwise sit above main's pointer
-                # forever — vacuum's v >= retain_floor in-flight-claim
-                # protection retains it and its data files indefinitely
-                # (round-8 advice). With the manifest gone, the staged
-                # files are unstaged by the outer handler.
-                try:
-                    os.remove(_manifest_path(table_dir, version))
-                except FileNotFoundError:
-                    pass
-                published = False
-                raise VersionConflictError(
-                    f"branch {branch!r} moved (head {cur and cur['head']} != "
-                    f"{head}) while committing v{version}"
-                )
-            branches[branch] = {"head": version, "base": cur["base"]}
-            _write_branches(table_dir, branches)
-        finally:
-            _release_lock(lock, fd, token)
-        return version
-    except BaseException:
-        if not published:
-            _unstage(table_dir, new_files)
-        raise
+    with _staging(table_dir) as staged:
+        new_files = _stage_parquet(df, table_dir, "data", version)
+        staged += new_files
+        content = {"files": new_files, "branch": branch, "parent": head}
+        if base is not None:
+            content["files"] = base["files"] + new_files
+            if base.get("dv"):
+                content["dv"] = base["dv"]
+        return _claim(
+            table_dir,
+            version,
+            lambda _v: content,
+            staged,
+            max_retries,
+            conflict=None,
+            base=None,
+            ref=(branch, head, None),
+        )
 
 
 def merge_branch(
@@ -1752,24 +1565,22 @@ def merge_branch(
     mechanism restore_snapshot uses). Succeeds only while main still sits
     at the branch BASE (nothing to reconcile); if main advanced — or a
     racing main commit holds a PUBLISHED claim anywhere on the number
-    ladder above the base, pointer advanced or not — the claim loop runs
-    into its non-branch manifest and raises MergeConflictError, and the
-    caller rebases.
+    ladder above the base, pointer advanced or not — the claim runs into
+    its non-branch manifest and raises MergeConflictError (rule c), and
+    the caller rebases.
 
-    Why a claim instead of fast-forwarding the pointer to the head's
-    number (round-8 advice): the head's number can sit BELOW a racing
-    main commit's claim, and a pointer teleport then either strands the
-    racer (its monotonic advance no-ops while its commit reports
-    success) or is itself silently undone when the racer's higher number
-    advances over the merged pointer. Claiming a fresh number makes the
-    merge serialize through the exact same exclusive-claim protocol as
-    every other commit — the pointer only ever moves through claimed
-    numbers, so neither side can bypass the other. Returns the NEW main
-    version holding the merged content."""
-    branches = list_branches(table_dir)
-    if name not in branches:
-        raise KeyError(f"no branch {name!r} in {table_dir}")
-    head, base = branches[name]["head"], branches[name]["base"]
+    Why a claim instead of moving the pointer to the head's number
+    (round-8 advice): the head's number can sit BELOW a racing main
+    commit's claim, and a pointer teleport then either strands the racer
+    (its monotonic advance no-ops while its commit reports success) or is
+    itself silently undone when the racer's higher number advances over
+    the merged pointer. Claiming a fresh number makes the merge serialize
+    through the exact same exclusive-claim protocol as every other commit
+    — the pointer only ever moves through claimed numbers, so neither
+    side can bypass the other. Returns the NEW main version holding the
+    merged content."""
+    ref = _ref_entry(list_branches(table_dir), "branch", name, table_dir)
+    head, base = ref["head"], ref["base"]
     if head == base:
         # nothing was committed to the branch: merging is a no-op
         if delete:
@@ -1781,41 +1592,22 @@ def merge_branch(
             f"main is at v{cur}, branch {name!r} forked at v{base} — "
             "not fast-forwardable; rebase the branch"
         )
-    with open(_manifest_path(table_dir, head)) as f:
-        src = json.load(f)
-    version = base + 1
-    for _attempt in range(max_retries + 1):
-        manifest = {
-            "version": version,
-            "files": list(src["files"]),
-            "merged_branch": name,
-            "merged_head": head,
-        }
-        # carry every content/metadata key of the head forward, exactly
-        # like restore_snapshot (dropping dv would resurrect deleted rows;
-        # dropping stats would silently full-scan pruned reads)
-        for key in ("dv", "stats", "cluster_col", "stats2", "zorder", "batch_id"):
-            if key in src:
-                manifest[key] = src[key]
-        if _publish_manifest(table_dir, version, manifest):
-            _advance_pointer(table_dir, version)
-            _verify_mainline(table_dir, version)
-            if delete:
-                delete_branch(table_dir, name)
-            return version
-        # the ladder rung is taken: a BRANCH claim (this branch's own
-        # commits included) just parks the number — step over it; a MAIN
-        # claim means main moved (or is mid-commit) past the fork base
-        if _claim_owner_is_branch(table_dir, version):
-            version += 1
-            continue
-        raise MergeConflictError(
-            f"main commit v{version} landed after branch {name!r} forked "
-            f"at v{base} — not fast-forwardable; rebase the branch"
-        )
-    raise VersionConflictError(
-        f"gave up after {max_retries} contended merge attempts on {table_dir}"
+    src = _read_manifest(table_dir, head)
+    content = {"files": src["files"], "merged_branch": name, "merged_head": head}
+    content.update((k, src[k]) for k in _CARRIED if k in src)
+    version = _claim(
+        table_dir,
+        base + 1,
+        lambda _v: content,
+        [],
+        max_retries,
+        conflict=MergeConflictError,
+        base=base,
+        ref=None,
     )
+    if delete:
+        delete_branch(table_dir, name)
+    return version
 
 
 def rebase_branch(table_dir: str, name: str, *, max_retries: int = 20) -> int:
@@ -1838,14 +1630,10 @@ def rebase_branch(table_dir: str, name: str, *, max_retries: int = 20) -> int:
     unreachable branch manifest that vacuum reclaims past the orphan TTL;
     the branch's data files stay referenced by the new head, so nothing
     the branch added is ever at risk."""
-    branches = list_branches(table_dir)
-    if name not in branches:
-        raise KeyError(f"no branch {name!r} in {table_dir}")
-    head, base = branches[name]["head"], branches[name]["base"]
-    with open(_manifest_path(table_dir, head)) as f:
-        src = json.load(f)
-    with open(_manifest_path(table_dir, base)) as f:
-        base_manifest = json.load(f)
+    ref = _ref_entry(list_branches(table_dir), "branch", name, table_dir)
+    head, base = ref["head"], ref["base"]
+    src = _read_manifest(table_dir, head)
+    base_manifest = _read_manifest(table_dir, base)
     base_files = set(base_manifest["files"])
     if not base_files.issubset(src["files"]):
         raise MergeConflictError(
@@ -1859,50 +1647,22 @@ def rebase_branch(table_dir: str, name: str, *, max_retries: int = 20) -> int:
             "re-derive from current main"
         )
     added = [n for n in src["files"] if n not in base_files]
-    new_base = current_version(table_dir)
-    if new_base is None:
-        raise FileNotFoundError(f"no committed version in {table_dir}")
-    with open(_manifest_path(table_dir, new_base)) as f:
-        main_manifest = json.load(f)
-    version = max(_max_claimed_version(table_dir), new_base) + 1
-    for _attempt in range(max_retries + 1):
-        manifest = {
-            "version": version,
-            "files": list(main_manifest["files"]) + added,
-            "branch": name,
-            "parent": new_base,
-        }
-        if main_manifest.get("dv"):
-            # main's deletes since the fork apply to the rebased view too
-            manifest["dv"] = list(main_manifest["dv"])
-        if _publish_manifest(table_dir, version, manifest):
-            break
-        version += 1
-    else:
-        raise VersionConflictError(
-            f"gave up after {max_retries} contended rebase claims on {table_dir}"
-        )
-    lock = os.path.join(table_dir, "_tags.lock")
-    fd, token = _acquire_lock(lock)
-    try:
-        branches = list_branches(table_dir)
-        cur = branches.get(name)
-        if cur is None or cur["head"] != head:
-            # same rollback as a lost commit_to_branch CAS: never leave
-            # the orphan manifest pinned above main's pointer
-            try:
-                os.remove(_manifest_path(table_dir, version))
-            except FileNotFoundError:
-                pass
-            raise VersionConflictError(
-                f"branch {name!r} moved (head {cur and cur['head']} != "
-                f"{head}) while rebasing"
-            )
-        branches[name] = {"head": version, "base": new_base}
-        _write_branches(table_dir, branches)
-    finally:
-        _release_lock(lock, fd, token)
-    return version
+    new_base = _head(table_dir)
+    main_manifest = _read_manifest(table_dir, new_base)
+    content = {"files": main_manifest["files"] + added, "branch": name, "parent": new_base}
+    if main_manifest.get("dv"):
+        # main's deletes since the fork apply to the rebased view too
+        content["dv"] = main_manifest["dv"]
+    return _claim(
+        table_dir,
+        max(_max_claimed_version(table_dir), new_base) + 1,
+        lambda _v: content,
+        [],
+        max_retries,
+        conflict=None,
+        base=None,
+        ref=(name, head, new_base),
+    )
 
 
 def read_changes(
@@ -1929,10 +1689,8 @@ def read_changes(
     span's deletes are exactly the pairs in the new sidecar files."""
     from pyspark.sql import functions as F
 
-    with open(_manifest_path(table_dir, from_version)) as f:
-        m0 = json.load(f)
-    with open(_manifest_path(table_dir, to_version)) as f:
-        m1 = json.load(f)
+    m0 = _read_manifest(table_dir, from_version)
+    m1 = _read_manifest(table_dir, to_version)
     files0 = set(m0["files"])
     if not files0.issubset(m1["files"]):
         raise ValueError(
@@ -1942,59 +1700,25 @@ def read_changes(
         )
     new_files = [n for n in m1["files"] if n not in files0]
     new_dv = [n for n in m1.get("dv", []) if n not in set(m0.get("dv", []))]
-
-    def _empty() -> DataFrame:
-        base = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(table_dir, p) for p in m1["files"][:1]]
-        )
-        return base.filter(F.lit(False)).withColumn(
-            "_change_type", F.lit("insert")
-        )
-
-    if not new_files and not new_dv:
-        return _empty()
-    dv = (
-        spark.read.parquet(*[os.path.join(table_dir, p) for p in new_dv])
-        .select("file", "pos")
-        if new_dv
-        else None
-    )
     parts = []
     if new_files:
-        ins = _with_row_identity(spark, table_dir, new_files)
-        if dv is not None:
-            # a row inserted then deleted inside the span nets out
-            ins = ins.join(
-                dv,
-                (ins["__file"] == dv["file"]) & (ins["__pos"] == dv["pos"]),
-                "left_anti",
-            )
-        cols = [c for c in ins.columns if c not in ("__file", "__pos")]
-        parts.append(
-            ins.select(*cols).withColumn("_change_type", F.lit("insert"))
-        )
-    if dv is not None:
+        # a row inserted then deleted inside the span nets out
+        ins = _live(spark, table_dir, new_files, new_dv).drop("__file", "__pos")
+        parts.append(ins.withColumn("_change_type", F.lit("insert")))
+    if new_dv:
         # deletes of PRE-EXISTING rows: pairs targeting old files only;
         # read just the files the sidecars actually name
+        dv = _read_dv(spark, table_dir, new_dv)
         hit_files = sorted(
-            {r["file"] for r in dv.select("file").distinct().collect()}
-            & files0
+            {r["file"] for r in dv.select("file").distinct().collect()} & files0
         )
         if hit_files:
             old = _with_row_identity(spark, table_dir, hit_files)
-            dele = old.join(
-                dv,
-                (old["__file"] == dv["file"]) & (old["__pos"] == dv["pos"]),
-                "left_semi",
-            )
-            cols = [c for c in dele.columns if c not in ("__file", "__pos")]
-            parts.append(
-                dele.select(*cols).withColumn(
-                    "_change_type", F.lit("delete")
-                )
-            )
+            dele = _dv_join(old, dv, "left_semi").drop("__file", "__pos")
+            parts.append(dele.withColumn("_change_type", F.lit("delete")))
     if not parts:
-        return _empty()
+        empty = _no_rows(spark, table_dir, m1["files"])
+        return empty.withColumn("_change_type", F.lit("insert"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)

@@ -479,7 +479,7 @@ def versioned_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     sidecars — data files untouched and shared with v0 (time travel still
     sees every row), delete cost O(matched), never O(table) — and the
     merge-on-read path anti-joins the vectors out of the scan
-    (`operators/versioned.py:delete_where/_apply_dv`, the Delta/Iceberg
+    (`operators/versioned.py:delete_where/_read_rows`, the Delta/Iceberg
     deletion-vector mechanism). The oracle replays the surviving-row
     aggregate independently from the source table, so a vector that
     misses rows, hits the wrong positions, or double-applies breaks the

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.operators.multimodal import (
     attach_payload_metadata,
-    decode_image_batch,
     documents_as_assets,
     extract_features,
     resize_images,
@@ -62,13 +61,6 @@ def test_sample_frames_expands_video_rows(spark):
         by_asset.setdefault(r.asset_id, []).append(r)
     for rs in by_asset.values():
         assert len({r.frame_idx for r in rs}) == 4
-
-
-def test_real_decoder_slot_is_explicitly_stubbed():
-    import pandas as pd
-
-    with pytest.raises(NotImplementedError):
-        decode_image_batch(pd.Series([b"xx"]))
 
 
 def test_raw_rgb_resize_is_real_pixel_math(spark):

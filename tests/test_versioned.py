@@ -1628,11 +1628,13 @@ def test_lost_branch_cas_leaves_no_orphan_manifest(spark, tmp_path):
     t = str(tmp_path / "l1")
     commit_snapshot(spark.range(3).coalesce(1), t)
     V.create_branch(t, "exp")
-    orig = V.list_branches
+    orig = V._read_refs
     calls = {"n": 0}
 
-    def sneaky(table_dir):
-        b = orig(table_dir)
+    def sneaky(path):
+        b = orig(path)
+        if path != V._branches_path(t):
+            return b
         calls["n"] += 1
         if calls["n"] == 2:  # the in-CAS re-read inside commit_to_branch
             moved = {k: dict(v) for k, v in b.items()}
@@ -1640,12 +1642,12 @@ def test_lost_branch_cas_leaves_no_orphan_manifest(spark, tmp_path):
             return moved
         return b
 
-    V.list_branches = sneaky
+    V._read_refs = sneaky
     try:
         with pytest.raises(V.VersionConflictError):
             V.commit_to_branch(spark.range(9).coalesce(1), t, "exp")
     finally:
-        V.list_branches = orig
+        V._read_refs = orig
     leftovers = [
         n
         for n in os.listdir(t)
@@ -1794,3 +1796,166 @@ def test_read_changes_net_semantics_and_guards(spark, tmp_path):
     if v3 != v2:
         with pytest.raises(ValueError, match="removed data files"):
             read_changes(spark, t, v0, v3)
+
+
+# --- one commit path: shape, cleanup and the vacuum-vs-claim race ---------
+
+
+def test_commit_protocol_exists_once():
+    """The claim protocol has one copy (AST only, no Spark): `_claim` is
+    the only caller of `_publish_manifest` and `_advance_pointer`;
+    `_tags.lock` is taken only by `_update_refs` (every tag or branch map
+    change) and `vacuum`; no manifest is rewritten after readers can see
+    it (`_rewrite_manifest` is gone)."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    import hw_kafka_flink_health_spark.operators.versioned as V
+
+    tree = ast.parse(Path(V.__file__).read_text())
+    calls = defaultdict(list)  # callee -> enclosing top-level function, per call
+    lock_users = set()
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Name):
+                calls[node.func.id].append(fn.name)
+            if isinstance(node, ast.Constant) and node.value == "_tags.lock":
+                lock_users.add(fn.name)
+    assert calls["_publish_manifest"] == ["_claim"], calls["_publish_manifest"]
+    assert calls["_advance_pointer"] == ["_claim"], calls["_advance_pointer"]
+    assert lock_users == {"_update_refs", "vacuum"}, lock_users
+    assert set(calls["_acquire_lock"]) == {"_advance_pointer", "_update_refs", "vacuum"}
+    assert not hasattr(V, "_rewrite_manifest")
+
+
+def test_vacuum_keeps_versions_claimed_during_its_pass(tmp_path, monkeypatch):
+    """Commits do not take vacuum's lock, so a version claimed while vacuum
+    runs must survive it. Whenever vacuum reads the branch map, a writer
+    claims the next version; afterwards each such claim still has its
+    manifest, and the writer's pointer advance lands on a readable version.
+    Before the delete pass acted only on the scan's own listing, it listed
+    the directory again and removed the claim made between the two
+    listings: `_latest` then named a missing manifest (the stress test's
+    rare `latest: manifest vN missing`). No Spark: manifests name empty
+    placeholder files."""
+    import json as _json
+
+    import hw_kafka_flink_health_spark.operators.versioned as V
+
+    t = str(tmp_path / "race")
+    os.makedirs(t)
+
+    def claim(v: int) -> None:
+        name = f"data-v{v}-part.parquet"
+        open(os.path.join(t, name), "w").close()
+        assert V._publish_manifest(t, v, {"version": v, "files": [name]})
+
+    for v in range(3):
+        claim(v)
+        V._advance_pointer(t, v)
+    claimed: list[int] = []
+    real = V.list_branches
+
+    def claim_while_vacuuming(table_dir):
+        claimed.append(V._max_claimed_version(t) + 1)
+        claim(claimed[-1])
+        return real(table_dir)
+
+    monkeypatch.setattr(V, "list_branches", claim_while_vacuuming)
+    V.vacuum(t, keep_last=2)
+    monkeypatch.undo()
+    assert claimed
+    for v in claimed:
+        V._advance_pointer(t, v)  # the writer resumes after its claim
+        assert os.path.exists(V._manifest_path(t, v)), f"claimed v{v} was swept"
+    with open(V._manifest_path(t, V.current_version(t))) as f:
+        assert _json.load(f)["files"]
+
+
+def test_committers_unstage_on_any_exit_without_publish(spark, tmp_path, monkeypatch):
+    """One cleanup rule for every committer: when anything after staging
+    raises — here the claim itself, with OSError — no staged data or
+    deletion-vector file is left in the table dir."""
+    import pytest
+
+    import hw_kafka_flink_health_spark.operators.versioned as V
+
+    t = str(tmp_path / "unstage")
+    commit_snapshot(spark.range(10).coalesce(1), t)
+    commit_snapshot(spark.range(10, 20).coalesce(1), t, mode="append")
+    V.create_branch(t, "exp")
+    before = sorted(os.listdir(t))
+
+    def full_disk(*_args):
+        raise OSError("no space left on device")
+
+    monkeypatch.setattr(V, "_publish_manifest", full_disk)
+    for commit in (
+        lambda: V.delete_where(spark, t, "id < 5"),
+        lambda: V.merge_into(spark, t, spark.range(5, 25).coalesce(1), ["id"]),
+        lambda: V.compact_snapshot(spark, t),
+        lambda: V.commit_snapshot(spark.range(3).coalesce(1), t, mode="append"),
+        lambda: V.commit_snapshot_clustered(spark.range(30), t, cluster_col="id"),
+        lambda: V.commit_to_branch(spark.range(3).coalesce(1), t, "exp"),
+    ):
+        with pytest.raises(OSError):
+            commit()
+        assert sorted(os.listdir(t)) == before
+
+
+def test_latest_never_reaches_a_branch_manifest(spark, tmp_path):
+    """No manifest `_latest` points at carries a `branch` key: only main
+    committers advance the pointer, and none of them publishes one — not
+    even with a branch claim parked right above main before each step
+    (the numbers every main claim has to step over). This is why no
+    post-advance check for "the pointer moved onto a branch head" is
+    needed."""
+    import json as _json
+
+    from hw_kafka_flink_health_spark.operators.versioned import (
+        _manifest_path,
+        commit_snapshot_clustered,
+        commit_snapshot_zordered,
+        commit_to_branch,
+        compact_snapshot,
+        create_branch,
+        delete_where,
+        merge_branch,
+        merge_into,
+        rebase_branch,
+        restore_snapshot,
+    )
+
+    t = str(tmp_path / "mainline")
+    commit_snapshot(spark.range(10).coalesce(1), t)
+    create_branch(t, "exp")
+    main_ops = [
+        lambda: commit_snapshot(spark.range(10, 12).coalesce(1), t, mode="append"),
+        lambda: commit_snapshot(
+            spark.range(5).coalesce(1), t, mode="append",
+            expect_version=current_version(t),
+        ),
+        lambda: delete_where(spark, t, "id = 1"),
+        lambda: merge_into(spark, t, spark.range(100, 102).coalesce(1), ["id"]),
+        lambda: compact_snapshot(spark, t),
+        lambda: restore_snapshot(t, 0),
+        lambda: commit_snapshot_clustered(spark.range(40), t, cluster_col="id"),
+        lambda: commit_snapshot_zordered(
+            spark.range(40).selectExpr("id", "id % 7 AS y"), t, cluster_cols=["id", "y"]
+        ),
+    ]
+    pointers = []
+    for op in main_ops:
+        commit_to_branch(spark.range(3).coalesce(1), t, "exp", mode="append")
+        assert op() == current_version(t)
+        pointers.append(current_version(t))
+    rebase_branch(t, "exp")
+    assert merge_branch(t, "exp") == current_version(t)
+    pointers.append(current_version(t))
+    assert pointers == sorted(set(pointers))  # every step moved main forward
+    for v in pointers:
+        with open(_manifest_path(t, v)) as f:
+            assert "branch" not in _json.load(f), v
