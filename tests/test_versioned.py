@@ -276,6 +276,31 @@ def test_clustered_append_carries_stats_and_tolerates_unclustered_base(spark, tm
     } == set(range(900, 1101))
 
 
+def test_clustered_append_ignores_stats_of_another_column(spark, tmp_path):
+    """A clustered append carries the base's per-file stats only when the
+    base is clustered on the same column: stats on `k` recorded under
+    `cluster_col = id` would make a pruned read on `id` drop base files
+    whose rows match."""
+    from hw_kafka_flink_health_spark.operators.versioned import (
+        commit_snapshot_clustered,
+        read_snapshot_pruned,
+    )
+
+    t = str(tmp_path / "xcol")
+    commit_snapshot_clustered(
+        spark.range(100).selectExpr("id", "1000 + id AS k"), t, cluster_col="k", n_files=2
+    )
+    commit_snapshot_clustered(
+        spark.range(100, 200).selectExpr("id", "id AS k"),
+        t,
+        cluster_col="id",
+        n_files=2,
+        mode="append",
+    )
+    got = {r.id for r in read_snapshot_pruned(spark, t, lo=0, hi=99).collect()}
+    assert got == set(range(100))
+
+
 def test_vacuum_tolerates_already_dropped_manifests(spark, tmp_path):
     """A vacuum with keep_last=1 deletes older manifests; a LATER vacuum
     with a larger keep_last must not FileNotFoundError on the gap — it
